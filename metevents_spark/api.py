@@ -93,7 +93,10 @@ class BaseEvents:
 
     @property
     def events(self) -> list[Period]:
-        rows = self.frame.orderBy("sid", "start").collect()
+        """Events in ``(sid, start)`` order: every detector's frame is
+        already ordered that way, so it is collected as is (a second
+        sort would add a range exchange that re-runs a kernel stage)."""
+        rows = self.frame.collect()
         return [
             Period(
                 sid=r.sid,

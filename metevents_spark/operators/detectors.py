@@ -5,7 +5,8 @@ Each detector reproduces one reference query's semantics
 Catalyst optimizes; no Python executes per row. All take the canonical
 series frame ``(sid, seq, ts, value)`` and return the events frame
 ``(sid, start, stop, duration_us, n_points, total)`` ordered by
-``(sid, start)``.
+``(sid, start)``. Each plan has exactly one exchange, the range
+exchange of ``runs.range_by_sid``, which also serves the final sort.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 from metevents_spark.operators.runs import (
     detect,
     flag_runs,
+    range_by_sid,
     runs_to_events,
     series_window,
 )
@@ -49,7 +51,7 @@ def flat_line(df: DataFrame, min_len: int = 5, slope_thresh: float = 0.0) -> Dat
     count since runs are contiguous).
     """
     cond = F.abs(_lag_diff()) <= F.lit(slope_thresh)
-    ev = runs_to_events(flag_runs(df, cond))
+    ev = runs_to_events(flag_runs(range_by_sid(df), cond))
     return ev.filter(F.col("n_points") >= min_len).orderBy("sid", "start")
 
 
@@ -71,7 +73,7 @@ def extreme_change(
         cond = cond | (diff >= F.lit(positive_slope_thresh))
     if negative_slope_thresh is not None:
         cond = cond | (diff <= F.lit(negative_slope_thresh))
-    ev = runs_to_events(flag_runs(df, cond))
+    ev = runs_to_events(flag_runs(range_by_sid(df), cond))
     return ev.filter(F.col("n_points") >= min_len).orderBy("sid", "start")
 
 
@@ -80,7 +82,7 @@ def data_gap(
 ) -> DataFrame:
     """Missing-data events: NULL runs plus sampling gaps.
 
-    Reference: metevents/events.py:251-298. Two branches:
+    Reference: metevents/events.py:251-298. Two kinds of event:
       1. runs of NaN values (:263,275) -> standard run grouping;
       2. rows whose timestamp delta to the previous row exceeds the
          expected frequency (:269-286) inject a synthetic two-point
@@ -89,46 +91,73 @@ def data_gap(
          reference's documented over-count quirk (its own TODO at
          :281: a 4-day hole reports a 6-day gap); we replicate, not
          fix, for parity.
-    Both branches are filtered to ``duration >= min_len * expected``
-    (:297) and unioned. The union of two single-shuffle branches reuses
-    the same sid partitioning; no extra exchange beyond the two
-    windows' shared sort at scale.
+    Both are filtered to ``duration >= min_len * expected`` (:297).
+
+    One window pass computes the run id and the gap columns; each row
+    then contributes to at most two events — its NaN run (key
+    ``(0, run_id)``) and, if it closes a gap, its own gap event (key
+    ``(1, ts)``: a gap row's ts is unique within its series, since the
+    row after an equal ts has delta 0) — and one ``groupBy(sid, key)``
+    aggregates both kinds. Unioning two separately windowed branches
+    would lose the sid partitioning and bring back a second exchange.
     """
     expected_us = int(expected_frequency_s * MICROS_PER_SECOND)
 
     nan_cond = F.col("value").isNull() | F.isnan(F.col("value"))
-    nan_events = runs_to_events(flag_runs(df, nan_cond))
-
     w = series_window()
-    prev_ts = F.lag("ts").over(w)
-    prev_val = F.lag("value").over(w)
-    delta_us = epoch_us(F.col("ts")) - epoch_us(prev_ts)
-    gap_events = (
-        df.withColumn("prev_ts", prev_ts)
-        .withColumn("prev_val", prev_val)
-        .withColumn("delta_us", delta_us)
-        .filter(F.col("delta_us") > F.lit(expected_us))
-        .select(
-            "sid",
-            F.col("prev_ts").alias("start"),
-            F.col("ts").alias("stop"),
-            F.col("delta_us").alias("duration_us"),
-            F.lit(2).cast("long").alias("n_points"),
-            # NaN-skipping two-endpoint total (pandas sum over the
-            # label slice [prev_ts, ts], which contains exactly the two
-            # boundary rows because the interior is missing).
-            F.when(
-                F.col("value").isNull() & F.col("prev_val").isNull(), F.lit(None)
-            )
-            .otherwise(
-                F.coalesce(F.col("value"), F.lit(0.0))
-                + F.coalesce(F.col("prev_val"), F.lit(0.0))
-            )
-            .alias("total"),
+    flagged = (
+        flag_runs(range_by_sid(df), nan_cond)
+        .withColumn("prev_ts", F.lag("ts").over(w))
+        .withColumn("prev_val", F.lag("value").over(w))
+    )
+    delta_us = epoch_us(F.col("ts")) - epoch_us(F.col("prev_ts"))
+    nan_part = F.struct(
+        F.lit(0).alias("kind"),
+        F.col("run_id").alias("id"),
+        F.col("ts").alias("start"),
+        F.lit(1).cast("long").alias("n"),
+        F.col("value").alias("total"),
+    )
+    gap_part = F.struct(
+        F.lit(1).alias("kind"),
+        epoch_us(F.col("ts")).alias("id"),
+        F.col("prev_ts").alias("start"),
+        F.lit(2).cast("long").alias("n"),
+        # NaN-skipping two-endpoint total (pandas sum over the label
+        # slice [prev_ts, ts], which contains exactly the two boundary
+        # rows because the interior is missing).
+        F.when(F.col("value").isNull() & F.col("prev_val").isNull(), F.lit(None))
+        .otherwise(
+            F.coalesce(F.col("value"), F.lit(0.0))
+            + F.coalesce(F.col("prev_val"), F.lit(0.0))
+        )
+        .alias("total"),
+    )
+    parts = F.filter(
+        F.array(
+            F.when(F.col("cond"), nan_part),
+            F.when(delta_us > F.lit(expected_us), gap_part),
+        ),
+        lambda p: p.isNotNull(),
+    )
+    events = (
+        flagged.select("sid", "ts", F.explode(parts).alias("p"))
+        .groupBy("sid", "p.kind", "p.id")
+        .agg(
+            F.min("p.start").alias("start"),
+            F.max("ts").alias("stop"),
+            F.sum("p.n").alias("n_points"),
+            # a gap has one row, so max is its total; a NaN run's values
+            # are all NaN or NULL, where max (NaN if any, else NULL)
+            # equals the reference's NaN-skipping sum
+            F.max("p.total").alias("total"),
+        )
+        .withColumn(
+            "duration_us", epoch_us(F.col("stop")) - epoch_us(F.col("start"))
         )
     )
-
-    events = nan_events.unionByName(gap_events)
-    return events.filter(
-        F.col("duration_us") >= F.lit(int(min_len * expected_us))
-    ).orderBy("sid", "start")
+    return (
+        events.filter(F.col("duration_us") >= F.lit(int(min_len * expected_us)))
+        .select("sid", "start", "stop", "duration_us", "n_points", "total")
+        .orderBy("sid", "start")
+    )

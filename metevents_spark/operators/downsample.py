@@ -90,4 +90,4 @@ def lttb_downsample(
     )
     return out.select(
         "sid", F.col("ts").cast("timestamp"), "value"
-    ).orderBy("sid", "ts")
+    ).sortWithinPartitions("sid", "ts")

@@ -164,6 +164,36 @@ def _round_contrib(adj: DataFrame, ranks: DataFrame, num_t: str) -> DataFrame:
     )
 
 
+def _rank_arith_type(adj: DataFrame) -> str:
+    """SQL type for the per-edge rank products: ``LONG`` when the
+    worst case provably fits int64, else ``DECIMAL(38,0)``.
+
+    Total rank mass is conserved at n_nodes*_U (no danglers), so no
+    node's rank can exceed it and the per-edge product
+    2*rank*w + w_out is bounded by 2*(n_nodes*_U)*max_w + max_w_out.
+    When that worst case fits int64 the hot path runs in LONG
+    (decimal(38,0) measured ~2x the round cost at sf0.1); past it —
+    billion-node graphs or extreme hub weights — the same expressions
+    run in decimal. Values are identical on both paths (the guard
+    PROVES no wrap), so the DuckDB oracle's HUGEINT replay matches
+    either. n_nodes (= |adj|: every node of this symmetric graph has
+    out-degree >= 1), max(w_out) and max(w) share ONE driver job over
+    the adjacency cache, which this job also fills.
+    """
+    n_row = adj.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max("w_out").alias("mo"),
+        F.max(F.array_max(F.col("nbrs").getField("w"))).alias("mw"),
+    ).first()
+    mass = int(n_row["n"]) * _U
+    # empty graph: the maxes are NULL; LONG trivially suffices
+    wide = (
+        2 * mass * int(n_row["mw"] or 0) + int(n_row["mo"] or 0) >= 2**63
+        or 2 * 10_000 * mass + 10_000 >= 2**63
+    )
+    return "DECIMAL(38,0)" if wide else "LONG"
+
+
 def part_pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -213,33 +243,7 @@ def part_pagerank(
     teleport_int = ((10_000 - d_num) * _U) // 10_000  # exact for 0.85
     tol_int = int(round(tol * _U))
 
-    # arithmetic-width guard: total rank mass is conserved at
-    # n_nodes*_U (no danglers), so no node's rank can exceed it and
-    # the per-edge product 2*rank*w + w_out is bounded by
-    # 2*(n_nodes*_U)*max_w + max_w_out. When that worst case fits
-    # int64, run the hot path in LONG (decimal(38,0) measured ~2x the
-    # round cost at sf0.1); past it — billion-node graphs or extreme
-    # hub weights — the same expressions run in decimal. Values are
-    # identical on both paths (the guard PROVES no wrap), so the
-    # DuckDB oracle's HUGEINT replay matches either.
-    # n_nodes (= |adj|: every node of this symmetric graph has
-    # out-degree >= 1), max(w_out) and max(w) share ONE driver job
-    # over the adjacency cache — the r13 shape needed two jobs (one
-    # per cached frame) and each driver job is a fixed ~0.3-0.4s of
-    # the sf0.1/x10 floor (guide §1.2); this one also fills the cache.
-    n_row = adj.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("w_out").alias("mo"),
-        F.max(F.array_max(F.col("nbrs").getField("w"))).alias("mw"),
-    ).first()
-    n_nodes, mo, mw = int(n_row["n"]), n_row["mo"], n_row["mw"]
-    mass = n_nodes * _U
-    # empty graph: the maxes are NULL; LONG trivially suffices
-    wide = (
-        2 * mass * int(mw or 0) + int(mo or 0) >= 2**63
-        or 2 * 10_000 * mass + 10_000 >= 2**63
-    )
-    num_t = "DECIMAL(38,0)" if wide else "LONG"
+    num_t = _rank_arith_type(adj)
     # ranks normalized to SUM = n_nodes*_U (the "mean rank 1.0"
     # convention, in micro-units)
     ranks = track(

@@ -2,14 +2,23 @@
 
 ``groupBy(sid).applyInPandas`` costs one pandas DataFrame construction
 per *group*; with millions of small series that per-group overhead
-dominates (measured ~10ms/group). This helper instead hash-partitions
-by sid, sorts within partitions, and runs ``mapInPandas`` with a numpy
-group-splitter per Arrow batch: per-batch vectorized dtype conversion,
-``np.flatnonzero`` boundary detection, and a carry for series that
-straddle batch/partition boundaries. Memory stays O(batch + largest
-series); parallelism is explicit (one shuffle on sid), immune to AQE
-coalescing the shuffle below core count just because the bytes are
-small.
+dominates (measured ~10ms/group). This helper instead range-partitions
+by sid (``runs.range_by_sid``), sorts within partitions, and runs
+``mapInPandas`` with a numpy group-splitter per Arrow batch: per-batch
+vectorized dtype conversion, ``np.flatnonzero`` boundary detection,
+and a carry for series that straddle batch boundaries. Memory stays
+O(batch + what the kernel holds for the largest series): O(n) for most
+kernels, ≈12·(log2 n + 1) bytes per sample for the spike/valley
+kernel's peak range tables (``peaks._sparse_tables``). Parallelism is
+explicit (one shuffle on sid, with a fixed partition count), immune to
+AQE coalescing the shuffle below core count just because the bytes
+are small.
+
+Output contract: the kernel's rows leave in input partition order,
+and partitions follow sid order, so a caller that needs its output
+ordered by ``(sid, ...)`` uses ``sortWithinPartitions`` — a global
+``orderBy`` would add a range exchange whose sampling job re-runs the
+kernel stage.
 """
 
 from __future__ import annotations
@@ -19,6 +28,8 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from metevents_spark.operators.runs import range_by_sid
 
 #: kernel(sid, ts: datetime64[us] array, values: float64 array) -> list of
 #: output-row tuples matching the caller's schema.
@@ -33,11 +44,12 @@ def map_series_kernel(
     out_dtypes: dict[str, str],
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Apply ``kernel`` once per series over the canonical frame."""
+    """Apply ``kernel`` once per series over the canonical frame; the
+    output is range-partitioned on sid (see the module docstring)."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prepared = df.repartition(num_partitions, "sid").sortWithinPartitions(
+    prepared = range_by_sid(df, num_partitions).sortWithinPartitions(
         "sid", "ts", "seq"
     )
 

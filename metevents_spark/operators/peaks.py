@@ -8,6 +8,12 @@ Needed because the reference's spike/valley detector
 ``find_peaks(series, height, threshold, prominence, width)`` and its
 ``widths`` property. Verified against the reference's golden
 expectations (11 events on flv.csv, /root/reference/tests/test_events.py:118-176).
+
+``local_maxima`` and ``peak_prominences`` are vectorized numpy (no
+per-sample Python): plateaus come from value-change boundaries, and
+each peak's base interval and minimum from sparse range tables
+searched by binary lifting. tests/test_peaks.py holds both to the
+sample-by-sample loops of the published algorithm, bit for bit.
 """
 
 from __future__ import annotations
@@ -17,23 +23,19 @@ import numpy as np
 
 def local_maxima(x: np.ndarray) -> np.ndarray:
     """Indices of strict local maxima; flat peaks yield their midpoint
-    (left_edge + right_edge) // 2. First/last samples never qualify."""
+    (left_edge + right_edge) // 2. First/last samples never qualify.
+
+    A plateau is a maximal run of equal samples (NaN never equals
+    anything, so each NaN is its own run); it is a peak when both
+    neighbours exist and are strictly lower."""
     n = len(x)
-    mids: list[int] = []
-    i = 1
-    i_max = n - 1
-    while i < i_max:
-        if x[i - 1] < x[i]:
-            i_ahead = i + 1
-            while i_ahead < i_max and x[i_ahead] == x[i]:
-                i_ahead += 1
-            if x[i_ahead] < x[i]:
-                left_edge = i
-                right_edge = i_ahead - 1
-                mids.append((left_edge + right_edge) // 2)
-                i = i_ahead
-        i += 1
-    return np.asarray(mids, dtype=np.intp)
+    if n < 3:
+        return np.empty(0, dtype=np.intp)
+    change = np.flatnonzero(x[1:] != x[:-1]) + 1
+    starts = change[:-1]  # runs with a left neighbour and a right one
+    ends = change[1:] - 1
+    peak = (x[starts - 1] < x[starts]) & (x[ends + 1] < x[starts])
+    return ((starts[peak] + ends[peak]) // 2).astype(np.intp)
 
 
 def _unpack_interval(val) -> tuple[float | None, float | None]:
@@ -45,35 +47,80 @@ def _unpack_interval(val) -> tuple[float | None, float | None]:
     return (None if lo is None else float(lo)), (None if hi is None else float(hi))
 
 
+def _sparse_tables(x: np.ndarray):
+    """Level ``k`` covers the 2**k samples starting at each index: an
+    argmax that picks a NaN if the block holds one (so ``x[argmax]``
+    is the NaN-propagating maximum), and the argmin preferring the
+    rightmost / leftmost of equal minima. Entries past ``n - 2**k`` are
+    unused. Three int32 tables of ``n.bit_length()`` levels: about
+    12 * (log2(n) + 1) bytes per sample, 1.5 MB for a station-year of
+    hourly samples, 2.9 GB for 10M samples."""
+    n = len(x)
+    levels = max(n.bit_length(), 1)
+    idx_t = np.int32 if n < 2**31 else np.intp
+    arg_max, arg_r, arg_l = np.empty((3, levels, n), dtype=idx_t)
+    arg_max[0] = arg_r[0] = arg_l[0] = np.arange(n, dtype=idx_t)
+    # block maxima / minima of the level below; the two argmin tables
+    # differ only between equal minima, so one ``lo`` serves both
+    hi = lo = x
+    for k in range(1, levels):
+        half, m = 1 << (k - 1), n - (1 << k) + 1
+        ha, hb, la, lb = hi[:m], hi[half : half + m], lo[:m], lo[half : half + m]
+        up, right, left = (hb > ha) | np.isnan(hb), lb <= la, lb < la
+        for t, pick in ((arg_max, up), (arg_r, right), (arg_l, left)):
+            t[k, :m] = np.where(pick, t[k - 1, half : half + m], t[k - 1, :m])
+        hi, lo = np.where(up, hb, ha), np.where(left, lb, la)
+    return arg_max, arg_r, arg_l
+
+
+def _range_argmin(x, table, lo, hi, prefer_right: bool) -> np.ndarray:
+    """Argmin of ``x[lo..hi]`` (inclusive) per query, from two
+    overlapping power-of-two blocks."""
+    k = np.frexp(hi - lo + 1)[1] - 1  # floor(log2(length)), exact
+    a = table[k, lo]
+    b = table[k, hi - (1 << k) + 1]
+    pick_b = x[b] <= x[a] if prefer_right else x[b] < x[a]
+    return np.where(pick_b, b, a)
+
+
 def peak_prominences(
     x: np.ndarray, peaks: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Prominence of each peak: height above the higher of the two
     bases, where each base is the minimum between the peak and the
-    nearest strictly-higher sample (or signal border) on that side."""
+    nearest strictly-higher (or NaN) sample or signal border on that
+    side — the rightmost equal minimum on the left, the leftmost on
+    the right.
+
+    The nearest higher-or-NaN sample on each side comes from binary
+    lifting over the range-argmax table (a block is skipped only if
+    its maximum, NaN-propagating, is <= the peak), the base from the
+    range-argmin tables; O(n log n) time and table memory for the
+    whole series (see :func:`_sparse_tables`)."""
+    peaks = np.asarray(peaks, dtype=np.intp)
     n = len(x)
-    prom = np.empty(len(peaks), dtype=np.float64)
-    left_bases = np.empty(len(peaks), dtype=np.intp)
-    right_bases = np.empty(len(peaks), dtype=np.intp)
-    for k, p in enumerate(peaks):
-        i = p
-        left_min = x[p]
-        left_bases[k] = p
-        while i >= 0 and x[i] <= x[p]:
-            if x[i] < left_min:
-                left_min = x[i]
-                left_bases[k] = i
-            i -= 1
-        i = p
-        right_min = x[p]
-        right_bases[k] = p
-        while i < n and x[i] <= x[p]:
-            if x[i] < right_min:
-                right_min = x[i]
-                right_bases[k] = i
-            i += 1
-        prom[k] = x[p] - max(left_min, right_min)
-    return prom, left_bases, right_bases
+    if len(peaks) == 0:
+        empty = np.empty(0, dtype=np.intp)
+        return np.empty(0, dtype=np.float64), empty, empty.copy()
+    arg_max, arg_r, arg_l = _sparse_tables(x)
+    xp = x[peaks]
+    left = peaks.copy()  # first index of the run of samples <= x[p]
+    right = peaks.copy()  # last index of that run
+    for k in range(arg_max.shape[0] - 1, -1, -1):
+        step = 1 << k
+        cand = left - step
+        ok = cand >= 0
+        ok[ok] &= x[arg_max[k, cand[ok]]] <= xp[ok]
+        left = np.where(ok, cand, left)
+        cand = right + 1
+        ok = right + step <= n - 1
+        ok[ok] &= x[arg_max[k, cand[ok]]] <= xp[ok]
+        right = np.where(ok, right + step, right)
+    left_bases = _range_argmin(x, arg_r, left, peaks, prefer_right=True)
+    right_bases = _range_argmin(x, arg_l, peaks, right, prefer_right=False)
+    left_min, right_min = x[left_bases], x[right_bases]
+    prom = xp - np.where(right_min > left_min, right_min, left_min)
+    return prom, left_bases.astype(np.intp), right_bases.astype(np.intp)
 
 
 def peak_widths(

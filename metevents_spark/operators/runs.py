@@ -6,11 +6,15 @@ consecutive True rows; rows where ``ind`` is False (or, for us, NULL)
 increment the counter and are excluded from events.
 
 Spark mapping: a running-sum window over ``(sid)`` ordered by
-``(ts, seq)`` — one hash exchange on sid + one sort, shared by every
-downstream per-series window in the same plan (Catalyst reuses the
-partitioning/ordering, so lag-diff + cumsum + groupBy cost a single
-shuffle). At scale the unit of parallelism is the series key, not the
-series length; no driver-side collection anywhere.
+``(ts, seq)``. Every per-series stage starts from :func:`range_by_sid`,
+the one exchange of its plan: a range exchange on sid. Range
+partitioning on sid satisfies the window's clustering, the run
+``groupBy(sid, run_id)`` and the final ``orderBy(sid, start)`` alike,
+so lag-diff + cumsum + aggregate + output sort cost a single shuffle
+and the events come back globally ordered without a second (range)
+exchange whose boundary sampling would re-run the stage. At scale the
+unit of parallelism is the series key, not the series length; no
+driver-side collection anywhere.
 """
 
 from __future__ import annotations
@@ -26,6 +30,19 @@ ORDER_COLS: tuple[str, ...] = ("ts", "seq")
 
 #: Schema of every events frame the engine produces.
 EVENT_COLS = ("sid", "start", "stop", "duration_us", "n_points", "total")
+
+
+def range_by_sid(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Range-partition ``df`` on the series key: each series lands in
+    one partition, and partitions follow series-key order, so a
+    within-partition sort on ``(sid, ...)`` is a global order. The same
+    partitioning satisfies clustering on any column set containing
+    sid. Without ``num_partitions`` AQE picks (and coalesces) the
+    count, as for an implicit exchange; the sampling job that sets the
+    ranges reads only the input of this exchange."""
+    if num_partitions is None:
+        return df.repartitionByRange(*PART_COLS)
+    return df.repartitionByRange(num_partitions, *PART_COLS)
 
 
 def series_window(
@@ -93,7 +110,9 @@ def detect(
     """predicate -> run grouping -> event aggregation, time-ordered.
 
     The ordering matches the reference's sorted group emission
-    (metevents/events.py:81,190,289,321,350,402).
+    (metevents/events.py:81,190,289,321,350,402); the range exchange
+    of :func:`range_by_sid` already satisfies it, so the ``orderBy``
+    plans as a local sort.
     """
-    ev = runs_to_events(flag_runs(df, cond, part_cols, order_cols), part_cols)
-    return ev.orderBy(*part_cols, "start")
+    flagged = flag_runs(range_by_sid(df), cond, part_cols, order_cols)
+    return runs_to_events(flagged, part_cols).orderBy(*part_cols, "start")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metevents_spark.io import load_table, series_frame
+from metevents_spark.operators.runs import range_by_sid
 
 
 def rolling_mean(
@@ -233,8 +234,8 @@ def ewma_smooth(
     num_partitions = int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    prepared = df.select("sid", "ts", "value", "seq").repartition(
-        num_partitions, "sid"
+    prepared = range_by_sid(
+        df.select("sid", "ts", "value", "seq"), num_partitions
     ).sortWithinPartitions("sid", "ts", "seq")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -289,7 +290,7 @@ def ewma_smooth(
 
     return prepared.mapInPandas(
         run, "sid string, ts timestamp, value double, ewma double"
-    ).orderBy("sid", "ts")
+    ).sortWithinPartitions("sid", "ts")
 
 
 def trailing_24h_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,7 +635,7 @@ def holt_smooth(
         ["sid", "ts", "value", "level", "trend"],
         {"ts": "datetime64[us]", "value": "float64",
          "level": "float64", "trend": "float64"},
-    ).orderBy("sid", "ts")
+    ).sortWithinPartitions("sid", "ts")
 
 
 def anomaly_consensus(
@@ -947,7 +948,7 @@ def holt_backtest(
         ["sid", "n_forecasts", "mae", "bias", "rmse"],
         {"n_forecasts": "int64", "mae": "float64", "bias": "float64",
          "rmse": "float64"},
-    ).orderBy("sid")
+    ).sortWithinPartitions("sid")
 
 
 def interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,4 +1084,4 @@ def model_select_backtest(
         ["sid", "n_forecasts", "mae_ewma", "mae_holt", "champion"],
         {"n_forecasts": "int64", "mae_ewma": "float64",
          "mae_holt": "float64"},
-    ).orderBy("sid")
+    ).sortWithinPartitions("sid")

@@ -7,9 +7,11 @@ with reported width ``w`` mark positions ``int(p - w) .. int(p + w)``
 True (:240-247, including the int() truncation and Python slice
 semantics); then group marked runs into events.
 
-Prominence/width are iterative neighborhood algorithms — not
-SQL-expressible — so the kernel runs per-series inside
-``groupBy(sid).applyInPandas`` (Arrow-vectorized transfer; numpy body).
+Prominence/width are neighborhood algorithms — not SQL-expressible —
+so the kernel runs once per series through
+``grouped.map_series_kernel`` (one range exchange on sid, Arrow
+batches, vectorized numpy peak finding from operators/peaks.py); its
+output is ordered by ``(sid, start)`` with a within-partition sort.
 """
 
 from __future__ import annotations
@@ -59,7 +61,8 @@ def spike_valley(
     """Distributed spike/valley events over the canonical series frame.
 
     Streaming sorted-partition kernel (operators/grouped.py): one sid
-    shuffle, numpy peak detection per series, no per-group pandas."""
+    range exchange, numpy peak detection per series, no per-group
+    pandas; events ordered by ``(sid, start)``."""
     from metevents_spark.operators.grouped import (
         EVENT_OUT_COLUMNS,
         EVENT_OUT_DTYPES,
@@ -96,4 +99,4 @@ def spike_valley(
         "duration_us",
         "n_points",
         "total",
-    ).orderBy("sid", "start")
+    ).sortWithinPartitions("sid", "start")

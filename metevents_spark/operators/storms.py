@@ -162,7 +162,8 @@ def storm_find(
 
     Uses the streaming sorted-partition kernel (operators/grouped.py)
     rather than per-group applyInPandas — same semantics, no per-group
-    pandas overhead.
+    pandas overhead. Its range exchange on sid is the plan's only one;
+    events are ordered by ``(sid, start)`` with a within-partition sort.
     """
     from metevents_spark.operators.grouped import (
         EVENT_OUT_COLUMNS,
@@ -196,4 +197,4 @@ def storm_find(
         "duration_us",
         "n_points",
         "total",
-    ).orderBy("sid", "start")
+    ).sortWithinPartitions("sid", "start")

@@ -39,6 +39,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Every sorting task takes at least one Tungsten page, which
+        # Spark sizes from heap / cores (64 MB for 8g on 4 cores) however
+        # small the partition. A mapInPandas task's Python worker monitor
+        # thread keeps its runner, and through the runner's input
+        # iterator the last page of the sort feeding it, reachable for
+        # up to 2 s after the task ends: ~260 MB of driver heap after a
+        # per-series kernel query at 64 MB, ~17 MB at 2 MB. Larger sorts
+        # take more 2 MB pages (up to 8192 per task, 16 GB). Static:
+        # sessions built elsewhere (tune_session) keep Spark's size.
+        .config("spark.buffer.pageSize", "2m")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config(
             "spark.sql.warehouse.dir",

@@ -1,50 +1,17 @@
-"""Suite-honesty meta checks (the r11 verdict's bookkeeping demand):
-
-1. the SURVEY.md suite headline must equal what the tree actually
-   collects — the committed number drifted from reality in BOTH r10
-   (565 claimed / 545 collected) and r11 (574 claimed / 568
-   collected), so the claim is now machine-checked: this test fails
-   the suite whenever the headline and ``pytest --collect-only``
-   disagree;
-2. the lint gate (tools/lint.py — the reference CI enforces flake8
-   C/E/F/W with max-complexity 10 and max-line-length 88 at
-   /root/reference/.github/workflows/testing.yml:38; flake8 is not
-   installed here, so the AST checker enforces the same contract)
-   must be clean.
+"""Suite-honesty meta check: the lint gate (tools/lint.py — the
+reference library's CI enforces flake8 C/E/F/W with max-complexity 10
+and max-line-length 88 in its .github/workflows/testing.yml; where
+flake8 is not installed, the AST checker enforces the same contract)
+must be clean.
 """
 
 from __future__ import annotations
 
-import re
 import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def test_survey_headline_matches_collected_count():
-    out = subprocess.run(
-        [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
-         "-p", "no:cacheprovider"],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    m = re.search(r"(\d+) tests? collected", out.stdout)
-    assert m, f"could not parse collect-only output:\n{out.stdout[-2000:]}"
-    collected = int(m.group(1))
-
-    survey = (REPO / "SURVEY.md").read_text()
-    h = re.search(r"\*\*(\d+) collected", survey)
-    assert h, "SURVEY.md suite headline marker '**<N> collected' missing"
-    claimed = int(h.group(1))
-    assert claimed == collected, (
-        f"SURVEY.md claims {claimed} collected but the tree collects "
-        f"{collected} — update the SURVEY.md suite-size paragraph in the "
-        "same commit that changes the test count"
-    )
 
 
 def test_lint_gate_clean():

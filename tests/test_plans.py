@@ -2,8 +2,8 @@
 
 These tests pin the plan properties that make the engine viable at
 100 TB: predicate/column pushdown into the parquet scan, exactly one
-sid exchange feeding window + run aggregation, broadcast of fixed-size
-dims, and no Python in native detector paths.
+sid range exchange feeding window + run aggregation + output order,
+broadcast of fixed-size dims, and no Python in native detector paths.
 """
 
 from __future__ import annotations
@@ -26,22 +26,48 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _single_sid_range_exchange(plan: str) -> None:
+    """The per-series contract: exactly one exchange, a range exchange
+    on sid, which serves the window/kernel stage and the final
+    (sid, start) ordering alike."""
+    exchanges = re.findall(r"Exchange \w+", plan)
+    assert exchanges == ["Exchange rangepartitioning"], plan
+    assert re.search(r"Exchange rangepartitioning\(sid#", plan), plan
+
+
 def test_detector_single_series_exchange(spark):
+    from metevents_spark.operators import data_gap, extreme_change
+
     df = series_frame(spark, SF)
-    plan = plan_of(extreme_value(df, 400.0, 1.0))
-    # one hash exchange on sid for window+agg; one range exchange for the
-    # final deterministic ordering of the (tiny) events output
-    hash_exchanges = re.findall(r"Exchange hashpartitioning\(sid", plan)
-    assert len(hash_exchanges) == 1, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    for events in (
+        extreme_value(df, 400.0, 1.0),
+        extreme_change(df),
+        data_gap(df),  # NaN runs and gap rows: one window, one groupBy
+    ):
+        plan = plan_of(events)
+        _single_sid_range_exchange(plan)
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_flat_line_windows_share_sort(spark):
     df = series_frame(spark, SF)
     plan = plan_of(flat_line(df, 2, 25.0))
     # lag-diff window and cumsum window must reuse one exchange+sort
-    assert len(re.findall(r"Exchange hashpartitioning\(sid", plan)) == 1, plan
+    _single_sid_range_exchange(plan)
     assert len(re.findall(r"\bSort \[sid", plan)) <= 2, plan  # window + output
+
+
+@pytest.mark.parametrize("detector", ["storm_find", "spike_valley"])
+def test_kernel_detector_single_series_exchange(spark, detector):
+    """The kernel's own range exchange orders its output; no second
+    exchange re-runs the Python stage to sort it."""
+    from metevents_spark import operators
+
+    df = series_frame(spark, SF)
+    events = getattr(operators, detector)(df)
+    _single_sid_range_exchange(plan_of(events))
+    rows = [(r.sid, r.start) for r in events.select("sid", "start").collect()]
+    assert rows and rows == sorted(rows)
 
 
 def test_scan_prunes_columns(spark):

@@ -65,7 +65,10 @@ def main() -> int:
             "single), broadcast exchanges, parquet scans, Python (Arrow) "
             "nodes. Range exchanges are almost always the deterministic "
             "output `orderBy` the driver contract requires — at scale a "
-            "consumer drops that sort. Single-partition exchanges feed "
+            "consumer drops that sort — except on the per-series "
+            "detectors and kernels, whose one range exchange on sid "
+            "(`operators/runs.range_by_sid`) partitions the stage and "
+            "orders its output at once. Single-partition exchanges feed "
             "1-row scalar aggregates (thresholds, corpus totals) or "
             "bounded top-k merges. A `py` node is an Arrow-vectorized "
             "kernel (pandas_udf / mapInPandas / applyInPandas) — never "
