@@ -63,6 +63,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-built table as a LocalRelation: ``rows`` of
+    tuples in ``schema`` (a DDL string) column order. The rows reach
+    the JVM as Arrow batches inside the plan, so building the table
+    runs no job and starts no Python worker;
+    ``spark.createDataFrame(<list>)`` scans a Python RDD instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def series_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (sid, seq, ts, value) frame from the events table.
 

@@ -2,7 +2,7 @@
 fact tables.
 
 The engine's Pregel-style tier: like ``dedup_clusters`` (text/dedup.py
-connected components), each iteration is ONE shuffle join + one
+connected components), each iteration is one join + one
 map-side-combining aggregate, with a lazy ``localCheckpoint`` per round
 to cut the growing lineage (the standard Spark iterative-algorithm
 pattern; on a cluster with a checkpoint dir you would swap in reliable
@@ -26,8 +26,8 @@ Scale shape:
     — the uniform teleport term keeps the chain ergodic regardless.
   * Iterations are CAPPED at ``n_iter`` with a convergence exit: the
     loop stops once max |Δrank| ≤ ``tol`` (a 1-row aggregate over the
-    checkpointed |nodes|-sized frame per round — bounded driver
-    state, same budget class as the CC convergence scalar in
+    checkpointed |nodes|-sized frame on each check round — bounded
+    driver state, same budget class as the CC convergence scalar in
     text/dedup.py). The default ``tol=0.0`` exits only at an EXACT
     fixed point, where every further round is an identity map — so
     output is bit-identical to the fixed-round contract while
@@ -108,7 +108,7 @@ def _transition_frame(
     re-shuffle the adjacency frame (the r13 x100 lesson, decade ratio
     23); an InMemoryRelation retains its child's output partitioning,
     so the per-round shuffle-hash join reuses the cache co-location
-    and moves only the |nodes|-sized rank frame.
+    and moves at most the |nodes|-sized rank frame.
 
     ``w_out`` (the per-source out-mass) lives as a column of the
     adjacency row — the separate |nodes|-sized out-mass join of the
@@ -129,23 +129,26 @@ def _transition_frame(
     return adj, nodes
 
 
-def _round_contrib(adj: DataFrame, ranks: DataFrame, num_t: str) -> DataFrame:
-    """One power-iteration round's incoming rank mass per node.
+def _next_ranks(
+    adj: DataFrame, ranks: DataFrame, num_t: str, d_num: int
+) -> DataFrame:
+    """One power-iteration round: (pid, rank) -> the next (pid, rank).
 
     SHUFFLE_HASH on the rank side: the cached adjacency frame is
-    already hash-partitioned on src, so the round shuffles only the
-    |nodes|-sized rank frame and hash-builds on it — no per-round
-    shuffle OR sort of the transition frame (SMJ would sort both
-    sides; broadcast would collect |nodes| to the driver each round,
-    which dies first on a billion-node graph). The join output is
+    hash-partitioned on src, so the join probes the cache in place — no
+    per-round shuffle OR sort of the transition frame (SMJ would sort
+    both sides; broadcast would collect |nodes| to the driver each
+    round, which dies first on a billion-node graph). The join output is
     |nodes| rows; the |edges|-sized contribution stream is generated
     map-side by the explode and collapses in the partial aggregate
-    before the single |nodes|-scale exchange. Contribution arithmetic
-    is unchanged from r13 (exact integer rationals), so the output is
-    bit-identical to the flat-edge formulation. The plan shape is
-    pinned by
-    tests/test_plans.py::test_pagerank_round_reuses_edge_partitioning.
+    before the single |nodes|-scale exchange. The next rank comes from
+    that aggregate alone: every node of the symmetric co-purchase graph
+    has in-edges, so no join with the previous ranks is needed, and the
+    result leaves hash(pid)-partitioned like the cache. Exact integer
+    rationals throughout (see part_pagerank). The plan shape is pinned
+    by tests/test_plans.py.
     """
+    teleport_int = ((10_000 - d_num) * _U) // 10_000  # exact for 0.85
     return (
         adj.join(
             ranks.withColumnRenamed("pid", "src").hint("shuffle_hash"),
@@ -161,6 +164,16 @@ def _round_contrib(adj: DataFrame, ranks: DataFrame, num_t: str) -> DataFrame:
         )
         .groupBy(F.col("dst").alias("pid"))
         .agg(F.sum("c").alias("in_mass"))
+        .select(
+            "pid",
+            (
+                F.lit(teleport_int)
+                + F.expr(
+                    f"CAST((2 * {d_num} * CAST(in_mass AS {num_t}) + 10000)"
+                    " DIV 20000 AS LONG)"
+                )
+            ).alias("rank"),
+        )
     )
 
 
@@ -211,6 +224,22 @@ def part_pagerank(
     at an exact fixed point, where remaining rounds are identity maps
     — output identical to running all ``n_iter`` rounds); the round
     count lands in ``part_pagerank.last_n_rounds`` for tests/audits.
+    Under tol=0.0 the delta is checked every 3rd round (and after the
+    last); with tol > 0 after every round.
+
+    Static round plans: the round loop builds and runs its plans with
+    ``spark.sql.adaptive.enabled`` off, and restores the caller's value
+    when it returns or raises; the returned frame is planned under the
+    caller's setting. The setting is session-wide, so a query planned
+    concurrently on the same session meanwhile also runs without AQE.
+    Under AQE a lazy ``localCheckpoint`` executes its
+    adaptive plan while the frame is built (each exchange a separate
+    job) and scans back as UnknownPartitioning. With static plans it
+    stays lazy and keeps hashpartitioning(pid) at
+    ``spark.sql.shuffle.partitions``, the cached adjacency's own
+    partitioning. A round therefore plans exactly one exchange, the
+    contribution aggregate, and the rounds up to each convergence check
+    run as one job.
 
     INTEGER micro-unit arithmetic throughout (r13, the Lloyd-integer
     playbook from knn_ivf/semantic_dedup): ranks live in 1e-9 units
@@ -240,64 +269,43 @@ def part_pagerank(
     adj, nodes = _transition_frame(spark, sf_dir)
 
     d_num = int(round(damping * 10_000))
-    teleport_int = ((10_000 - d_num) * _U) // 10_000  # exact for 0.85
     tol_int = int(round(tol * _U))
-
     num_t = _rank_arith_type(adj)
-    # ranks normalized to SUM = n_nodes*_U (the "mean rank 1.0"
-    # convention, in micro-units)
-    ranks = track(
-        nodes.select("pid", F.lit(_U).alias("rank")).localCheckpoint()
-    )
-    # Convergence-check cadence (r14): under the default tol=0.0 the
-    # exit only fires at an EXACT integer fixed point, where every
-    # further round is an identity map — so checking the delta every
-    # CHECK_EVERY rounds (instead of every round) can only run extra
-    # identity rounds and the final ranks are bit-identical; what it
-    # buys is one driver job per batch instead of per round (the sf0.1
-    # and x10 costs of this query are dominated by the ~13-job driver
-    # floor, guide §1.2). Each round still takes a LAZY localCheckpoint
-    # (lineage truncation); the batch's single delta action materializes
-    # the whole chain, checkpointing every intermediate round along the
-    # way. With tol > 0 an overshoot WOULD change the output (rounds
-    # past the tolerance are not identity maps), so the per-round check
-    # is kept exactly as before.
+    # Under tol=0.0 the exit only fires at an EXACT integer fixed point,
+    # where every further round is an identity map, so checking the
+    # delta every 3rd round can only run extra identity rounds and the
+    # final ranks are bit-identical. With tol > 0 an overshoot WOULD
+    # change the output, so every round is checked.
     check_every = 3 if tol_int == 0 else 1
     part_pagerank.last_n_rounds = 0
-    for it in range(n_iter):
-        contrib = _round_contrib(adj, ranks, num_t)
-        # LAZY checkpoint + the convergence aggregate as the
-        # materializing action keeps a check-round at ONE job — an
-        # eager checkpoint followed by a separate delta job measured
-        # 2.4x the round cost (13.4s vs 5.5s warm at sf0.1 over 12
-        # rounds)
-        stepped = track(
-            ranks.withColumnRenamed("rank", "prev")
-            .join(contrib, "pid", "left")
-            .select(
-                "pid",
-                "prev",
-                (
-                    F.lit(teleport_int)
-                    + F.expr(
-                        f"CAST((2 * {d_num} * CAST(coalesce(in_mass, 0)"
-                        f" AS {num_t}) + 10000) DIV 20000 AS LONG)"
-                    )
-                ).alias("rank"),
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # ranks normalized to SUM = n_nodes*_U (the "mean rank 1.0"
+        # convention, in micro-units)
+        ranks = nodes.select("pid", F.lit(_U).alias("rank"))
+        for it in range(n_iter):
+            nxt = _next_ranks(adj, ranks, num_t, d_num)
+            part_pagerank.last_n_rounds = it + 1
+            if (it + 1) % check_every and it + 1 < n_iter:
+                ranks = track(nxt.localCheckpoint(eager=False))
+                continue
+            # both sides are hash(pid)-partitioned: no exchange
+            stepped = track(
+                ranks.withColumnRenamed("rank", "prev")
+                .join(nxt, "pid")
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
-        )
-        ranks = stepped.select("pid", "rank")
-        part_pagerank.last_n_rounds = it + 1
-        if (it + 1) % check_every and it + 1 < n_iter:
-            continue
-        # convergence scalar: ONE row; this action also materializes
-        # the lazy checkpoint chain since the previous check
-        delta = stepped.agg(
-            F.max(F.abs(F.col("rank") - F.col("prev")))
-        ).first()[0]
-        if delta is not None and delta <= tol_int:
-            break
+            ranks = stepped.select("pid", "rank")
+            # convergence scalar: ONE row; this action also materializes
+            # the lazy checkpoint chain since the previous check
+            delta = stepped.agg(
+                F.max(F.abs(F.col("rank") - F.col("prev")))
+            ).first()[0]
+            if delta is not None and delta <= tol_int:
+                break
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     # micro-units -> ppm, half-away (matches the oracle's final CTE)
     w = F.expr(f"CAST((2 * rank + {_U // 1_000_000}) DIV"
@@ -426,13 +434,15 @@ def copurchase_bfs_hops(
     PageRank (global centrality), connected components, and triangles
     (local cohesion) — "how many recommendation steps away is X".
 
-    Each level is ONE frontier⋈edges join co-partitioned on the part
-    key + a distinct (map-side collapsing) + an anti-join against the
-    visited set — the standard distributed BFS shape; at 100 TB the
-    visited set broadcasts while small and swaps to the shuffle
-    anti-join automatically past the broadcast threshold (AQE decides
-    per level). Hop counts are exact integers; the oracle replays the
-    same ``max_hops`` levels as chained set differences.
+    Each level is ONE semi-join of the cached edges against the
+    frontier + a distinct (map-side collapsing) + an anti-join against
+    the visited set — the standard distributed BFS shape. Frontier and
+    visited set are node-bounded and both joins force them to broadcast
+    (``F.broadcast``) at every scale; AQE does not choose the strategy
+    here. Past the driver's broadcast budget the hints have to go, and
+    the same plan then runs as shuffle joins. Hop counts are exact
+    integers; the oracle replays the same ``max_hops`` levels as
+    chained set differences.
     """
     edges = track(
         _copurchase_edges(spark, sf_dir).select("src", "dst").persist()

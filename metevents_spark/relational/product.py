@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 from metevents_spark.timeutil import epoch_us
 
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
@@ -439,9 +439,9 @@ def event_pair_lift(
         for i in range(k)
         for j in range(i + 1, k)
     ]
-    pairs = spark.createDataFrame(pair_rows, "a string, b string, bits long")
+    pairs = local_frame(spark, pair_rows, "a string, b string, bits long")
     type_rows = [(t, 1 << i) for i, t in enumerate(types)]
-    tdf = spark.createDataFrame(type_rows, "t string, tbit long")
+    tdf = local_frame(spark, type_rows, "t string, tbit long")
     n_baskets = mask_counts.agg(F.sum("n").alias("n_baskets"))
     pair_counts = (
         pairs.join(

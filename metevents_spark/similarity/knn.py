@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metevents_spark.cache import track
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 
 
 # Shared coarse-quantizer geometry for the IVF family. knn_ivf_pq and
@@ -618,7 +618,8 @@ def ann_recall_report(
                 round(retrieved / float(n_q), 6) if n_q else 0.0,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "method string, n_queries long, k long, n_hits long, "
         "recall_at_k double, mean_retrieved double",

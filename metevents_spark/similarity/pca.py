@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metevents_spark.cache import track
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 
 PARTIAL_SCHEMA = "n long, sums array<double>, prods array<double>"
 
@@ -158,7 +158,8 @@ def embedding_covariance(
     n_tot = p.groupBy().agg(F.sum("n").cast(dec).alias("n_tot"))
 
     iu_i, iu_j = np.triu_indices(dim)
-    mapping = spark.createDataFrame(
+    mapping = local_frame(
+        spark,
         [(int(k), int(i), int(j)) for k, (i, j) in enumerate(zip(iu_i, iu_j))],
         "pos int, i int, j int",
     )

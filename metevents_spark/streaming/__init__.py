@@ -16,7 +16,6 @@ from metevents_spark.streaming.detect import (  # noqa: F401
     stream_zscore,
 )
 from metevents_spark.streaming.dedup import (  # noqa: F401
-    band_bucket_cols,
     minhash_sig_col,
     stream_embedding_near_dup,
     stream_minhash_dedup,

@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metevents_spark.text.dedup import band_buckets
+
 PAIR_OUTPUT_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
 # SHARDED state (r13): the state key is hash(band, bucket) % n_shards,
 # not (band, bucket) itself — see stream_minhash_dedup's docstring.
@@ -149,41 +151,6 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
     # element), keeping the whole signature a single map-side column
     # expression
     return F.transform(F.array(F.split(text_col, " ")), _sig)[0]
-
-
-def band_bucket_cols(sig_col, num_hashes: int = 32, bands: int = 8):
-    """(band, bucket) struct array from a signature column — identical
-    bucket ids to the batch LSH (md5-derived 60-bit hash over the
-    comma-joined band rows), so streaming and batch block the same
-    documents together."""
-    rows = num_hashes // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    sig_col[b * rows + r].cast("string")
-                                    for r in range(rows)
-                                ],
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                )
-                .cast("long")
-                .alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def stream_minhash_dedup(
@@ -350,11 +317,7 @@ def stream_minhash_dedup(
     banded = stream_df.select(
         F.col("doc_id").cast("long").alias("doc_id"), sig.alias("sig")
     ).select(
-        "doc_id",
-        "sig",
-        F.explode(
-            band_bucket_cols(F.col("sig"), num_hashes=num_hashes, bands=bands)
-        ).alias("bb"),
+        "doc_id", "sig", band_buckets("sig", num_hashes, bands).alias("bb")
     ).select(
         "doc_id",
         "sig",

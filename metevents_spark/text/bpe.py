@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metevents_spark.cache import release
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 
 END = "</w>"
 
@@ -87,10 +87,11 @@ def learn_merges(
     deterministic across engines and partitionings.
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
-    # LAZY checkpoints throughout the loop: each round's one-row argmax
-    # collect is the action that materializes the previous round's
-    # fold, so training costs ONE job per merge instead of two
-    # (eager checkpoint + collect) — same trick as dedup_clusters.
+    # LAZY checkpoints throughout the loop: no separate action fills
+    # them; each round's one-row argmax collect materializes the
+    # previous round's fold. Under AQE that collect still runs one job
+    # per stage (the pair-count exchange, then the argmax), and building
+    # the first checkpoint already runs the word-count exchange.
     wf = (
         word_freqs(docs)
         .select("word", "freq", _char_symbols("word").alias("syms"))
@@ -152,10 +153,10 @@ def bpe_learn(
 ) -> DataFrame:
     """Registry entry: the learned merge table as a DataFrame
     (rank, left, right, merged, pair_count)."""
-    rows = learn_merges(spark, sf_dir, n_merges)
-    return spark.createDataFrame(
-        rows,
-        schema="rank long, left string, right string, merged string,"
+    return local_frame(
+        spark,
+        learn_merges(spark, sf_dir, n_merges),
+        "rank long, left string, right string, merged string,"
         " pair_count long",
     ).orderBy("rank")
 

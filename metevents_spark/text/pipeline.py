@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 
 
 def decontaminate_ngram(
@@ -1136,15 +1136,14 @@ def mixture_plan(
     Returns (source, n_docs, n_tokens, weight, target_tokens,
     sampling_rate, epochs), epochs = ceil(rate).
     """
-    from pyspark.sql import Row
-
     spark = docs_with_tokens.sparkSession
     per_source = docs_with_tokens.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
     )
-    wdf = spark.createDataFrame(
-        [Row(source=s, weight=float(w)) for s, w in sorted(weights.items())],
+    wdf = local_frame(
+        spark,
+        [(s, float(w)) for s, w in sorted(weights.items())],
         "source string, weight double",
     )
     joined = per_source.join(F.broadcast(wdf), "source", "left").withColumn(

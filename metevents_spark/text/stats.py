@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metevents_spark.io import load_table
+from metevents_spark.io import load_table, local_frame
 
 # marker-token sets for the n-gram/stopword language heuristic
 LANG_MARKERS = {
@@ -696,7 +696,8 @@ def bm25_rank(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(_tokens())).alias("avgdl"),
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, t) for qid, terms in BM25_QUERIES for t in terms],
         "q_id string, term string",
     )

@@ -18,10 +18,11 @@ _CACHE: dict = {}
 
 def _spark_merges(spark):
     if "m" not in _CACHE:
+        _CACHE["df"] = bpe_learn(spark, SF, n_merges=12)
         _CACHE["m"] = [
             (r["rank"], r["left"], r["right"], r["merged"],
              r["pair_count"])
-            for r in bpe_learn(spark, SF, n_merges=12).collect()
+            for r in _CACHE["df"].collect()
         ]
     return _CACHE["m"]
 
@@ -92,6 +93,16 @@ def test_learned_merges_match_reference(spark):
     # (maximal) merge already counted
     counts = [m[4] for m in got]
     assert counts == sorted(counts, reverse=True)
+
+
+def test_merge_table_is_a_local_relation(spark):
+    """The driver-built merge table enters the plan as a LocalRelation:
+    no Python RDD, so returning it starts no Python worker."""
+    _spark_merges(spark)
+    plan = _CACHE["df"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan, plan
+    for rdd in ("LogicalRDD", "ExistingRDD", "PythonRDD"):
+        assert rdd not in plan, plan
 
 
 def test_token_counts_match_reference_encode(spark):

@@ -151,53 +151,94 @@ def test_minhash_candidates_join_on_buckets(spark):
     assert "InMemoryTableScan" in plan, plan
 
 
-def test_pagerank_round_reuses_edge_partitioning(spark):
-    """A power-iteration round must NOT shuffle or sort the transition
-    frame: it is cached pre-partitioned on src (an InMemoryRelation
-    retains output partitioning; localCheckpoint does not), and the
-    rank side carries a SHUFFLE_HASH hint — so the round plan is a
-    ShuffledHashJoin probing the cache in place, with exchanges only
-    for the |nodes|-sized rank frame and the contribution aggregate.
-    This is the property that took the x100 decade ratio from 23 back
-    into the linear band. r14: the cache is the ADJACENCY frame (one
-    row per src), so the join probe streams |nodes| rows and the
-    |edges|-sized contribution stream is generated map-side by an
-    explode AFTER the join — same plan invariants, fewer probed rows."""
-    from metevents_spark.operators.graph import (
-        _round_contrib,
-        _transition_frame,
-    )
-
-    adj, nodes = _transition_frame(spark, SF)
-    nodes.count()  # materialize the caches, as part_pagerank does
-    ranks = nodes.selectExpr("pid", "cast(1000000000 as long) as rank")
-    contrib = _round_contrib(adj, ranks.localCheckpoint(), "LONG")
-    # walk the JVM physical tree WITHOUT descending into
-    # InMemoryTableScan: the cached build plan (one-time cost)
-    # legitimately contains its own joins and exchanges, and its
-    # stringified form resets indentation inside AQE sections, so
-    # string filtering is not reliable. The walk sees the per-round
-    # plan only.
-    node = contrib._jdf.queryExecution().executedPlan()
+def _round_plan_nodes(df) -> list[str]:
+    """Physical node names of ``df``'s plan, each Exchange with its
+    partitioning, WITHOUT descending into InMemoryTableScan: the cached
+    adjacency build (a one-time cost) legitimately contains its own
+    joins and exchanges, and its stringified form resets indentation
+    inside AQE sections, so string filtering is not reliable. The walk
+    sees the per-round plan only."""
+    node = df._jdf.queryExecution().executedPlan()
     if node.nodeName() == "AdaptiveSparkPlan":
         node = node.initialPlan()
     names: list[str] = []
 
     def walk(n):
-        names.append(n.nodeName())
+        name = n.nodeName()
+        if name == "Exchange":
+            name += " " + n.outputPartitioning().toString()
+        names.append(name)
         if n.nodeName() == "InMemoryTableScan":
             return
         for i in range(n.children().length()):
             walk(n.children().apply(i))
 
     walk(node)
+    return names
+
+
+def _exchanges(names: list[str]) -> list[str]:
+    return [n for n in names if n.startswith("Exchange")]
+
+
+def test_pagerank_round_reuses_edge_partitioning(spark):
+    """A power-iteration round must NOT shuffle or sort the transition
+    frame, whatever partitioning its rank frame arrives with: the
+    adjacency is cached pre-partitioned on src (an InMemoryRelation
+    retains output partitioning), and the rank side carries a
+    SHUFFLE_HASH hint — so the round plan is a ShuffledHashJoin probing
+    the cache in place. Here the rank frame is an eager checkpoint
+    under AQE, which scans back as UnknownPartitioning, so the round
+    shuffles the |nodes|-sized rank frame besides the contribution
+    aggregate; the static plans part_pagerank actually builds keep the
+    rank partitioning and plan one exchange (next test)."""
+    from metevents_spark.operators.graph import _next_ranks, _transition_frame
+
+    adj, nodes = _transition_frame(spark, SF)
+    nodes.count()  # materialize the caches, as part_pagerank does
+    ranks = nodes.selectExpr("pid", "cast(1000000000 as long) as rank")
+    names = _round_plan_nodes(_next_ranks(adj, ranks.localCheckpoint(), "LONG", 8500))
     assert "ShuffledHashJoin" in names, names
     assert "SortMergeJoin" not in names, names
     assert "InMemoryTableScan" in names, names
     # rank-side shuffle + aggregate shuffle only; the edge side must
     # contribute NO exchange (its hashpartitioning lives inside the
     # cached plan, not the round plan)
-    assert names.count("Exchange") <= 2, names
+    assert len(_exchanges(names)) <= 2, names
+
+
+def test_pagerank_static_round_plans_one_exchange(spark):
+    """part_pagerank's round loop plans with AQE off, so a lazy rank
+    checkpoint keeps hashpartitioning(pid): a round without a
+    convergence check plans exactly ONE exchange, the contribution
+    aggregate on dst, and the adjacency side none. A check round joins
+    the previous ranks on pid without adding one."""
+    from pyspark.sql import functions as F
+
+    from metevents_spark.operators.graph import _next_ranks, _transition_frame
+
+    adj, nodes = _transition_frame(spark, SF)
+    nodes.count()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        ranks = nodes.select("pid", F.lit(10**9).cast("long").alias("rank"))
+        for _ in range(2):
+            nxt = _next_ranks(adj, ranks, "LONG", 8500)
+            names = _round_plan_nodes(nxt)
+            (exchange,) = _exchanges(names)
+            assert exchange.startswith("Exchange hashpartitioning(dst#"), names
+            assert "ShuffledHashJoin" in names, names
+            assert "InMemoryTableScan" in names, names
+            ranks = nxt.localCheckpoint(eager=False)
+        check = _round_plan_nodes(
+            ranks.withColumnRenamed("rank", "prev").join(
+                _next_ranks(adj, ranks, "LONG", 8500), "pid"
+            )
+        )
+        assert len(_exchanges(check)) == 1, check
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_embedding_quantize_hoists_scale_out_of_fold(spark):
