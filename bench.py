@@ -19,228 +19,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# every registered query, detector kernels first — the benchmark IS the
-# coverage surface (per-query timings recorded by the driver)
-HEADLINE = [
-    "extreme_value",
-    "ann_recall_lsh_ivf",
-    "flat_line",
-    "extreme_change",
-    "data_gap",
-    "freq_infer",
-    "storm_find",
-    "spike_valley",
-    "sessionize",
-    "daily_rollup",
-    "pricing_summary",
-    "revenue_topn",
-    "region_revenue",
-    "shipping_priority",
-    "shipmode_priority_counts",
-    "top_customers_per_segment",
-    "order_priority_check",
-    "nation_segment_rollup",
-    "brand_revenue",
-    "brand_supplier_stats",
-    "value_quantiles",
-    "value_quantiles_approx",
-    "events_pivot",
-    "top_price_orders",
-    "customers_no_order_1996",
-    "big_spender_1995",
-    "repeat_customers",
-    "churned_customers",
-    "small_qty_part_revenue",
-    "cumulative_revenue",
-    "events_cube",
-    "user_reach",
-    "user_reach_approx",
-    "value_histogram",
-    "lineitem_unpivot",
-    "price_deciles",
-    "asof_purchase_before_error",
-    "range_join_error_purchase",
-    "rolling_mean",
-    "trailing_24h_mean",
-    "zscore_anomaly",
-    "text_stats",
-    "lang_id",
-    "token_count_bpe",
-    "vocab_top_terms",
-    "quality_filter",
-    "gopher_quality",
-    "url_canonicalize",
-    "paragraph_dedup",
-    "mixture_plan",
-    "temperature_mixture",
-    "shuffle_shards",
-    "zipf_fit",
-    "dedup_recall_report",
-    "bpe_learn",
-    "bpe_token_count",
-    "tfidf_top_terms",
-    "doc_fingerprint",
-    "rolling_fingerprint",
-    "exact_dedup",
-    "prefix_dedup",
-    "minhash_near_dup",
-    "ngram_jaccard_pairs",
-    "simhash_fingerprints",
-    "simhash_near_dup",
-    "knn_cosine",
-    "knn_lsh",
-    "ann_recall_report",
-    "knn_ivf",
-    "knn_ivf_pq",
-    "dedup_clusters",
-    "embedding_norms",
-    "embedding_near_dup",
-    "media_features",
-    "frame_sample",
-    "media_resize",
-    "decontaminate_ngram",
-    "decontaminate_bloom",
-    "incremental_dedup",
-    "importance_resample",
-    "boilerplate_phrases",
-    "ngram_novelty",
-    "event_transitions",
-    "top_paths",
-    "contamination_fraction",
-    "sequence_pack",
-    "stratified_sample",
-    "source_mix_sample",
-    "repetition_stats",
-    "label_centroids",
-    "funnel_conversion",
-    "retention_cohorts",
-    "rolling_7d_active",
-    "pii_redact",
-    "domain_stats",
-    "edit_distance_pairs",
-    "cross_doc_ngram_share",
-    "duplicate_spans",
-    "remove_duplicate_spans",
-    "unigram_logprob",
-    "source_lang_matrix",
-    "corpus_summary",
-    "props_value_stats",
-    "media_dedup",
-    "corpus_summary_approx",
-    "cooccurrence_counts",
-    "robust_zscore",
-    "gap_fill_hourly",
-    "doc_chunking",
-    "event_pair_lift",
-    "ewma_smooth",
-    "holt_smooth",
-    "bigram_logprob",
-    "session_overlap",
-    "seasonal_anomaly",
-    "quality_bucket_sample",
-    "value_drift_psi",
-    "vocab_top_terms_approx",
-    "cusum_alarm",
-    "series_trend",
-    "series_quantile_bands",
-    "embedding_quantize",
-    "loyal_customers",
-    "nation_revenue_share",
-    "data_expectations",
-    "nation_trade_flow",
-    "min_cost_supplier",
-    "important_parts",
-    "top_supplier",
-    "large_volume_customers",
-    "sole_return_supplier",
-    "rich_idle_customers",
-    "discounted_revenue",
-    "returned_item_customers",
-    "customer_order_distribution",
-    "promo_revenue_pct",
-    "disjunctive_part_revenue",
-    "heavy_shippers",
-    "downsample_ohlc",
-    "event_type_corr",
-    "corpus_yield",
-    "anomaly_consensus",
-    "series_acf",
-    "classifier_score",
-    "bpe_pair_counts",
-    "lttb_downsample",
-    "semantic_dedup",
-    "kmeans_embeddings",
-    "seasonal_decompose",
-    "latest_event_per_user",
-    "winsorize_series",
-    "holdout_split",
-    "normalize_text",
-    "nation_market_share",
-    "product_type_profit",
-    "random_projection",
-    "bm25_rank",
-    "part_supplier_counts",
-    "hash_sample",
-    "media_embedding_near_dup",
-    "time_weighted_avg",
-    "counter_rate",
-    "pareto_parts",
-    "embedding_covariance",
-    "pca_embeddings",
-    "token_entropy",
-    "source_token_kl",
-    "dominant_part_suppliers",
-    "ks_drift",
-    "rolling_reach_hll",
-    "nation_yoy_growth",
-    "embedding_whitening",
-    "mad_drift",
-    "market_basket_lift",
-    "rolling_median",
-    "interval_coverage",
-    "weighted_sample",
-    "user_reach_kmv",
-    "key_skew_report",
-    "skew_join_compare",
-    "holt_backtest",
-    "survival_retention",
-    "mutual_information",
-    "benford_deviation",
-    "score_percentile_by_source",
-    "source_weighted_sample",
-    "interarrival_stats",
-    "burst_collapse",
-    "region_nation_rollup",
-    "region_nations_csv",
-    "events_above_type_avg",
-    "rrf_fusion",
-    "chi2_terms",
-    "classifier_calibration",
-    "doc_containment",
-    "part_pagerank",
-    "purchase_attribution",
-    "model_select_backtest",
-    "ab_test_report",
-    "theilsen_trend",
-    "theilsen_trend_sampled",
-    "spearman_trend",
-    "mann_whitney_u",
-    "mann_whitney_u_bucketed",
-    "revenue_gini",
-    "conversion_lag",
-    "copurchase_triangles",
-    "oov_rate",
-    "dedup_survivor_pick",
-    "hard_negative_mining",
-    "kendall_trend",
-    "kendall_trend_sampled",
-    "conversion_bootstrap_ci",
-    "audience_overlap",
-    "ship_delay_quantiles",
-    "copurchase_bfs_hops",
-    "dedup_rate_by_source",
-]
-
 
 def _cpu_probe(reps: int = 3) -> float:
     """Fixed-work single-thread CPU probe: hash a constant buffer and
@@ -400,7 +178,8 @@ def main() -> None:
     probes: list[float] = [round(probe_start, 4)]
     pprobes: list[float] = [round(pprobe_start, 4)]
     probe_taints: list[str] = []
-    for qi, name in enumerate(HEADLINE):
+    # every registered query, in registry order (detectors first)
+    for qi, name in enumerate(QUERIES):
         if probe_every > 0 and qi and qi % probe_every == 0:
             p = _cpu_probe()
             pp = _cpu_probe_parallel()

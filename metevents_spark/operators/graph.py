@@ -3,10 +3,8 @@ fact tables.
 
 The engine's Pregel-style tier: like ``dedup_clusters`` (text/dedup.py
 connected components), each iteration is one join + one
-map-side-combining aggregate, with a lazy ``localCheckpoint`` per round
-to cut the growing lineage (the standard Spark iterative-algorithm
-pattern; on a cluster with a checkpoint dir you would swap in reliable
-``.checkpoint()``).
+map-side-combining aggregate, and the rounds run under
+``cache.fixpoint`` (its docstring states the round contract).
 
 PageRank here runs over the co-purchase part graph: parts are linked
 when they appear in the same order (the product-graph construction
@@ -31,9 +29,7 @@ Scale shape:
     text/dedup.py). The default ``tol=0.0`` exits only at an EXACT
     fixed point, where every further round is an identity map — so
     output is bit-identical to the fixed-round contract while
-    converged graphs skip the wasted rounds; per-round
-    localCheckpoint keeps the plan depth constant, with the RDDs
-    released by the registry's cache tracker.
+    converged graphs skip the wasted rounds.
 """
 
 from __future__ import annotations
@@ -41,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metevents_spark.cache import track
+from metevents_spark.cache import fixpoint, sum_settled, track
 from metevents_spark.io import load_table
 
 # rank micro-units per 1.0 of rank mass (part_pagerank integer
@@ -227,19 +223,10 @@ def part_pagerank(
     Under tol=0.0 the delta is checked every 3rd round (and after the
     last); with tol > 0 after every round.
 
-    Static round plans: the round loop builds and runs its plans with
-    ``spark.sql.adaptive.enabled`` off, and restores the caller's value
-    when it returns or raises; the returned frame is planned under the
-    caller's setting. The setting is session-wide, so a query planned
-    concurrently on the same session meanwhile also runs without AQE.
-    Under AQE a lazy ``localCheckpoint`` executes its
-    adaptive plan while the frame is built (each exchange a separate
-    job) and scans back as UnknownPartitioning. With static plans it
-    stays lazy and keeps hashpartitioning(pid) at
-    ``spark.sql.shuffle.partitions``, the cached adjacency's own
-    partitioning. A round therefore plans exactly one exchange, the
-    contribution aggregate, and the rounds up to each convergence check
-    run as one job.
+    Static round plans: the rounds run under ``cache.fixpoint``, whose
+    docstring states the static-plan, lazy-checkpoint and release
+    contract. Each round plans one exchange, the contribution aggregate,
+    and the rounds up to each convergence check run as one job.
 
     INTEGER micro-unit arithmetic throughout (r13, the Lloyd-integer
     playbook from knn_ivf/semantic_dedup): ranks live in 1e-9 units
@@ -271,41 +258,25 @@ def part_pagerank(
     d_num = int(round(damping * 10_000))
     tol_int = int(round(tol * _U))
     num_t = _rank_arith_type(adj)
-    # Under tol=0.0 the exit only fires at an EXACT integer fixed point,
-    # where every further round is an identity map, so checking the
-    # delta every 3rd round can only run extra identity rounds and the
-    # final ranks are bit-identical. With tol > 0 an overshoot WOULD
-    # change the output, so every round is checked.
-    check_every = 3 if tol_int == 0 else 1
-    part_pagerank.last_n_rounds = 0
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # ranks normalized to SUM = n_nodes*_U (the "mean rank 1.0"
-        # convention, in micro-units)
-        ranks = nodes.select("pid", F.lit(_U).alias("rank"))
-        for it in range(n_iter):
-            nxt = _next_ranks(adj, ranks, num_t, d_num)
-            part_pagerank.last_n_rounds = it + 1
-            if (it + 1) % check_every and it + 1 < n_iter:
-                ranks = track(nxt.localCheckpoint(eager=False))
-                continue
-            # both sides are hash(pid)-partitioned: no exchange
-            stepped = track(
-                ranks.withColumnRenamed("rank", "prev")
-                .join(nxt, "pid")
-                .localCheckpoint(eager=False)
-            )
-            ranks = stepped.select("pid", "rank")
-            # convergence scalar: ONE row; this action also materializes
-            # the lazy checkpoint chain since the previous check
-            delta = stepped.agg(
-                F.max(F.abs(F.col("rank") - F.col("prev")))
-            ).first()[0]
-            if delta is not None and delta <= tol_int:
-                break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    def settled(prev: DataFrame, nxt: DataFrame) -> bool:
+        # both sides are hash(pid)-partitioned: the join plans no exchange
+        d = prev.withColumnRenamed("rank", "prev").join(nxt, "pid")
+        delta = d.agg(F.max(F.abs(d.rank - d.prev))).first()[0]
+        return delta is not None and delta <= tol_int
+
+    # ranks normalized to SUM = n_nodes*_U (the "mean rank 1.0"
+    # convention, in micro-units). Under tol=0.0 the exit only fires at
+    # an EXACT integer fixed point, where every further round is an
+    # identity map, so checking the delta every 3rd round can only run
+    # extra identity rounds and the final ranks are bit-identical. With
+    # tol > 0 an overshoot WOULD change the output, so every round is
+    # checked.
+    ranks = nodes.select("pid", F.lit(_U).alias("rank"))
+    ranks, part_pagerank.last_n_rounds = fixpoint(
+        spark, ranks, lambda ranks, _: _next_ranks(adj, ranks, num_t, d_num),
+        settled, n_iter, check_every=3 if tol_int == 0 else 1,
+    )
 
     # micro-units -> ppm, half-away (matches the oracle's final CTE)
     w = F.expr(f"CAST((2 * rank + {_U // 1_000_000}) DIV"
@@ -434,63 +405,50 @@ def copurchase_bfs_hops(
     PageRank (global centrality), connected components, and triangles
     (local cohesion) — "how many recommendation steps away is X".
 
-    Each level is ONE semi-join of the cached edges against the
-    frontier + a distinct (map-side collapsing) + an anti-join against
-    the visited set — the standard distributed BFS shape. Frontier and
-    visited set are node-bounded and both joins force them to broadcast
-    (``F.broadcast``) at every scale; AQE does not choose the strategy
-    here. Past the driver's broadcast budget the hints have to go, and
-    the same plan then runs as shuffle joins. Hop counts are exact
-    integers; the oracle replays the same ``max_hops`` levels as
-    chained set differences.
+    The state is one ``reached(p_partkey, hops)`` frame, and the levels
+    run under ``cache.fixpoint`` (its docstring states the round
+    contract). Each level is ONE semi-join of the cached edges against
+    the frontier (``reached``'s last level) + a distinct (map-side
+    collapsing) + an anti-join against ``reached`` — the standard
+    distributed BFS shape. Frontier and reached set are node-bounded
+    while the edge list is orders of magnitude larger, so both joins
+    force them to broadcast (``F.broadcast``) at every scale: each level
+    is one map-side probe over the cached edges (a sort-merge join
+    re-sorts all edges EVERY level: measured 8s vs 4.5s warm at sf0.1).
+    Past the driver's broadcast budget the hints have to go, and the
+    same plan then runs as co-partitioned shuffle joins. The loop stops
+    early at the first empty level, whose successors are empty too.
+    Hop counts are exact integers; the oracle replays the same
+    ``max_hops`` levels as chained set differences.
     """
     edges = track(
         _copurchase_edges(spark, sf_dir).select("src", "dst").persist()
     )
-    # fill the edge cache with ONE action before the traversal: the
-    # lazy union tree references edges from several branches of the
-    # same final job, and an unfilled cache races — the basket
-    # self-join was measured re-running per branch (7-8s vs 2.9s warm)
-    edges.count()
-    seed = (
+    # the seed's EAGER checkpoint is the first action over the edges,
+    # so it also fills their cache before any level reads it
+    seed = track(
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
         .orderBy(F.desc("d"), "src")
         .limit(1)
         .select(F.col("src").alias("p_partkey"), F.lit(0).cast("long").alias("hops"))
+        .localCheckpoint()
     )
-    # per-level shape: frontier and visited sets are node-bounded
-    # (|parts| rows) while the edge list is orders of magnitude larger
-    # — BROADCAST them so each level is one map-side semi/anti probe
-    # over the cached edges (a sort-merge join re-sorts all edges
-    # EVERY level: measured 8s vs 4.5s warm at sf0.1). Each level's
-    # tiny frontier materializes EAGERLY (localCheckpoint) so the next
-    # level's plan starts from rows, not a re-evaluable subtree —
-    # lazy persists let the final job race its own cache fills. At
-    # graph scales where the visited set outgrows the broadcast
-    # threshold, drop the hints and the same plan runs as
-    # co-partitioned shuffle joins.
-    seed_f = track(seed.select("p_partkey").localCheckpoint())
-    levels = [seed_f.select("p_partkey", F.lit(0).cast("long").alias("hops"))]
-    visited, frontier = seed_f, seed_f
-    for h in range(1, max_hops + 1):
-        nxt = track(
-            edges.join(
-                F.broadcast(frontier),
-                frontier["p_partkey"] == edges["src"],
-                "left_semi",
-            )
+
+    def level(reached: DataFrame, h: int) -> DataFrame:
+        frontier = reached.filter(F.col("hops") == h).select(
+            F.col("p_partkey").alias("src")
+        )
+        new = (
+            edges.join(F.broadcast(frontier), "src", "left_semi")
             .select(F.col("dst").alias("p_partkey"))
             .distinct()
-            .join(F.broadcast(visited), "p_partkey", "left_anti")
-            .localCheckpoint()
+            .join(F.broadcast(reached.select("p_partkey")), "p_partkey", "left_anti")
+            .select("p_partkey", F.lit(h + 1).cast("long").alias("hops"))
         )
-        levels.append(
-            nxt.select("p_partkey", F.lit(h).cast("long").alias("hops"))
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionByName(lvl)
-    return out.orderBy("hops", "p_partkey")
+        return reached.unionByName(new)
+
+    # every new level's hops are >= 1, so an unchanged hop sum means
+    # the level is empty
+    reached, _ = fixpoint(spark, seed, level, sum_settled("hops"), max_hops)
+    return reached.orderBy("hops", "p_partkey")

@@ -17,9 +17,9 @@ forces:
 - Merge application is a JVM-side ``aggregate`` fold over the symbol
   arrays (greedy left-to-right, non-overlapping — the classic BPE
   convention), so no round moves word payloads through Python.
-- Lineage is cut per round with localCheckpoint (same Pregel-style
-  iteration pattern as dedup_clusters); without it Catalyst re-analyzes
-  n_merges nested fold lambdas each round.
+- The rounds run under ``cache.fixpoint`` (its docstring states the
+  round contract), which cuts lineage per round; without that Catalyst
+  re-analyzes n_merges nested fold lambdas each round.
 - ENCODING is vocab-sized, not corpus-sized: each DISTINCT word is
   encoded once in an Arrow-batched pandas UDF, and documents get their
   token counts back through a broadcast join on the word.
@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metevents_spark.cache import release
+from metevents_spark.cache import fixpoint, release
 from metevents_spark.io import load_table, local_frame
 
 END = "</w>"
@@ -87,19 +87,16 @@ def learn_merges(
     deterministic across engines and partitionings.
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
-    # LAZY checkpoints throughout the loop: no separate action fills
-    # them; each round's one-row argmax collect materializes the
-    # previous round's fold. Under AQE that collect still runs one job
-    # per stage (the pair-count exchange, then the argmax), and building
-    # the first checkpoint already runs the word-count exchange.
-    wf = (
-        word_freqs(docs)
-        .select("word", "freq", _char_symbols("word").alias("syms"))
-        .localCheckpoint(eager=False)
-    )
     merges: list[tuple[int, str, str, str, int]] = []
-    prev = None  # superseded checkpoint, released once its child lands
-    for rank in range(1, n_merges + 1):
+
+    def apply_last(wf: DataFrame, r: int) -> DataFrame:
+        # round 0 only checkpoints the word table for the first argmax
+        if not r:
+            return wf
+        _, left, right, merged, _ = merges[-1]
+        return wf.withColumn("syms", _merge_fold(left, right, merged))
+
+    def no_pair_left(_: DataFrame, wf: DataFrame) -> bool:
         # guard size<2: sequence(0, -1) DESCENDS in Spark ([0, -1]),
         # so a fully-merged single-symbol word would index out of
         # bounds (hit by overlap-heavy corpora where short words merge
@@ -122,28 +119,14 @@ def learn_merges(
             .limit(1)
             .collect()
         )
-        if not best:
-            break
-        # the collect above materialized wf's checkpoint, so the
-        # PREVIOUS round's checkpoint is no longer anyone's lineage —
-        # release it now instead of waiting for the JVM ContextCleaner
-        # to GC-notice it (at real scale each is a vocab-sized frame,
-        # and a 169-query session shouldn't accumulate n_merges of
-        # them per training run)
-        if prev is not None:
-            release(prev)
-        prev = wf
-        left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
-        merged = left + right
-        merges.append((rank, left, right, merged, n))
-        wf = wf.withColumn(
-            "syms", _merge_fold(left, right, merged)
-        ).localCheckpoint(eager=False)
-    # the loop's tail: the last materialized checkpoint and the final
-    # (possibly never-materialized) lazy one — nothing downstream reads
-    # them; the merge table in `merges` is plain Python
-    if prev is not None:
-        release(prev)
+        if best:
+            left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
+            merges.append((len(merges) + 1, left, right, left + right, n))
+        return not best
+
+    wf = word_freqs(docs).select("word", "freq", _char_symbols("word").alias("syms"))
+    wf, _ = fixpoint(spark, wf, apply_last, no_pair_left, n_merges)
+    # the merge table is plain Python: nothing downstream reads wf
     release(wf)
     return merges
 

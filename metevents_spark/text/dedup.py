@@ -16,7 +16,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metevents_spark.cache import release, track
+from metevents_spark.cache import fixpoint, sum_settled, track
 from metevents_spark.io import load_table
 
 
@@ -722,8 +722,8 @@ def dedup_clusters(
     # the symmetric edge frame is joined on doc_b EVERY round; cached
     # pre-partitioned on it (on top of the lineage-cutting checkpoint,
     # which itself scans back as UnknownPartitioning) each round
-    # consumes the cache in place and shuffles only the label frame —
-    # the part_pagerank round-plan contract (operators/graph.py)
+    # consumes the cache in place and shuffles only the label frame;
+    # the rounds run under cache.fixpoint, which states the round contract
     edges = track(
         pairs.union(
             pairs.select(
@@ -734,19 +734,7 @@ def dedup_clusters(
         .persist()
     )
 
-    # vertices touched by at least one edge — the only ones whose label
-    # can ever change under min-propagation
-    labels = track(
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    # labels only ever DECREASE under min-propagation, so the label sum
-    # strictly drops until fixpoint — one aggregate per round detects
-    # convergence, no self-join diff needed
-    prev_sum = None
-    for _ in range(max_iters):
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         # next label = min over own label and in-neighbors' labels: one
         # shuffle-join to pull neighbor labels + one groupBy-min over
         # the union with the current labels (map-side combinable).
@@ -754,25 +742,20 @@ def dedup_clusters(
             labels.hint("shuffle_hash"),
             edges["doc_b"] == labels["doc_id"],
         ).select(F.col("doc_a").alias("doc_id"), "cluster")
-        new_labels = (
+        return (
             contrib.union(labels)
             .groupBy("doc_id")
             .agg(F.min("cluster").alias("cluster"))
-            # LAZY checkpoint, read by the convergence-sum collect right
-            # below (an eager fill + sum measured ~0.7s/query slower).
-            # Under AQE, building it already executes the round's
-            # shuffle stages, one job each, before the sum's own job.
-            .localCheckpoint(eager=False)
         )
-        cur_sum = new_labels.agg(F.sum("cluster")).collect()[0][0]
-        # the sum collect materialized new_labels' checkpoint, so the
-        # superseded round's frame is lineage for nothing — release it
-        # now rather than accumulating max_iters label frames
-        release(labels)
-        labels = track(new_labels)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+
+    # vertices touched by at least one edge — the only ones whose label
+    # can ever change under min-propagation. Labels only ever DECREASE,
+    # so the label sum strictly drops until fixpoint — one aggregate per
+    # round detects convergence, no self-join diff needed
+    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct()
+    labels = labels.withColumn("cluster", F.col("doc_id"))
+    labels, _ = fixpoint(spark, labels, propagate, sum_settled("cluster"), max_iters)
+
     # attach every document via its exact-dedup representative:
     # edge-less reps (isolated texts) become singleton clusters, exact
     # copies inherit their rep's label (= min doc_id of the copy group,

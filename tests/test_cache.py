@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from tests.conftest import SF_SMALL
@@ -70,26 +72,29 @@ def test_registry_queries_release_prior_persists(spark):
     assert drained(spark, ours) == set()
 
 
-def test_checkpoint_queries_release_storage(spark):
+@pytest.mark.parametrize(
+    "query",
+    ["bpe_learn", "dedup_clusters", "part_pagerank", "copurchase_bfs_hops"],
+)
+def test_checkpoint_queries_release_storage(spark, query):
     """localCheckpoint persistence lives on the underlying RDD, where
-    DataFrame.unpersist() is a silent no-op — the iterative operators
-    (BPE training, cluster propagation) must release superseded
-    checkpoints eagerly and leave nothing for the ContextCleaner."""
+    DataFrame.unpersist() is a silent no-op — every RDD a loop query
+    persisted, checkpoints included, must be gone once the next
+    registry query has started, and nothing left for the
+    ContextCleaner."""
     import __spark_entry__ as entrymod
     from metevents_spark.cache import release_all
 
     release_all()
     qs = entrymod.queries()
     base = persisted_rdd_ids(spark)
-    # BPE releases every round's checkpoint itself (training runs at
-    # build time; the returned merge table is a plain local frame)
-    qs["bpe_learn"](spark, SF_SMALL).count()
-    assert drained(spark, persisted_rdd_ids(spark) - base) == set()
-    # dedup_clusters keeps only its LIVE tracked frames while running;
-    # the next registry query must drain them — including the
-    # checkpointed pair/label frames, not just the CacheManager ones
-    qs["dedup_clusters"](spark, SF_SMALL).count()
+    qs[query](spark, SF_SMALL).count()
     ours = persisted_rdd_ids(spark) - base
-    assert len(ours) >= 1
+    if query == "bpe_learn":
+        # training runs at build time and the returned merge table is a
+        # plain local frame: nothing may stay persisted even now
+        assert drained(spark, ours) == set()
+    else:
+        assert len(ours) >= 1
     qs["exact_dedup"](spark, SF_SMALL).count()
     assert drained(spark, ours) == set()

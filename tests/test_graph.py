@@ -1,7 +1,8 @@
 """part_pagerank's static round loop (operators/graph.py): the rounds
 between two convergence checks run as one job, and the caller's AQE
-setting survives the loop, also when a round raises. Graphs are built
-in ``tmp_path``, so no generated testdata is needed."""
+setting survives the loop (tests/test_fixpoint.py covers the raising
+case). Graphs are built in ``tmp_path``, so no generated testdata is
+needed."""
 
 from __future__ import annotations
 
@@ -40,17 +41,6 @@ def test_pagerank_restores_aqe(spark, cycle, before):
         spark.conf.set(AQE, "true")
     assert graph.part_pagerank.last_n_rounds == 3
     assert (got["rank_ppm"] == 1_000_000).all()
-
-
-def test_pagerank_restores_aqe_when_a_round_raises(spark, cycle, monkeypatch):
-    def failing_round(*args):
-        raise RuntimeError("round failed")
-
-    monkeypatch.setattr(graph, "_next_ranks", failing_round)
-    spark.conf.set(AQE, "true")
-    with pytest.raises(RuntimeError, match="round failed"):
-        graph.part_pagerank(spark, cycle)
-    assert spark.conf.get(AQE) == "true"
 
 
 def test_pagerank_runs_one_job_per_check(spark, tmp_path):

@@ -143,13 +143,3 @@ def test_window_spends_no_slot_on_already_rowed_rows_only_keys():
         f"{violations}"
     )
 
-
-def test_bench_headline_covers_registry():
-    """bench.py's HEADLINE list is the driver-recorded perf surface;
-    every registered query must be in it (and nothing stale)."""
-    import bench
-
-    entrymod = _entry()
-    assert list(bench.HEADLINE) and set(bench.HEADLINE) == set(
-        entrymod.queries()
-    )
