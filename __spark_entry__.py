@@ -17,9 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from metevents_spark.queries import q_extreme_value
+    from metevents_spark.queries import QUERIES
 
-    return q_extreme_value(spark, "/root/testdata/sf0.001")
+    return QUERIES["extreme_value"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

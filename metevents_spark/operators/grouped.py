@@ -36,6 +36,42 @@ from metevents_spark.operators.runs import range_by_sid
 SeriesKernel = Callable[[str, np.ndarray, np.ndarray], list[tuple]]
 
 
+def series_segments(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[list[tuple[str, np.ndarray, np.ndarray]]]:
+    """Split a partition sorted by (sid, ts, seq) into whole series.
+    Per Arrow batch, yields the list of (sid, ts datetime64[us], value
+    float64) series that END in it: boundaries come from one vectorized
+    ``np.flatnonzero``, and the batch's last series is carried into
+    the next batch, since it may continue there. The final carry is
+    yielded after the last batch."""
+    carry: tuple | None = None  # (sid, ts, values) of the open series
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        sids = pdf["sid"].to_numpy(dtype=object)
+        ts = pdf["ts"].to_numpy(dtype="datetime64[us]")
+        vals = pdf["value"].to_numpy(dtype=np.float64)
+        starts = np.concatenate(([0], np.flatnonzero(sids[1:] != sids[:-1]) + 1))
+        ends = np.append(starts[1:], n)
+        done = []
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            sid, seg_ts, seg_v = sids[s], ts[s:e], vals[s:e]
+            if carry is not None and carry[0] == sid:
+                seg_ts = np.concatenate((carry[1], seg_ts))
+                seg_v = np.concatenate((carry[2], seg_v))
+            elif carry is not None:
+                done.append(carry)
+            carry = (sid, seg_ts, seg_v)
+            if e < n:
+                done.append(carry)
+                carry = None
+        yield done
+    if carry is not None:
+        yield [carry]
+
+
 def map_series_kernel(
     df: DataFrame,
     kernel: SeriesKernel,
@@ -54,46 +90,10 @@ def map_series_kernel(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: tuple | None = None  # (sid, ts_np, val_np)
-        rows: list[tuple] = []
-
-        def flush() -> Iterator[pd.DataFrame]:
-            nonlocal rows
+        for series in series_segments(batches):
+            rows = [r for sid, ts, vals in series for r in kernel(sid, ts, vals)]
             if rows:
-                out = pd.DataFrame(rows, columns=out_columns).astype(out_dtypes)
-                rows = []
-                yield out
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            sids = pdf["sid"].to_numpy(dtype=object)
-            ts = pdf["ts"].to_numpy(dtype="datetime64[us]")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            change = np.flatnonzero(sids[1:] != sids[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            last = len(starts) - 1
-            for i in range(len(starts)):
-                s, e = int(starts[i]), int(ends[i])
-                sid = sids[s]
-                seg_ts, seg_v = ts[s:e], vals[s:e]
-                if carry is not None:
-                    if carry[0] == sid:
-                        seg_ts = np.concatenate((carry[1], seg_ts))
-                        seg_v = np.concatenate((carry[2], seg_v))
-                    else:
-                        rows.extend(kernel(carry[0], carry[1], carry[2]))
-                    carry = None
-                if i == last:
-                    carry = (sid, seg_ts, seg_v)
-                else:
-                    rows.extend(kernel(sid, seg_ts, seg_v))
-            yield from flush()
-        if carry is not None:
-            rows.extend(kernel(carry[0], carry[1], carry[2]))
-        yield from flush()
+                yield pd.DataFrame(rows, columns=out_columns).astype(out_dtypes)
 
     return prepared.mapInPandas(run, schema)
 

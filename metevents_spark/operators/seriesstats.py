@@ -217,8 +217,8 @@ def ewma_smooth(
     pandas' exact C-kernel arithmetic order (bit-identical, hash-green
     at sf0.001/0.01/0.1), and tests/test_seriesstats.py additionally
     holds it to pandas' ewm differentially. ONE sid exchange + in-partition sort, then a
-    dedicated mapInPandas: series boundaries found vectorized
-    (np.flatnonzero), each segment folded by pandas' C-implemented
+    dedicated mapInPandas: ``grouped.series_segments`` splits the
+    batches into series, each folded by pandas' C-implemented
     ``ewm(adjust=False, ignore_na=True)``, and the output assembled
     as COLUMN ARRAYS — the generic tuple-per-row kernel protocol
     (operators/grouped.py) measured ~4x slower here because EWMA
@@ -230,6 +230,8 @@ def ewma_smooth(
     import numpy as np
     import pandas as pd
 
+    from metevents_spark.operators.grouped import series_segments
+
     df = series_frame(spark, sf_dir)
     num_partitions = int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -238,55 +240,26 @@ def ewma_smooth(
         df.select("sid", "ts", "value", "seq"), num_partitions
     ).sortWithinPartitions("sid", "ts", "seq")
 
+    def fold(sid, ts, vals) -> pd.DataFrame:
+        ew = (
+            pd.Series(vals)
+            .ewm(alpha=alpha, adjust=False, ignore_na=True)
+            .mean()
+            .to_numpy()
+        )
+        return pd.DataFrame(
+            {
+                "sid": np.repeat(np.array([sid], dtype=object), len(ts)),
+                "ts": ts,
+                "value": vals,
+                "ewma": np.round(ew, 6),
+            }
+        )
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_sid: str | None = None
-        c_ts = c_v = None  # carried arrays for the partition-tail series
-
-        def fold(sid, ts, vals) -> pd.DataFrame:
-            ew = (
-                pd.Series(vals)
-                .ewm(alpha=alpha, adjust=False, ignore_na=True)
-                .mean()
-                .to_numpy()
-            )
-            return pd.DataFrame(
-                {
-                    "sid": np.repeat(np.array([sid], dtype=object), len(ts)),
-                    "ts": ts,
-                    "value": vals,
-                    "ewma": np.round(ew, 6),
-                }
-            )
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            sids = pdf["sid"].to_numpy(dtype=object)
-            ts = pdf["ts"].to_numpy(dtype="datetime64[us]")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            change = np.flatnonzero(sids[1:] != sids[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            outs = []
-            for i in range(len(starts)):
-                s, e = int(starts[i]), int(ends[i])
-                sid, seg_ts, seg_v = sids[s], ts[s:e], vals[s:e]
-                if c_sid is not None:
-                    if c_sid == sid:
-                        seg_ts = np.concatenate((c_ts, seg_ts))
-                        seg_v = np.concatenate((c_v, seg_v))
-                    else:
-                        outs.append(fold(c_sid, c_ts, c_v))
-                    c_sid = None
-                if i == len(starts) - 1:
-                    c_sid, c_ts, c_v = sid, seg_ts, seg_v
-                else:
-                    outs.append(fold(sid, seg_ts, seg_v))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if c_sid is not None:
-            yield fold(c_sid, c_ts, c_v)
+        for series in series_segments(batches):
+            if series:
+                yield pd.concat([fold(*s) for s in series], ignore_index=True)
 
     return prepared.mapInPandas(
         run, "sid string, ts timestamp, value double, ewma double"

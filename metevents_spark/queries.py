@@ -295,21 +295,18 @@ def _round_total(df: DataFrame) -> DataFrame:
 
 
 def q_extreme_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _round_total(
         extreme_value(series_frame(spark, sf_dir), expected_max=400.0, expected_min=1.0)
     )
 
 
 def q_flat_line(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _round_total(
         flat_line(series_frame(spark, sf_dir), min_len=2, slope_thresh=25.0)
     )
 
 
 def q_extreme_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _round_total(
         extreme_change(
             series_frame(spark, sf_dir),
@@ -321,19 +318,16 @@ def q_extreme_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_data_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _round_total(
         data_gap(series_frame(spark, sf_dir), min_len=2, expected_frequency_s=86400.0)
     )
 
 
 def q_freq_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return freq_infer(series_frame(spark, sf_dir))
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return sessionize(series_frame(spark, sf_dir), gap_s=14400.0)
 
 
@@ -344,7 +338,6 @@ def q_storm_find(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's sequential nancumsum), so raw doubles differ in the last
     ulp; the conditions (>= 500.0 mass etc.) still use unrounded
     values in both engines."""
-    tune_session(spark)
     return _round_total(
         storm_find(
             series_frame(spark, sf_dir),
@@ -360,14 +353,12 @@ def q_spike_valley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """find_peaks spike/valley events (reference events.py:199-248).
     Total rounds to 3 like the other detector queries — the run sums
     are 2-decimal-grid values, so ROUND(...,3) is engine-stable."""
-    tune_session(spark)
     return _round_total(
         spike_valley(series_frame(spark, sf_dir), prominence=300.0)
     )
 
 
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return minhash_near_dup(spark, sf_dir, threshold=0.3)
 
 
@@ -390,7 +381,6 @@ def q_asof_purchase_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     before it (as-of join via the union+window pattern)."""
     from metevents_spark.operators.asof import asof_join
 
-    tune_session(spark)
     errors = _typed_series(spark, sf_dir, "error")
     purchases = _typed_series(spark, sf_dir, "purchase").drop("seq")
     out = asof_join(errors, purchases, on="sid", value_cols=("value",))
@@ -404,7 +394,6 @@ def q_range_join_error_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bucketized range join)."""
     from metevents_spark.operators.asof import range_join
 
-    tune_session(spark)
     errors = _typed_series(spark, sf_dir, "error").select("sid", "seq", "ts")
     purchases = _typed_series(spark, sf_dir, "purchase").select(
         "sid", F.col("seq").alias("rseq"), F.col("ts").alias("rts")
@@ -426,7 +415,6 @@ def q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval×interval temporal join over two operator OUTPUTS."""
     from metevents_spark.io import load_table
 
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("error", "purchase")
     ).select(
@@ -468,7 +456,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature extraction (deterministic fake decoder)."""
     from metevents_spark.multimodal.media import media_pipeline
 
-    tune_session(spark)
     return media_pipeline(spark, sf_dir)
 
 
@@ -478,7 +465,6 @@ def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metevents_spark.io import load_table
     from metevents_spark.multimodal.media import attach_fake_media, media_dedup
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return media_dedup(attach_fake_media(docs))
 
@@ -493,7 +479,6 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metevents_spark.multimodal import attach_fake_media, media_resize
     from metevents_spark.io import load_table
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = media_resize(attach_fake_media(docs))
     return out.select(
@@ -507,7 +492,6 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metevents_spark.io import load_table
     from metevents_spark.multimodal import attach_fake_media, frame_sample
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = frame_sample(attach_fake_media(docs))
     return out.select(
@@ -5339,9 +5323,9 @@ def _releasing(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
     this one (see metevents_spark.cache), and pin the runtime session
     confs (UTC timezone, AQE, Arrow) on EVERY entry — the driver hands
     us its own SparkSession, and epoch math (timeutil.epoch_us) is
-    only correct in a UTC session. Some q_* wrappers also call
-    tune_session, but most registry names map straight to operator
-    functions; this wrapper is the guarantee that covers all of them.
+    only correct in a UTC session. This wrapper is the one place that
+    calls tune_session, so a registry query must be called through
+    ``QUERIES``, not as its bare ``q_*`` function.
     Callers — the correctness driver, bench.py, check_oracle —
     materialize one query at a time, so anything still cached belongs
     to an already-consumed result."""

@@ -1,30 +1,29 @@
 """Structured Streaming surface: windowed rollups, session windows, and
-an incremental stateful storm detector.
+incremental stateful detectors.
 
 The reference is batch-only (SURVEY.md §2.8); this is the streaming
 story its semantics map onto: threshold bursts + merge rules become a
-keyed stateful operator (``applyInPandasWithState``) whose state is the
-*open* suffix of each series — storms are emitted as soon as their
-close is provable from data seen so far (a later burst confirms the
-dry gap, or the max-duration rule fires), and the buffer is trimmed to
-rows after the last emitted stop, so state stays bounded by the active
-storm length regardless of stream length.
+keyed stateful operator whose state is the *open* suffix of each
+series — storms are emitted as soon as their close is provable from
+data seen so far (a later burst confirms the dry gap, or the
+max-duration rule fires), and the buffer is trimmed to rows after the
+last emitted stop, so state stays bounded by the active storm length
+regardless of stream length.
 
-STATE-SCHEMA EVOLUTION RULE: a kernel's ``*_STATE_SCHEMA`` is the
-on-disk layout of every running stream's checkpoint, and this module
-unpacks it POSITIONALLY (``... = state.get``). New state fields must
-therefore be APPENDED at the end of the struct — inserting mid-struct
-silently misaligns every later field on restore. The r11 build broke
-this rule when it added the (ts, seq) guard tiebreakers (e.g.
-``prev_seq`` landed at position 1 of ``TWA_STATE_SCHEMA``); r12
-restores the pre-r11 field prefix with the seq fields appended last.
-UPGRADE NOTE: any stream checkpointed on the r11 mid-struct layout
-(TWA/BURST/ATTR/CONV/P2 kernels) needs a checkpoint reset when moving
-to this layout — the state store schema differs and Spark will refuse
-(or misread) the old checkpoint.
+Every per-key fold here is a ``step`` run by ``keyed_fold``, whose
+docstring holds the one ordering contract they share.
+
+STATE-SCHEMA RULE: a kernel's ``*_STATE_SCHEMA`` is the on-disk
+layout of every running stream's checkpoint, and its step unpacks it
+POSITIONALLY. New state fields are therefore APPENDED at the end of
+the struct — inserting mid-struct silently misaligns every later
+field on restore.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -43,6 +42,97 @@ from pyspark.sql.types import (
 from metevents_spark.operators.storms import storm_find_numpy
 
 US = 1_000_000
+
+#: step(key, state or None, rows) -> (output frame or None, new state)
+FoldStep = Callable[[tuple, "tuple | None", pd.DataFrame], tuple]
+
+
+def fold_chunks(
+    step: FoldStep, key: tuple, state, chunks: Iterable[pd.DataFrame]
+) -> tuple[list[pd.DataFrame], tuple]:
+    """``keyed_fold``'s per-key body without Spark: one trigger's
+    chunks for ``key``, concatenated and stable-sorted once, folded by
+    ``step``. -> (output frames, new state)."""
+    rows = pd.concat(list(chunks), ignore_index=True)
+    order = ["ts", "seq"] if "seq" in rows.columns else ["ts"]
+    rows = rows.sort_values(order, kind="stable", ignore_index=True)
+    out, new_state = step(key, state, rows)
+    return ([] if out is None else [out]), new_state
+
+
+def keyed_fold(
+    frame: DataFrame,
+    keys: list[str],
+    step: FoldStep,
+    output_schema,
+    state_schema: StructType,
+) -> DataFrame:
+    """Append-mode ``applyInPandasWithState`` over ``frame`` grouped by
+    ``keys``: per key and trigger, ``step(key, state, rows)`` gets the
+    state tuple (``None`` for a new key) and returns (output frame or
+    None, new state tuple).
+
+    Ordering contract shared by every kernel built on it:
+
+    - Per trigger, Spark hands a key's rows over in chunks of at most
+      ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows. They are
+      concatenated and STABLE-sorted once by (ts, seq) — by ts alone
+      when the frame has no seq column; equal keys keep their arrival
+      order. ``rows`` is the key's whole trigger in event-time order,
+      so the result does not depend on the Arrow batch size.
+    - Across triggers, a kernel whose state records the last folded
+      (ts, seq) drops the rows before it with ``drop_late`` and counts
+      them in its ``n_late`` state field: folding them would rewrite a
+      result already emitted. The other kernels need per-key event
+      time to be non-decreasing across triggers.
+    - ``state_schema`` is the checkpoint's positional layout (module
+      docstring): new fields are appended at its end, never inserted.
+    """
+
+    def fn(key, chunks, state: GroupState):
+        frames, new_state = fold_chunks(
+            step, key, state.get if state.exists else None, chunks
+        )
+        state.update(new_state)
+        yield from frames
+
+    return frame.groupBy(*keys).applyInPandasWithState(
+        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
+def _ts_us(rows: pd.DataFrame) -> np.ndarray:
+    return rows["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
+
+
+def drop_late(
+    rows: pd.DataFrame, last_us: int | None, last_seq: int | None
+) -> tuple[pd.DataFrame, int]:
+    """The sorted trigger ``rows`` minus those strictly before the last
+    folded (ts, seq), and how many were dropped (``keyed_fold``'s
+    late-row rule; a frame without seq compares as seq 0)."""
+    if last_us is None:
+        return rows, 0
+    us = _ts_us(rows)
+    seq = (
+        rows["seq"].to_numpy(dtype="int64")
+        if "seq" in rows.columns
+        else np.zeros(len(rows), dtype="int64")
+    )
+    late = (us < last_us) | ((us == last_us) & (seq < last_seq))
+    return rows[~late], int(late.sum())
+
+
+def _out_frame(rows: list[tuple], dtypes: dict[str, str]) -> pd.DataFrame:
+    """Emitted tuples as one output frame, one column per ``dtypes``
+    entry: a datetime64[us] column holds epoch micros, an Int64 one
+    may hold None."""
+    return pd.DataFrame(
+        {
+            name: pd.array(col, dtype=dtype)
+            for (name, dtype), col in zip(dtypes.items(), zip(*rows))
+        }
+    )
 
 
 def stream_daily_rollup(stream_df: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -111,19 +201,23 @@ STORM_STATE_SCHEMA = StructType(
 def _closed_storms(
     ts: np.ndarray,
     vals: np.ndarray,
-    at_head: bool,
     instant_mass_to_start: float,
     min_storm_total: float,
     hours_to_stop: float,
     max_storm_hours: float,
     tstep_us: int | None,
-):
-    """Run the batch kernel on the buffer and split its events into
-    (provably-closed, still-open). Only the final kernel event can be
-    tentative: it may exist only because of the last-burst flush
-    (metevents/events.py:114) and could still merge with future bursts.
-    A storm is provably closed when data later than
-    ``stop + hours_to_stop`` already exists in the buffer."""
+) -> list:
+    """Run the batch kernel on the buffer and keep its provably closed
+    events. Every event but the last closed under the batch rule. The
+    last one may exist only because of the last-burst flush
+    (metevents/events.py:114); the batch fold closes it only once data
+    later than ``stop + hours_to_stop`` exists (the next burst must
+    find it dry) AND its mass from its unadjusted start reaches
+    ``min_storm_total`` — a lighter one merges into the next burst.
+
+    The kernel's "start != first row" head check needs the true series
+    head; the buffer keeps it until the first trim, and after a trim
+    its first row follows a storm's stop, so it is never a burst."""
     events = storm_find_numpy(
         ts,
         vals,
@@ -133,106 +227,82 @@ def _closed_storms(
         max_storm_hours=max_storm_hours,
         tstep_us=tstep_us,
     )
-    # Suppress the head-extension suppression mismatch: the kernel's
-    # "start != first row" check needs the true series head; the buffer
-    # preserves it until the first trim (at_head flag) — afterwards every
-    # buffered start is mid-series, which is exactly right.
     if not events:
-        return [], None
-    dt_us = int(hours_to_stop * 3600 * US)
-    buf_max = int(ts[-1].astype("datetime64[us]").astype(np.int64))
-    closed, open_ev = [], None
-    for i, e in enumerate(events):
-        stop_us = int(e[1].astype("datetime64[us]").astype(np.int64))
-        if i == len(events) - 1 and buf_max - stop_us <= dt_us:
-            open_ev = e  # tentative: still inside the dry-out horizon
-        else:
-            closed.append(e)
-    return closed, open_ev
+        return []
+    *closed, last = events
+    dry = np.timedelta64(int(hours_to_stop * 3600 * US), "us")
+    if ts[-1] - last[1] <= dry:
+        return closed
+
+    def end(event) -> int:  # index past the event's last row
+        return int(np.searchsorted(ts, event[0], "left")) + event[3]
+
+    lo = end(closed[-1]) if closed else 0
+    hi = end(last)
+    start = lo + int(np.argmax(vals[lo:hi] >= instant_mass_to_start))
+    csum = np.concatenate(([0.0], np.nancumsum(vals)))
+    if csum[hi] - csum[start] >= min_storm_total:
+        closed.append(last)
+    return closed
 
 
 def _advance_storm_buffer(
-    prev_state,
-    pdf_iter,
+    key: tuple,
+    state,
+    rows: pd.DataFrame,
     instant_mass_to_start: float,
     min_storm_total: float,
     hours_to_stop: float,
     max_storm_hours: float,
     tstep_us: int | None,
 ):
-    """Per-key incremental step shared by BOTH stateful APIs
-    (applyInPandasWithState and transformWithStateInPandas): merge the
-    batch's rows into the buffered open suffix, run the batch kernel,
-    split provably-closed storms from the tentative tail, and trim the
-    buffer past the last emitted stop.
-
-    -> (closed_events, new_state) where new_state is the
-    STORM_STATE_SCHEMA tuple (ts_us list, vals list, at_head flag).
-    """
-    if prev_state is not None:
-        ts_us, vals, at_head = prev_state
-        ts_buf = list(ts_us)
-        val_buf = list(vals)
-    else:
-        ts_buf, val_buf, at_head = [], [], 1
-
-    for pdf in pdf_iter:
-        t = (
-            pd.to_datetime(pdf["ts"])
-            .astype("datetime64[us]")
-            .astype("int64")
-            .tolist()
+    """Storm step shared by BOTH stateful APIs (applyInPandasWithState
+    and transformWithStateInPandas): merge the trigger's rows into the
+    buffered open suffix, run the batch kernel, emit the provably
+    closed storms, and trim the buffer past the last emitted stop.
+    The state is the STORM_STATE_SCHEMA tuple (ts_us list, vals list,
+    at_head flag)."""
+    ts_buf, val_buf, at_head = state if state is not None else ([], [], 1)
+    ts_arr = np.concatenate((np.asarray(ts_buf, dtype=np.int64), _ts_us(rows)))
+    val_arr = np.concatenate(
+        (
+            np.asarray(val_buf, dtype=np.float64),
+            rows["value"].to_numpy(dtype=np.float64),
         )
-        ts_buf.extend(t)
-        val_buf.extend(pdf["value"].astype(float).tolist())
+    )
+    order = np.argsort(ts_arr, kind="stable")
+    ts_arr = ts_arr[order].astype("datetime64[us]")
+    val_arr = val_arr[order]
 
-    order = np.argsort(np.asarray(ts_buf, dtype=np.int64), kind="stable")
-    ts_arr = np.asarray(ts_buf, dtype=np.int64)[order].astype("datetime64[us]")
-    val_arr = np.asarray(val_buf, dtype=np.float64)[order]
-
-    closed, _open_ev = _closed_storms(
+    closed = _closed_storms(
         ts_arr,
         val_arr,
-        bool(at_head),
         instant_mass_to_start,
         min_storm_total,
         hours_to_stop,
         max_storm_hours,
         tstep_us,
     )
-
+    out = None
     if closed:
-        # trim buffer to rows after the last closed storm's stop —
-        # bounded state — and remember we dropped the head
-        last_stop = closed[-1][1]
-        keep = ts_arr > last_stop
-        ts_arr = ts_arr[keep]
-        val_arr = val_arr[keep]
-        at_head = 0
-    new_state = (
-        ts_arr.astype("int64").tolist(),
-        val_arr.tolist(),
-        int(at_head),
-    )
-    return closed, new_state
-
-
-def _closed_frame(sid, closed) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "sid": [sid] * len(closed),
-            "start_us": [
-                int(e[0].astype("datetime64[us]").astype(np.int64))
+        out = _out_frame(
+            [
+                (key[0], e[0].astype(np.int64), e[1].astype(np.int64), e[3], e[2])
                 for e in closed
             ],
-            "stop_us": [
-                int(e[1].astype("datetime64[us]").astype(np.int64))
-                for e in closed
-            ],
-            "n_points": [e[3] for e in closed],
-            "total": [e[2] for e in closed],
-        }
-    )
+            {
+                "sid": "object",
+                "start_us": "int64",
+                "stop_us": "int64",
+                "n_points": "int64",
+                "total": "float64",
+            },
+        )
+        # bounded state: keep only rows after the last emitted stop
+        keep = ts_arr > closed[-1][1]
+        ts_arr, val_arr, at_head = ts_arr[keep], val_arr[keep], 0
+    new_state = (ts_arr.astype("int64").tolist(), val_arr.tolist(), int(at_head))
+    return out, new_state
 
 
 def stream_storm_find(
@@ -246,35 +316,28 @@ def stream_storm_find(
     """Incremental storm detection over a streaming canonical frame
     (sid, ts, value). Emits each storm exactly once, as soon as its
     close is provable. Use ``ts_micros(start_us)`` downstream to get
-    timestamps (kept as long for a stable Arrow state schema)."""
+    timestamps (kept as long for a stable Arrow state schema).
 
-    def fn(key, pdf_iter, state: GroupState):
-        (sid,) = key
-        closed, new_state = _advance_storm_buffer(
-            state.get if state.exists else None,
-            pdf_iter,
-            instant_mass_to_start,
-            min_storm_total,
-            hours_to_stop,
-            max_storm_hours,
-            tstep_us,
-        )
-        state.update(new_state)
-        if closed:
-            yield _closed_frame(sid, closed)
-
-    return (
+    State per series is the buffer after the last emitted storm. A
+    burst lighter than ``min_storm_total`` stays buffered, with the dry
+    rows after it, until the next burst merges into it — as in batch,
+    where the merged storm's points and total include that gap."""
+    step = partial(
+        _advance_storm_buffer,
+        instant_mass_to_start=instant_mass_to_start,
+        min_storm_total=min_storm_total,
+        hours_to_stop=hours_to_stop,
+        max_storm_hours=max_storm_hours,
+        tstep_us=tstep_us,
+    )
+    return keyed_fold(
         stream_df.select(
             F.col("sid"), F.col("ts"), F.col("value").cast("double")
-        )
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            STORM_OUTPUT_SCHEMA,
-            STORM_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["sid"],
+        step,
+        STORM_OUTPUT_SCHEMA,
+        STORM_STATE_SCHEMA,
     )
 
 
@@ -303,6 +366,13 @@ def stream_storm_find_tws(
     import importlib.util
     import warnings
 
+    params = dict(
+        instant_mass_to_start=instant_mass_to_start,
+        min_storm_total=min_storm_total,
+        hours_to_stop=hours_to_stop,
+        max_storm_hours=max_storm_hours,
+        tstep_us=tstep_us,
+    )
     try:
         have_protobuf = importlib.util.find_spec("google.protobuf") is not None
     except ModuleNotFoundError:  # no parent 'google' package at all
@@ -315,37 +385,24 @@ def stream_storm_find_tws(
             RuntimeWarning,
             stacklevel=2,
         )
-        return stream_storm_find(
-            stream_df,
-            instant_mass_to_start=instant_mass_to_start,
-            min_storm_total=min_storm_total,
-            hours_to_stop=hours_to_stop,
-            max_storm_hours=max_storm_hours,
-            tstep_us=tstep_us,
-        )
+        return stream_storm_find(stream_df, **params)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
+
+    step = partial(_advance_storm_buffer, **params)
 
     class StormProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._buf = handle.getValueState("storm_buf", STORM_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            (sid,) = key
-            closed, new_state = _advance_storm_buffer(
-                self._buf.get() if self._buf.exists() else None,
-                rows,
-                instant_mass_to_start,
-                min_storm_total,
-                hours_to_stop,
-                max_storm_hours,
-                tstep_us,
+            frames, new_state = fold_chunks(
+                step, key, self._buf.get() if self._buf.exists() else None, rows
             )
             self._buf.update(new_state)
-            if closed:
-                yield _closed_frame(sid, closed)
+            yield from frames
 
         def close(self) -> None:
             pass
@@ -380,24 +437,31 @@ def stream_dedup(
     )
 
 
-def _sort_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic micro-batch order for the incremental folds: by
-    (ts, seq) when the stream carries a seq/ingest-order column, by ts
-    alone otherwise — always a STABLE sort, so equal timestamps keep
-    their arrival order instead of folding in quicksort-nondeterministic
-    order (the batch counterparts order by (ts, seq); see
-    operators/changepoint.py:45)."""
-    keys = ["ts", "seq"] if "seq" in pdf.columns else ["ts"]
-    return pdf.sort_values(keys, kind="stable")
-
-
-def _clean_series_cols(stream_df: DataFrame) -> list:
-    """(sid, ts, value[, seq]) projection for the per-series folds;
-    seq rides along as the order tiebreaker when the source has it."""
+def _clean_series(stream_df: DataFrame) -> DataFrame:
+    """(sid, ts, value[, seq]) with NULL/NaN values dropped, for the
+    per-series kernels; seq rides along as the order tiebreaker when
+    the source has it."""
     cols = [F.col("sid"), F.col("ts"), F.col("value").cast("double")]
     if "seq" in stream_df.columns:
         cols.append(F.col("seq"))
-    return cols
+    return stream_df.select(*cols).filter(
+        F.col("value").isNotNull() & ~F.isnan("value")
+    )
+
+
+def _prior_z(state_n, state_s1, state_s2, v: np.ndarray):
+    """Each point's z-score against the running mean/std of everything
+    BEFORE it: prefix sums shifted by one give every row its prior
+    (n, sum, sumsq) in one numpy pass. -> (n_prior, sd, z)."""
+    n_prior = state_n + np.arange(len(v), dtype=np.int64)
+    s1_prior = state_s1 + np.concatenate(([0.0], np.cumsum(v)[:-1]))
+    s2_prior = state_s2 + np.concatenate(([0.0], np.cumsum(v * v)[:-1]))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        mean = s1_prior / n_prior
+        var = (s2_prior - s1_prior * s1_prior / n_prior) / (n_prior - 1)
+        sd = np.sqrt(np.maximum(var, 0.0))
+        z = (v - mean) / sd
+    return n_prior, sd, z
 
 
 ZSCORE_OUTPUT_SCHEMA = "sid string, ts timestamp, value double, z double"
@@ -410,54 +474,36 @@ ZSCORE_STATE_SCHEMA = StructType(
 )
 
 
-def _advance_zscore(
-    state: tuple | None,
-    pdf_iter,
-    z_thresh: float,
-    min_n: int,
-):
+def _zscore_step(key, state, rows, z_thresh: float, min_n: int):
     """Prior-history z-score step: each point is scored against the
     running mean/std of everything BEFORE it, then folded into the
     state — so the verdict on a point never depends on how the stream
     was chunked into micro-batches (the chunking-invariance property
-    test pins this). Vectorized per batch: prefix sums shifted by one
-    give every row its prior (n, sum, sumsq) in one numpy pass.
-    """
-    import numpy as np
-
+    test pins this)."""
     n0, s1_0, s2_0 = state if state is not None else (0, 0.0, 0.0)
-    out = []
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        pdf = _sort_batch(pdf)
-        v = pdf["value"].to_numpy(dtype=np.float64)
-        k = len(v)
-        n_prior = n0 + np.arange(k, dtype=np.int64)
-        s1_prior = s1_0 + np.concatenate(([0.0], np.cumsum(v)[:-1]))
-        s2_prior = s2_0 + np.concatenate(([0.0], np.cumsum(v * v)[:-1]))
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = s1_prior / n_prior
-            var = (s2_prior - s1_prior * s1_prior / n_prior) / (n_prior - 1)
-            sd = np.sqrt(np.maximum(var, 0.0))
-            z = (v - mean) / sd
-        ok = (n_prior >= min_n) & (sd > 0) & (np.abs(z) > z_thresh)
-        if ok.any():
-            hit = pdf.iloc[np.flatnonzero(ok)]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "sid": hit["sid"].to_numpy(),
-                        "ts": hit["ts"].to_numpy(),
-                        "value": v[ok],
-                        "z": np.round(z[ok], 6),
-                    }
-                )
-            )
-        n0 += k
-        s1_0 += float(v.sum())
-        s2_0 += float((v * v).sum())
-    return out, (n0, s1_0, s2_0)
+    v = rows["value"].to_numpy(dtype=np.float64)
+    n_prior, sd, z = _prior_z(n0, s1_0, s2_0, v)
+    new_state = (n0 + len(v), s1_0 + float(v.sum()), s2_0 + float((v * v).sum()))
+    ok = (n_prior >= min_n) & (sd > 0) & (np.abs(z) > z_thresh)
+    if not ok.any():
+        return None, new_state
+    hit = rows.iloc[np.flatnonzero(ok)]
+    out = pd.DataFrame(
+        {
+            "sid": hit["sid"].to_numpy(),
+            "ts": hit["ts"].to_numpy(),
+            "value": v[ok],
+            "z": np.round(z[ok], 6),
+        }
+    )
+    return out, new_state
+
+
+def _advance_zscore(state, chunks, z_thresh: float, min_n: int):
+    """One trigger of ``stream_zscore`` for one series, without Spark:
+    -> (output frames, new state)."""
+    step = partial(_zscore_step, z_thresh=z_thresh, min_n=min_n)
+    return fold_chunks(step, None, state, chunks)
 
 
 def stream_zscore(
@@ -473,26 +519,13 @@ def stream_zscore(
     Welford rewrite drops in behind the same state schema if inputs
     ever reach 1e8+.
     """
-
-    def fn(key, pdf_iter, state: GroupState):
-        (sid,) = key
-        prior = tuple(state.get) if state.exists else None
-        frames, new_state = _advance_zscore(prior, pdf_iter, z_thresh, min_n)
-        state.update(new_state)
-        for f in frames:
-            yield f
-
-    return (
-        stream_df.select(*_clean_series_cols(stream_df))
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            ZSCORE_OUTPUT_SCHEMA,
-            ZSCORE_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    step = partial(_zscore_step, z_thresh=z_thresh, min_n=min_n)
+    return keyed_fold(
+        _clean_series(stream_df),
+        ["sid"],
+        step,
+        ZSCORE_OUTPUT_SCHEMA,
+        ZSCORE_STATE_SCHEMA,
     )
 
 
@@ -512,16 +545,10 @@ CUSUM_STATE_SCHEMA = StructType(
 )
 
 
-def _advance_cusum(
-    state: tuple | None,
-    pdf_iter,
-    h: float,
-    min_n: int,
-    slack: float = 0.5,
-):
+def _cusum_step(key, state, rows, h: float, min_n: int, slack: float = 0.5):
     """Two-sided CUSUM step with prior-history standardization: each
     point's z-score uses the running mean/std of everything BEFORE it
-    (chunking-invariant, like ``_advance_zscore``). Each side folds
+    (chunking-invariant, like ``_zscore_step``). Each side folds
     z -/+ slack into its cumulative path; the statistic is
     path - running_min(path) (the closed form of
     ``max(0, S + z - k)``), so the slack absorbs stationary noise and
@@ -529,55 +556,47 @@ def _advance_cusum(
     series. Vectorized: shifted prefix sums for the prior stats,
     cumsum for the paths, minimum.accumulate for the extrema.
     """
-    import numpy as np
-
     n0, s1_0, s2_0, cp0, cpmin0, cn0, cnmin0 = (
         state if state is not None else (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
     )
-    out = []
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        pdf = _sort_batch(pdf)
-        v = pdf["value"].to_numpy(dtype=np.float64)
-        k = len(v)
-        n_prior = n0 + np.arange(k, dtype=np.int64)
-        s1_prior = s1_0 + np.concatenate(([0.0], np.cumsum(v)[:-1]))
-        s2_prior = s2_0 + np.concatenate(([0.0], np.cumsum(v * v)[:-1]))
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = s1_prior / n_prior
-            var = (s2_prior - s1_prior * s1_prior / n_prior) / (n_prior - 1)
-            sd = np.sqrt(np.maximum(var, 0.0))
-            z = (v - mean) / sd
-        live = (n_prior >= min_n) & (sd > 0)
-        dp = np.where(live, z - slack, 0.0)
-        dn = np.where(live, -z - slack, 0.0)
-        cp = cp0 + np.cumsum(dp)
-        cn = cn0 + np.cumsum(dn)
-        cpmin = np.minimum(cpmin0, np.minimum.accumulate(cp))
-        cnmin = np.minimum(cnmin0, np.minimum.accumulate(cn))
-        s_pos = cp - cpmin
-        s_neg = cn - cnmin
-        ok = (s_pos > h) | (s_neg > h)
-        if ok.any():
-            hit = pdf.iloc[np.flatnonzero(ok)]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "sid": hit["sid"].to_numpy(),
-                        "ts": hit["ts"].to_numpy(),
-                        "value": v[ok],
-                        "s_pos": np.round(s_pos[ok], 6),
-                        "s_neg": np.round(s_neg[ok], 6),
-                    }
-                )
-            )
-        n0 += k
-        s1_0 += float(v.sum())
-        s2_0 += float((v * v).sum())
-        cp0, cpmin0 = float(cp[-1]), float(cpmin[-1])
-        cn0, cnmin0 = float(cn[-1]), float(cnmin[-1])
-    return out, (n0, s1_0, s2_0, cp0, cpmin0, cn0, cnmin0)
+    v = rows["value"].to_numpy(dtype=np.float64)
+    n_prior, sd, z = _prior_z(n0, s1_0, s2_0, v)
+    live = (n_prior >= min_n) & (sd > 0)
+    cp = cp0 + np.cumsum(np.where(live, z - slack, 0.0))
+    cn = cn0 + np.cumsum(np.where(live, -z - slack, 0.0))
+    cpmin = np.minimum(cpmin0, np.minimum.accumulate(cp))
+    cnmin = np.minimum(cnmin0, np.minimum.accumulate(cn))
+    s_pos = cp - cpmin
+    s_neg = cn - cnmin
+    new_state = (
+        n0 + len(v),
+        s1_0 + float(v.sum()),
+        s2_0 + float((v * v).sum()),
+        float(cp[-1]),
+        float(cpmin[-1]),
+        float(cn[-1]),
+        float(cnmin[-1]),
+    )
+    ok = (s_pos > h) | (s_neg > h)
+    if not ok.any():
+        return None, new_state
+    hit = rows.iloc[np.flatnonzero(ok)]
+    out = pd.DataFrame(
+        {
+            "sid": hit["sid"].to_numpy(),
+            "ts": hit["ts"].to_numpy(),
+            "value": v[ok],
+            "s_pos": np.round(s_pos[ok], 6),
+            "s_neg": np.round(s_neg[ok], 6),
+        }
+    )
+    return out, new_state
+
+
+def _advance_cusum(state, chunks, h: float, min_n: int):
+    """One trigger of ``stream_cusum`` for one series, without Spark:
+    -> (output frames, new state)."""
+    return fold_chunks(partial(_cusum_step, h=h, min_n=min_n), None, state, chunks)
 
 
 def stream_cusum(
@@ -593,26 +612,12 @@ def stream_cusum(
     needed. NULL/NaN values are filtered up front like the batch
     operator: one NaN reaching the numpy fold would make every later
     cumulative sum (and so every future alarm) NaN for that series."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        (sid,) = key
-        prior = tuple(state.get) if state.exists else None
-        frames, new_state = _advance_cusum(prior, pdf_iter, h, min_n)
-        state.update(new_state)
-        for f in frames:
-            yield f
-
-    return (
-        stream_df.select(*_clean_series_cols(stream_df))
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            CUSUM_OUTPUT_SCHEMA,
-            CUSUM_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        _clean_series(stream_df),
+        ["sid"],
+        partial(_cusum_step, h=h, min_n=min_n),
+        CUSUM_OUTPUT_SCHEMA,
+        CUSUM_STATE_SCHEMA,
     )
 
 
@@ -627,14 +632,9 @@ HOLT_STATE_SCHEMA = StructType(
 )
 
 
-def _advance_holt(
-    state: tuple | None,
-    pdf_iter,
-    alpha: float,
-    beta: float,
-):
-    """Holt double-exponential step: fold each batch's rows in (ts,
-    seq) order through the two-state level/trend recurrence
+def _holt_step(key, state, rows, alpha: float, beta: float):
+    """Holt double-exponential step: fold the rows through the
+    two-state level/trend recurrence
 
         l_t = a*x_t + (1-a)*(l_{t-1} + b_{t-1})
         b_t = B*(l_t - l_{t-1}) + (1-B)*b_{t-1}
@@ -644,34 +644,27 @@ def _advance_holt(
     the verdict on a point never depends on how the stream was
     chunked (the carried state IS the whole history)."""
     l, b = state if state is not None else (None, None)
-    out = []
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        pdf = _sort_batch(pdf)
-        v = pdf["value"].to_numpy(dtype=np.float64)
-        lv = np.empty(len(v))
-        tr = np.empty(len(v))
-        for i in range(len(v)):
-            if l is None:
-                l, b = float(v[i]), 0.0
-            else:
-                prev = l
-                l = alpha * float(v[i]) + (1.0 - alpha) * (l + b)
-                b = beta * (l - prev) + (1.0 - beta) * b
-            lv[i] = l
-            tr[i] = b
-        out.append(
-            pd.DataFrame(
-                {
-                    "sid": pdf["sid"].to_numpy(),
-                    "ts": pdf["ts"].to_numpy(),
-                    "value": v,
-                    "level": np.round(lv, 6),
-                    "trend": np.round(tr, 6),
-                }
-            )
-        )
+    v = rows["value"].to_numpy(dtype=np.float64)
+    lv = np.empty(len(v))
+    tr = np.empty(len(v))
+    for i, x in enumerate(v.tolist()):
+        if l is None:
+            l, b = x, 0.0
+        else:
+            prev = l
+            l = alpha * x + (1.0 - alpha) * (l + b)
+            b = beta * (l - prev) + (1.0 - beta) * b
+        lv[i] = l
+        tr[i] = b
+    out = pd.DataFrame(
+        {
+            "sid": rows["sid"].to_numpy(),
+            "ts": rows["ts"].to_numpy(),
+            "value": v,
+            "level": np.round(lv, 6),
+            "trend": np.round(tr, 6),
+        }
+    )
     return out, (l, b)
 
 
@@ -686,26 +679,12 @@ def stream_holt(
     length, no watermark needed. NULL/NaN values are filtered up front
     like the other streaming detectors (the batch operator instead
     emits carried state on dirty rows — the one documented divergence)."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        (sid,) = key
-        prior = tuple(state.get) if state.exists else None
-        frames, new_state = _advance_holt(prior, pdf_iter, alpha, beta)
-        state.update(new_state)
-        for f in frames:
-            yield f
-
-    return (
-        stream_df.select(*_clean_series_cols(stream_df))
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            HOLT_OUTPUT_SCHEMA,
-            HOLT_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        _clean_series(stream_df),
+        ["sid"],
+        partial(_holt_step, alpha=alpha, beta=beta),
+        HOLT_OUTPUT_SCHEMA,
+        HOLT_STATE_SCHEMA,
     )
 
 
@@ -719,12 +698,10 @@ def stream_ohlc(stream_df: DataFrame, watermark: str = "1 day") -> DataFrame:
     tests). Append-mode safe: a bar emits exactly once, when the
     watermark passes its window end. NULL/NaN values are dropped like
     the batch operator."""
-    cols = _clean_series_cols(stream_df)
     has_seq = "seq" in stream_df.columns
     ord_key = F.struct("ts", "seq") if has_seq else F.col("ts")
     return (
-        stream_df.select(*cols)
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
+        _clean_series(stream_df)
         .withWatermark("ts", watermark)
         .groupBy("sid", F.window("ts", "1 day").alias("win"))
         .agg(
@@ -762,6 +739,50 @@ COUNTER_STATE_SCHEMA = StructType(
 )
 
 
+def _counter_step(key, state, rows):
+    """Reset-aware counter step: each row's running (points, resets,
+    increase, increase per hour over the observed span)."""
+    last_v, n, resets, inc, first_us, last_us = (
+        state if state is not None else (None, 0, 0, 0.0, None, None)
+    )
+    v = rows["value"].to_numpy(dtype=np.float64)
+    k = len(v)
+    rows_n = np.empty(k, dtype=np.int64)
+    rows_r = np.empty(k, dtype=np.int64)
+    rows_i = np.empty(k)
+    rows_rate = np.full(k, np.nan)
+    for i, (x, u) in enumerate(zip(v.tolist(), _ts_us(rows).tolist())):
+        if last_v is not None:
+            if x < last_v:
+                resets += 1
+                inc += x
+            else:
+                inc += x - last_v
+        last_v = x
+        n += 1
+        if first_us is None:
+            first_us = u
+        last_us = u
+        rows_n[i] = n
+        rows_r[i] = resets
+        rows_i[i] = round(inc, 6)
+        span_h = (last_us - first_us) / 3.6e9
+        if n >= 2 and span_h > 0:
+            rows_rate[i] = round(round(inc, 6) / span_h, 6)
+    out = pd.DataFrame(
+        {
+            "sid": rows["sid"].to_numpy(),
+            "ts": rows["ts"].to_numpy(),
+            "value": v,
+            "n_points": rows_n,
+            "resets": rows_r,
+            "increase": rows_i,
+            "rate_per_hour": rows_rate,
+        }
+    )
+    return out, (last_v, n, resets, inc, first_us, last_us)
+
+
 def stream_counter_rate(stream_df: DataFrame) -> DataFrame:
     """Streaming reset-aware counter rate: the incremental counterpart
     of the batch ``counter_rate`` (operators/seriesstats.py). Each
@@ -777,76 +798,18 @@ def stream_counter_rate(stream_df: DataFrame) -> DataFrame:
     no watermark needed. NULL/NaN readings are filtered up front like
     the batch operator (a NULL bridges its neighbors). Chunking
     invariance holds because the carried state is the whole history.
-    Ordering contract: per-series event time must be non-decreasing
-    ACROSS micro-batches (within a batch we sort). An out-of-order
-    point would compare against the wrong neighbor (fake reset) and
+    There is no late-row guard: an out-of-order point from a later
+    trigger would compare against the wrong neighbor (fake reset) and
     shrink the observed span — if the source can deliver late data,
     sort/stage it upstream or use the batch operator on the replayed
     log.
     """
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            last_v, n, resets, inc, first_us, last_us = state.get
-        else:
-            last_v, n, resets, inc, first_us, last_us = (
-                None, 0, 0, 0.0, None, None,
-            )
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            us = (
-                pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            )
-            rows_n = np.empty(len(v), dtype=np.int64)
-            rows_r = np.empty(len(v), dtype=np.int64)
-            rows_i = np.empty(len(v))
-            rows_rate = np.full(len(v), np.nan)
-            for i in range(len(v)):
-                x = float(v[i])
-                if last_v is not None:
-                    if x < last_v:
-                        resets += 1
-                        inc += x
-                    else:
-                        inc += x - last_v
-                last_v = x
-                n += 1
-                if first_us is None:
-                    first_us = int(us[i])
-                last_us = int(us[i])
-                rows_n[i] = n
-                rows_r[i] = resets
-                rows_i[i] = round(inc, 6)
-                span_h = (last_us - first_us) / 3.6e9
-                if n >= 2 and span_h > 0:
-                    rows_rate[i] = round(round(inc, 6) / span_h, 6)
-            yield pd.DataFrame(
-                {
-                    "sid": pdf["sid"].to_numpy(),
-                    "ts": pdf["ts"].to_numpy(),
-                    "value": v,
-                    "n_points": rows_n,
-                    "resets": rows_r,
-                    "increase": rows_i,
-                    "rate_per_hour": rows_rate,
-                }
-            )
-        state.update((last_v, n, resets, inc, first_us, last_us))
-
-    return (
-        stream_df.select(*_clean_series_cols(stream_df))
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            COUNTER_OUTPUT_SCHEMA,
-            COUNTER_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        _clean_series(stream_df),
+        ["sid"],
+        _counter_step,
+        COUNTER_OUTPUT_SCHEMA,
+        COUNTER_STATE_SCHEMA,
     )
 
 
@@ -864,16 +827,62 @@ TWA_STATE_SCHEMA = StructType(
         StructField("sum_mass", DoubleType()),
         StructField("sum_v", DoubleType()),
         StructField("n_late", LongType()),  # dropped out-of-order points
-        # (ts, seq) guard tiebreaker — APPENDED last (state-schema
-        # evolution rule: new fields go at the END so an existing
-        # checkpoint's positional layout keeps its meaning; the r11
-        # build inserted this mid-struct, so streams checkpointed on
-        # the r11 layout need a checkpoint reset when upgrading)
+        # (ts, seq) late-row tiebreaker, appended last (state-schema rule)
         StructField("prev_seq", LongType()),
     ]
 )
 
 _DAY_US = 86_400 * 1_000_000
+
+
+def _twa_step(key, state, rows):
+    """Trapezoid fold: a segment joins the day of its later endpoint,
+    and a day's row is emitted when a segment of a later day arrives."""
+    (prev_us, prev_v, open_day, n_seg, s_dt, s_mass, s_v, n_late,
+     prev_seq) = (
+        state
+        if state is not None
+        else (None, None, None, 0, 0.0, 0.0, 0.0, 0, None)
+    )
+    rows, dropped = drop_late(rows, prev_us, prev_seq)
+    # sources without seq compare on ts alone (q fixed at 0)
+    sq = (
+        rows["seq"].tolist() if "seq" in rows.columns else [0] * len(rows)
+    )
+    out = []
+    for x, u, q in zip(rows["value"].tolist(), _ts_us(rows).tolist(), sq):
+        if prev_us is not None:
+            dt = float(u - prev_us)
+            seg_day = (u // _DAY_US) * _DAY_US
+            if open_day is None:
+                open_day = seg_day
+            elif seg_day > open_day:
+                if s_dt > 0:
+                    out.append(
+                        (key[0], open_day, n_seg, round(s_mass / s_dt, 6),
+                         round(s_v / n_seg, 6))
+                    )
+                open_day = seg_day
+                n_seg, s_dt, s_mass, s_v = 0, 0.0, 0.0, 0.0
+            n_seg += 1
+            s_dt += dt
+            s_mass += (prev_v + x) / 2.0 * dt
+            s_v += x
+        prev_us, prev_seq, prev_v = u, q, x
+    new_state = (prev_us, prev_v, open_day, n_seg, s_dt, s_mass, s_v,
+                 n_late + dropped, prev_seq)
+    if not out:
+        return None, new_state
+    return _out_frame(
+        out,
+        {
+            "sid": "object",
+            "bucket_day": "datetime64[us]",
+            "n_segments": "int64",
+            "twa": "float64",
+            "simple_avg": "float64",
+        },
+    ), new_state
 
 
 def stream_time_weighted(stream_df: DataFrame) -> DataFrame:
@@ -891,100 +900,18 @@ def stream_time_weighted(stream_df: DataFrame) -> DataFrame:
     Replaying a static corpus yields exactly the batch rows for every
     series-day except each series' LAST (still-open) day — pinned by
     pytest together with chunking-invariance. State per series is
-    NINE numbers. Ordering contract: points are sorted within each
-    micro-batch by (ts, seq), and the same lexicographic order is
-    enforced ACROSS micro-batches — a point strictly before the
-    previous processed (ts, seq) is out of order —
-    it would form a negative-duration segment whose negative trapezoid
-    mass (possibly belonging to an already-emitted day) would corrupt
-    the open day's twa. Such points are DROPPED and counted in the
-    ``n_late`` state slot (observability; never silently folded).
-    Equal timestamps (dt = 0) keep batch semantics: the segment counts
-    but adds no mass. Late data ON TIME ORDER within the open day
-    still folds exactly; emitted days are final.
+    NINE numbers. A late point (``keyed_fold``) would form a
+    negative-duration segment whose negative trapezoid mass (possibly
+    belonging to an already-emitted day) would corrupt the open day's
+    twa, so it is dropped into ``n_late``. Equal timestamps (dt = 0)
+    keep batch semantics: the segment counts but adds no mass.
     """
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            (prev_us, prev_v, open_day, n_seg, s_dt, s_mass,
-             s_v, n_late, prev_seq) = state.get
-        else:
-            (prev_us, prev_v, open_day, n_seg, s_dt, s_mass,
-             s_v, n_late, prev_seq) = (None, None, None, 0, 0.0, 0.0, 0.0,
-                                       0, None)
-        out_sid, out_day, out_n, out_twa, out_avg = [], [], [], [], []
-
-        def close_day():
-            if s_dt > 0:
-                out_sid.append(key[0])
-                out_day.append(open_day)
-                out_n.append(n_seg)
-                out_twa.append(round(s_mass / s_dt, 6))
-                out_avg.append(round(s_v / n_seg, 6))
-
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            # seq rides along when the source has it; sources without
-            # one degrade to the ts-only guard (q fixed at 0)
-            sq = (
-                pdf["seq"].to_numpy(dtype="int64")
-                if "seq" in pdf.columns
-                else None
-            )
-            for i in range(len(v)):
-                x, u = float(v[i]), int(us[i])
-                q = int(sq[i]) if sq is not None else 0
-                # full (ts, seq) lexicographic guard — see
-                # stream_burst_collapse (r11 fix; was ts-only)
-                if prev_us is not None and (u, q) < (prev_us, prev_seq):
-                    n_late += 1
-                    continue
-                if prev_us is not None:
-                    dt = float(u - prev_us)
-                    seg_day = (u // _DAY_US) * _DAY_US
-                    if open_day is None:
-                        open_day = seg_day
-                    elif seg_day > open_day:
-                        close_day()
-                        open_day = seg_day
-                        n_seg, s_dt, s_mass, s_v = 0, 0.0, 0.0, 0.0
-                    n_seg += 1
-                    s_dt += dt
-                    s_mass += (prev_v + x) / 2.0 * dt
-                    s_v += x
-                prev_us, prev_seq, prev_v = u, q, x
-        state.update(
-            (prev_us, prev_v, open_day, n_seg, s_dt, s_mass,
-             s_v, n_late, prev_seq)
-        )
-        if out_sid:
-            yield pd.DataFrame(
-                {
-                    "sid": out_sid,
-                    "bucket_day": pd.to_datetime(
-                        np.asarray(out_day, dtype="int64"), unit="us"
-                    ),
-                    "n_segments": np.asarray(out_n, dtype="int64"),
-                    "twa": out_twa,
-                    "simple_avg": out_avg,
-                }
-            )
-
-    return (
-        stream_df.select(*_clean_series_cols(stream_df))
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            TWA_OUTPUT_SCHEMA,
-            TWA_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        _clean_series(stream_df),
+        ["sid"],
+        _twa_step,
+        TWA_OUTPUT_SCHEMA,
+        TWA_STATE_SCHEMA,
     )
 
 
@@ -999,10 +926,45 @@ BURST_STATE_SCHEMA = StructType(
         StructField("n", LongType()),
         StructField("last_us", LongType()),
         StructField("n_late", LongType()),  # dropped out-of-order points
-        # (ts, seq) guard tiebreaker — appended last; see TWA_STATE_SCHEMA
+        # (ts, seq) late-row tiebreaker, appended last (state-schema rule)
         StructField("last_seq", LongType()),
     ]
 )
+
+
+def _burst_step(key, state, rows, gap_us: int):
+    """Debounce fold: a burst closes when the next event arrives more
+    than ``gap_us`` after its last member."""
+    first_us, first_seq, n, last_us, n_late, last_seq = (
+        state if state is not None else (None, None, 0, None, 0, None)
+    )
+    rows, dropped = drop_late(rows, last_us, last_seq)
+    out = []
+    for u, q in zip(_ts_us(rows).tolist(), rows["seq"].tolist()):
+        if first_us is not None and u - last_us > gap_us:
+            out.append((*key, first_us, first_seq, n, last_us - first_us))
+            first_us = None
+        if first_us is None:
+            first_us, first_seq, n = u, q, 1
+        else:
+            n += 1
+            # the batch operator's MIN(seq) over the burst
+            first_seq = min(first_seq, q)
+        last_us, last_seq = u, q
+    new_state = (first_us, first_seq, n, last_us, n_late + dropped, last_seq)
+    if not out:
+        return None, new_state
+    return _out_frame(
+        out,
+        {
+            "sid": "object",
+            "event_type": "object",
+            "first_ts": "datetime64[us]",
+            "first_seq": "int64",
+            "n_collapsed": "int64",
+            "span_us": "int64",
+        },
+    ), new_state
 
 
 def stream_burst_collapse(
@@ -1018,83 +980,16 @@ def stream_burst_collapse(
     (user, type)'s LAST burst — pytest-pinned with chunking
     invariance).
 
-    State per (user, type) is FIVE numbers. Ordering contract: within
-    a micro-batch points are sorted; across micro-batches an event
-    older than the group's last processed point would splice into an
-    already-summarized burst, so it is DROPPED and counted in the
-    ``n_late`` state slot (the round-9 out-of-order policy shared with
-    stream_time_weighted).
+    State per (user, type) is FIVE numbers. A late event
+    (``keyed_fold``) would splice into an already-summarized burst, so
+    it is dropped into ``n_late``.
     """
-    gap_us = refractory_minutes * 60 * 1_000_000
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            first_us, first_seq, n, last_us, n_late, last_seq = state.get
-        else:
-            first_us, first_seq, n, last_us, n_late, last_seq = (
-                None, None, 0, None, 0, None,
-            )
-        out = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            seqs = pdf["seq"].to_numpy(dtype="int64")
-            for i in range(len(us)):
-                u, q = int(us[i]), int(seqs[i])
-                # full (ts, seq) lexicographic guard: the batch
-                # counterpart's total order, enforced ACROSS chunks —
-                # an equal-ts lower-seq event in a later micro-batch
-                # is late, not acceptable (r11 fix; was ts-only)
-                if last_us is not None and (u, q) < (last_us, last_seq):
-                    n_late += 1
-                    continue
-                if first_us is None:
-                    first_us, first_seq, n, last_us, last_seq = u, q, 1, u, q
-                elif u - last_us > gap_us:
-                    out.append(
-                        (key[0], key[1], first_us, first_seq, n,
-                         last_us - first_us)
-                    )
-                    first_us, first_seq, n, last_us, last_seq = u, q, 1, u, q
-                else:
-                    n += 1
-                    # the batch operator's MIN(seq) over the burst
-                    first_seq = min(first_seq, q)
-                    last_us, last_seq = u, q
-        state.update((first_us, first_seq, n, last_us, n_late, last_seq))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "sid": [r[0] for r in out],
-                    "event_type": [r[1] for r in out],
-                    "first_ts": pd.to_datetime(
-                        np.asarray([r[2] for r in out], dtype="int64"),
-                        unit="us",
-                    ),
-                    "first_seq": np.asarray(
-                        [r[3] for r in out], dtype="int64"
-                    ),
-                    "n_collapsed": np.asarray(
-                        [r[4] for r in out], dtype="int64"
-                    ),
-                    "span_us": np.asarray(
-                        [r[5] for r in out], dtype="int64"
-                    ),
-                }
-            )
-
-    return (
-        stream_df.select("sid", "seq", "event_type", "ts")
-        .groupBy("sid", "event_type")
-        .applyInPandasWithState(
-            fn,
-            BURST_OUTPUT_SCHEMA,
-            BURST_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        stream_df.select("sid", "seq", "event_type", "ts"),
+        ["sid", "event_type"],
+        partial(_burst_step, gap_us=refractory_minutes * 60 * 1_000_000),
+        BURST_OUTPUT_SCHEMA,
+        BURST_STATE_SCHEMA,
     )
 
 
@@ -1109,10 +1004,44 @@ ATTR_STATE_SCHEMA = StructType(
         StructField("t_type", StringType()),
         StructField("last_us", LongType()),
         StructField("n_late", LongType()),  # dropped out-of-order points
-        # (ts, seq) guard tiebreaker — appended last; see TWA_STATE_SCHEMA
+        # (ts, seq) late-row tiebreaker, appended last (state-schema rule)
         StructField("last_seq", LongType()),
     ]
 )
+
+
+def _attribution_step(key, state, rows, lb_us: int):
+    """Last-touch fold: a purchase is credited to the user's last
+    non-purchase event within ``lb_us`` before it."""
+    t_us, t_id, t_type, last_us, n_late, last_seq = (
+        state if state is not None else (None, None, None, None, 0, None)
+    )
+    rows, dropped = drop_late(rows, last_us, last_seq)
+    out = []
+    for u, q, ty in zip(
+        _ts_us(rows).tolist(), rows["seq"].tolist(), rows["event_type"].tolist()
+    ):
+        last_us, last_seq = u, q
+        if ty != "purchase":
+            t_us, t_id, t_type = u, q, ty
+        elif t_us is not None and u - t_us <= lb_us:
+            out.append((key[0], q, u, t_id, t_type, u - t_us))
+        else:
+            out.append((key[0], q, u, None, None, None))
+    new_state = (t_us, t_id, t_type, last_us, n_late + dropped, last_seq)
+    if not out:
+        return None, new_state
+    return _out_frame(
+        out,
+        {
+            "sid": "object",
+            "purchase_id": "int64",
+            "purchase_ts": "datetime64[us]",
+            "touch_id": "Int64",
+            "touch_type": "object",
+            "gap_us": "Int64",
+        },
+    ), new_state
 
 
 def stream_purchase_attribution(
@@ -1126,75 +1055,17 @@ def stream_purchase_attribution(
     minus a tail — pytest-pinned with chunking invariance).
 
     State per user is the last non-purchase touch (epoch, id, type)
-    plus the out-of-order guard — FOUR numbers and a string, O(1)
-    regardless of stream length. Ordering contract: within a
-    micro-batch points sort by (ts, seq); an event older than the
-    user's last processed point is DROPPED and counted in ``n_late``
-    (the shared round-9 policy — splicing it in would rewrite an
-    attribution already emitted downstream).
+    plus the late-row guard — FOUR numbers and a string, O(1)
+    regardless of stream length. A late event (``keyed_fold``) is
+    dropped into ``n_late``: splicing it in would rewrite an
+    attribution already emitted downstream.
     """
-    lb_us = lookback_days * 86_400_000_000
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            t_us, t_id, t_type, last_us, n_late, last_seq = state.get
-        else:
-            t_us, t_id, t_type, last_us, n_late, last_seq = (
-                None, None, None, None, 0, None,
-            )
-        out = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            seqs = pdf["seq"].to_numpy(dtype="int64")
-            types = pdf["event_type"].to_numpy()
-            for i in range(len(us)):
-                u, q, ty = int(us[i]), int(seqs[i]), str(types[i])
-                # full (ts, seq) lexicographic guard — see
-                # stream_burst_collapse (r11 fix; was ts-only)
-                if last_us is not None and (u, q) < (last_us, last_seq):
-                    n_late += 1
-                    continue
-                last_us, last_seq = u, q
-                if ty != "purchase":
-                    t_us, t_id, t_type = u, q, ty
-                    continue
-                if t_us is not None and u - t_us <= lb_us:
-                    out.append((key[0], q, u, t_id, t_type, u - t_us))
-                else:
-                    out.append((key[0], q, u, None, None, None))
-        state.update((t_us, t_id, t_type, last_us, n_late, last_seq))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "sid": [r[0] for r in out],
-                    "purchase_id": np.asarray(
-                        [r[1] for r in out], dtype="int64"
-                    ),
-                    "purchase_ts": pd.to_datetime(
-                        np.asarray([r[2] for r in out], dtype="int64"),
-                        unit="us",
-                    ),
-                    "touch_id": pd.array(
-                        [r[3] for r in out], dtype="Int64"
-                    ),
-                    "touch_type": [r[4] for r in out],
-                    "gap_us": pd.array([r[5] for r in out], dtype="Int64"),
-                }
-            )
-
-    return (
-        stream_df.select("sid", "seq", "event_type", "ts")
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            ATTR_OUTPUT_SCHEMA,
-            ATTR_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        stream_df.select("sid", "seq", "event_type", "ts"),
+        ["sid"],
+        partial(_attribution_step, lb_us=lookback_days * 86_400_000_000),
+        ATTR_OUTPUT_SCHEMA,
+        ATTR_STATE_SCHEMA,
     )
 
 
@@ -1207,10 +1078,41 @@ CONV_STATE_SCHEMA = StructType(
         StructField("converted", LongType()),  # 0/1 — emit-once latch
         StructField("last_us", LongType()),
         StructField("n_late", LongType()),  # dropped out-of-order points
-        # (ts, seq) guard tiebreaker — appended last; see TWA_STATE_SCHEMA
+        # (ts, seq) late-row tiebreaker, appended last (state-schema rule)
         StructField("last_seq", LongType()),
     ]
 )
+
+
+def _conversion_step(key, state, rows):
+    """Conversion fold: the first purchase at or after the first
+    signup emits the lag, once."""
+    signup_us, converted, last_us, n_late, last_seq = (
+        state if state is not None else (None, 0, None, 0, None)
+    )
+    rows, dropped = drop_late(rows, last_us, last_seq)
+    out = []
+    for u, q, ty in zip(
+        _ts_us(rows).tolist(), rows["seq"].tolist(), rows["event_type"].tolist()
+    ):
+        last_us, last_seq = u, q
+        if ty == "signup" and signup_us is None:
+            signup_us = u
+        elif ty == "purchase" and signup_us is not None and not converted:
+            out.append((key[0], signup_us, u, u - signup_us))
+            converted = 1
+    new_state = (signup_us, converted, last_us, n_late + dropped, last_seq)
+    if not out:
+        return None, new_state
+    return _out_frame(
+        out,
+        {
+            "sid": "object",
+            "signup_ts": "datetime64[us]",
+            "purchase_ts": "datetime64[us]",
+            "lag_us": "int64",
+        },
+    ), new_state
 
 
 def stream_conversion_lag(stream_df: DataFrame) -> DataFrame:
@@ -1223,76 +1125,18 @@ def stream_conversion_lag(stream_df: DataFrame) -> DataFrame:
 
     State per user is three epoch numbers and a latch — O(1) forever:
     first signup micros, the converted flag (emit-once), the
-    out-of-order guard, and the late-drop counter. A static-corpus
+    late-row guard, and the late-drop counter. A static-corpus
     replay equals the batch result EXACTLY (conversion depends only on
     past events, nothing is withheld) under any chunking —
-    pytest-pinned. Ordering contract: within a micro-batch points sort
-    by (ts, seq); an event older than the user's last processed point
-    drops into ``n_late`` (the shared round-9 policy — a late signup
-    cannot retract an emitted conversion).
+    pytest-pinned. A late event (``keyed_fold``) is dropped into
+    ``n_late``: a late signup cannot retract an emitted conversion.
     """
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            signup_us, converted, last_us, n_late, last_seq = state.get
-        else:
-            signup_us, converted, last_us, n_late, last_seq = (
-                None, 0, None, 0, None,
-            )
-        out = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            seqs = pdf["seq"].to_numpy(dtype="int64")
-            types = pdf["event_type"].to_numpy()
-            for i in range(len(us)):
-                u, q, ty = int(us[i]), int(seqs[i]), str(types[i])
-                # full (ts, seq) lexicographic guard — see
-                # stream_burst_collapse (r11 fix; was ts-only)
-                if last_us is not None and (u, q) < (last_us, last_seq):
-                    n_late += 1
-                    continue
-                last_us, last_seq = u, q
-                if ty == "signup" and signup_us is None:
-                    signup_us = u
-                elif (
-                    ty == "purchase"
-                    and signup_us is not None
-                    and not converted
-                ):
-                    out.append((key[0], signup_us, u, u - signup_us))
-                    converted = 1
-        state.update((signup_us, converted, last_us, n_late, last_seq))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "sid": [r[0] for r in out],
-                    "signup_ts": pd.to_datetime(
-                        np.asarray([r[1] for r in out], dtype="int64"),
-                        unit="us",
-                    ),
-                    "purchase_ts": pd.to_datetime(
-                        np.asarray([r[2] for r in out], dtype="int64"),
-                        unit="us",
-                    ),
-                    "lag_us": np.asarray(
-                        [r[3] for r in out], dtype="int64"
-                    ),
-                }
-            )
-
-    return (
-        stream_df.select("sid", "seq", "event_type", "ts")
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            CONV_OUTPUT_SCHEMA,
-            CONV_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        stream_df.select("sid", "seq", "event_type", "ts"),
+        ["sid"],
+        _conversion_step,
+        CONV_OUTPUT_SCHEMA,
+        CONV_STATE_SCHEMA,
     )
 
 
@@ -1306,7 +1150,7 @@ P2_STATE_SCHEMA = StructType(
         StructField("buf", ArrayType(DoubleType())),  # first <5 points
         StructField("last_us", LongType()),
         StructField("n_late", LongType()),
-        # (ts, seq) guard tiebreaker — appended last; see TWA_STATE_SCHEMA
+        # (ts, seq) late-row tiebreaker, appended last (state-schema rule)
         StructField("last_seq", LongType()),
     ]
 )
@@ -1371,6 +1215,44 @@ def _exact_quantile(sorted_vals: list, p: float) -> float:
     return sorted_vals[lo] * (1 - frac) + sorted_vals[hi] * frac
 
 
+def _p2_quantile_step(key, state, rows, p: float):
+    """Per-point P² fold: the estimate after each accepted point."""
+    heights, npos, buf, last_us, n_late, last_seq = (
+        state if state is not None else ([], [], [], None, 0, None)
+    )
+    heights, npos, buf = list(heights), list(npos), list(buf)
+    rows, dropped = drop_late(rows, last_us, last_seq)
+    out = []
+    for u, q, x in zip(
+        _ts_us(rows).tolist(), rows["seq"].tolist(), rows["value"].tolist()
+    ):
+        last_us, last_seq = u, q
+        if npos:
+            _p2_step(heights, npos, x, p)
+            est, n_seen = heights[2], npos[4]
+        elif len(buf) < 4:
+            buf.append(x)
+            est, n_seen = _exact_quantile(sorted(buf), p), len(buf)
+        else:  # the fifth point initializes the markers
+            heights, npos, buf = sorted(buf + [x]), [1, 2, 3, 4, 5], []
+            est = heights[2] if p == 0.5 else _exact_quantile(heights, p)
+            n_seen = 5
+        out.append((key[0], q, u, n_seen, est))
+    new_state = (heights, npos, buf, last_us, n_late + dropped, last_seq)
+    if not out:
+        return None, new_state
+    return _out_frame(
+        out,
+        {
+            "sid": "object",
+            "seq": "int64",
+            "ts": "datetime64[us]",
+            "n": "int64",
+            "q_est": "float64",
+        },
+    ), new_state
+
+
 def stream_p2_quantile(stream_df: DataFrame, p: float = 0.5) -> DataFrame:
     """Streaming per-series quantile via the P² algorithm (Jain &
     Chlamtac 1985): a running p-quantile estimate from FIVE markers —
@@ -1384,76 +1266,15 @@ def stream_p2_quantile(stream_df: DataFrame, p: float = 0.5) -> DataFrame:
     exact interpolated quantile of the prefix (the P² markers
     initialize from the first five sorted values). The per-point
     update is a fixed float-op sequence, so outputs are deterministic
-    and CHUNKING-INVARIANT given the shared ordering contract (sort by
-    (ts, seq) in-batch; older-than-last points drop into ``n_late``).
+    and CHUNKING-INVARIANT given the ``keyed_fold`` ordering contract
+    (late points drop into ``n_late``).
     """
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            heights, npos, buf, last_us, n_late, last_seq = state.get
-            heights, npos, buf = list(heights), list(npos), list(buf)
-        else:
-            heights, npos, buf, last_us, n_late, last_seq = (
-                [], [], [], None, 0, None,
-            )
-        out = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = _sort_batch(pdf)
-            us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            seqs = pdf["seq"].to_numpy(dtype="int64")
-            vals = pdf["value"].to_numpy(dtype="float64")
-            for i in range(len(us)):
-                u, q, x = int(us[i]), int(seqs[i]), float(vals[i])
-                # full (ts, seq) lexicographic guard — see
-                # stream_burst_collapse (r11 fix; was ts-only)
-                if last_us is not None and (u, q) < (last_us, last_seq):
-                    n_late += 1
-                    continue
-                last_us, last_seq = u, q
-                if not npos:
-                    buf.append(x)
-                    if len(buf) == 5:
-                        heights = sorted(buf)
-                        npos = [1, 2, 3, 4, 5]
-                        buf = []
-                        est = heights[2] if p == 0.5 else _exact_quantile(
-                            heights, p
-                        )
-                        n_seen = 5
-                    else:
-                        est = _exact_quantile(sorted(buf), p)
-                        n_seen = len(buf)
-                else:
-                    _p2_step(heights, npos, x, p)
-                    est = heights[2]
-                    n_seen = npos[4]
-                out.append((key[0], q, u, n_seen, est))
-        state.update((heights, npos, buf, last_us, n_late, last_seq))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "sid": [r[0] for r in out],
-                    "seq": np.asarray([r[1] for r in out], dtype="int64"),
-                    "ts": pd.to_datetime(
-                        np.asarray([r[2] for r in out], dtype="int64"),
-                        unit="us",
-                    ),
-                    "n": np.asarray([r[3] for r in out], dtype="int64"),
-                    "q_est": np.asarray([r[4] for r in out], dtype="float64"),
-                }
-            )
-
-    return (
-        stream_df.select("sid", "seq", "ts", "value")
-        .filter(F.col("value").isNotNull() & ~F.isnan("value"))
-        .groupBy("sid")
-        .applyInPandasWithState(
-            fn,
-            P2_OUTPUT_SCHEMA,
-            P2_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        stream_df.select("sid", "seq", "ts", "value").filter(
+            F.col("value").isNotNull() & ~F.isnan("value")
+        ),
+        ["sid"],
+        partial(_p2_quantile_step, p=p),
+        P2_OUTPUT_SCHEMA,
+        P2_STATE_SCHEMA,
     )

@@ -23,15 +23,17 @@ buffering, so state size is O(users) regardless of stream length.
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import partial
+
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from metevents_spark.streaming.detect import _out_frame, _ts_us, keyed_fold
 
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
 
@@ -75,46 +77,33 @@ def advance_funnel(
     return out, (next_stage, q_us)
 
 
+def _funnel_step(key, state, rows, stages: tuple[str, ...]):
+    emitted, new_state = advance_funnel(
+        state, list(zip(rows["event_type"].tolist(), _ts_us(rows).tolist())), stages
+    )
+    if not emitted:
+        return None, new_state
+    return _out_frame(
+        [(key[0], *e) for e in emitted],
+        {
+            "user_id": "int64",
+            "stage": "int64",
+            "event_type": "object",
+            "reached_us": "int64",
+        },
+    ), new_state
+
+
 def stream_funnel(
     stream_df: DataFrame, stages: tuple[str, ...] = FUNNEL_STAGES
 ) -> DataFrame:
     """Stateful streaming funnel over an (user_id, event_type, ts)
     stream. Emits one append-mode row the moment a user reaches each
-    stage."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        rows: list[tuple[str, int]] = []
-        for pdf in pdf_iter:
-            ts_us = (
-                pd.to_datetime(pdf["ts"])
-                .astype("datetime64[us]")
-                .astype("int64")
-            )
-            rows.extend(zip(pdf["event_type"].tolist(), ts_us.tolist()))
-        rows.sort(key=lambda r: r[1])
-        emitted, new_state = advance_funnel(
-            state.get if state.exists else None, rows, stages
-        )
-        state.update(new_state)
-        if emitted:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(emitted),
-                    "stage": [e[0] for e in emitted],
-                    "event_type": [e[1] for e in emitted],
-                    "reached_us": [e[2] for e in emitted],
-                }
-            )
-
-    return (
-        stream_df.select("user_id", "event_type", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            FUNNEL_OUTPUT_SCHEMA,
-            FUNNEL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    stage; each trigger's events fold in ts order (``keyed_fold``)."""
+    return keyed_fold(
+        stream_df.select("user_id", "event_type", "ts"),
+        ["user_id"],
+        partial(_funnel_step, stages=stages),
+        FUNNEL_OUTPUT_SCHEMA,
+        FUNNEL_STATE_SCHEMA,
     )

@@ -41,8 +41,7 @@ COMPLEXITY_WAIVERS = {
     ("metevents_spark/operators/asof.py", "asof_join"),
     ("metevents_spark/operators/intervals.py", "overlap_join"),
     ("metevents_spark/streaming/detect.py", "_p2_step"),
-    ("metevents_spark/streaming/detect.py", "fn"),  # stateful folds
-    ("metevents_spark/streaming/dedup.py", "fn"),
+    ("metevents_spark/streaming/dedup.py", "fn"),  # shard/bucket folds
     ("metevents_spark/similarity/knn.py", "knn_ivf_pq"),
     ("metevents_spark/similarity/knn.py", "ann_recall_report"),
     ("metevents_spark/multimodal/media.py", "media_embedding_near_dup"),

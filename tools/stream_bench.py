@@ -61,9 +61,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #  - windowed-aggregate kernels: state is per OPEN window and governed
 #    by watermark eviction — windows opening/closing swings bytes/key
 #    without any per-key leak (bounded by construction);
-#  - storm_find kernels: the per-sid point buffer is BOUNDED by
-#    max_storm_hours of points (detect.py), not constant — it fills
-#    toward that bound during replay.
+#  - storm_find kernels: the per-sid point buffer holds the open
+#    storm's points (detect.py), not a constant — a burst lighter than
+#    min_storm_total keeps its dry tail buffered until the next burst.
 O1_EXEMPT = {
     "minhash_dedup",
     "embedding_near_dup",
