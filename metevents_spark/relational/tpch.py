@@ -127,30 +127,18 @@ def top_customers_per_segment(
     """Top-k customers by account balance per market segment (ranking
     window — the reference has no ranking ops; Spark supplies them).
 
-    Exact two-phase top-k: there are only 5 segments, so a single
-    segment-partitioned window would sort ~1/5 of all customers on one
-    task at scale. Phase 1 ranks within (segment, salt) buckets in
-    parallel; phase 2 re-ranks the <= 32k survivors per segment — any
-    global top-k row is top-k within its salt bucket, so the answer is
-    identical to the single-window formulation."""
-    n_salts = 32
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_mktsegment",
-        "c_custkey",
-        "c_name",
-        "c_acctbal",
-        (F.col("c_custkey") % n_salts).alias("salt"),
+    One ``row_number() <= k`` window over c_mktsegment, ordered by
+    (c_acctbal desc, c_custkey). There are only 5 segments, but Spark
+    plans the window as a ``WindowGroupLimit`` Partial before the
+    segment exchange and Final after it, so each map partition ships at
+    most k rows per segment. That bound holds only while k <=
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)."""
+    cust = load_table(spark, sf_dir, "customer")
+    w = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("c_acctbal").desc(), F.col("c_custkey")
     )
-    order_cols = [F.col("c_acctbal").desc(), F.col("c_custkey")]
-    w1 = Window.partitionBy("c_mktsegment", "salt").orderBy(*order_cols)
-    survivors = (
-        cust.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= k)
-        .drop("r1", "salt")
-    )
-    w2 = Window.partitionBy("c_mktsegment").orderBy(*order_cols)
     return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
+        cust.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("c_mktsegment", "rank", "c_custkey", "c_name", "c_acctbal")
         .orderBy("c_mktsegment", "rank")

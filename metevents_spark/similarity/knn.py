@@ -116,28 +116,21 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _topk_per_query(scored: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
-    """Exact two-phase top-k of (q_id, vec_id, cosine) per query.
+def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of (q_id, vec_id, cosine) per query, ranked by
+    (cosine desc, vec_id), with the rank as a long column.
 
-    A window partitioned only by q_id puts every scored candidate for
-    one query on one task — and n_queries is small, so that's the
-    whole corpus (or a corpus-sized bucket) per task at scale. Phase 1
-    ranks within (q_id, salt) buckets in parallel; phase 2 re-ranks
-    the <= k*n_salts survivors per query. Any global top-k row is
-    necessarily top-k within its salt bucket, so the result is
-    identical to the single-window formulation.
+    One ``row_number() <= k`` window over q_id. Spark plans it as a
+    ``WindowGroupLimit`` Partial before the q_id exchange and Final
+    after it, so each map partition ships at most k rows per query even
+    when one query's candidates are the whole corpus. That bound holds
+    only while k <= ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (default 1000); the largest k here is knn_ivf_pq's shortlist,
+    ``k * rerank_factor``.
     """
-    order_cols = [F.col("cosine").desc(), F.col("vec_id")]
-    w1 = Window.partitionBy("q_id", "salt").orderBy(*order_cols)
-    survivors = (
-        scored.withColumn("salt", F.col("vec_id") % n_salts)
-        .withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= k)
-        .drop("r1", "salt")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(*order_cols)
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .orderBy("q_id", "rank")
     )
@@ -953,9 +946,11 @@ def hard_negative_mining(
 
     Same exact-scoring shape as :func:`knn_cosine` (anchors broadcast
     against one corpus scan, cosine rounded to 6 dp BEFORE ranking so
-    ordering is engine-deterministic, salted two-phase top-k) with the
-    cross-label filter applied pre-rank. At 100 TB the documented
-    swap-in is the ANN shortlist + exact re-rank pattern
+    ordering is engine-deterministic) with the cross-label filter
+    applied pre-rank. The top-k is :func:`_topk_per_query`: Spark's
+    ``WindowGroupLimit`` keeps at most k rows per anchor in each map
+    partition, while k <= ``windowGroupLimitThreshold``. At 100 TB the
+    documented swap-in is the ANN shortlist + exact re-rank pattern
     (:func:`ann_recall_report`'s IVF arm) — the anchor set stays a
     bounded broadcast either way.
     """

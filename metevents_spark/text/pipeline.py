@@ -645,36 +645,21 @@ def stratified_sample(
     the first k. Output: (lang, doc_id, rank).
 
     Scale shape: strata are FEW and HUGE (a language can be a double-
-    digit percentage of a 100 TB corpus), so a single window partitioned
-    by lang would sort an entire stratum on one task. Instead: exact
-    two-phase top-k — phase 1 takes top-k within (lang, salt) for 32
-    salts (parallel, each sees ~1/32 of the stratum), phase 2 takes
-    top-k over the ≤ 32k survivors per lang (tiny). Any global top-k
-    row is top-k within its salt bucket, so the result is exactly the
-    single-window answer. The mix constants are the classic glibc LCG;
+    digit percentage of a 100 TB corpus). Spark plans the
+    ``row_number() <= k`` window as a ``WindowGroupLimit`` Partial
+    before the lang exchange and Final after it, so each map partition
+    ships at most k rows per stratum; that bound holds only while k <=
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
+    The mix constants are the classic glibc LCG;
     doc_id * 1103515245 stays inside int64 for doc_id < 8.3e9 — for
     larger id spaces swap in xxhash64 (drops oracle parity, since hash
     families differ across engines).
     """
-    n_salts = 32
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = load_table(spark, sf_dir, "documents")
     mix = (F.col("doc_id") * 1103515245 + 12345) % 2147483648
-    salted = docs.select(
-        "doc_id", "lang", mix.alias("mix"), (F.col("doc_id") % n_salts).alias("salt")
-    )
-    w1 = Window.partitionBy("lang", "salt").orderBy(
-        F.col("mix").asc(), F.col("doc_id").asc()
-    )
-    survivors = (
-        salted.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= k)
-        .drop("r1", "salt")
-    )
-    w2 = Window.partitionBy("lang").orderBy(
-        F.col("mix").asc(), F.col("doc_id").asc()
-    )
+    w = Window.partitionBy("lang").orderBy(mix.asc(), F.col("doc_id").asc())
     return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
+        docs.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("lang", "doc_id", "rank")
         .orderBy("lang", "rank")

@@ -5,9 +5,11 @@ its own definition. See tools/api_coverage.py."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
 def test_public_surface_fully_exercised(capsys):

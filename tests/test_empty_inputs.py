@@ -48,11 +48,13 @@ GRACEFUL = [
     "copurchase_triangles", "copurchase_bfs_hops",
     "dedup_survivor_pick", "hard_negative_mining",
     "conversion_bootstrap_ci", "dedup_rate_by_source",
+    # per-group top-k windows (WindowGroupLimit)
+    "top_customers_per_segment", "stratified_sample",
 ]
 # undefined-on-empty by design: must raise ValueError with a message
 # that names the problem
 EXPLICIT_RAISERS = ["pca_embeddings", "embedding_whitening",
-                    "kmeans_embeddings", "semantic_dedup"]
+                    "kmeans_embeddings", "semantic_dedup", "knn_ivf_pq"]
 
 
 @pytest.fixture(scope="module")

@@ -4,12 +4,14 @@ DataFrame at sf0.001, and a sample of oracle pairs hash-match DuckDB
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from tools.check_oracle import TABLES, frame_hash, normalize

@@ -24,13 +24,15 @@ that no external artifact can move.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracle import TABLES, frame_hash, normalize  # noqa: E402
 
@@ -95,7 +97,7 @@ def test_driver_window_prioritizes_unseen_queries():
         "freq_infer",
     ]
     seen: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         with open(path) as fh:
             seen |= set(json.load(fh))
     unseen = [n for n in names if n not in seen]
@@ -127,7 +129,7 @@ def test_window_spends_no_slot_on_already_rowed_rows_only_keys():
     names = list(entrymod.queries())
     oracles = entrymod.oracle_sql()
     rowed: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         rnd = int(re.search(r"r(\d+)", path).group(1))
         if rnd >= _WINDOW_ROUND:
             continue

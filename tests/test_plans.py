@@ -512,6 +512,31 @@ def test_hash_sample_is_partial_topn_not_global_sort(spark):
     assert "Sort " not in plan, plan
 
 
+@pytest.mark.parametrize(
+    "module, fn, group",
+    [
+        ("metevents_spark.similarity.knn", "knn_cosine", "q_id"),
+        ("metevents_spark.relational.tpch", "top_customers_per_segment",
+         "c_mktsegment"),
+        ("metevents_spark.text.pipeline", "stratified_sample", "lang"),
+    ],
+)
+def test_per_group_topk_plans_window_group_limit(spark, module, fn, group):
+    """A per-group top-k is one ``row_number() <= k`` window: one hash
+    exchange on the group column, with a Partial ``WindowGroupLimit``
+    before it so each map partition ships at most k rows per group.
+    The Partial limit disappears if k exceeds
+    ``spark.sql.optimizer.windowGroupLimitThreshold``."""
+    import importlib
+
+    plan = plan_of(getattr(importlib.import_module(module), fn)(spark, SF))
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#\d+L?, \d+\)", plan) == [
+        group
+    ], plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert re.search(r"WindowGroupLimit [^\n]*, Partial\n", plan), plan
+
+
 def test_media_near_dup_grid_lsh_no_cartesian(spark):
     """Grid-LSH blocking: the pair stage is a grouped-map kernel over
     (b1, b2) cells — no cartesian/BNLJ anywhere. Two documents scans

@@ -17,7 +17,8 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "

@@ -15,15 +15,17 @@ e.g. converting sort-merge to broadcast joins, coalescing partitions).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLANS.md"
+    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PLANS.md")
 
     from metevents_spark.session import get_spark
     from metevents_spark.queries import QUERIES

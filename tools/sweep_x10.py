@@ -20,15 +20,18 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracle import TABLES, frame_hash, normalize  # noqa: E402
 
 
 def main() -> int:
     big_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/metevents-sfbig-x10"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/ORACLE_sf1.json"
+    out_path = (
+        sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "ORACLE_sf1.json")
+    )
     if not os.path.isdir(big_dir):
         print(f"replica missing at {big_dir}; run tools/make_bigscale.py 10")
         return 2

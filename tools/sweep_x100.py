@@ -29,8 +29,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracle import TABLES, frame_hash, normalize  # noqa: E402
 
@@ -70,7 +71,9 @@ def _time_spark(fn, spark, sf_dir):
 def main() -> int:
     x100 = sys.argv[1] if len(sys.argv) > 1 else "/tmp/metevents-sfbig-x100"
     x10 = sys.argv[2] if len(sys.argv) > 2 else "/tmp/metevents-sfbig-x10"
-    out_path = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/BENCH_x100.json"
+    out_path = (
+        sys.argv[3] if len(sys.argv) > 3 else os.path.join(REPO, "BENCH_x100.json")
+    )
     keys = sys.argv[4:] or SCALE_CRITICAL
     for d, factor in ((x10, 10), (x100, 100)):
         if not os.path.isdir(d):
