@@ -400,7 +400,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:
             F.max(nums[c]).alias(f"__max_{c}"),
         ]
     stats = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(stats))
+    out = df.crossJoin(stats)
     n = len(cols)
     zkey = F.lit(0).cast("long")
     for ci, c in enumerate(cols):

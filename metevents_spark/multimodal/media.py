@@ -424,7 +424,7 @@ def media_embedding_near_dup(
     byte-identical payloads collapse to one representative per content
     hash BEFORE embedding, the LSH + gram work runs over distinct
     payloads only, and pairs expand back to member documents at output
-    time (intra-group pairs are cosine 1.0 by construction, block -1).
+    time (intra-group pairs are cosine 1.0 by construction).
     A duplicate-heavy corpus — the norm for scraped media — therefore
     costs LSH work proportional to DISTINCT payloads, not total.
 
@@ -444,6 +444,7 @@ def media_embedding_near_dup(
 
     from metevents_spark.cache import track
     from metevents_spark.io import load_table
+    from metevents_spark.text.dedup import _expand_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     media = attach_fake_media(docs)
@@ -598,34 +599,8 @@ def media_embedding_near_dup(
         .groupBy("doc_a", "doc_b")
         .agg(F.max("cosine").alias("cosine"))
     )
-    # expand representative pairs to member documents (groups are
-    # disjoint, so the union is duplicate-free); intra-group pairs are
-    # exact byte copies — cosine 1.0, sentinel block -1
-    a = member_rep.select(
-        F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("ma")
+    # expand representative pairs to member documents; intra-group
+    # pairs are exact byte copies, cosine 1.0
+    return _expand_pairs(rep_pairs, member_rep, "cosine", F.lit(1.0)).orderBy(
+        "doc_a", "doc_b"
     )
-    b = member_rep.select(
-        F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("mb")
-    )
-    cross = (
-        rep_pairs.withColumnRenamed("doc_a", "rep_a")
-        .withColumnRenamed("doc_b", "rep_b")
-        .join(a, "rep_a")
-        .join(b, "rep_b")
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-            "cosine",
-        )
-    )
-    m1, m2 = member_rep.alias("m1"), member_rep.alias("m2")
-    intra = m1.join(
-        m2,
-        (F.col("m1.rep_id") == F.col("m2.rep_id"))
-        & (F.col("m1.doc_id") < F.col("m2.doc_id")),
-    ).select(
-        F.col("m1.doc_id").alias("doc_a"),
-        F.col("m2.doc_id").alias("doc_b"),
-        F.lit(1.0).alias("cosine"),
-    )
-    return cross.union(intra).orderBy("doc_a", "doc_b")

@@ -306,14 +306,12 @@ def copurchase_triangles(
     bounds out-degree by √(2m) — the classic distributed triangle
     bound, versus the unordered wedge join whose hub nodes explode as
     full-degree². The wedge set (Σ out² rows, the dominant
-    intermediate) NEVER shuffles: the closing-edge check is a
-    broadcast-hash LEFT SEMI join against the edge list (8 B/edge
-    key pairs — tens of MB up to ~10⁹ edges), so wedges stream
-    map-side from the generating join straight into the probe and
-    only surviving triangles (3 ints each) reach the final
-    map-side-combining groupBy. Beyond broadcastable edge counts the
-    swap-in is the co-partitioned shuffle semi-join on (b, c) — the
-    same plan minus the broadcast hint.
+    intermediate) is checked against the closing edges with a LEFT
+    SEMI join on one packed long key (8 B per edge), so only surviving
+    triangles (3 ints each) reach the final map-side-combining
+    groupBy. The degree and closing-edge frames grow with the edge
+    list, so their join strategies are the planner's: AQE broadcasts a
+    side whose runtime size fits and shuffles on the key beyond it.
 
     The oracle counts the same triangle set with id-ordering
     (u < v < w) — orientation changes which joins run, never which
@@ -336,10 +334,10 @@ def copurchase_triangles(
         .persist()
     )
     tagged = und.join(
-        F.broadcast(deg.select(F.col("p").alias("src"), F.col("deg").alias("ds"))),
+        deg.select(F.col("p").alias("src"), F.col("deg").alias("ds")),
         "src",
     ).join(
-        F.broadcast(deg.select(F.col("p").alias("dst"), F.col("deg").alias("dd"))),
+        deg.select(F.col("p").alias("dst"), F.col("deg").alias("dd")),
         "dst",
     )
     lower_first = (F.col("ds") < F.col("dd")) | (
@@ -361,27 +359,25 @@ def copurchase_triangles(
     wedges = e1.join(e2, (F.col("e1.a") == F.col("e2.a")) & spoke_lt).select(
         F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c")
     )
-    # single-long edge key: the broadcast hash becomes a long-keyed
-    # relation — measurably faster to probe than a generic two-column
-    # struct key at tens of millions of wedges. The packing is only
-    # collision-free for keys in [0, 2^32); VERIFY that once on the
-    # bounded degree frame (one row per part — a tiny aggregate over
-    # an already-persisted frame) and fall back to the two-column key
-    # past the bound instead of silently miscounting.
+    # single-long edge key: the semi join hashes one long — measurably
+    # faster to probe than a generic two-column struct key at tens of
+    # millions of wedges. The packing is only collision-free for keys
+    # in [0, 2^32); VERIFY that once on the bounded degree frame (one
+    # row per part — a tiny aggregate over an already-persisted frame)
+    # and fall back to the two-column key past the bound instead of
+    # silently miscounting.
     lo, hi = deg.agg(F.min("p"), F.max("p")).first()
     if lo is not None and 0 <= lo and hi < 2**32:
         pack = lambda x, y: (
             F.shiftleft(F.col(x).cast("long"), 32) + F.col(y)
         )
         closing = oriented.select(pack("a", "b").alias("bc"))
-        tri = wedges.withColumn("bc", pack("b", "c")).join(
-            F.broadcast(closing), "bc", "left_semi"
-        )
+        tri = wedges.withColumn("bc", pack("b", "c")).join(closing, "bc", "left_semi")
     else:
         closing = oriented.select(
             F.col("a").alias("b"), F.col("b").alias("c")
         )
-        tri = wedges.join(F.broadcast(closing), ["b", "c"], "left_semi")
+        tri = wedges.join(closing, ["b", "c"], "left_semi")
     # one pass: explode each triangle's three corners (a unionAll of
     # three tri branches would re-run the wedge join three times)
     nodes = tri.select(
@@ -440,9 +436,11 @@ def copurchase_bfs_hops(
             F.col("p_partkey").alias("src")
         )
         new = (
+            # broadcast: static fixpoint round: no AQE to pick it at runtime
             edges.join(F.broadcast(frontier), "src", "left_semi")
             .select(F.col("dst").alias("p_partkey"))
             .distinct()
+            # broadcast: static fixpoint round: no AQE to pick it at runtime
             .join(F.broadcast(reached.select("p_partkey")), "p_partkey", "left_anti")
             .select("p_partkey", F.lit(h + 1).cast("long").alias("hops"))
         )

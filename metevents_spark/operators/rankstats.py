@@ -358,6 +358,7 @@ def mann_whitney_u(
     )
     base = (
         ev.filter(F.col("event_type") == baseline)
+        # broadcast: one row per event type (est 9.5 KB → 716 KB, sf0.001 → sf0.1)
         .crossJoin(F.broadcast(grps))
         .select("grp", "event_type", "value")
     )
@@ -531,7 +532,7 @@ def mann_whitney_u_bucketed(
     )
     base = (
         ev.filter(F.col("event_type") == baseline)
-        .crossJoin(F.broadcast(grps))
+        .crossJoin(grps)
         .select("grp", "event_type", "value")
     )
     bounds = dims.select("vmin", "vmax")
@@ -547,7 +548,7 @@ def mann_whitney_u_bucketed(
     )
     samp = (
         cand.unionByName(base)
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .select("grp", "event_type", bucket.cast("long").alias("bkt"))
     )
     is_a = F.col("event_type") == F.col("grp")

@@ -215,7 +215,7 @@ def key_skew_report(
     topk = (
         counts.orderBy(F.desc("cnt"), key)
         .limit(top)
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
     )
     w = Window.orderBy(F.desc("cnt"), key).rowsBetween(
         Window.unboundedPreceding, 0

@@ -283,6 +283,7 @@ def mad_drift(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     mad = (
+        # broadcast: 2 windows × event types (est 22 KB → 1.6 MB, sf0.001 → sf0.1)
         labeled.join(F.broadcast(med), ["event_type", "w"])
         .select(
             "event_type",

@@ -11,9 +11,9 @@ Scale shape:
     order is bounded by basket_size^2 (TPC-H baskets are ~4 items, and
     real carts are bounded; a hot-basket cap like the LSH guard would
     slot in here if they weren't).
-  * Item counts and the order total are dimension-sized aggregates
-    that BROADCAST back onto the pair frame — the big fact table is
-    scanned once and shuffled once.
+  * Item counts and the order total are aggregates joined back onto
+    the pair frame (the planner broadcasts them while they fit) — the
+    big fact table is scanned once and shuffled once.
   * The final ranking is a rounded-lift TakeOrdered (top-n heap per
     partition, driver merges n-row heads), never a global sort.
 """
@@ -78,9 +78,9 @@ def market_basket_lift(
     )
     d = lambda c: F.col(c).cast("double")
     return (
-        pairs.join(F.broadcast(na), "part_a")
-        .join(F.broadcast(nb), "part_b")
-        .crossJoin(F.broadcast(n_orders))
+        pairs.join(na, "part_a")
+        .join(nb, "part_b")
+        .crossJoin(n_orders)
         .select(
             "part_a",
             "part_b",

@@ -62,6 +62,7 @@ def pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         part.join(
+            # broadcast: ≤ 1 row per p_size (est 1.7 KB → 41 KB, sf0.001 → sf0.1)
             F.broadcast(frontier), ["p_retailprice", "p_size"], "inner"
         )
         .select("p_partkey", "p_name", "p_retailprice", "p_size")

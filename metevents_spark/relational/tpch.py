@@ -5,12 +5,12 @@ monetary arithmetic is done in DECIMAL so results are exact and engine
 independent (double summation is order-dependent; decimal is not), then
 cast to DOUBLE for a stable output schema.
 
-Scale notes: every join below either broadcasts the small side
-(region/nation/customer at these ratios — Spark auto-broadcasts under
-the threshold, AQE converts at runtime otherwise) or shuffles on the
-natural key; aggregates are partial+final hash aggregates; filters and
-column pruning reach the parquet scan (verified via .explain in
-tests/test_plans.py).
+Scale notes: no join below carries a strategy hint. Spark broadcasts
+the small side (region/nation/customer at these ratios) when its size
+estimate is under the threshold, AQE converts at runtime otherwise,
+and past that the join shuffles on the natural key; aggregates are
+partial+final hash aggregates; filters and column pruning reach the
+parquet scan (verified via .explain in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -113,8 +113,8 @@ def region_revenue(spark: SparkSession, sf_dir: str, region: str = "ASIA") -> Da
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(reg, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(F.sum(revenue).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
@@ -174,7 +174,7 @@ def nation_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
     return (
-        cust.join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        cust.join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .rollup("n_name", "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -256,7 +256,7 @@ def top_price_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("o_totalprice", F.lit(0.99)).alias("_thr")
     )
     return (
-        orders.crossJoin(F.broadcast(thr))
+        orders.crossJoin(thr)
         .filter(F.col("o_totalprice") > F.col("_thr"))
         .select(
             "o_orderkey", "o_custkey", "o_totalprice",
@@ -375,22 +375,17 @@ def small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part, lineitems with quantity below 20% of that part's average
     quantity.
 
-    The broadcast brand filter is applied ONCE and the surviving
-    ~|1/brands| slice persisted: the earlier shape scanned lineitem
-    twice and — worse at scale — aggregated the per-part average over
-    EVERY part, then discarded all but Brand#13's in the join (r13
-    2x-scan sweep; guide §3.4 pre-filter-the-big-side). The per-part
+    The brand filter is applied ONCE, before any aggregate, and the
+    surviving ~|1/brands| slice persisted, so lineitem is scanned once
+    and the per-part average covers Brand#13's parts only. The per-part
     average over the filtered slice is computed from exactly the same
     row multiset per surviving part (the filter is a partkey-membership
     predicate, never a row predicate), so qty_cut — and the final
     rounded scalar — are identical. One fact scan, one small cached
-    frame. The avg join carries NO broadcast hint (r14, ADVICE):
-    avg_qty has one row per Brand#13 part — ~SF·8k rows, linear in
-    scale — so a forced broadcast bypasses autoBroadcastJoinThreshold
-    and risks driver/executor pressure at large SF; AQE sees the true
-    post-agg size at runtime and still picks broadcast wherever it
-    actually fits, falling back to the scale-safe shuffle join beyond
-    it."""
+    frame. Both the brand-filter join and the avg join grow with SF
+    (avg_qty has one row per Brand#13 part, ~SF·8k rows), so the
+    planner picks their strategy: broadcast wherever the side fits,
+    the shuffle join beyond it."""
     line = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#13"
@@ -399,7 +394,7 @@ def small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     flt = track(
         line.join(
-            F.broadcast(part.select("p_partkey")),
+            part.select("p_partkey"),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .select("l_partkey", "l_quantity", "l_extendedprice")
@@ -489,7 +484,7 @@ def price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: top-10 open orders by pending revenue for one
     market segment. Three-table join where the filtered customer side
-    broadcasts; revenue in DECIMAL for exactness."""
+    broadcasts while it fits; revenue in DECIMAL for exactness."""
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -505,7 +500,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         line.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(revenue.cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), "l_orderkey")
@@ -678,8 +673,8 @@ def nation_trade_flow(
 
     Scale shape: the nation filter reaches the supplier and customer
     scans BEFORE the fact joins (each dim pre-joined to its filtered
-    broadcast nation row, so lineitem rows from other nations die at
-    the first — broadcast — join and never reach the orders shuffle).
+    nation row, so lineitem rows from other nations die at the first
+    join and never reach the orders shuffle).
     The one big exchange left is lineitem x orders on orderkey.
     """
     nat = load_table(spark, sf_dir, "nation")
@@ -687,10 +682,8 @@ def nation_trade_flow(
     supp = (
         load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(
-                pair.select(
-                    "n_nationkey", F.col("n_name").alias("supp_nation")
-                )
+            pair.select(
+                "n_nationkey", F.col("n_name").alias("supp_nation")
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
@@ -699,11 +692,9 @@ def nation_trade_flow(
     cust = (
         load_table(spark, sf_dir, "customer")
         .join(
-            F.broadcast(
-                pair.select(
-                    F.col("n_nationkey").alias("cn_key"),
-                    F.col("n_name").alias("cust_nation"),
-                )
+            pair.select(
+                F.col("n_nationkey").alias("cn_key"),
+                F.col("n_name").alias("cust_nation"),
             ),
             F.col("c_nationkey") == F.col("cn_key"),
         )
@@ -714,7 +705,7 @@ def nation_trade_flow(
     one = F.lit(1).cast("decimal(3,2)")
     revenue = _dec("l_extendedprice") * (one - _dec("l_discount", "4,2"))
     return (
-        line.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        line.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .filter(
@@ -787,8 +778,8 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey")
         .agg(F.sum("cents").alias("cents"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(reg, F.col("n_regionkey") == F.col("r_regionkey"))
         .select(
             F.col("r_name").alias("region"),
             F.col("n_name").alias("nation"),
@@ -822,7 +813,7 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-part minimum is a rank-1 window over the SAME key the probe
     would shuffle on (l_partkey), so one exchange serves both the
     "aggregate" and the selection — the decorrelated form of Q2's
-    correlated MIN subquery. Supplier and part dims broadcast. Unit
+    correlated MIN subquery. Supplier and part dims join by size. Unit
     price rounds to 6 decimals BEFORE ranking so the rank-1 row is
     engine-stable; (suppkey) breaks exact ties.
     """
@@ -834,13 +825,13 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit = F.round(F.col("l_extendedprice") / F.col("l_quantity"), 6)
     w = Window.partitionBy("l_partkey").orderBy("unit_price", "l_suppkey")
     return (
-        line.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        line.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "l_partkey", "p_name", "l_suppkey", unit.alias("unit_price")
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
             "p_name",
@@ -877,7 +868,7 @@ def important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole |parts|-sized rollup through a single task at scale
     total = per_part.agg(F.sum("cents").alias("total_cents"))
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("cents") > F.col("total_cents") / F.lit(2000.0))
         .select(
             F.col("l_partkey").alias("p_partkey"),
@@ -917,9 +908,9 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_rev = per_supp.agg(F.max("total_rev").alias("max_rev"))
     return (
-        per_supp.crossJoin(F.broadcast(max_rev))
+        per_supp.crossJoin(max_rev)
         .filter(F.col("total_rev") == F.col("max_rev"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             F.col("s_suppkey"),
             "s_name",
@@ -993,7 +984,7 @@ def sole_return_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_order.groupBy("ret_suppkey")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(supp), F.col("ret_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("ret_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "numwait")
         .orderBy(F.col("numwait").desc(), "s_suppkey")
     )
@@ -1015,14 +1006,14 @@ def rich_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("c_acctbal").alias("_avg_bal")
     )
     return (
-        cust.crossJoin(F.broadcast(avg_bal))
+        cust.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("_avg_bal"))
         .join(
             orders.select("o_custkey"),
             F.col("c_custkey") == F.col("o_custkey"),
             "left_anti",
         )
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_custs"),
@@ -1062,7 +1053,7 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by revenue lost to returned
     items ('R' returnflag) for orders placed in one quarter. Orders is
     date-filtered before the lineitem join (filter pushdown shrinks the
-    build side); customer and nation broadcast; the heavy
+    build side); the top-20 side and nation broadcast; the heavy
     lineitem⋈orders join shuffles on orderkey only. Deterministic
     top-20 via (revenue DESC, custkey) tie-break."""
     line = load_table(spark, sf_dir, "lineitem").filter(
@@ -1093,8 +1084,8 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     return (
-        cust.join(F.broadcast(top20), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        cust.join(top20, F.col("c_custkey") == F.col("o_custkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .select(
             "c_custkey",
             "c_name",
@@ -1134,9 +1125,9 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: percentage of one month's revenue that came
-    from PROMO-type parts. Part broadcasts into the date-pruned
-    lineitem scan; conditional aggregation computes both numerator and
-    denominator in ONE pass (no second scan, no self-join)."""
+    from PROMO-type parts. Part joins the date-pruned lineitem scan;
+    conditional aggregation computes both numerator and denominator
+    in ONE pass (no second scan, no self-join)."""
     line = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
@@ -1146,7 +1137,7 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("decimal(12,2)") - _dec("l_discount", "4,2")
     )
     return (
-        line.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        line.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
                 (
@@ -1166,17 +1157,15 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def disjunctive_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: revenue from three OR'd (brand, quantity-band,
-    size-band) predicates. The join stays a plain broadcast equijoin on
-    partkey; the disjunction is a post-join filter Catalyst can still
-    partially push (the common partkey equality carries the join, the
+    size-band) predicates. The join stays a plain equijoin on partkey;
+    the disjunction is a post-join filter Catalyst can still partially
+    push (the common partkey equality carries the join, the
     OR'd residual evaluates in codegen). The classic trap — turning the
     OR into a union of three joins that scans lineitem three times —
     is exactly what this formulation avoids."""
     line = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    joined = line.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
-    )
+    joined = line.join(part, F.col("l_partkey") == F.col("p_partkey"))
     cond = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -1210,8 +1199,8 @@ def heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than 50 units of any single 'large*'-named part during 1996.
     The inner aggregate groups on (suppkey, partkey) — the natural
     shuffle key — then a LEFT SEMI join reduces supplier; the semi join
-    keeps only the 4-byte keys flowing, and the part filter broadcasts
-    into the lineitem scan."""
+    keeps only the 4-byte keys flowing, and the part filter joins the
+    lineitem scan before the aggregate."""
     line = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -1221,7 +1210,7 @@ def heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = load_table(spark, sf_dir, "supplier")
     movers = (
-        line.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        line.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .filter(F.col("qty") > 50)
@@ -1240,22 +1229,22 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: all three dimension chains (part filtered by type,
     customer -> nation -> region filtered to the region, supplier ->
-    nation carrying the supplier-nation name) are broadcast, so the
-    only big exchange is lineitem x orders on orderkey — and the part
-    broadcast-semi kills most lineitem rows before that shuffle. The
+    nation carrying the supplier-nation name) are the small join sides,
+    so the only big exchange is lineitem x orders on orderkey — and the
+    part semi join kills most lineitem rows before that shuffle. The
     share is a conditional sum over the SAME aggregate pass (one
     scan), not a self-join of two aggregates. Money in exact 1e-4
     dollar LONG units (see pricing_summary for the overflow bound).
     """
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nat = load_table(spark, sf_dir, "nation")
-    cust_nat = nat.join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select(F.col("n_nationkey").alias("cn_key"))
+    cust_nat = nat.join(region, F.col("n_regionkey") == F.col("r_regionkey")).select(
+        F.col("n_nationkey").alias("cn_key")
+    )
     cust = (
         load_table(spark, sf_dir, "customer")
         .join(
-            F.broadcast(cust_nat),
+            cust_nat,
             F.col("c_nationkey") == F.col("cn_key"),
             "left_semi",
         )
@@ -1264,10 +1253,8 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = (
         load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(
-                nat.select(
-                    "n_nationkey", F.col("n_name").alias("supp_nation")
-                )
+            nat.select(
+                "n_nationkey", F.col("n_name").alias("supp_nation")
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
@@ -1285,16 +1272,16 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = F.when(F.col("supp_nation") == "NATION_3", volume).otherwise(F.lit(0))
     return (
         line.join(
-            F.broadcast(part.select("p_partkey")),
+            part.select("p_partkey"),
             F.col("l_partkey") == F.col("p_partkey"),
             "left_semi",
         )
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
             orders.select("o_orderkey", "o_custkey", "o_orderdate"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"), "left_semi")
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             F.round(F.sum(target) / 1.0e4, 3).alias("target_volume"),
@@ -1315,8 +1302,8 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     profit = l_extendedprice*(1-l_discount) - 0.5*p_retailprice*l_quantity
 
     Scale shape: the name-filtered part side (with its retail price)
-    and the supplier->nation chain broadcast; lineitem x orders on
-    orderkey is the one big exchange. Profit accumulates in exact
+    and the supplier->nation chain are the small join sides; lineitem x
+    orders on orderkey is the one big exchange. Profit accumulates in exact
     1e-4 dollar LONG units: price(1e-2)*(100-disc) and
     retail(1e-2)*qty(int)*50 are both 1e-4-unit integers, so the
     subtraction stays exact inside whole-stage codegen.
@@ -1325,7 +1312,7 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = (
         load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(nat.select("n_nationkey", F.col("n_name").alias("nation"))),
+            nat.select("n_nationkey", F.col("n_name").alias("nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", "nation")
@@ -1343,8 +1330,8 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qty = F.round(F.col("l_quantity")).cast("long")
     profit = price * (100 - disc) - retail * qty * 50  # 1e-4 dollar units
     return (
-        line.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        line.join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("nation", F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(F.round(F.sum(profit) / 1.0e4, 3).alias("sum_profit"))
@@ -1360,9 +1347,9 @@ def part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     below an account-balance floor (the complaints-exclusion analog).
 
     Scale shape: both dimension filters (part attributes, supplier
-    exclusion) broadcast against the lineitem scan — the part filter
-    as a broadcast hash join carrying the grouping attributes, the
-    supplier exclusion as a broadcast LEFT SEMI on the kept keys — so
+    exclusion) join the lineitem scan — the part filter as a hash join
+    carrying the grouping attributes, the supplier exclusion as a LEFT
+    SEMI on the kept keys — so
     excluded rows die before the one aggregation exchange. The
     countDistinct expands (brand,type,size,supplier) once; both that
     and the final rollup shuffle only small grouped keys.
@@ -1386,9 +1373,9 @@ def part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_suppkey"
     )
     return (
-        line.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        line.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(
-            F.broadcast(supp_ok),
+            supp_ok,
             F.col("l_suppkey") == F.col("s_suppkey"),
             "left_semi",
         )
@@ -1441,9 +1428,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        dominant.join(
-            F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey")
-        )
+        dominant.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             "s_suppkey", "s_name", "n_dominant_parts", "dominated_qty"
         )
@@ -1459,8 +1444,7 @@ def nation_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     predecessor drop (growth undefined).
 
     Scale shape: the fact join shuffles on orderkey once; the customer
-    join is left to AQE (customer scales with SF — the fixed-size
-    broadcast is only the nation dim); the LAG window runs on
+    and nation joins are left to the planner; the LAG window runs on
     |nations| x |years| rows — dimension-sized, never the fact table.
     Revenue sums in exact DECIMAL and only the FINAL ratio is double,
     so the growth numbers are engine-deterministic bit-for-bit after
@@ -1476,7 +1460,7 @@ def nation_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         line.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust.select("c_custkey", "c_nationkey"),
               F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", F.year("o_orderdate").alias("o_year"))
         .agg(F.sum(revenue).cast("double").alias("revenue"))
     )
@@ -1503,8 +1487,8 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     level so consumers need no NULL-sniffing.
 
     Exact DECIMAL revenue (integer-cents convention), counts exact —
-    hash-stable. One Expand + one aggregate; dims broadcast onto the
-    fact scan. The revenue product is PROJECTED BEFORE the rollup
+    hash-stable. One Expand + one aggregate; dims join the fact scan.
+    The revenue product is PROJECTED BEFORE the rollup
     (r13, guide §1.2 per-task work): ROLLUP's Expand triples every
     fact row, and an expression inside ``agg`` is re-evaluated per
     expanded copy — pre-computing it runs the decimal multiply once
@@ -1518,9 +1502,9 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one = F.lit(1).cast("decimal(3,2)")
     revenue = _dec("l_extendedprice") * (one - _dec("l_discount", "4,2"))
     return (
-        line.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
+        line.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(reg, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("r_name", "n_name", revenue.alias("rev"))
         .rollup("r_name", "n_name")
         .agg(
@@ -1549,7 +1533,7 @@ def region_nations_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load_table(spark, sf_dir, "nation")
     reg = load_table(spark, sf_dir, "region")
     return (
-        nat.join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
+        nat.join(reg, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_nations"),
@@ -1575,8 +1559,8 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tie-break is cosmetic). No order-dependent float fold
     anywhere.
 
-    Plan: one groupBy(custkey) exchange on the fact side, a broadcast
-    of customer→nation, one nation-partitioned rank window over the
+    Plan: one groupBy(custkey) exchange on the fact side, a join to
+    customer→nation, one nation-partitioned rank window over the
     |customers|-sized frame, one final nation-sized aggregate. At
     100 TB the rank window partitions by nation (bounded cardinality
     ~25) — the documented swap-in is pre-bucketing customers by nation
@@ -1592,10 +1576,10 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.sum("cents").alias("cents"))
         .join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
+            cust.select("c_custkey", "c_nationkey"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .select(F.col("n_name").alias("nation"), "c_custkey", "cents")
     )
     w = Window.partitionBy("nation").orderBy("cents", "c_custkey")

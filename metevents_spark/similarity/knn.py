@@ -162,6 +162,7 @@ def knn_cosine(
     )
     sim = F.round(_dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm")), 6)
     scored = (
+        # broadcast: the n_queries query rows (est 258 KB → 1.1 MB, sf0.001 → sf0.1)
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", sim.alias("cosine"))
@@ -334,6 +335,7 @@ def knn_ivf(
         _dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm")), 6
     )
     scored = (
+        # broadcast: n_queries × nprobe rows (est 261 KB → 1.1 MB, sf0.001 → sf0.1)
         assigned.join(F.broadcast(queries), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", sim.alias("cosine"))
@@ -467,6 +469,7 @@ def knn_lsh(
     sim = F.round(_dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm")), 6)
     scored = (
         base.join(
+            # broadcast: query probe buckets (est 165 KB → 679 KB, sf0.001 → sf0.1)
             F.broadcast(queries),
             (F.col("table") == F.col("q_table"))
             & (F.col("bucket") == F.col("q_bucket")),
@@ -893,6 +896,7 @@ def knn_ivf_pq(
         f"element_at(tables, j * {ks} + c + 1)), 0D, (acc, x) -> acc + x)"
     )
     shortlist = _topk_per_query(
+        # broadcast: n_queries × nprobe rows (est 161 KB → 666 KB, sf0.001 → sf0.1)
         encoded.join(F.broadcast(probe_df), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
@@ -916,8 +920,10 @@ def knn_ivf_pq(
         F.col("v_norm").alias("q_norm"),
     )
     exact = (
+        # broadcast: k·rerank_factor per query (est 14 GB → 242 GB, sf0.001 → sf0.1)
         F.broadcast(shortlist)
         .join(base, "vec_id")
+        # broadcast: the n_queries query rows (est 258 KB → 1.1 MB, sf0.001 → sf0.1)
         .join(F.broadcast(qside), "q_id")
         .select(
             "q_id",
@@ -971,6 +977,7 @@ def hard_negative_mining(
         _dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm")), 6
     )
     scored = (
+        # broadcast: the n_anchors anchor rows (est 290 KB → 1.2 MB, sf0.001 → sf0.1)
         corpus.crossJoin(F.broadcast(anchors))
         .filter(F.col("label") != F.col("q_label"))
         .select("q_id", "vec_id", "label", sim.alias("cosine"))

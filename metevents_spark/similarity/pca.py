@@ -179,10 +179,12 @@ def embedding_covariance(
         num >= 0, F.expr("(2 * num + den) div (2 * den)")
     ).otherwise(-F.expr("(-2 * num + den) div (2 * den)"))
     return (
-        sp.join(F.broadcast(mapping), "pos")
+        sp.join(mapping, "pos")
+        # broadcast: one row per embedding dim (est 68 KB → 280 KB, sf0.001 → sf0.1)
         .join(F.broadcast(si), "i")
+        # broadcast: one row per embedding dim (est 68 KB → 280 KB, sf0.001 → sf0.1)
         .join(F.broadcast(sj), "j")
-        .crossJoin(F.broadcast(n_tot))
+        .crossJoin(n_tot)
         .withColumn("num", num)
         .withColumn("den", den)
         .select(

@@ -129,6 +129,7 @@ def stream_drift(
         for i in range(N_BINS)
     )
     return (
+        # broadcast: one row per event type (est 37 KB → 2.8 MB, sf0.001 → sf0.1)
         hist.join(F.broadcast(reference), "event_type")
         .select(
             F.col("win.start").alias("win_start"),

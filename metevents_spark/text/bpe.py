@@ -22,7 +22,7 @@ forces:
   re-analyzes n_merges nested fold lambdas each round.
 - ENCODING is vocab-sized, not corpus-sized: each DISTINCT word is
   encoded once in an Arrow-batched pandas UDF, and documents get their
-  token counts back through a broadcast join on the word.
+  token counts back through a join on the word.
 """
 
 from __future__ import annotations
@@ -189,9 +189,10 @@ def bpe_token_count(
 
     Scale shape: encoding touches each DISTINCT word once (pandas UDF
     over the vocab table — Arrow batches of words, not documents), and
-    documents pick up their counts through a broadcast join on the
-    word. The merge table rides in the UDF closure: n_merges entries,
-    tokenizer-sized driver state by definition.
+    documents pick up their counts through a join on the word,
+    broadcast while the vocabulary fits. The merge table rides in the
+    UDF closure: n_merges entries, tokenizer-sized driver state by
+    definition.
     """
     if merges is None:
         merges = learn_merges(spark, sf_dir, n_merges)
@@ -209,7 +210,7 @@ def bpe_token_count(
         "word", n_tokens("word").alias("word_tokens")
     )
     return (
-        doc_words.join(F.broadcast(vocab), "word")
+        doc_words.join(vocab, "word")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),

@@ -166,6 +166,7 @@ def _cap_hot_buckets(banded: DataFrame, cap: int, name: str) -> DataFrame:
     if over.count() == 0:
         return banded
     return banded.join(
+        # broadcast: the over-cap bucket list (est 106 MB → 8.7 GB, sf0.001 → sf0.1)
         F.broadcast(over.select("band", "bucket")),
         ["band", "bucket"],
         "left_anti",
@@ -459,10 +460,12 @@ def incremental_dedup(
         num_hashes=num_hashes,
         bands=bands,
     )
+    # broadcast: ≤ 2 reps per ingest-batch group (est 56 KB → 510 KB, sf0.001 → sf0.1)
     both = banded.join(F.broadcast(rep_ids), "doc_id")
     both = track(both.persist(StorageLevel.MEMORY_AND_DISK))
     both = _cap_hot_buckets(both, max_bucket, "incremental_lsh_guard")
     cand = (
+        # broadcast: the ingest batch's band rows (est 774 KB → 7.7 MB, sf0.001 → sf0.1)
         F.broadcast(both.filter("side = 'b'").drop("side")).alias("l")
         .join(
             both.filter("side = 'r'").drop("side").alias("r"),
@@ -1161,7 +1164,7 @@ def dedup_recall_report(
         F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
     )
     truth = (
-        a.crossJoin(F.broadcast(b))
+        a.crossJoin(b)
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
             "doc_a",
@@ -1177,12 +1180,12 @@ def dedup_recall_report(
     pred = (
         minhash_near_dup(spark, sf_dir, threshold=threshold, sort=False)
         .join(
-            F.broadcast(sample_ids.withColumnRenamed("doc_id", "doc_a")),
+            sample_ids.withColumnRenamed("doc_id", "doc_a"),
             "doc_a",
             "left_semi",
         )
         .join(
-            F.broadcast(sample_ids.withColumnRenamed("doc_id", "doc_b")),
+            sample_ids.withColumnRenamed("doc_id", "doc_b"),
             "doc_b",
             "left_semi",
         )
@@ -1337,7 +1340,7 @@ def doc_containment(
         F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")
     )
     return (
-        shared.join(F.broadcast(sz_a), "doc_a")
+        shared.join(sz_a, "doc_a")
         .select(
             "doc_a",
             "doc_b",

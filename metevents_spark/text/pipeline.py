@@ -49,6 +49,7 @@ def decontaminate_ngram(
     )
     train = exploded.filter(F.col("doc_id") % eval_mod != 0)
     return (
+        # broadcast: held-out eval-set n-grams (est 22 KB → 198 KB, sf0.001 → sf0.1)
         train.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("n_shared"))
@@ -159,6 +160,7 @@ def bloom_prefilter(
             probed.withColumn("__bloom_p", pos)
             .withColumn("__bloom_w", F.expr("shiftright(__bloom_p, 6)"))
             .join(
+                # broadcast: ≤ m_bits/64 words (est 33 KB → 297 KB, sf0.001 → sf0.1)
                 F.broadcast(
                     words.select(
                         F.col("w").alias("__bloom_w"),
@@ -218,6 +220,7 @@ def decontaminate_bloom(
     train = exploded.filter(F.col("doc_id") % eval_mod != 0)
     survivors = bloom_prefilter(train, "gram", words, m_bits, n_hashes)
     return (
+        # broadcast: held-out eval-set n-grams (est 22 KB → 198 KB, sf0.001 → sf0.1)
         survivors.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("n_shared"))
@@ -296,6 +299,7 @@ def importance_resample(
     )
     per_doc = (
         bt.filter(~F.col("is_tgt"))
+        # broadcast: n_buckets rows (est 19 KB → 170 KB, sf0.001 → sf0.1)
         .join(F.broadcast(ratios), "b")
         .groupBy("doc_id")
         .agg(
@@ -387,6 +391,7 @@ def boilerplate_phrases(
     return (
         df_tbl.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
+        # broadcast: one row per source (est 28 KB → 255 KB, sf0.001 → sf0.1)
         .join(F.broadcast(n_docs), "source")
         .select(
             "source",
@@ -519,6 +524,7 @@ def contamination_fraction(
         .distinct()
     )
     train = grams.filter(F.col("doc_id") % eval_mod != 0)
+    # broadcast: held-out eval-set n-grams (est 25 KB → 227 KB, sf0.001 → sf0.1)
     hit = F.broadcast(eval_grams.withColumn("hit", F.lit(1)))
     return (
         train.join(hit, "gram", "left")
@@ -1012,7 +1018,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         annotated
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -1131,7 +1137,7 @@ def mixture_plan(
         [(s, float(w)) for s, w in sorted(weights.items())],
         "source string, weight double",
     )
-    joined = per_source.join(F.broadcast(wdf), "source", "left").withColumn(
+    joined = per_source.join(wdf, "source", "left").withColumn(
         "weight", F.coalesce(F.col("weight"), F.lit(0.0))
     )
     target = F.round(F.col("weight") * F.lit(float(target_total_tokens)))

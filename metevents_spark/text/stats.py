@@ -254,7 +254,7 @@ def vocab_top_terms_approx(
     )
     exploded = docs.select(F.explode(_tokens()).alias("token"))
     return (
-        exploded.join(F.broadcast(cand), "token")
+        exploded.join(cand, "token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("token"))
@@ -315,7 +315,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     wt = Window.partitionBy("term")
     scored_in = per_doc.withColumn(
         "df", F.count(F.lit(1)).over(wt)
-    ).crossJoin(F.broadcast(n_docs))
+    ).crossJoin(n_docs)
     score = F.round(
         (F.col("tc").cast("double") / F.col("doc_len"))
         * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)),
@@ -707,7 +707,7 @@ def bm25_rank(
         "doc_id",
         F.size("_t").cast("long").alias("dl"),
         F.explode(F.col("_t")).alias("term"),
-    ).join(F.broadcast(qterms), "term")
+    ).join(qterms, "term")
     tf = toks.groupBy("q_id", "term", "doc_id", "dl").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -729,7 +729,7 @@ def bm25_rank(
     term_score = idf * (F.col("tf") * (k1 + 1.0)) / denom
     scored = (
         with_df
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("q_id", "doc_id")
         .agg(F.round(F.sum(term_score), 5).alias("score"))
     )
@@ -997,8 +997,9 @@ def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.col("c_t") / F.col("n_t")  # term share within the corpus
     return (
         st.join(ct, "term")
+        # broadcast: one row per source (est 28 KB → 255 KB, sf0.001 → sf0.1)
         .join(F.broadcast(ns), "source")
-        .crossJoin(F.broadcast(nt))
+        .crossJoin(nt)
         .groupBy("source")
         .agg(
             F.max("n_s").cast("long").alias("n_tokens"),
@@ -1145,8 +1146,9 @@ def chi2_terms(
     dec = "decimal(38,0)"
     cand = (
         st.join(term_tot, "term")
+        # broadcast: one row per source (est 28 KB → 255 KB, sf0.001 → sf0.1)
         .join(F.broadcast(src_tot), "source")
-        .crossJoin(F.broadcast(n_tot))
+        .crossJoin(n_tot)
         .where(F.col("a_cnt") >= min_count)
         .select(
             "source",
@@ -1211,7 +1213,7 @@ def oov_rate(spark: SparkSession, sf_dir: str, vocab_k: int = 25) -> DataFrame:
         .limit(vocab_k)
         .select("token", F.lit(1).alias("in_vocab"))
     )
-    flagged = toks.join(F.broadcast(vocab), "token", "left")
+    flagged = toks.join(vocab, "token", "left")
     return (
         flagged.groupBy("source")
         .agg(

@@ -7,6 +7,7 @@ must be clean.
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -23,3 +24,28 @@ def test_lint_gate_clean():
         timeout=120,
     )
     assert out.returncode == 0, f"lint gate failed:\n{out.stdout}"
+
+
+def test_lint_flags_unannotated_broadcast_hints(tmp_path):
+    """A join-strategy hint must state its reason in a ``# broadcast:``
+    comment on its line or the line before; a bare one fails the gate."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
+    lint = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(lint)
+    src = tmp_path / "hints.py"
+    src.write_text(
+        "from pyspark.sql import functions as F\n"
+        "\n"
+        "\n"
+        "def f(big, small, other):\n"
+        "    a = big.join(F.broadcast(small), 'k')\n"
+        "    # broadcast: at most 5 query rows, estimated at the table size\n"
+        "    b = big.join(F.broadcast(small), 'k')\n"
+        "    c = big.join(other.hint('broadcast'), 'k')\n"
+        "    return a, b, c\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): BC1 ", p)]
+    assert flagged == [5, 8], problems

@@ -537,6 +537,31 @@ def test_per_group_topk_plans_window_group_limit(spark, module, fn, group):
     assert re.search(r"WindowGroupLimit [^\n]*, Partial\n", plan), plan
 
 
+@pytest.mark.parametrize(
+    "module, fn",
+    [
+        ("metevents_spark.operators.graph", "copurchase_triangles"),
+        ("metevents_spark.relational.tpch", "min_cost_supplier"),
+        ("metevents_spark.relational.tpch", "shipping_priority"),
+    ],
+)
+def test_sf_growing_sides_carry_no_forced_broadcast(spark, module, fn):
+    """Sides that grow with SF (part, supplier, customer, co-purchase
+    edges and degrees) are left to the planner's size estimates. With
+    size-based broadcasting switched off, a ``BroadcastExchange`` in
+    the plan could only come from a hand-written hint."""
+    import importlib
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = plan_of(getattr(importlib.import_module(module), fn)(spark, SF))
+    finally:
+        spark.conf.set(key, before)
+    assert "BroadcastExchange" not in plan, plan
+
+
 def test_media_near_dup_grid_lsh_no_cartesian(spark):
     """Grid-LSH blocking: the pair stage is a grouped-map kernel over
     (b1, b2) cells — no cartesian/BNLJ anywhere. Two documents scans

@@ -14,7 +14,12 @@ Checks per file:
     kernels whose sequential shape is the point (each capped at 20);
   - physical line length <= 88 (flake8's E501 at the reference bound);
   - module-level imports that are never referenced (F401), with
-    re-export waivers for package __init__ surfaces.
+    re-export waivers for package __init__ surfaces;
+  - every join-strategy hint (``F.broadcast(...)``,
+    ``.hint("broadcast")``) carries a ``# broadcast: <reason>`` comment
+    on its line or the line before (BC1). Spark's planner broadcasts
+    what its size estimates show to be small; a hint is kept only to
+    state a bound those estimates cannot see.
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -124,6 +129,38 @@ def _unused_imports(tree: ast.Module, src: str) -> list[tuple[int, str]]:
     ]
 
 
+BROADCAST_HINTS = {"broadcast", "broadcastjoin", "mapjoin"}
+
+
+def _is_broadcast_hint(node: ast.Call) -> bool:
+    """``F.broadcast(df)`` / ``functions.broadcast(df)`` / ``broadcast(df)``
+    or ``df.hint("broadcast")`` — not ``SparkContext.broadcast(value)``."""
+    fn = node.func
+    if isinstance(fn, ast.Name):
+        return fn.id == "broadcast"
+    if not isinstance(fn, ast.Attribute):
+        return False
+    if fn.attr == "broadcast":
+        return isinstance(fn.value, ast.Name) and fn.value.id in ("F", "functions")
+    return (
+        fn.attr == "hint"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Constant)
+        and str(node.args[0].value).lower() in BROADCAST_HINTS
+    )
+
+
+def _unannotated_broadcasts(tree: ast.Module, lines: list[str]) -> list[int]:
+    """Lines of hints with no ``# broadcast:`` on their line or the one above."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and _is_broadcast_hint(node)
+        and "# broadcast:" not in "".join(lines[max(node.lineno - 2, 0) : node.lineno])
+    )
+
+
 def lint_file(path: str) -> list[str]:
     rel = os.path.relpath(path, ROOT)
     src = open(path, encoding="utf-8").read()
@@ -158,8 +195,12 @@ def lint_file(path: str) -> list[str]:
                     f"{rel}:{node.lineno}: C901 '{node.name}' is too "
                     f"complex ({c} > {cap})"
                 )
+    lines = src.splitlines()
+    for ln in _unannotated_broadcasts(tree, lines):
+        problems.append(
+            f"{rel}:{ln}: BC1 broadcast hint without a '# broadcast:' comment"
+        )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
-        lines = src.splitlines()
         for ln, name in _unused_imports(tree, src):
             if ln <= len(lines) and "noqa" in lines[ln - 1]:
                 continue
