@@ -11,11 +11,14 @@ total. The driver's ``events`` table maps user_id->sid, event_id->seq
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from metevents_spark.cache import release as _release
 
@@ -36,31 +39,123 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan, tolerant of TIMESTAMP(NANOS) columns.
+    """Parquet scan of ``<sf_dir>/<name>.parquet`` (a file or a
+    directory of part files), with the schema read on the driver.
 
-    The driver's generator writes ``events.ts`` as parquet
-    timestamp[ns], which Spark's vectorized reader rejects unless
-    ``spark.sql.legacy.parquet.nanosAsLong`` is set; we read the raw
-    int64 nanos and convert with integer division (a double division
-    would lose precision above 2^53).
+    Schema on read: the schema comes from one parquet footer, read with
+    pyarrow (``_footer_schema``) and handed to ``spark.read.schema``,
+    so building the frame runs no Spark job. It is the schema Spark's
+    own inference gives under its default parquet read settings,
+    following the session's ``inferTimestampNTZ``. Where no footer can
+    be read, or one would not map exactly, Spark infers it as before.
+
+    TIMESTAMP(NANOS) columns, which Spark's vectorized reader rejects
+    unless ``spark.sql.legacy.parquet.nanosAsLong`` is set, are read as
+    raw int64 nanos and returned as timestamps truncated to micros
+    (integer division: a double one would lose precision above 2^53).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols: list[str] = []
-    try:
-        import pyarrow.parquet as pq
-
-        schema = pq.read_schema(path)
-        ns_cols = [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
-    except Exception:
-        pass
+    footer = _footer_schema(spark, path)
+    schema, ns_cols = footer if footer else (None, [])
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    reader = spark.read.schema(schema) if schema else spark.read
+    df = reader.parquet(path)
     for c in ns_cols:
         df = df.withColumn(
             c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000").cast("long"))
         )
     return df
+
+
+def _footer_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, list[str]] | None:
+    """``(schema, ns_cols)`` as Spark infers them for the parquet file or
+    part-file directory at ``path``, or None where Spark must infer.
+
+    Spark infers from one footer (``_footer_file``), and its inferred
+    schema is nullable throughout. A footer Spark wrote carries Spark's
+    schema, which Spark takes as is; any other maps by parquet type
+    (``_mapped_schema``).
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    footer = _footer_file(spark, path)
+    if footer is None:
+        return None
+    try:
+        meta = pq.read_metadata(footer)
+    except (OSError, pa.ArrowException):  # missing, not parquet, not local
+        return None
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json:
+        return _nullable(StructType.fromJson(json.loads(spark_json))), []
+    try:
+        return _mapped_schema(spark, meta)
+    except (pa.ArrowException, TypeError):  # a type Spark's mapping lacks
+        return None
+
+
+def _mapped_schema(spark: SparkSession, meta) -> tuple[StructType, list[str]] | None:
+    """``(schema, ns_cols)`` from a footer's parquet types, mapped as
+    ``from_arrow_schema`` maps them, with nanosecond columns
+    (``ns_cols``) as LONG, as ``nanosAsLong`` makes Spark infer them.
+    None for INT96, duration and time columns and nested nanosecond
+    ones, whose mapping differs; TypeError for a type
+    ``from_arrow_schema`` cannot map, such as unsigned integers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    columns = (meta.schema.column(i) for i in range(meta.num_columns))
+    if any(c.physical_type == "INT96" for c in columns):
+        return None
+    arrow = meta.schema.to_arrow_schema()
+    ns_cols = [
+        f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    for c in ns_cols:
+        i = arrow.get_field_index(c)
+        arrow = arrow.set(i, arrow.field(i).with_type(pa.int64()))
+    if any(_UNMAPPED.search(str(f.type)) for f in arrow):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz == "true")
+    return _nullable(schema), ns_cols
+
+
+def _footer_file(spark: SparkSession, path: str) -> str | None:
+    """The file whose footer Spark infers ``path``'s schema from: the
+    file itself, or a directory's first data file in name order (names
+    starting ``_`` or ``.`` are not data). None for an empty or
+    partitioned directory, and for a multi-file one under
+    ``spark.sql.parquet.mergeSchema``."""
+    if not os.path.isdir(path):
+        return path
+    names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    if not names or any(os.path.isdir(os.path.join(path, n)) for n in names):
+        return None
+    if len(names) > 1 and spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    return os.path.join(path, names[0])
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_UNMAPPED = re.compile(r"timestamp\[ns|duration|time32|time64")
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and map value nullable."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -71,7 +166,6 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``spark.createDataFrame(<list>)`` scans a Python RDD instead."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     struct = StructType.fromDDL(schema)
     table = pa.Table.from_pylist(

@@ -6,6 +6,30 @@ re-planning (skew joins, partition coalescing), Arrow for the pandas
 kernels, UTC session time zone so timestamps round-trip parquet
 deterministically (reference fixtures are tz-aware UTC,
 /root/reference/tests/data/mocks/flv.csv:2).
+
+``get_spark`` also pins two static defaults:
+
+- ``spark.buffer.pageSize=2m``: Tungsten pages of 2 MB instead of
+  heap / cores (64 MB for 8g on 4 cores). A finished mapInPandas
+  task's Python worker monitor thread keeps its runner, and through it
+  the last page of the sort feeding it, reachable for up to 2 s: ~260
+  MB of driver heap after a per-series kernel query at 64 MB, ~17 MB at
+  2 MB. A large sort takes more pages (up to 8192 per task, 16 GB).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: no Python
+  call-site capture per Column call. With it on, each ``F.col`` or
+  Column operator fetches the session, reads two confs, sets and clears
+  the JVM origin and walks the Python stack (``F.col`` 13 py4j commands
+  instead of 3, ``c > F.lit(1)`` 14 instead of 4), and the first call
+  imports IPython when it is installed (+23 MB driver peak RSS). The cost:
+  errors raised while building a plan no longer name the Python line
+  of the DataFrame call.
+
+Both are static: a session built elsewhere and handed in through
+``tune_session`` keeps its own values, and PySpark reads the debugging
+flag once per process, at the first Column call. To get DataFrame call
+sites back in error messages while debugging, build the session with
+``spark.python.sql.dataFrameDebugging.enabled=true`` before any Column
+call.
 """
 
 from __future__ import annotations
@@ -39,16 +63,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # Every sorting task takes at least one Tungsten page, which
-        # Spark sizes from heap / cores (64 MB for 8g on 4 cores) however
-        # small the partition. A mapInPandas task's Python worker monitor
-        # thread keeps its runner, and through the runner's input
-        # iterator the last page of the sort feeding it, reachable for
-        # up to 2 s after the task ends: ~260 MB of driver heap after a
-        # per-series kernel query at 64 MB, ~17 MB at 2 MB. Larger sorts
-        # take more 2 MB pages (up to 8192 per task, 16 GB). Static:
-        # sessions built elsewhere (tune_session) keep Spark's size.
+        # Static; see the module docstring for what each costs.
         .config("spark.buffer.pageSize", "2m")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config(
             "spark.sql.warehouse.dir",
