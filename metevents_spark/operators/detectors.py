@@ -19,7 +19,6 @@ from metevents_spark.operators.runs import (
     detect,
     flag_runs,
     range_by_sid,
-    runs_to_events,
     series_window,
 )
 
@@ -51,8 +50,7 @@ def flat_line(df: DataFrame, min_len: int = 5, slope_thresh: float = 0.0) -> Dat
     count since runs are contiguous).
     """
     cond = F.abs(_lag_diff()) <= F.lit(slope_thresh)
-    ev = runs_to_events(flag_runs(range_by_sid(df), cond))
-    return ev.filter(F.col("n_points") >= min_len).orderBy("sid", "start")
+    return detect(df, cond).filter(F.col("n_points") >= min_len)
 
 
 def extreme_change(
@@ -73,8 +71,7 @@ def extreme_change(
         cond = cond | (diff >= F.lit(positive_slope_thresh))
     if negative_slope_thresh is not None:
         cond = cond | (diff <= F.lit(negative_slope_thresh))
-    ev = runs_to_events(flag_runs(range_by_sid(df), cond))
-    return ev.filter(F.col("n_points") >= min_len).orderBy("sid", "start")
+    return detect(df, cond).filter(F.col("n_points") >= min_len)
 
 
 def data_gap(

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from metevents_spark.io import series_frame
 from metevents_spark.operators.grouped import map_series_kernel
@@ -77,17 +76,10 @@ def lttb_downsample(
     sorted, size == min(n, n_out))."""
     df = series_frame(spark, sf_dir)
 
-    def kernel(sid: str, ts: np.ndarray, vals: np.ndarray) -> list[tuple]:
+    def kernel(sid: str, ts: np.ndarray, vals: np.ndarray) -> tuple:
         keep = lttb_numpy(ts, vals, n_out)
-        return [(sid, ts[i], float(vals[i])) for i in keep]
+        return np.full(len(keep), sid, dtype=object), ts[keep], vals[keep]
 
-    out = map_series_kernel(
-        df,
-        kernel,
-        _OUT_SCHEMA,
-        out_columns=["sid", "ts", "value"],
-        out_dtypes={"ts": "datetime64[us]", "value": "float64"},
+    return map_series_kernel(df, kernel, _OUT_SCHEMA).sortWithinPartitions(
+        "sid", "ts"
     )
-    return out.select(
-        "sid", F.col("ts").cast("timestamp"), "value"
-    ).sortWithinPartitions("sid", "ts")

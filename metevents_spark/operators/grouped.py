@@ -1,4 +1,5 @@
-"""Streaming per-series numpy kernels over sorted partitions.
+"""Streaming per-series numpy kernels over sorted partitions — the
+engine's one per-series path.
 
 ``groupBy(sid).applyInPandas`` costs one pandas DataFrame construction
 per *group*; with millions of small series that per-group overhead
@@ -14,26 +15,55 @@ explicit (one shuffle on sid, with a fixed partition count), immune to
 AQE coalescing the shuffle below core count just because the bytes
 are small.
 
-Output contract: the kernel's rows leave in input partition order,
-and partitions follow sid order, so a caller that needs its output
-ordered by ``(sid, ...)`` uses ``sortWithinPartitions`` — a global
-``orderBy`` would add a range exchange whose sampling job re-runs the
-kernel stage.
+Kernel contract: the output schema says it all. A kernel returns one
+array-like per schema field, in field order (``tuple(zip(*rows))`` for
+a kernel that builds rows; ``()`` for no output). Each column is built
+with its field's pandas dtype and concatenated across the batch's
+series into one frame. Time fields are declared ``timestamp_ntz`` (the
+kernel sees naive datetime64[us]) and leave with the input's ``ts``
+type, as the window detectors' events do. The seven callers:
+storm_find, spike_valley, lttb_downsample, ewma_smooth, holt_smooth,
+holt_backtest and model_select_backtest.
+
+Output order: the kernel's rows leave in input partition order, and
+partitions follow sid order, so a caller that needs its output ordered
+by ``(sid, ...)`` uses ``sortWithinPartitions`` — a global ``orderBy``
+would add a range exchange whose sampling job re-runs the kernel
+stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from metevents_spark.operators.runs import range_by_sid
 
-#: kernel(sid, ts: datetime64[us] array, values: float64 array) -> list of
-#: output-row tuples matching the caller's schema.
-SeriesKernel = Callable[[str, np.ndarray, np.ndarray], list[tuple]]
+#: kernel(sid, ts: datetime64[us] array, values: float64 array) -> one
+#: array-like per output field, in schema order.
+SeriesKernel = Callable[[str, np.ndarray, np.ndarray], Sequence]
+
+_PANDAS_DTYPES = {
+    StringType: object,
+    LongType: "int64",
+    IntegerType: "int32",
+    DoubleType: "float64",
+    TimestampType: "datetime64[us]",
+    TimestampNTZType: "datetime64[us]",
+}
 
 
 def series_segments(
@@ -73,36 +103,31 @@ def series_segments(
 
 
 def map_series_kernel(
-    df: DataFrame,
-    kernel: SeriesKernel,
-    schema: str,
-    out_columns: list[str],
-    out_dtypes: dict[str, str],
-    num_partitions: int | None = None,
+    df: DataFrame, kernel: SeriesKernel, schema: str
 ) -> DataFrame:
     """Apply ``kernel`` once per series over the canonical frame; the
-    output is range-partitioned on sid (see the module docstring)."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    output has ``schema`` with its time fields cast to the input's
+    ``ts`` type, and is range-partitioned on sid (see the module
+    docstring)."""
+    struct = StructType.fromDDL(schema)
+    fields = [(f.name, _PANDAS_DTYPES[type(f.dataType)]) for f in struct]
+    num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     prepared = range_by_sid(df, num_partitions).sortWithinPartitions(
         "sid", "ts", "seq"
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for series in series_segments(batches):
-            rows = [r for sid, ts, vals in series for r in kernel(sid, ts, vals)]
-            if rows:
-                yield pd.DataFrame(rows, columns=out_columns).astype(out_dtypes)
+            outs = [out for out in (kernel(*s) for s in series) if len(out)]
+            if outs:
+                yield pd.DataFrame({
+                    name: np.concatenate([np.asarray(o[i], dtype) for o in outs])
+                    for i, (name, dtype) in enumerate(fields)
+                })
 
-    return prepared.mapInPandas(run, schema)
-
-
-EVENT_OUT_COLUMNS = ["sid", "start", "stop", "duration_us", "n_points", "total"]
-EVENT_OUT_DTYPES = {
-    "start": "datetime64[us]",
-    "stop": "datetime64[us]",
-    "duration_us": "int64",
-    "n_points": "int64",
-    "total": "float64",
-}
+    ts_type = df.schema["ts"].dataType
+    return prepared.mapInPandas(run, struct).withColumns({
+        name: F.col(name).cast(ts_type)
+        for name, dtype in fields
+        if dtype == "datetime64[us]"
+    })

@@ -19,17 +19,12 @@ driver-side collection anywhere.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from metevents_spark.timeutil import epoch_us
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 PART_COLS: tuple[str, ...] = ("sid",)
 ORDER_COLS: tuple[str, ...] = ("ts", "seq")
-
-#: Schema of every events frame the engine produces.
-EVENT_COLS = ("sid", "start", "stop", "duration_us", "n_points", "total")
 
 
 def range_by_sid(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -45,19 +40,12 @@ def range_by_sid(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     return df.repartitionByRange(num_partitions, *PART_COLS)
 
 
-def series_window(
-    part_cols: Sequence[str] = PART_COLS, order_cols: Sequence[str] = ORDER_COLS
-):
+def series_window():
     """The one window spec shared by diff/cumsum so plans sort once."""
-    return Window.partitionBy(*part_cols).orderBy(*order_cols)
+    return Window.partitionBy(*PART_COLS).orderBy(*ORDER_COLS)
 
 
-def flag_runs(
-    df: DataFrame,
-    cond: Column,
-    part_cols: Sequence[str] = PART_COLS,
-    order_cols: Sequence[str] = ORDER_COLS,
-) -> DataFrame:
+def flag_runs(df: DataFrame, cond: Column) -> DataFrame:
     """Add ``cond`` (boolean) and ``run_id`` (long) columns.
 
     NULL conditions behave like the reference's False (pandas boolean
@@ -65,19 +53,12 @@ def flag_runs(
     metevents/events.py:73,316,345): the row increments the run counter
     and is excluded from any event.
     """
-    w = (
-        series_window(part_cols, order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = series_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
     inc = F.when(cond, F.lit(0)).otherwise(F.lit(1))
     return df.withColumn("cond", cond).withColumn("run_id", F.sum(inc).over(w))
 
 
-def runs_to_events(
-    flagged: DataFrame,
-    part_cols: Sequence[str] = PART_COLS,
-    value_col: str = "value",
-) -> DataFrame:
+def runs_to_events(flagged: DataFrame) -> DataFrame:
     """Collapse flagged runs into one event row each.
 
     Reference: per-group index min/max (metevents/periods.py:12-22),
@@ -87,26 +68,21 @@ def runs_to_events(
     """
     return (
         flagged.filter(F.col("cond"))
-        .groupBy(*part_cols, "run_id")
+        .groupBy(*PART_COLS, "run_id")
         .agg(
             F.min("ts").alias("start"),
             F.max("ts").alias("stop"),
             F.count(F.lit(1)).alias("n_points"),
-            F.sum(value_col).alias("total"),
+            F.sum("value").alias("total"),
         )
         .withColumn(
             "duration_us", epoch_us(F.col("stop")) - epoch_us(F.col("start"))
         )
-        .select(*part_cols, "start", "stop", "duration_us", "n_points", "total")
+        .select(*PART_COLS, "start", "stop", "duration_us", "n_points", "total")
     )
 
 
-def detect(
-    df: DataFrame,
-    cond: Column,
-    part_cols: Sequence[str] = PART_COLS,
-    order_cols: Sequence[str] = ORDER_COLS,
-) -> DataFrame:
+def detect(df: DataFrame, cond: Column) -> DataFrame:
     """predicate -> run grouping -> event aggregation, time-ordered.
 
     The ordering matches the reference's sorted group emission
@@ -114,5 +90,5 @@ def detect(
     of :func:`range_by_sid` already satisfies it, so the ``orderBy``
     plans as a local sort.
     """
-    flagged = flag_runs(range_by_sid(df), cond, part_cols, order_cols)
-    return runs_to_events(flagged, part_cols).orderBy(*part_cols, "start")
+    flagged = flag_runs(range_by_sid(df), cond)
+    return runs_to_events(flagged).orderBy(*PART_COLS, "start")

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metevents_spark.io import load_table, series_frame
-from metevents_spark.operators.runs import range_by_sid
 
 
 def rolling_mean(
@@ -216,53 +215,25 @@ def ewma_smooth(
     DuckDB recursive CTE that replays the recursion row-by-row with
     pandas' exact C-kernel arithmetic order (bit-identical, hash-green
     at sf0.001/0.01/0.1), and tests/test_seriesstats.py additionally
-    holds it to pandas' ewm differentially. ONE sid exchange + in-partition sort, then a
-    dedicated mapInPandas: ``grouped.series_segments`` splits the
-    batches into series, each folded by pandas' C-implemented
-    ``ewm(adjust=False, ignore_na=True)``, and the output assembled
-    as COLUMN ARRAYS — the generic tuple-per-row kernel protocol
-    (operators/grouped.py) measured ~4x slower here because EWMA
-    emits one row per input row and the tuple list dominates. NaN
-    inputs emit the carried mean and leave state unchanged.
+    holds it to pandas' ewm differentially. The fold is pandas'
+    C-implemented ``ewm(adjust=False, ignore_na=True)`` per series, run
+    on the shared sorted-partition kernel path (operators/grouped.py).
+    NaN inputs emit the carried mean and leave state unchanged.
     """
-    from collections.abc import Iterator
-
     import numpy as np
     import pandas as pd
 
-    from metevents_spark.operators.grouped import series_segments
+    from metevents_spark.operators.grouped import map_series_kernel
 
-    df = series_frame(spark, sf_dir)
-    num_partitions = int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    prepared = range_by_sid(
-        df.select("sid", "ts", "value", "seq"), num_partitions
-    ).sortWithinPartitions("sid", "ts", "seq")
+    def kernel(sid, ts, vals):
+        ew = pd.Series(vals).ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
+        sids = np.full(len(ts), sid, dtype=object)
+        return sids, ts, vals, np.round(ew.to_numpy(), 6)
 
-    def fold(sid, ts, vals) -> pd.DataFrame:
-        ew = (
-            pd.Series(vals)
-            .ewm(alpha=alpha, adjust=False, ignore_na=True)
-            .mean()
-            .to_numpy()
-        )
-        return pd.DataFrame(
-            {
-                "sid": np.repeat(np.array([sid], dtype=object), len(ts)),
-                "ts": ts,
-                "value": vals,
-                "ewma": np.round(ew, 6),
-            }
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for series in series_segments(batches):
-            if series:
-                yield pd.concat([fold(*s) for s in series], ignore_index=True)
-
-    return prepared.mapInPandas(
-        run, "sid string, ts timestamp, value double, ewma double"
+    return map_series_kernel(
+        series_frame(spark, sf_dir),
+        kernel,
+        "sid string, ts timestamp_ntz, value double, ewma double",
     ).sortWithinPartitions("sid", "ts")
 
 
@@ -599,15 +570,12 @@ def holt_smooth(
                 l = alpha * float(x) + (1.0 - alpha) * (l + b)
                 b = beta * (l - prev_l) + (1.0 - beta) * b
             rows.append((sid, ts[i], float(x), round(l, 6), round(b, 6)))
-        return rows
+        return tuple(zip(*rows))
 
     return map_series_kernel(
         df,
         kernel,
         "sid string, ts timestamp_ntz, value double, level double, trend double",
-        ["sid", "ts", "value", "level", "trend"],
-        {"ts": "datetime64[us]", "value": "float64",
-         "level": "float64", "trend": "float64"},
     ).sortWithinPartitions("sid", "ts")
 
 
@@ -893,7 +861,7 @@ def holt_backtest(
             l = alpha * float(x) + (1.0 - alpha) * (l + b)
             b = beta * (l - prev_l) + (1.0 - beta) * b
         if n == 0:
-            return []
+            return ()
 
         def q6(v: float) -> float:
             # round to integer MICRO-units first (half-away-from-zero,
@@ -904,23 +872,18 @@ def holt_backtest(
             r = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
             return r / 1e6
 
-        return [
-            (
-                sid,
-                n,
-                q6(float(s_abs) / n),
-                q6(float(s_sig) / n),
-                q6(math.sqrt(float(s_sq) / n)),
-            )
-        ]
+        return (
+            [sid],
+            [n],
+            [q6(float(s_abs) / n)],
+            [q6(float(s_sig) / n)],
+            [q6(math.sqrt(float(s_sq) / n))],
+        )
 
     return map_series_kernel(
         df,
         kernel,
         "sid string, n_forecasts long, mae double, bias double, rmse double",
-        ["sid", "n_forecasts", "mae", "bias", "rmse"],
-        {"n_forecasts": "int64", "mae": "float64", "bias": "float64",
-         "rmse": "float64"},
     ).sortWithinPartitions("sid")
 
 
@@ -1032,29 +995,24 @@ def model_select_backtest(
             l = alpha * x + (1.0 - alpha) * (l + b)
             b = beta * (l - prev_l) + (1.0 - beta) * b
         if n == 0:
-            return []
+            return ()
 
         def q6(v: float) -> float:
             r = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
             return r / 1e6
 
         champion = "ewma" if abs_e <= abs_h else "holt"
-        return [
-            (
-                sid,
-                n,
-                q6(float(abs_e) / n),
-                q6(float(abs_h) / n),
-                champion,
-            )
-        ]
+        return (
+            [sid],
+            [n],
+            [q6(float(abs_e) / n)],
+            [q6(float(abs_h) / n)],
+            [champion],
+        )
 
     return map_series_kernel(
         df,
         kernel,
         "sid string, n_forecasts long, mae_ewma double, mae_holt double,"
         " champion string",
-        ["sid", "n_forecasts", "mae_ewma", "mae_holt", "champion"],
-        {"n_forecasts": "int64", "mae_ewma": "float64",
-         "mae_holt": "float64"},
     ).sortWithinPartitions("sid")

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from metevents_spark.operators.peaks import find_peaks
 from metevents_spark.operators.storms import EVENT_SCHEMA, _runs_of
@@ -63,13 +62,9 @@ def spike_valley(
     Streaming sorted-partition kernel (operators/grouped.py): one sid
     range exchange, numpy peak detection per series, no per-group
     pandas; events ordered by ``(sid, start)``."""
-    from metevents_spark.operators.grouped import (
-        EVENT_OUT_COLUMNS,
-        EVENT_OUT_DTYPES,
-        map_series_kernel,
-    )
+    from metevents_spark.operators.grouped import map_series_kernel
 
-    def kernel(sid: str, ts: np.ndarray, values: np.ndarray) -> list[tuple]:
+    def kernel(sid: str, ts: np.ndarray, values: np.ndarray) -> tuple:
         mask = spike_mask_numpy(
             values, height=height, threshold=threshold,
             prominence=prominence, width=width,
@@ -87,16 +82,8 @@ def spike_valley(
                     float(np.nansum(seg)),
                 )
             )
-        return rows
+        return tuple(zip(*rows))
 
-    out = map_series_kernel(
-        df, kernel, EVENT_SCHEMA, EVENT_OUT_COLUMNS, EVENT_OUT_DTYPES
+    return map_series_kernel(df, kernel, EVENT_SCHEMA).sortWithinPartitions(
+        "sid", "start"
     )
-    return out.select(
-        "sid",
-        F.col("start").cast("timestamp"),
-        F.col("stop").cast("timestamp"),
-        "duration_us",
-        "n_points",
-        "total",
-    ).sortWithinPartitions("sid", "start")

@@ -6,10 +6,10 @@ then fold over bursts in time order keeping a candidate storm ``start``;
 a storm closes when (enough dry time before the next burst OR the storm
 exceeds the max duration) AND enough mass accumulated — or at the last
 burst. Insufficient-mass bursts merge into the next storm, so state
-carries across runs: this is inherently sequential *per series* and is
-implemented as an Arrow-vectorized grouped-map kernel
-(``groupBy(sid).applyInPandas``). Scale comes from series-key
-parallelism — one series' rows fit one task; 100 TB = many series.
+carries across runs: this is inherently sequential *per series* and
+runs as a per-series kernel (``grouped.map_series_kernel``). Scale
+comes from series-key parallelism — one series' rows fit one task;
+100 TB = many series.
 
 The kernel body is numpy (vectorized threshold/run extraction; the fold
 itself iterates over *bursts*, not rows).
@@ -165,13 +165,9 @@ def storm_find(
     pandas overhead. Its range exchange on sid is the plan's only one;
     events are ordered by ``(sid, start)`` with a within-partition sort.
     """
-    from metevents_spark.operators.grouped import (
-        EVENT_OUT_COLUMNS,
-        EVENT_OUT_DTYPES,
-        map_series_kernel,
-    )
+    from metevents_spark.operators.grouped import map_series_kernel
 
-    def kernel(sid: str, ts: np.ndarray, values: np.ndarray) -> list[tuple]:
+    def kernel(sid: str, ts: np.ndarray, values: np.ndarray) -> tuple:
         evs = storm_find_numpy(
             ts,
             values,
@@ -181,20 +177,10 @@ def storm_find(
             max_storm_hours=max_storm_hours,
             tstep_us=tstep_us,
         )
-        return [
+        return tuple(zip(*[
             (sid, e[0], e[1], int((e[1] - e[0]) / _US), e[3], e[2]) for e in evs
-        ]
+        ]))
 
-    out = map_series_kernel(
-        df, kernel, EVENT_SCHEMA, EVENT_OUT_COLUMNS, EVENT_OUT_DTYPES
+    return map_series_kernel(df, kernel, EVENT_SCHEMA).sortWithinPartitions(
+        "sid", "start"
     )
-    from pyspark.sql import functions as F
-
-    return out.select(
-        "sid",
-        F.col("start").cast("timestamp"),
-        F.col("stop").cast("timestamp"),
-        "duration_us",
-        "n_points",
-        "total",
-    ).sortWithinPartitions("sid", "start")

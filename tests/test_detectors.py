@@ -136,3 +136,29 @@ class TestFreqInfer:
         assert out["daily"].freq_us == DAY_US
         assert out["hourly"].freq_us == 3_600_000_000
         assert out["irr"].freq_us is None
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_event_schema_follows_input_ts_type(spark, ts_type):
+    """The window detectors and the kernel detectors return one events
+    schema, whose time columns carry the input's ``ts`` type."""
+    from metevents_spark.operators import spike_valley, storm_find
+
+    data = ramp()
+    data[10:15] = 700.0
+    data[30] = np.nan
+    rows = make_series_df(spark, data.tolist()).collect()
+    df = spark.createDataFrame(
+        rows, schema=f"sid string, seq long, ts {ts_type}, value double"
+    )
+    detectors = (
+        extreme_value, flat_line, extreme_change, data_gap, storm_find, spike_valley
+    )
+    schemas = [fn(df).schema for fn in detectors]
+    assert schemas[0]["start"].dataType == df.schema["ts"].dataType
+    types = [s.simpleString() for s in schemas]  # nullability may differ
+    assert types == [types[0]] * len(types), types
+    # same wall-clock times from either flavour; the storm opens one
+    # timestep before its first burst row (reference events.py:116)
+    storms = storm_find(df, instant_mass_to_start=100.0).collect()
+    assert [(r.start, r.stop) for r in storms] == [(d("2023-01-10"), d("2023-01-15"))]

@@ -49,3 +49,27 @@ def test_lint_flags_unannotated_broadcast_hints(tmp_path):
     problems = lint.lint_file(str(src))
     flagged = [int(n) for p in problems for n in re.findall(r":(\d+): BC1 ", p)]
     assert flagged == [5, 8], problems
+
+
+def test_lint_flags_series_segments_outside_grouped(tmp_path):
+    """Per-series kernels go through ``map_series_kernel``: naming
+    ``series_segments`` anywhere but operators/grouped.py fails the gate."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
+    lint = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(lint)
+    src = tmp_path / "fork.py"
+    src.write_text(
+        "from metevents_spark.operators.grouped import series_segments\n"
+        "from metevents_spark.operators import grouped\n"
+        "\n"
+        "\n"
+        "def run(batches):\n"
+        "    yield from series_segments(batches)\n"
+        "    yield from grouped.series_segments(batches)\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): SK1 ", p)]
+    assert flagged == [1, 6, 7], problems
+    assert not lint.lint_file(str(REPO / lint.SERIES_SPLITTER_HOME))

@@ -39,56 +39,29 @@ def test_ewma_matches_pandas(spark):
     )
 
 
-def test_ewma_nan_carries_state(spark):
+def test_ewma_nan_carries_state(spark, tmp_path):
     """A NaN observation emits the carried mean and does not advance
-    the recursion (ignore_na=True semantics)."""
-    import pandas as pd  # noqa: F811
+    the recursion (ignore_na=True semantics); before the first
+    observation there is no mean to carry."""
+    from metevents_spark.operators.seriesstats import ewma_smooth
 
-    from metevents_spark.operators.grouped import map_series_kernel
-
-    sdf = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "sid": ["a"] * 4,
-                "seq": [1, 2, 3, 4],
-                "ts": pd.to_datetime(
-                    ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"]
-                ),
-                "value": [10.0, None, 20.0, None],
-            }
-        )
-    )
-    from metevents_spark.operators import seriesstats as ss
-
-    # reuse the public operator's kernel by running it over a frame
-    # injected through the same kernel plumbing
-    alpha = 0.5
-
-    def kernel(sid, ts, values):
-        out = np.empty_like(values)
-        m, started = np.nan, False
-        for i, x in enumerate(values):
-            if np.isnan(x):
-                out[i] = m if started else np.nan
-                continue
-            m = x if not started else (1.0 - alpha) * m + alpha * x
-            started = True
-            out[i] = m
-        return list(zip([sid] * len(ts), ts, np.round(out, 6)))
-
-    got = (
-        map_series_kernel(
-            sdf,
-            kernel,
-            schema="sid string, ts timestamp, ewma double",
-            out_columns=["sid", "ts", "ewma"],
-            out_dtypes={"ts": "datetime64[us]", "ewma": "float64"},
-        )
-        .orderBy("ts")
-        .toPandas()
-    )
-    assert got["ewma"].tolist() == [10.0, 10.0, 15.0, 15.0]
-    del ss
+    pd.DataFrame(
+        {
+            "user_id": [1, 1, 1, 1, 2, 2],
+            "event_id": range(6),
+            "ts": pd.to_datetime(
+                ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04",
+                 "2024-01-01", "2024-01-02"]
+            ).astype("datetime64[us]"),
+            "value": [10.0, None, 20.0, None, None, 4.0],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    out = ewma_smooth(spark, str(tmp_path), alpha=0.5)
+    assert out.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    got = out.toPandas()
+    assert got["sid"].tolist() == ["1"] * 4 + ["2"] * 2
+    assert got["value"].isna().tolist() == [False, True, False, True, True, False]
+    assert got["ewma"].fillna(-1.0).tolist() == [10.0, 10.0, 15.0, 15.0, -1.0, 4.0]
 
 
 def test_gap_fill_invariants(spark):

@@ -19,7 +19,10 @@ Checks per file:
     ``.hint("broadcast")``) carries a ``# broadcast: <reason>`` comment
     on its line or the line before (BC1). Spark's planner broadcasts
     what its size estimates show to be small; a hint is kept only to
-    state a bound those estimates cannot see.
+    state a bound those estimates cannot see;
+  - ``series_segments`` is named only in ``operators/grouped.py``
+    (SK1): per-series kernels go through ``map_series_kernel``, so a
+    second per-series mapInPandas path cannot return.
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -161,6 +164,25 @@ def _unannotated_broadcasts(tree: ast.Module, lines: list[str]) -> list[int]:
     )
 
 
+SERIES_SPLITTER = "series_segments"
+SERIES_SPLITTER_HOME = os.path.join("metevents_spark", "operators", "grouped.py")
+
+
+def _series_splitter_uses(tree: ast.Module) -> list[int]:
+    """Lines naming ``series_segments`` (a name, an attribute or an
+    imported name)."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if (isinstance(node, ast.Name) and node.id == SERIES_SPLITTER)
+        or (isinstance(node, ast.Attribute) and node.attr == SERIES_SPLITTER)
+        or (
+            isinstance(node, ast.ImportFrom)
+            and any(a.name == SERIES_SPLITTER for a in node.names)
+        )
+    )
+
+
 def lint_file(path: str) -> list[str]:
     rel = os.path.relpath(path, ROOT)
     src = open(path, encoding="utf-8").read()
@@ -200,6 +222,12 @@ def lint_file(path: str) -> list[str]:
         problems.append(
             f"{rel}:{ln}: BC1 broadcast hint without a '# broadcast:' comment"
         )
+    if rel != SERIES_SPLITTER_HOME:
+        for ln in _series_splitter_uses(tree):
+            problems.append(
+                f"{rel}:{ln}: SK1 {SERIES_SPLITTER} outside "
+                f"{SERIES_SPLITTER_HOME}; use map_series_kernel"
+            )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
         for ln, name in _unused_imports(tree, src):
             if ln <= len(lines) and "noqa" in lines[ln - 1]:
