@@ -17,13 +17,19 @@ are small.
 
 Kernel contract: the output schema says it all. A kernel returns one
 array-like per schema field, in field order (``tuple(zip(*rows))`` for
-a kernel that builds rows; ``()`` for no output). Each column is built
-with its field's pandas dtype and concatenated across the batch's
-series into one frame. Time fields are declared ``timestamp_ntz`` (the
-kernel sees naive datetime64[us]) and leave with the input's ``ts``
-type, as the window detectors' events do. The seven callers:
-storm_find, spike_valley, lttb_downsample, ewma_smooth, holt_smooth,
-holt_backtest and model_select_backtest.
+a kernel that builds rows; ``()`` for no output). ``columns_frame``
+builds each column with its field's pandas dtype and concatenates it
+across the batch's series into one frame; a kernel that returns
+another number of columns fails the task. Time fields are declared
+``timestamp_ntz`` (the kernel sees naive datetime64[us]) and leave
+with the input's ``ts`` type, as the window detectors' events do. The
+seven callers: storm_find, spike_valley, lttb_downsample, ewma_smooth,
+holt_smooth, holt_backtest and model_select_backtest.
+
+``columns_frame`` is also the frame builder of the streaming kernels:
+``streaming.detect.keyed_fold`` parses its output schema on the driver
+and builds each step's columns with it, so batch and stream kernels
+share one output contract.
 
 Output order: the kernel's rows leave in input partition order, and
 partitions follow sid order, so a caller that needs its output ordered
@@ -45,6 +51,7 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     StringType,
+    StructField,
     StructType,
     TimestampNTZType,
     TimestampType,
@@ -58,12 +65,41 @@ SeriesKernel = Callable[[str, np.ndarray, np.ndarray], Sequence]
 
 _PANDAS_DTYPES = {
     StringType: object,
-    LongType: "int64",
+    LongType: "Int64",  # nullable: a streaming step may emit None
     IntegerType: "int32",
     DoubleType: "float64",
     TimestampType: "datetime64[us]",
     TimestampNTZType: "datetime64[us]",
 }
+
+
+def columns_frame(
+    fields: Sequence[StructField], outs: Sequence[Sequence]
+) -> pd.DataFrame:
+    """One frame of ``fields`` (a parsed schema) from ``outs``, which
+    holds per kernel call one array-like per field, in field order.
+    Each column is concatenated across the calls and built with its
+    field's pandas dtype: a ``long`` column may hold None, and a time
+    column takes datetime64 values or epoch micros. A call that returns
+    another number of columns raises ``ValueError``."""
+    for out in outs:
+        if len(out) != len(fields):
+            raise ValueError(
+                f"a kernel returned {len(out)} columns for the"
+                f" {len(fields)} fields {[f.name for f in fields]}"
+            )
+    columns = {}
+    for i, f in enumerate(fields):
+        dtype = _PANDAS_DTYPES[type(f.dataType)]
+        if dtype == "Int64":
+            # numpy has no nullable int: the parts keep their inferred
+            # dtype (object where they hold None) and pandas masks None
+            parts = [np.asarray(o[i]) for o in outs]
+            columns[f.name] = pd.array(np.concatenate(parts) if parts else (), dtype)
+        else:
+            parts = [np.asarray(o[i], dtype) for o in outs]
+            columns[f.name] = np.concatenate([np.asarray((), dtype), *parts])
+    return pd.DataFrame(columns)
 
 
 def series_segments(
@@ -110,7 +146,6 @@ def map_series_kernel(
     ``ts`` type, and is range-partitioned on sid (see the module
     docstring)."""
     struct = StructType.fromDDL(schema)
-    fields = [(f.name, _PANDAS_DTYPES[type(f.dataType)]) for f in struct]
     num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     prepared = range_by_sid(df, num_partitions).sortWithinPartitions(
         "sid", "ts", "seq"
@@ -120,14 +155,11 @@ def map_series_kernel(
         for series in series_segments(batches):
             outs = [out for out in (kernel(*s) for s in series) if len(out)]
             if outs:
-                yield pd.DataFrame({
-                    name: np.concatenate([np.asarray(o[i], dtype) for o in outs])
-                    for i, (name, dtype) in enumerate(fields)
-                })
+                yield columns_frame(struct.fields, outs)
 
     ts_type = df.schema["ts"].dataType
     return prepared.mapInPandas(run, struct).withColumns({
-        name: F.col(name).cast(ts_type)
-        for name, dtype in fields
-        if dtype == "datetime64[us]"
+        f.name: F.col(f.name).cast(ts_type)
+        for f in struct
+        if isinstance(f.dataType, (TimestampType, TimestampNTZType))
     })

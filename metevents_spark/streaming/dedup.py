@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.text.dedup import band_buckets
 
 PAIR_OUTPUT_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
@@ -201,6 +202,7 @@ def stream_minhash_dedup(
     closes (other bands still cover the documents).
     """
     H = num_hashes
+    fields = StructType.fromDDL(PAIR_OUTPUT_SCHEMA).fields
 
     def fn(key, pdf_iter, state: GroupState):
         if state.exists:
@@ -309,9 +311,7 @@ def stream_minhash_dedup(
             )
         )
         if out_a:
-            yield pd.DataFrame(
-                {"doc_a": out_a, "doc_b": out_b, "est_jaccard": out_e}
-            )
+            yield columns_frame(fields, [(out_a, out_b, out_e)])
 
     sig = minhash_sig_col(F.col("text"), k=k, num_hashes=num_hashes)
     banded = stream_df.select(
@@ -372,6 +372,7 @@ def stream_embedding_near_dup(
     unbounded stream needs one). Replay equality holds whenever every
     block stays under the cap.
     """
+    fields = StructType.fromDDL(EMB_PAIR_OUTPUT_SCHEMA).fields
 
     def fn(key, pdf_iter, state: GroupState):
         label = int(key[0])
@@ -424,13 +425,11 @@ def stream_embedding_near_dup(
         keep = fresh & (sims[ra, rb] >= threshold)
         ids = np.concatenate([np.asarray(vec_ids, dtype=np.int64), new_ids])
         ia, ib = ids[ra[keep]], ids[rb[keep]]
-        out = pd.DataFrame(
-            {
-                "vec_a": np.minimum(ia, ib),
-                "vec_b": np.maximum(ia, ib),
-                "label": np.full(len(ia), label, dtype=np.int32),
-                "cosine": sims[ra[keep], rb[keep]],
-            }
+        out = (
+            np.minimum(ia, ib),
+            np.maximum(ia, ib),
+            np.full(len(ia), label),
+            sims[ra[keep], rb[keep]],
         )
         state.update(
             (
@@ -439,8 +438,8 @@ def stream_embedding_near_dup(
                 int(closed),
             )
         )
-        if len(out):
-            yield out
+        if len(ia):
+            yield columns_frame(fields, [out])
 
     return (
         stream_df.select(

@@ -11,7 +11,11 @@ last emitted stop, so state stays bounded by the active storm length
 regardless of stream length.
 
 Every per-key fold here is a ``step`` run by ``keyed_fold``, whose
-docstring holds the one ordering contract they share.
+docstring holds the one ordering contract they share. A step returns
+its output as columns: one array-like per field of its
+``*_OUTPUT_SCHEMA``, in field order (``tuple(zip(*rows))`` for a step
+that builds rows), and ``keyed_fold`` builds the frame from the schema
+with ``grouped.columns_frame``, the batch kernels' builder.
 
 STATE-SCHEMA RULE: a kernel's ``*_STATE_SCHEMA`` is the on-disk
 layout of every running stream's checkpoint, and its step unpacks it
@@ -22,7 +26,7 @@ field on restore.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
 from functools import partial
 
 import numpy as np
@@ -39,25 +43,32 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.operators.storms import storm_find_numpy
 
 US = 1_000_000
 
-#: step(key, state or None, rows) -> (output frame or None, new state)
+#: step(key, state or None, rows) -> (one array-like per output field,
+#: or None / () for no output; new state)
 FoldStep = Callable[[tuple, "tuple | None", pd.DataFrame], tuple]
 
 
 def fold_chunks(
-    step: FoldStep, key: tuple, state, chunks: Iterable[pd.DataFrame]
+    step: FoldStep,
+    key: tuple,
+    state,
+    chunks: Iterable[pd.DataFrame],
+    fields: Sequence[StructField],
 ) -> tuple[list[pd.DataFrame], tuple]:
     """``keyed_fold``'s per-key body without Spark: one trigger's
     chunks for ``key``, concatenated and stable-sorted once, folded by
-    ``step``. -> (output frames, new state)."""
+    ``step``, whose columns become a frame of ``fields`` (the parsed
+    output schema). -> (output frames, new state)."""
     rows = pd.concat(list(chunks), ignore_index=True)
     order = ["ts", "seq"] if "seq" in rows.columns else ["ts"]
     rows = rows.sort_values(order, kind="stable", ignore_index=True)
     out, new_state = step(key, state, rows)
-    return ([] if out is None else [out]), new_state
+    return ([columns_frame(fields, [out])] if out else []), new_state
 
 
 def keyed_fold(
@@ -69,8 +80,18 @@ def keyed_fold(
 ) -> DataFrame:
     """Append-mode ``applyInPandasWithState`` over ``frame`` grouped by
     ``keys``: per key and trigger, ``step(key, state, rows)`` gets the
-    state tuple (``None`` for a new key) and returns (output frame or
-    None, new state tuple).
+    state tuple (``None`` for a new key) and returns (columns, new
+    state tuple).
+
+    Output contract, the batch kernels' (``grouped.map_series_kernel``):
+    the output schema says it all. ``output_schema`` (DDL string or
+    StructType) is parsed once here, on the driver. ``columns`` holds
+    one array-like per field, in field order (``tuple(zip(*rows))`` for
+    a step that builds rows), or is None or ``()`` for no output.
+    ``grouped.columns_frame`` builds each field with its pandas dtype:
+    a ``long`` may hold None, a time field takes datetime64 values or
+    epoch micros. A step that returns another number of columns fails
+    the task.
 
     Ordering contract shared by every kernel built on it:
 
@@ -89,9 +110,13 @@ def keyed_fold(
       docstring): new fields are appended at its end, never inserted.
     """
 
+    if isinstance(output_schema, str):
+        output_schema = StructType.fromDDL(output_schema)
+    fields = output_schema.fields
+
     def fn(key, chunks, state: GroupState):
         frames, new_state = fold_chunks(
-            step, key, state.get if state.exists else None, chunks
+            step, key, state.get if state.exists else None, chunks, fields
         )
         state.update(new_state)
         yield from frames
@@ -121,18 +146,6 @@ def drop_late(
     )
     late = (us < last_us) | ((us == last_us) & (seq < last_seq))
     return rows[~late], int(late.sum())
-
-
-def _out_frame(rows: list[tuple], dtypes: dict[str, str]) -> pd.DataFrame:
-    """Emitted tuples as one output frame, one column per ``dtypes``
-    entry: a datetime64[us] column holds epoch micros, an Int64 one
-    may hold None."""
-    return pd.DataFrame(
-        {
-            name: pd.array(col, dtype=dtype)
-            for (name, dtype), col in zip(dtypes.items(), zip(*rows))
-        }
-    )
 
 
 def stream_daily_rollup(stream_df: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -283,21 +296,11 @@ def _advance_storm_buffer(
         max_storm_hours,
         tstep_us,
     )
-    out = None
+    out = tuple(zip(*[
+        (key[0], e[0].astype(np.int64), e[1].astype(np.int64), e[3], e[2])
+        for e in closed
+    ]))
     if closed:
-        out = _out_frame(
-            [
-                (key[0], e[0].astype(np.int64), e[1].astype(np.int64), e[3], e[2])
-                for e in closed
-            ],
-            {
-                "sid": "object",
-                "start_us": "int64",
-                "stop_us": "int64",
-                "n_points": "int64",
-                "total": "float64",
-            },
-        )
         # bounded state: keep only rows after the last emitted stop
         keep = ts_arr > closed[-1][1]
         ts_arr, val_arr, at_head = ts_arr[keep], val_arr[keep], 0
@@ -399,7 +402,11 @@ def stream_storm_find_tws(
 
         def handleInputRows(self, key, rows, timerValues):
             frames, new_state = fold_chunks(
-                step, key, self._buf.get() if self._buf.exists() else None, rows
+                step,
+                key,
+                self._buf.get() if self._buf.exists() else None,
+                rows,
+                STORM_OUTPUT_SCHEMA.fields,
             )
             self._buf.update(new_state)
             yield from frames
@@ -487,23 +494,7 @@ def _zscore_step(key, state, rows, z_thresh: float, min_n: int):
     ok = (n_prior >= min_n) & (sd > 0) & (np.abs(z) > z_thresh)
     if not ok.any():
         return None, new_state
-    hit = rows.iloc[np.flatnonzero(ok)]
-    out = pd.DataFrame(
-        {
-            "sid": hit["sid"].to_numpy(),
-            "ts": hit["ts"].to_numpy(),
-            "value": v[ok],
-            "z": np.round(z[ok], 6),
-        }
-    )
-    return out, new_state
-
-
-def _advance_zscore(state, chunks, z_thresh: float, min_n: int):
-    """One trigger of ``stream_zscore`` for one series, without Spark:
-    -> (output frames, new state)."""
-    step = partial(_zscore_step, z_thresh=z_thresh, min_n=min_n)
-    return fold_chunks(step, None, state, chunks)
+    return (rows["sid"][ok], rows["ts"][ok], v[ok], np.round(z[ok], 6)), new_state
 
 
 def stream_zscore(
@@ -580,23 +571,10 @@ def _cusum_step(key, state, rows, h: float, min_n: int, slack: float = 0.5):
     ok = (s_pos > h) | (s_neg > h)
     if not ok.any():
         return None, new_state
-    hit = rows.iloc[np.flatnonzero(ok)]
-    out = pd.DataFrame(
-        {
-            "sid": hit["sid"].to_numpy(),
-            "ts": hit["ts"].to_numpy(),
-            "value": v[ok],
-            "s_pos": np.round(s_pos[ok], 6),
-            "s_neg": np.round(s_neg[ok], 6),
-        }
-    )
-    return out, new_state
-
-
-def _advance_cusum(state, chunks, h: float, min_n: int):
-    """One trigger of ``stream_cusum`` for one series, without Spark:
-    -> (output frames, new state)."""
-    return fold_chunks(partial(_cusum_step, h=h, min_n=min_n), None, state, chunks)
+    return (
+        rows["sid"][ok], rows["ts"][ok], v[ok],
+        np.round(s_pos[ok], 6), np.round(s_neg[ok], 6),
+    ), new_state
 
 
 def stream_cusum(
@@ -656,16 +634,7 @@ def _holt_step(key, state, rows, alpha: float, beta: float):
             b = beta * (l - prev) + (1.0 - beta) * b
         lv[i] = l
         tr[i] = b
-    out = pd.DataFrame(
-        {
-            "sid": rows["sid"].to_numpy(),
-            "ts": rows["ts"].to_numpy(),
-            "value": v,
-            "level": np.round(lv, 6),
-            "trend": np.round(tr, 6),
-        }
-    )
-    return out, (l, b)
+    return (rows["sid"], rows["ts"], v, np.round(lv, 6), np.round(tr, 6)), (l, b)
 
 
 def stream_holt(
@@ -769,17 +738,7 @@ def _counter_step(key, state, rows):
         span_h = (last_us - first_us) / 3.6e9
         if n >= 2 and span_h > 0:
             rows_rate[i] = round(round(inc, 6) / span_h, 6)
-    out = pd.DataFrame(
-        {
-            "sid": rows["sid"].to_numpy(),
-            "ts": rows["ts"].to_numpy(),
-            "value": v,
-            "n_points": rows_n,
-            "resets": rows_r,
-            "increase": rows_i,
-            "rate_per_hour": rows_rate,
-        }
-    )
+    out = (rows["sid"], rows["ts"], v, rows_n, rows_r, rows_i, rows_rate)
     return out, (last_v, n, resets, inc, first_us, last_us)
 
 
@@ -871,18 +830,7 @@ def _twa_step(key, state, rows):
         prev_us, prev_seq, prev_v = u, q, x
     new_state = (prev_us, prev_v, open_day, n_seg, s_dt, s_mass, s_v,
                  n_late + dropped, prev_seq)
-    if not out:
-        return None, new_state
-    return _out_frame(
-        out,
-        {
-            "sid": "object",
-            "bucket_day": "datetime64[us]",
-            "n_segments": "int64",
-            "twa": "float64",
-            "simple_avg": "float64",
-        },
-    ), new_state
+    return tuple(zip(*out)), new_state
 
 
 def stream_time_weighted(stream_df: DataFrame) -> DataFrame:
@@ -952,19 +900,7 @@ def _burst_step(key, state, rows, gap_us: int):
             first_seq = min(first_seq, q)
         last_us, last_seq = u, q
     new_state = (first_us, first_seq, n, last_us, n_late + dropped, last_seq)
-    if not out:
-        return None, new_state
-    return _out_frame(
-        out,
-        {
-            "sid": "object",
-            "event_type": "object",
-            "first_ts": "datetime64[us]",
-            "first_seq": "int64",
-            "n_collapsed": "int64",
-            "span_us": "int64",
-        },
-    ), new_state
+    return tuple(zip(*out)), new_state
 
 
 def stream_burst_collapse(
@@ -1029,19 +965,7 @@ def _attribution_step(key, state, rows, lb_us: int):
         else:
             out.append((key[0], q, u, None, None, None))
     new_state = (t_us, t_id, t_type, last_us, n_late + dropped, last_seq)
-    if not out:
-        return None, new_state
-    return _out_frame(
-        out,
-        {
-            "sid": "object",
-            "purchase_id": "int64",
-            "purchase_ts": "datetime64[us]",
-            "touch_id": "Int64",
-            "touch_type": "object",
-            "gap_us": "Int64",
-        },
-    ), new_state
+    return tuple(zip(*out)), new_state
 
 
 def stream_purchase_attribution(
@@ -1102,17 +1026,7 @@ def _conversion_step(key, state, rows):
             out.append((key[0], signup_us, u, u - signup_us))
             converted = 1
     new_state = (signup_us, converted, last_us, n_late + dropped, last_seq)
-    if not out:
-        return None, new_state
-    return _out_frame(
-        out,
-        {
-            "sid": "object",
-            "signup_ts": "datetime64[us]",
-            "purchase_ts": "datetime64[us]",
-            "lag_us": "int64",
-        },
-    ), new_state
+    return tuple(zip(*out)), new_state
 
 
 def stream_conversion_lag(stream_df: DataFrame) -> DataFrame:
@@ -1239,18 +1153,7 @@ def _p2_quantile_step(key, state, rows, p: float):
             n_seen = 5
         out.append((key[0], q, u, n_seen, est))
     new_state = (heights, npos, buf, last_us, n_late + dropped, last_seq)
-    if not out:
-        return None, new_state
-    return _out_frame(
-        out,
-        {
-            "sid": "object",
-            "seq": "int64",
-            "ts": "datetime64[us]",
-            "n": "int64",
-            "q_est": "float64",
-        },
-    ), new_state
+    return tuple(zip(*out)), new_state
 
 
 def stream_p2_quantile(stream_df: DataFrame, p: float = 0.5) -> DataFrame:

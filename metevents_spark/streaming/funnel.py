@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from metevents_spark.streaming.detect import _out_frame, _ts_us, keyed_fold
+from metevents_spark.streaming.detect import _ts_us, keyed_fold
 
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
 
@@ -81,17 +81,7 @@ def _funnel_step(key, state, rows, stages: tuple[str, ...]):
     emitted, new_state = advance_funnel(
         state, list(zip(rows["event_type"].tolist(), _ts_us(rows).tolist())), stages
     )
-    if not emitted:
-        return None, new_state
-    return _out_frame(
-        [(key[0], *e) for e in emitted],
-        {
-            "user_id": "int64",
-            "stage": "int64",
-            "event_type": "object",
-            "reached_us": "int64",
-        },
-    ), new_state
+    return tuple(zip(*[(key[0], *e) for e in emitted])), new_state
 
 
 def stream_funnel(

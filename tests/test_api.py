@@ -86,7 +86,8 @@ def test_from_station_empty_result(spark):
         )
 
 
-def test_detector_registry(spark):
+def test_detector_registry(spark, monkeypatch):
+    from metevents_spark import api
     from metevents_spark.io import series_frame
 
     df = series_frame(spark, "/root/testdata/sf0.001")
@@ -94,6 +95,9 @@ def test_detector_registry(spark):
     assert out.count() >= 1
     with pytest.raises(ValueError, match="unknown detector"):
         detect("nope", df)
+    # the registry is process-wide: register into a copy that
+    # monkeypatch puts back, so later tests see only the six detectors
+    monkeypatch.setattr(api, "DETECTORS", dict(api.DETECTORS))
     register_detector("always_empty", lambda d, **kw: d.limit(0))
     assert detect("always_empty", df).count() == 0
 

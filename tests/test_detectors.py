@@ -10,6 +10,7 @@ from datetime import datetime
 import numpy as np
 import pytest
 
+from metevents_spark.api import DETECTORS
 from metevents_spark.operators import (
     data_gap,
     extreme_change,
@@ -140,9 +141,9 @@ class TestFreqInfer:
 
 @pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
 def test_event_schema_follows_input_ts_type(spark, ts_type):
-    """The window detectors and the kernel detectors return one events
+    """Every registered detector, window or kernel, returns one events
     schema, whose time columns carry the input's ``ts`` type."""
-    from metevents_spark.operators import spike_valley, storm_find
+    from metevents_spark.operators import storm_find
 
     data = ramp()
     data[10:15] = 700.0
@@ -151,10 +152,8 @@ def test_event_schema_follows_input_ts_type(spark, ts_type):
     df = spark.createDataFrame(
         rows, schema=f"sid string, seq long, ts {ts_type}, value double"
     )
-    detectors = (
-        extreme_value, flat_line, extreme_change, data_gap, storm_find, spike_valley
-    )
-    schemas = [fn(df).schema for fn in detectors]
+    schemas = [fn(df).schema for fn in DETECTORS.values()]
+    assert len(schemas) == 6, sorted(DETECTORS)
     assert schemas[0]["start"].dataType == df.schema["ts"].dataType
     types = [s.simpleString() for s in schemas]  # nullability may differ
     assert types == [types[0]] * len(types), types

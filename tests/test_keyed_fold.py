@@ -18,6 +18,13 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    TimestampType,
+)
 
 from metevents_spark.operators.storms import storm_find_numpy
 from metevents_spark.streaming import (
@@ -69,14 +76,32 @@ def _events(n_keys: int = 3, n_rows: int = 240, seed: int = 5) -> pd.DataFrame:
 def _step(key, state, rows):
     """Records the rows it was handed; the state counts them."""
     n = 0 if state is None else state[0]
-    return rows.assign(n=n + np.arange(len(rows))), (n + len(rows),)
+    out = (*(rows[c] for c in rows.columns), n + np.arange(len(rows)))
+    return out, (n + len(rows),)
+
+
+_TYPES = {
+    "sid": StringType(),
+    "user_id": LongType(),
+    "seq": LongType(),
+    "event_type": StringType(),
+    "ts": TimestampType(),
+    "value": DoubleType(),
+    "v": LongType(),
+    "n": LongType(),
+}
+
+
+def _fields(rows: pd.DataFrame) -> list[StructField]:
+    """``_step``'s output fields: the columns of ``rows``, then n."""
+    return [StructField(c, _TYPES[c]) for c in [*rows.columns, "n"]]
 
 
 def test_fold_chunks_sorts_the_whole_trigger_once():
     rows = _events(n_keys=1, n_rows=50)
-    one, st_one = fold_chunks(_step, ("k0",), None, [rows])
+    one, st_one = fold_chunks(_step, ("k0",), None, [rows], _fields(rows))
     chunks = [rows.iloc[i : i + 7] for i in range(0, len(rows), 7)]
-    many, st_many = fold_chunks(_step, ("k0",), None, chunks)
+    many, st_many = fold_chunks(_step, ("k0",), None, chunks, _fields(rows))
     pd.testing.assert_frame_equal(one[0], many[0])
     assert st_one == st_many == (50,)
     assert one[0]["ts"].is_monotonic_increasing
@@ -85,9 +110,10 @@ def test_fold_chunks_sorts_the_whole_trigger_once():
 def test_fold_chunks_breaks_ts_ties_by_seq_then_arrival():
     ts = pd.Timestamp("2024-01-01")
     rows = pd.DataFrame({"ts": [ts] * 3, "seq": [3, 1, 2], "v": [0, 1, 2]})
-    (out,), _ = fold_chunks(_step, (), None, [rows])
+    (out,), _ = fold_chunks(_step, (), None, [rows], _fields(rows))
     assert out["seq"].tolist() == [1, 2, 3]
-    (out,), _ = fold_chunks(_step, (), None, [rows.drop(columns="seq")])
+    no_seq = rows.drop(columns="seq")
+    (out,), _ = fold_chunks(_step, (), None, [no_seq], _fields(no_seq))
     assert out["v"].tolist() == [0, 1, 2]
 
 

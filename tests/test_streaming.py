@@ -9,17 +9,26 @@ from __future__ import annotations
 import shutil
 import time
 from datetime import datetime, timedelta
+from functools import partial
 from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql.types import StructType
 
 from metevents_spark.operators.storms import storm_find_numpy
 from metevents_spark.streaming import (
     stream_sessions,
     stream_storm_find,
     stream_storm_find_tws,
+)
+from metevents_spark.streaming.detect import (
+    CUSUM_OUTPUT_SCHEMA,
+    ZSCORE_OUTPUT_SCHEMA,
+    _cusum_step,
+    _zscore_step,
+    fold_chunks,
 )
 
 ROCKSDB_PROVIDER = (
@@ -35,6 +44,23 @@ def stream_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("stream")
     yield str(d)
     shutil.rmtree(d, ignore_errors=True)
+
+
+def _advance_zscore(state, chunks, z_thresh: float, min_n: int):
+    """One trigger of ``stream_zscore`` for one series, without Spark's
+    streaming engine (the schema parse needs a session):
+    -> (output frames, new state)."""
+    step = partial(_zscore_step, z_thresh=z_thresh, min_n=min_n)
+    fields = StructType.fromDDL(ZSCORE_OUTPUT_SCHEMA).fields
+    return fold_chunks(step, None, state, chunks, fields)
+
+
+def _advance_cusum(state, chunks, h: float, min_n: int):
+    """One trigger of ``stream_cusum`` for one series, as
+    ``_advance_zscore``."""
+    step = partial(_cusum_step, h=h, min_n=min_n)
+    fields = StructType.fromDDL(CUSUM_OUTPUT_SCHEMA).fields
+    return fold_chunks(step, None, state, chunks, fields)
 
 
 def daily_rows(values, sid="s1", start=datetime(2023, 1, 1)):
@@ -538,7 +564,6 @@ def test_stream_cusum_chunk_invariant_and_detects_shift(spark, stream_dir):
     import pandas as pd
 
     from metevents_spark.streaming import stream_cusum
-    from metevents_spark.streaming.detect import _advance_cusum
 
     rng = np.random.RandomState(7)
     base = list(rng.normal(10.0, 1.0, 60))
@@ -605,7 +630,6 @@ def test_stream_cusum_survives_null_and_nan_values(spark, stream_dir):
     import pandas as pd
 
     from metevents_spark.streaming import stream_cusum
-    from metevents_spark.streaming.detect import _advance_cusum
 
     rng = np.random.RandomState(11)
     clean = list(rng.normal(10.0, 1.0, 60)) + list(rng.normal(13.0, 1.0, 40))
@@ -673,7 +697,7 @@ def test_stream_zscore_survives_null_and_nan_values(spark, stream_dir):
     import numpy as np
     import pandas as pd
 
-    from metevents_spark.streaming.detect import _advance_zscore, stream_zscore
+    from metevents_spark.streaming.detect import stream_zscore
 
     rng = np.random.RandomState(23)
     clean = list(rng.normal(5.0, 1.0, 80)) + [25.0]  # blatant outlier last
