@@ -360,14 +360,11 @@ def _auto_projections(n_reps: int, base_density: int = 10_000) -> int:
     band share — NOT the uniform-spread 1/w ≈ 3.3x an earlier
     version of this docstring assumed), so +1 axis/decade leaves
     hot-cell gram work mildly superlinear (top cell ~7.5k reps of
-    50k at p=3). What actually holds the wall-clock in the linear
-    band is the chunked gram kernel (block_pairs below): x10 warm
-    went 38 s -> 9 s once the n x n round/triu allocations were
-    removed, i.e. the transient memory traffic, not the FLOPs, was
-    the superlinear term. Raising p further trades 2x emission per
-    axis against ~1.9x division — a wash at these densities, so the
-    knob stays at +1/decade for candidate-volume control and the
-    kernel carries the rest."""
+    50k at p=3). Each cell's pairs come from
+    ``similarity.knn.cosine_pairs``, whose chunked sweep keeps a hot
+    cell's memory at chunk × n. Raising p further trades 2x emission
+    per axis against ~1.9x division — a wash at these densities, so
+    the knob stays at +1/decade for candidate-volume control."""
     import math
 
     if n_reps <= base_density:
@@ -440,10 +437,13 @@ def media_embedding_near_dup(
     import math
 
     from pyspark.sql import Window
+    from pyspark.sql.types import StructType
     from pyspark.storagelevel import StorageLevel
 
     from metevents_spark.cache import track
     from metevents_spark.io import load_table
+    from metevents_spark.operators.grouped import columns_frame
+    from metevents_spark.similarity.knn import cosine_pairs
     from metevents_spark.text.dedup import _expand_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -511,76 +511,26 @@ def media_embedding_near_dup(
     ).select("doc_id", "h", *[f"cell.{b}" for b in bcols])
 
     out_schema = "doc_a long, doc_b long, cosine double"
+    fields = StructType.fromDDL(out_schema).fields
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        if len(pdf) > max_block:
-            pdf = pdf.iloc[:max_block]
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "doc_a": pd.Series([], dtype="int64"),
-                    "doc_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
+        pdf = pdf.sort_values("doc_id").iloc[:max_block]
         # one frombuffer for the whole cell, then the bit-exact
         # re-normalization (integer sums < 2^53: see _embed_hist_cells)
         m = (
             np.frombuffer(b"".join(pdf["h"]), dtype="<i4")
-            .reshape(-1, len(pdf["h"].iloc[0]) // 4)
+            .reshape(len(pdf), -1)
             .astype(np.float64)
         )
         norms = np.sqrt((m * m).sum(axis=1))
-        m /= norms[:, None]
+        np.divide(m, norms[:, None], out=m, where=norms[:, None] > 0)
+        # unit rows against unit norms: dividing by 1.0 is exact, so the
+        # cosine is the dot of the unit vectors, as the oracle computes it
+        i, j, cos = cosine_pairs(m, np.ones(len(m)), threshold)
         ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        n = len(ids)
-        # Chunked gram sweep (r12): the one-shot round(m @ m.T) +
-        # triu_indices form allocated THREE n x n intermediates —
-        # ~1.4 GB of transient per 7.5k-doc cell at x10, where hot
-        # cells are the whole cost. Row-chunks against the full
-        # matrix keep peak extra memory at chunk x n, round only the
-        # surviving candidates (identical output: round6(s) >= t
-        # implies s >= t - 5e-7, and the prefilter sits a full 1e-6
-        # below t so ulp slop at the decimal boundary cannot exclude
-        # a candidate; the exact round6 filter then re-applies), and
-        # skip empty chunks without allocating index arrays.
-        chunk = 512
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_c: list[np.ndarray] = []
-        pre = threshold - 1e-6
-        for i0 in range(0, n - 1, chunk):
-            i1 = min(i0 + chunk, n)
-            sims = m[i0:i1] @ m.T
-            # strict upper triangle in GLOBAL coordinates
-            cand = sims >= pre
-            cand &= np.arange(n)[None, :] > np.arange(i0, i1)[:, None]
-            if not cand.any():
-                continue
-            ra, rb = np.nonzero(cand)
-            cos = np.round(sims[ra, rb], 6)
-            keep = cos >= threshold
-            out_a.append(ids[ra[keep] + i0])
-            out_b.append(ids[rb[keep]])
-            out_c.append(cos[keep])
-        if not out_a:
-            return pd.DataFrame(
-                {
-                    "doc_a": pd.Series([], dtype="int64"),
-                    "doc_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "doc_a": np.concatenate(out_a),
-                "doc_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        return columns_frame(fields, [(ids[i], ids[j], cos)])
 
     # r12: the which-cell-found-it `block` label was DROPPED from the
     # output. It was the one p-DEPENDENT column (the r12 auto density

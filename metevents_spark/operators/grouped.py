@@ -29,7 +29,10 @@ holt_smooth, holt_backtest and model_select_backtest.
 ``columns_frame`` is also the frame builder of the streaming kernels:
 ``streaming.detect.keyed_fold`` parses its output schema on the driver
 and builds each step's columns with it, so batch and stream kernels
-share one output contract.
+share one output contract. The four embedding near-dup kernels
+(``embedding_near_dup``, ``semantic_dedup``,
+``media_embedding_near_dup``, ``stream_embedding_near_dup``) build
+their frames with it too.
 
 Output order: the kernel's rows leave in input partition order, and
 partitions follow sid order, so a caller that needs its output ordered
@@ -47,6 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -65,6 +69,7 @@ SeriesKernel = Callable[[str, np.ndarray, np.ndarray], Sequence]
 
 _PANDAS_DTYPES = {
     StringType: object,
+    BooleanType: bool,
     LongType: "Int64",  # nullable: a streaming step may emit None
     IntegerType: "int32",
     DoubleType: "float64",

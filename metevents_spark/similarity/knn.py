@@ -13,13 +13,17 @@ only form within a bucket.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metevents_spark.cache import track
 from metevents_spark.io import load_table, local_frame
+from metevents_spark.operators.grouped import columns_frame
 
 
 # Shared coarse-quantizer geometry for the IVF family. knn_ivf_pq and
@@ -170,6 +174,40 @@ def knn_cosine(
     return _topk_per_query(scored, k)
 
 
+_PAIR_CHUNK = 512
+
+
+def cosine_pairs(
+    m: np.ndarray, norms: np.ndarray, threshold: float, start: int = 0
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every row pair ``i < j`` of ``m`` with ``j >= start`` whose cosine
+    ``round(m_i·m_j / (norms_i·norms_j), 6)`` is ``>= threshold``, as
+    ``(i, j, cos)`` arrays, row-major in ``j`` with ``i`` ascending.
+
+    The one within-block pair sweep of the embedding near-dup kernels:
+    row chunks ``j0:j1`` of ``m[start:]`` are scored against
+    ``m[:j1]``, so peak extra memory is chunk × n, never n², and
+    ``start`` limits the work to pairs that touch a row at or after it
+    (a stream's new rows). Only candidates at ``threshold - 1e-6`` or
+    above are rounded: ``round6(s) >= t`` implies ``s >= t - 5e-7``,
+    so the prefilter cannot drop a pair. A zero-norm row pairs with
+    nothing, at any threshold."""
+    parts = [(np.empty(0, np.intp), np.empty(0, np.intp), np.empty(0))]
+    for j0 in range(start, len(m), _PAIR_CHUNK):
+        j1 = min(j0 + _PAIR_CHUNK, len(m))
+        denom = norms[j0:j1, None] * norms[:j1]
+        sims = np.full(denom.shape, np.nan)
+        np.divide(m[j0:j1] @ m[:j1].T, denom, out=sims, where=denom > 0)
+        cand = sims >= threshold - 1e-6
+        cand &= np.arange(j1) < np.arange(j0, j1)[:, None]
+        rj, ci = np.nonzero(cand)
+        cos = np.round(sims[rj, ci], 6)
+        keep = cos >= threshold
+        parts.append((ci[keep], rj[keep] + j0, cos[keep]))
+    i, j, cos = (np.concatenate(p) for p in zip(*parts))
+    return i, j, cos
+
+
 def embedding_near_dup(
     spark: SparkSession, sf_dir: str, threshold: float = 0.35
 ) -> DataFrame:
@@ -177,68 +215,43 @@ def embedding_near_dup(
 
     The blocking key (here ``label``; in production a coarse cluster id
     or LSH bucket) bounds the pairwise work to within-block — never an
-    all-pairs product over the corpus. Each block's pair matrix is one
-    BLAS gram-matrix multiply inside ``applyInPandas`` (Arrow transfer,
-    numpy float64), which beats per-pair expression evaluation by
-    orders of magnitude; blocks shuffle once on the blocking key and
-    scale out across executors. Cosine uses dot/(|a||b|) in float64 and
-    rounds to 6 decimals before the threshold cut, matching the oracle.
+    all-pairs product over the corpus. Each block is one
+    ``applyInPandas`` call (Arrow transfer, numpy float64) whose pairs
+    come from :func:`cosine_pairs`; blocks shuffle once on the blocking
+    key and scale out across executors. Cosine uses dot/(|a||b|) in
+    float64 and rounds to 6 decimals before the threshold cut, matching
+    the oracle.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
     out_schema = "vec_a long, vec_b long, label int, cosine double"
+    fields = StructType.fromDDL(out_schema).fields
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # dedup identical vectors first: the gram multiply and the
-        # rounded sim matrix run over UNIQUE rows, and kept pairs
-        # expand back over the duplicate groups (identical vectors
-        # have cosine 1.0 with each other and their group's sims with
-        # everyone else) — same output, work scales with distinct
-        # vectors instead of copies
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        # pairs are scored over UNIQUE rows and expand back over the
+        # duplicate groups (identical vectors have cosine 1.0 with each
+        # other and their group's cosine with everyone else), so the
+        # work scales with distinct vectors instead of copies
+        pdf = pdf.sort_values("vec_id")
         m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         ids = pdf["vec_id"].to_numpy()
-        label = pdf["label"].to_numpy()[0] if len(pdf) else None
         uniq, inverse = np.unique(m, axis=0, return_inverse=True)
-        norms = np.sqrt((uniq * uniq).sum(axis=1))
-        sims = np.round((uniq @ uniq.T) / np.outer(norms, norms), 6)
         members = [ids[inverse == r] for r in range(len(uniq))]
-        va, vb, cs = [], [], []
-        ra, rb = np.triu_indices(len(uniq), k=1)
-        keep = sims[ra, rb] >= threshold
-        for i, j in zip(ra[keep], rb[keep]):
-            a, b = members[i], members[j]
-            aa = np.repeat(a, len(b))
-            bb = np.tile(b, len(a))
-            va.append(np.minimum(aa, bb))
-            vb.append(np.maximum(aa, bb))
-            cs.append(np.full(len(aa), sims[i, j]))
+        norms = np.sqrt((uniq * uniq).sum(axis=1))
+        outs = []
+        for i, j, cos in zip(*cosine_pairs(uniq, norms, threshold)):
+            aa = np.repeat(members[i], len(members[j]))
+            bb = np.tile(members[j], len(members[i]))
+            outs.append((np.minimum(aa, bb), np.maximum(aa, bb), cos))
         if threshold <= 1.0:
-            for r in range(len(uniq)):
-                a = members[r]
-                if len(a) > 1:
-                    ia, ib = np.triu_indices(len(a), k=1)
-                    va.append(a[ia])
-                    vb.append(a[ib])
-                    cs.append(np.full(len(ia), 1.0))
-        if not va:
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "label": np.array([], dtype=np.int32),
-                    "cosine": np.array([], dtype=np.float64),
-                }
-            )
-        vec_a = np.concatenate(va)
-        return pd.DataFrame(
-            {
-                "vec_a": vec_a,
-                "vec_b": np.concatenate(vb),
-                "label": np.full(len(vec_a), label),
-                "cosine": np.concatenate(cs),
-            }
+            for a in members:
+                ab = np.array(list(combinations(a, 2)), np.int64).reshape(-1, 2)
+                outs.append((ab[:, 0], ab[:, 1], 1.0))
+        label = pdf["label"].iloc[0]
+        return columns_frame(
+            fields,
+            [(a, b, np.full(len(a), label), np.full(len(a), c)) for a, b, c in outs],
         )
 
     return (

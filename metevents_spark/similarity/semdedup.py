@@ -15,10 +15,10 @@ Spark shape:
     (shuffle is O(partitions x k x dim), corpus-size independent) and
     collects only k x dim doubles to the driver per iteration — the
     same legitimate tiny-collect as knn_ivf's centroid fetch.
-  - Dedup: one exchange on the final cluster id, a BLAS gram matrix
-    per cluster inside applyInPandas (the embedding_near_dup kernel
-    shape), and a greedy earliest-representative sweep that is
-    deterministic in vec_id order.
+  - Dedup: one exchange on the final cluster id, then per cluster
+    inside applyInPandas the pairs of ``similarity.knn.cosine_pairs``
+    (the embedding_near_dup sweep) and a greedy earliest-representative
+    pick that is deterministic in vec_id order.
 
 At 100 TB: k grows to ~sqrt(corpus) so clusters stay bounded;
 iterations are linear scans; the only driver state is k x dim floats.
@@ -30,8 +30,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metevents_spark.io import load_table
+from metevents_spark.operators.grouped import columns_frame
+from metevents_spark.similarity.knn import cosine_pairs
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -222,10 +225,9 @@ def _auto_clusters(n_vecs: int, target_pop: int = 4096) -> int:
 
     The r13 x100 sweep caught semantic_dedup at a 101x decade ratio —
     with FIXED k the within-cell all-pairs sweep costs ~k*(n/k)^2 =
-    n^2/k, quadratic in corpus size (and the per-cluster gram matrix
-    grows as (n/k)^2 doubles: ~5 GB transient at 200k vecs / 8 cells).
-    k proportional to n makes total pair work ~n*target_pop — linear —
-    and caps the gram at target_pop^2 (~134 MB). The floor of 8 makes
+    n^2/k, quadratic in corpus size. k proportional to n makes total
+    pair work ~n*target_pop — linear; the sweep's memory is bounded by
+    ``similarity.knn.cosine_pairs``' chunking. The floor of 8 makes
     ``auto`` resolve to EXACTLY the oracle's fixed k at every scale
     the static SQL replay actually runs (sf0.001, sf0.01, and the x10
     replica are all <= 8*target_pop vectors), the same
@@ -276,38 +278,24 @@ def semantic_dedup(
     out_schema = (
         "vec_id long, cluster int, keep boolean, dup_of long, cos_to_dup double"
     )
+    fields = StructType.fromDDL(out_schema).fields
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        pdf = pdf.sort_values("vec_id")
         m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        norms = np.sqrt((m * m).sum(axis=1))
-        sims = np.round((m @ m.T) / np.outer(norms, norms), 6)
-        n = len(ids)
-        # earliest j < i with sims[i, j] >= threshold, fully vectorized:
-        # argmax over a boolean lower-triangle mask returns the FIRST
-        # True per row (a per-row python loop here was the kernel's
-        # hotspot — ~n flatnonzero calls per cluster)
-        low = np.tril(sims >= threshold, k=-1)
-        has = low.any(axis=1)
-        first = low.argmax(axis=1)
-        dup_of = np.where(has, ids[first], -1).astype(np.int64)
-        cos = sims[np.arange(n), first]
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "cluster": pdf["cluster"].to_numpy(),
-                "keep": dup_of < 0,
-                "dup_of": pd.array(
-                    [None if d < 0 else int(d) for d in dup_of],
-                    dtype="Int64",
-                ),
-                "cos_to_dup": pd.array(
-                    [float(c) if h else None for h, c in zip(has, cos)],
-                    dtype="Float64",
-                ),
-            }
-        )
+        i, j, cos = cosine_pairs(m, np.sqrt((m * m).sum(axis=1)), threshold)
+        # pairs run row-major in j with i ascending: each j's first pair
+        # holds its earliest near-duplicate
+        dups, first = np.unique(j, return_index=True)
+        dup_of = np.full(len(ids), None, dtype=object)
+        dup_of[dups] = ids[i[first]]
+        cos_to_dup = np.full(len(ids), np.nan)  # NaN leaves as NULL
+        cos_to_dup[dups] = cos[first]
+        keep = np.ones(len(ids), dtype=bool)
+        keep[dups] = False
+        cols = (ids, pdf["cluster"], keep, dup_of, cos_to_dup)
+        return columns_frame(fields, [cols])
 
     return (
         assigned.groupBy("cluster")

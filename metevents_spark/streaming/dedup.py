@@ -55,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from metevents_spark.operators.grouped import columns_frame
+from metevents_spark.similarity.knn import cosine_pairs
 from metevents_spark.text.dedup import band_buckets
 
 PAIR_OUTPUT_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
@@ -362,10 +363,11 @@ def stream_embedding_near_dup(
     The blocking key (``label``; in production a coarse cluster id or
     LSH bucket) is the state key, so pairwise work stays within-block
     exactly as in batch. Per micro-batch the new vectors join the
-    block's residents and ONE gram matmul scores every (resident, new)
-    and (new, new) pair — a pair is emitted by whichever member arrives
-    later, so the replayed union over micro-batches is the full
-    within-block pair set.
+    block's residents and ``similarity.knn.cosine_pairs`` scores only
+    the (resident, new) and (new, new) pairs, so a trigger's pair work
+    is residents × new, not residents². A pair is emitted by whichever
+    member arrives later, so the replayed union over micro-batches is
+    the full within-block pair set.
 
     Bounded state: blocks close at ``max_block`` residents (batch has
     no cap because a batch block is bounded by construction; an
@@ -376,12 +378,7 @@ def stream_embedding_near_dup(
 
     def fn(key, pdf_iter, state: GroupState):
         label = int(key[0])
-        if state.exists:
-            vec_ids, flat, closed = state.get
-            vec_ids = list(vec_ids)
-            flat = list(flat)
-        else:
-            vec_ids, flat, closed = [], [], 0
+        vec_ids, flat, closed = state.get if state.exists else ([], [], 0)
         # an empty iterator is impossible under NoTimeout but becomes
         # reachable the moment a state timeout is added — guard it
         # instead of letting pd.concat raise "No objects to concatenate"
@@ -399,45 +396,25 @@ def stream_embedding_near_dup(
         batch = batch.sort_values("vec_id", kind="stable")
         new_ids = batch["vec_id"].astype("int64").to_numpy()
         new_m = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-        if not closed:
-            admit = min(len(new_ids), max_block - len(vec_ids))
-            if admit < len(new_ids):
-                closed = 1
-        else:
-            admit = 0
+        admit = min(len(new_ids), max_block - len(vec_ids))
+        closed = int(admit < len(new_ids))
         # even when the block just closed, the admitted prefix still
         # compares + stores; the rejected tail is neither compared nor
         # stored (same contract as the MinHash bucket close)
         new_ids, new_m = new_ids[:admit], new_m[:admit]
         if not len(new_ids):
-            state.update((vec_ids, flat, int(closed)))
+            state.update((vec_ids, flat, closed))
             return
-        dim = new_m.shape[1]
-        stored = np.asarray(flat, dtype=np.float64).reshape(-1, dim)
-        n_old = stored.shape[0]
+        stored = np.asarray(flat, dtype=np.float64).reshape(-1, new_m.shape[1])
         allm = np.vstack([stored, new_m])
         norms = np.sqrt((allm * allm).sum(axis=1))
-        sims = np.round((allm @ allm.T) / np.outer(norms, norms), 6)
-        ra, rb = np.triu_indices(len(allm), k=1)
         # only pairs touching a NEW vector; resident-resident pairs
         # were emitted when their later member arrived
-        fresh = rb >= n_old
-        keep = fresh & (sims[ra, rb] >= threshold)
+        i, j, cos = cosine_pairs(allm, norms, threshold, start=len(vec_ids))
         ids = np.concatenate([np.asarray(vec_ids, dtype=np.int64), new_ids])
-        ia, ib = ids[ra[keep]], ids[rb[keep]]
-        out = (
-            np.minimum(ia, ib),
-            np.maximum(ia, ib),
-            np.full(len(ia), label),
-            sims[ra[keep], rb[keep]],
-        )
-        state.update(
-            (
-                ids.tolist(),
-                allm.ravel().tolist(),
-                int(closed),
-            )
-        )
+        ia, ib = ids[i], ids[j]
+        out = (np.minimum(ia, ib), np.maximum(ia, ib), np.full(len(ia), label), cos)
+        state.update((ids.tolist(), allm.ravel().tolist(), closed))
         if len(ia):
             yield columns_frame(fields, [out])
 

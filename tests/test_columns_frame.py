@@ -15,6 +15,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -36,6 +37,7 @@ FIELDS = StructType(
         StructField("x", DoubleType()),
         StructField("at", TimestampType()),
         StructField("at_ntz", TimestampNTZType()),
+        StructField("flag", BooleanType()),
     ]
 ).fields
 
@@ -50,6 +52,7 @@ def test_builds_each_field_with_its_dtype_across_calls():
         (0.5, None),
         (T0_US, T0_US + 1),
         (T0_US, T0_US + 2),
+        (True, False),
     )
     stamps = np.asarray(["2024-01-02", "2024-01-03"], dtype="datetime64[us]")
     arrays = (
@@ -59,10 +62,12 @@ def test_builds_each_field_with_its_dtype_across_calls():
         np.array([1.5, np.nan]),
         stamps,
         stamps.astype("datetime64[ns]"),
+        np.array([False, True]),
     )
     out = columns_frame(FIELDS, [micros, arrays])
     assert out.dtypes.astype(str).tolist() == [
-        "object", "Int64", "int32", "float64", "datetime64[us]", "datetime64[us]"
+        "object", "Int64", "int32", "float64", "datetime64[us]", "datetime64[us]",
+        "bool",
     ]
     assert out["name"].tolist() == ["a", "b", "c", None]
     assert out["touch_id"].isna().tolist() == [False, True, False, False]
@@ -74,6 +79,7 @@ def test_builds_each_field_with_its_dtype_across_calls():
         t0, t0 + pd.Timedelta(1, "us"), *pd.to_datetime(stamps)
     ]
     assert out["at_ntz"].tolist()[1] == t0 + pd.Timedelta(2, "us")
+    assert out["flag"].tolist() == [True, False, False, True]
 
 
 def test_zero_rows_keep_the_schema_dtypes():
@@ -84,15 +90,15 @@ def test_zero_rows_keep_the_schema_dtypes():
         assert out.columns.tolist() == [f.name for f in FIELDS]
         assert out.dtypes.astype(str).tolist() == [
             "object", "Int64", "int32", "float64",
-            "datetime64[us]", "datetime64[us]",
+            "datetime64[us]", "datetime64[us]", "bool",
         ]
 
 
 def test_wrong_column_count_raises():
-    with pytest.raises(ValueError, match="returned 5 columns for the 6 fields"):
-        columns_frame(FIELDS, [tuple(() for _ in range(5))])
-    with pytest.raises(ValueError, match="returned 7 columns"):
-        columns_frame(FIELDS, [tuple(() for _ in range(7))])
+    with pytest.raises(ValueError, match="returned 6 columns for the 7 fields"):
+        columns_frame(FIELDS, [tuple(() for _ in range(6))])
+    with pytest.raises(ValueError, match="returned 8 columns"):
+        columns_frame(FIELDS, [tuple(() for _ in range(8))])
 
 
 def test_stream_step_with_wrong_column_count_raises():
