@@ -521,59 +521,37 @@ def holt_smooth(
     spark: SparkSession, sf_dir: str, alpha: float = 0.2, beta: float = 0.1
 ) -> DataFrame:
     """Holt double exponential smoothing per series (additive trend):
+    the level is the smoothed value, the trend the per-step drift a
+    forecaster extrapolates.
 
-        l_t = a*x_t + (1-a)*(l_{t-1} + b_{t-1})
-        b_t = B*(l_t - l_{t-1}) + (1-B)*b_{t-1}
+    The recurrence is :func:`metevents_spark.numeric.holt_fold`, the one
+    shared with holt_backtest, model_select_backtest and the streaming
+    ``stream_holt``: seeded l = x, b = 0 at the first non-NULL point, so
+    ``beta=0`` reduces exactly to the EWMA recursion, and a NaN/NULL
+    input emits the carried state and leaves it unchanged, matching the
+    EWMA operator's dirty-data contract. Level and trend round with
+    ``round_half_away(·, 6)``, SQL ``ROUND(x, 6)``.
 
-    seeded l_0 = x_0, b_0 = 0 — the no-second-point-required convention,
-    which also makes ``beta=0`` reduce EXACTLY to the EWMA recursion
-    (asserted against pandas ``ewm(adjust=False)`` in tests). The level
-    is the smoothed value; the trend is the per-step drift a forecaster
-    extrapolates.
-
-    Genuinely recursive (two-state linear recurrence) — no WINDOW
-    form, but the linearity lets a DuckDB recursive CTE replay it
-    exactly (the committed oracle, bit-identical by mirroring this
-    kernel's evaluation order); the distributed plumbing
-    (sid shuffle, in-partition sort, batch-boundary carry) is the
-    shared sorted-partition mapper every sequential kernel here uses,
-    and tests hold the fold to a sequential reference loop. NaN/NULL
-    inputs emit the carried state and leave it unchanged, matching the
-    EWMA operator's dirty-data contract.
+    Genuinely recursive (two-state linear recurrence), so there is no
+    WINDOW form, but the linearity lets a DuckDB recursive CTE replay
+    it exactly (the committed oracle mirrors the fold's evaluation
+    order). The distributed plumbing is the shared sorted-partition
+    kernel path every sequential kernel here uses.
     """
     import numpy as np
 
+    from metevents_spark.numeric import holt_fold, round_half_away
     from metevents_spark.operators.grouped import map_series_kernel
 
-    df = series_frame(spark, sf_dir)
-
     def kernel(sid, ts, vals):
-        rows = []
-        l = b = None
-        for i in range(len(vals)):
-            x = vals[i]
-            if np.isnan(x):
-                rows.append(
-                    (
-                        sid,
-                        ts[i],
-                        None,
-                        None if l is None else round(float(l), 6),
-                        None if b is None else round(float(b), 6),
-                    )
-                )
-                continue
-            if l is None:
-                l, b = float(x), 0.0
-            else:
-                prev_l = l
-                l = alpha * float(x) + (1.0 - alpha) * (l + b)
-                b = beta * (l - prev_l) + (1.0 - beta) * b
-            rows.append((sid, ts[i], float(x), round(l, 6), round(b, 6)))
-        return tuple(zip(*rows))
+        level, trend, _ = holt_fold(vals, alpha, beta)
+        sids = np.full(len(ts), sid, dtype=object)
+        return (
+            sids, ts, vals, round_half_away(level, 6), round_half_away(trend, 6)
+        )
 
     return map_series_kernel(
-        df,
+        series_frame(spark, sf_dir),
         kernel,
         "sid string, ts timestamp_ntz, value double, level double, trend double",
     ).sortWithinPartitions("sid", "ts")
@@ -811,6 +789,20 @@ def rolling_median(
     ).orderBy("sid", "ts", "seq")
 
 
+def _errors_us(vals, level, trend) -> list[int]:
+    """One-step-ahead errors x_t - (l_{t-1} + b_{t-1}) in integer
+    micro-units (SQL ``ROUND(e * 1e6)``) at every non-NaN point with
+    state before it, as exact Python ints for the callers' sums."""
+    import numpy as np
+
+    from metevents_spark.numeric import round_half_away
+
+    x = vals[1:]
+    ok = ~np.isnan(x) & ~np.isnan(level[:-1])
+    e = x[ok] - (level[:-1][ok] + trend[:-1][ok])
+    return list(map(int, round_half_away(e * 1e6).tolist()))
+
+
 def holt_backtest(
     spark: SparkSession, sf_dir: str, alpha: float = 0.2, beta: float = 0.1
 ) -> DataFrame:
@@ -820,12 +812,14 @@ def holt_backtest(
     error) and RMSE — the accuracy meter that decides whether the
     smoother's (alpha, beta) are fit for alerting.
 
-    Engine-exact by the repo's integer-unit convention: each error
-    quantizes to micro-units (ROUND(e*1e6) as int — both engines see
-    bit-identical ``e`` because the Holt recursion is the same
-    fixed-order float expression the hash-green holt_smooth oracle
-    replays), the sums fold as EXACT Python/HUGEINT integers, and the
-    final divisions/sqrt are one fixed float expression (IEEE sqrt is
+    Engine-exact by the repo's integer-unit convention: the level and
+    trend come from :func:`metevents_spark.numeric.holt_fold`, the fold
+    the hash-green holt_smooth oracle replays, so both engines see
+    bit-identical errors; each error quantizes to micro-units
+    (``ROUND(e*1e6)``), the sums fold as EXACT Python/HUGEINT integers
+    (Σe² passes 2^63 once errors reach ~3e9 micro-units, where an int64
+    sum would wrap), and the final divisions/sqrt are one fixed float
+    expression rounded half away at the micro-unit (IEEE sqrt is
     correctly rounded, so even RMSE is deterministic).
 
     Scale shape: the same single-exchange sorted-partition kernel as
@@ -833,55 +827,25 @@ def holt_backtest(
     """
     import math
 
-    import numpy as np
-
+    from metevents_spark.numeric import holt_fold, round_half_away
     from metevents_spark.operators.grouped import map_series_kernel
 
-    df = series_frame(spark, sf_dir)
-
     def kernel(sid, ts, vals):
-        l = b = None
-        n = 0
-        s_abs = s_sig = s_sq = 0  # exact Python ints (micro-units)
-        for i in range(len(vals)):
-            x = vals[i]
-            if np.isnan(x):
-                continue
-            if l is None:
-                l, b = float(x), 0.0
-                continue
-            e = float(x) - (l + b)
-            v = e * 1e6
-            e_us = int(math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5))
-            n += 1
-            s_abs += abs(e_us)
-            s_sig += e_us
-            s_sq += e_us * e_us
-            prev_l = l
-            l = alpha * float(x) + (1.0 - alpha) * (l + b)
-            b = beta * (l - prev_l) + (1.0 - beta) * b
+        level, trend, _ = holt_fold(vals, alpha, beta)
+        e_us = _errors_us(vals, level, trend)
+        n = len(e_us)
         if n == 0:
             return ()
-
-        def q6(v: float) -> float:
-            # round to integer MICRO-units first (half-away-from-zero,
-            # matching SQL ROUND(x)), divide once — rounding the
-            # x.xxxxxx5-boundary µ-ratio after a /1e6 is where Python's
-            # correct decimal rounding and DuckDB's multiply-round-
-            # divide ROUND(v, 6) disagree by one last digit
-            r = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-            return r / 1e6
-
-        return (
-            [sid],
-            [n],
-            [q6(float(s_abs) / n)],
-            [q6(float(s_sig) / n)],
-            [q6(math.sqrt(float(s_sq) / n))],
-        )
+        s_sq = sum(e * e for e in e_us)
+        mae, bias, rmse = round_half_away([
+            float(sum(map(abs, e_us))) / n,
+            float(sum(e_us)) / n,
+            math.sqrt(float(s_sq) / n),
+        ]) / 1e6
+        return [sid], [n], [mae], [bias], [rmse]
 
     return map_series_kernel(
-        df,
+        series_frame(spark, sf_dir),
         kernel,
         "sid string, n_forecasts long, mae double, bias double, rmse double",
     ).sortWithinPartitions("sid")
@@ -945,73 +909,40 @@ def model_select_backtest(
 ) -> DataFrame:
     """Per-series forecaster selection by walk-forward backtest: run
     the EWMA (level-only) and Holt (level+trend) recursions over the
-    same series in ONE pass, score both with one-step-ahead MAE, and
-    crown a champion — the model-selection step a forecasting pipeline
-    runs before alerting thresholds are fit (a trending series wants
-    Holt; a mean-reverting one is hurt by the trend term).
+    same series, score both with one-step-ahead MAE, and crown a
+    champion — the model-selection step a forecasting pipeline runs
+    before alerting thresholds are fit (a trending series wants Holt;
+    a mean-reverting one is hurt by the trend term).
 
-    Both models initialize at the SAME first non-NULL point and
-    forecast at the SAME subsequent points, so n_forecasts is shared
-    and the champion test is a pure INTEGER comparison of the two
-    micro-unit absolute-error sums (ties -> 'ewma', parsimony). MAEs
-    quantize via the holt_backtest micro-unit pattern — engine-exact,
-    no float ROUND at the boundary.
+    Both recursions are :func:`metevents_spark.numeric.holt_fold`, the
+    EWMA as its ``beta=0`` level. Both initialize at the SAME first
+    non-NULL point and forecast at the SAME subsequent points, so
+    n_forecasts is shared and the champion test is a pure INTEGER
+    comparison of the two micro-unit absolute-error sums (ties ->
+    'ewma', parsimony). MAEs quantize via the holt_backtest micro-unit
+    pattern — engine-exact, no float ROUND at the boundary.
 
     Scale shape: the same single-exchange sorted-partition kernel as
     every sequential smoother; one row per series out.
     """
-    import math
-
-    import numpy as np
-
+    from metevents_spark.numeric import holt_fold, round_half_away
     from metevents_spark.operators.grouped import map_series_kernel
 
-    df = series_frame(spark, sf_dir)
-
     def kernel(sid, ts, vals):
-        s = l = b = None
-        n = 0
-        abs_e = abs_h = 0  # exact Python ints (micro-units)
-        for i in range(len(vals)):
-            x = vals[i]
-            if np.isnan(x):
-                continue
-            x = float(x)
-            if l is None:
-                s, l, b = x, x, 0.0
-                continue
-            n += 1
-            for fcast, acc in ((s, "e"), (l + b, "h")):
-                v = (x - fcast) * 1e6
-                e_us = int(
-                    math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-                )
-                if acc == "e":
-                    abs_e += abs(e_us)
-                else:
-                    abs_h += abs(e_us)
-            s = alpha * x + (1.0 - alpha) * s
-            prev_l = l
-            l = alpha * x + (1.0 - alpha) * (l + b)
-            b = beta * (l - prev_l) + (1.0 - beta) * b
+        ewma, flat, _ = holt_fold(vals, alpha, 0.0)
+        abs_e = sum(map(abs, _errors_us(vals, ewma, flat)))
+        level, trend, _ = holt_fold(vals, alpha, beta)
+        e_us = _errors_us(vals, level, trend)
+        n = len(e_us)
         if n == 0:
             return ()
-
-        def q6(v: float) -> float:
-            r = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-            return r / 1e6
-
+        abs_h = sum(map(abs, e_us))
+        mae_e, mae_h = round_half_away([float(abs_e) / n, float(abs_h) / n]) / 1e6
         champion = "ewma" if abs_e <= abs_h else "holt"
-        return (
-            [sid],
-            [n],
-            [q6(float(abs_e) / n)],
-            [q6(float(abs_h) / n)],
-            [champion],
-        )
+        return [sid], [n], [mae_e], [mae_h], [champion]
 
     return map_series_kernel(
-        df,
+        series_frame(spark, sf_dir),
         kernel,
         "sid string, n_forecasts long, mae_ewma double, mae_holt double,"
         " champion string",

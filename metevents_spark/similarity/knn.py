@@ -13,8 +13,6 @@ only form within a bucket.
 
 from __future__ import annotations
 
-from itertools import combinations
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -23,6 +21,7 @@ from pyspark.sql.types import StructType
 
 from metevents_spark.cache import track
 from metevents_spark.io import load_table, local_frame
+from metevents_spark.numeric import round_half_away
 from metevents_spark.operators.grouped import columns_frame
 
 
@@ -208,6 +207,39 @@ def cosine_pairs(
     return i, j, cos
 
 
+def _block_near_dups(
+    m: np.ndarray, ids: np.ndarray, threshold: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Near-duplicate pairs of one block, rows ``m`` with ascending
+    ``ids``, as ``(vec_a, vec_b, cos)`` arrays with ``vec_a < vec_b``.
+
+    Pairs are scored over UNIQUE rows with :func:`cosine_pairs` and
+    expand back over the duplicate groups: identical vectors have
+    cosine 1.0 with each other and their group's cosine with everyone
+    else, so the scoring scales with distinct vectors, not copies. The
+    expansion is vectorized from group offsets (a stable argsort of the
+    unique-row index), one row per member pair, in pair order."""
+    uniq, inverse = np.unique(m, axis=0, return_inverse=True)
+    inverse = inverse.reshape(-1)
+    members = ids[np.argsort(inverse, kind="stable")]  # grouped, ids ascending
+    counts = np.bincount(inverse, minlength=len(uniq))
+    starts = np.cumsum(counts) - counts
+    i, j, cos = cosine_pairs(uniq, np.sqrt((uniq * uniq).sum(axis=1)), threshold)
+    if threshold <= 1.0:  # the pairs inside each duplicate group
+        g = np.flatnonzero(counts > 1)
+        i, j = np.concatenate([i, g]), np.concatenate([j, g])
+        cos = np.concatenate([cos, np.ones(len(g))])
+    size = counts[i] * counts[j]
+    pair = np.repeat(np.arange(len(i)), size)
+    k = np.arange(len(pair)) - np.repeat(np.cumsum(size) - size, size)
+    width = counts[j][pair]
+    pa = starts[i][pair] + k // width
+    pb = starts[j][pair] + k % width
+    keep = (i != j)[pair] | (pa < pb)
+    a, b = members[pa[keep]], members[pb[keep]]
+    return np.minimum(a, b), np.maximum(a, b), cos[pair[keep]]
+
+
 def embedding_near_dup(
     spark: SparkSession, sf_dir: str, threshold: float = 0.35
 ) -> DataFrame:
@@ -218,7 +250,8 @@ def embedding_near_dup(
     all-pairs product over the corpus. Each block is one
     ``applyInPandas`` call (Arrow transfer, numpy float64) whose pairs
     come from :func:`cosine_pairs`; blocks shuffle once on the blocking
-    key and scale out across executors. Cosine uses dot/(|a||b|) in
+    key and scale out across executors; :func:`_block_near_dups` expands
+    them over duplicate rows. Cosine uses dot/(|a||b|) in
     float64 and rounds to 6 decimals before the threshold cut, matching
     the oracle.
     """
@@ -229,30 +262,14 @@ def embedding_near_dup(
     fields = StructType.fromDDL(out_schema).fields
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pairs are scored over UNIQUE rows and expand back over the
-        # duplicate groups (identical vectors have cosine 1.0 with each
-        # other and their group's cosine with everyone else), so the
-        # work scales with distinct vectors instead of copies
         pdf = pdf.sort_values("vec_id")
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        uniq, inverse = np.unique(m, axis=0, return_inverse=True)
-        members = [ids[inverse == r] for r in range(len(uniq))]
-        norms = np.sqrt((uniq * uniq).sum(axis=1))
-        outs = []
-        for i, j, cos in zip(*cosine_pairs(uniq, norms, threshold)):
-            aa = np.repeat(members[i], len(members[j]))
-            bb = np.tile(members[j], len(members[i]))
-            outs.append((np.minimum(aa, bb), np.maximum(aa, bb), cos))
-        if threshold <= 1.0:
-            for a in members:
-                ab = np.array(list(combinations(a, 2)), np.int64).reshape(-1, 2)
-                outs.append((ab[:, 0], ab[:, 1], 1.0))
-        label = pdf["label"].iloc[0]
-        return columns_frame(
-            fields,
-            [(a, b, np.full(len(a), label), np.full(len(a), c)) for a, b, c in outs],
+        a, b, cos = _block_near_dups(
+            np.stack(pdf["embedding"].to_numpy()).astype(np.float64),
+            pdf["vec_id"].to_numpy(),
+            threshold,
         )
+        label = np.full(len(a), pdf["label"].iloc[0])
+        return columns_frame(fields, [(a, b, label, cos)])
 
     return (
         emb.groupBy("label")
@@ -432,14 +449,8 @@ def knn_lsh(
 
     @F.pandas_udf("array<long>")
     def sketch(embs: pd.Series) -> pd.Series:
-        m = np.stack(embs.to_numpy()).astype(np.float64) * 1e6
-        # round-half-away-from-zero, matching ROUND() in both engines
-        # (r12: ceil form for negatives — floor(m - 0.5) shifted every
-        # negative non-half value one unit down, the same bug fixed in
-        # semdedup._quantize_units; the sign tests masked it here)
-        mi = np.where(
-            m >= 0, np.floor(m + 0.5), np.ceil(m - 0.5)
-        ).astype(np.int64)
+        m = np.stack(embs.to_numpy()).astype(np.float64)
+        mi = round_half_away(m * 1e6).astype(np.int64)
         bits = (mi @ planes.T) > 0  # exact integer dots, (n, L*nbits)
         per_table = bits.reshape(len(mi), num_tables, nbits) @ weights
         return pd.Series(list(per_table.astype(np.int64)))
@@ -681,11 +692,8 @@ def random_projection(
     def _project(col: pd.Series) -> pd.Series:
         if col.empty:
             return pd.Series([], dtype=object)
-        v = np.vstack(col.to_numpy()).astype(np.float64) * 1e6
-        # half-away-from-zero, matching SQL ROUND (np.rint is half-even)
-        q = np.where(v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)).astype(
-            np.int64
-        )
+        v = np.vstack(col.to_numpy()).astype(np.float64)
+        q = round_half_away(v * 1e6).astype(np.int64)
         return pd.Series(list(q @ sign))
 
     emb = load_table(spark, sf_dir, "embeddings")

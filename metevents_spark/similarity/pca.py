@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from metevents_spark.cache import track
 from metevents_spark.io import load_table, local_frame
+from metevents_spark.numeric import round_half_away
 
 PARTIAL_SCHEMA = "n long, sums array<double>, prods array<double>"
 
@@ -86,11 +87,8 @@ def _covariance_partials_exact(emb: DataFrame, dim: int) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1e6
-            # half-away-from-zero, matching SQL ROUND (np.rint is half-even)
-            q = np.where(v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)).astype(
-                np.int64
-            )
+            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = round_half_away(v * 1e6).astype(np.int64)
             # overflow guard: a prod cell is bounded by B * qmax^2; keep
             # it under 2^62 so the int64 matmul cannot silently wrap
             # (|x| ~ 30 at a full 10k-row Arrow batch is the ceiling)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from metevents_spark.io import load_table
+from metevents_spark.numeric import round_half_away
 from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.similarity.knn import cosine_pairs
 
@@ -74,23 +75,9 @@ def _int_assign_udf(svec: np.ndarray):
 
 
 def _quantize_units(m: np.ndarray) -> np.ndarray:
-    """Integer micro-units with round-half-away-from-zero — the same
-    quantization ROUND(x*1e6) produces in Spark SQL and DuckDB, so any
-    engine rebuilds the identical int64 matrix.
-
-    r12 fix: negatives must CEIL(s - 0.5), not FLOOR(s - 0.5) — the
-    r11 floor form shifted EVERY negative non-half value one unit
-    down (floor(-154694.36 - 0.5) = -154695; half-away is -154694),
-    so the 'engine-exact' training state silently disagreed with the
-    SQL replay's ROUND on ~half of all entries. knn_ivf stayed
-    hash-green only because cell argmax and the raw-vector cosine
-    ranking are robust to 1-unit sum noise; the kmeans_embeddings
-    oracle (which divides the sums out as centroids) exposed it.
-    Same form as random_projection's quantizer (knn.py)."""
-    s = m * 1e6
-    return np.where(
-        s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5)
-    ).astype(np.int64)
+    """Integer micro-units, ``ROUND(x*1e6)`` as Spark SQL and DuckDB
+    compute it, so any engine rebuilds the identical int64 matrix."""
+    return round_half_away(m * 1e6).astype(np.int64)
 
 
 def _int_scores(mi: np.ndarray, svec: np.ndarray) -> np.ndarray:

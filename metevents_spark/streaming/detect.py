@@ -43,6 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metevents_spark.numeric import holt_fold, round_half_away
 from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.operators.storms import storm_find_numpy
 
@@ -611,30 +612,17 @@ HOLT_STATE_SCHEMA = StructType(
 
 
 def _holt_step(key, state, rows, alpha: float, beta: float):
-    """Holt double-exponential step: fold the rows through the
-    two-state level/trend recurrence
-
-        l_t = a*x_t + (1-a)*(l_{t-1} + b_{t-1})
-        b_t = B*(l_t - l_{t-1}) + (1-B)*b_{t-1}
-
-    seeded l_0 = x_0, b_0 = 0 — exactly the batch ``holt_smooth``
-    recursion, so batch/stream parity is a row-for-row equality and
-    the verdict on a point never depends on how the stream was
-    chunked (the carried state IS the whole history)."""
-    l, b = state if state is not None else (None, None)
+    """Holt step: fold the rows through
+    :func:`metevents_spark.numeric.holt_fold` from the carried (level,
+    trend) and round like the batch ``holt_smooth``, so batch/stream
+    parity is a row-for-row equality and the verdict on a point never
+    depends on how the stream was chunked (the carried state IS the
+    whole history)."""
     v = rows["value"].to_numpy(dtype=np.float64)
-    lv = np.empty(len(v))
-    tr = np.empty(len(v))
-    for i, x in enumerate(v.tolist()):
-        if l is None:
-            l, b = x, 0.0
-        else:
-            prev = l
-            l = alpha * x + (1.0 - alpha) * (l + b)
-            b = beta * (l - prev) + (1.0 - beta) * b
-        lv[i] = l
-        tr[i] = b
-    return (rows["sid"], rows["ts"], v, np.round(lv, 6), np.round(tr, 6)), (l, b)
+    lv, tr, new_state = holt_fold(v, alpha, beta, state)
+    return (
+        rows["sid"], rows["ts"], v, round_half_away(lv, 6), round_half_away(tr, 6)
+    ), new_state
 
 
 def stream_holt(
@@ -643,11 +631,13 @@ def stream_holt(
     beta: float = 0.1,
 ) -> DataFrame:
     """Streaming Holt smoothing: the incremental counterpart of the
-    batch ``holt_smooth`` (operators/seriesstats.py). State per series
-    is TWO numbers (level, trend) — constant regardless of stream
-    length, no watermark needed. NULL/NaN values are filtered up front
-    like the other streaming detectors (the batch operator instead
-    emits carried state on dirty rows — the one documented divergence)."""
+    batch ``holt_smooth`` (operators/seriesstats.py), with the same
+    fold (``numeric.holt_fold``) and output rounding, so it emits
+    batch's rows exactly. State per series is TWO numbers (level,
+    trend) — constant regardless of stream length, no watermark
+    needed. NULL/NaN values are filtered up front like the other
+    streaming detectors (the batch operator instead emits carried state
+    on dirty rows — the one documented divergence)."""
     return keyed_fold(
         _clean_series(stream_df),
         ["sid"],

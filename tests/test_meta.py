@@ -73,3 +73,33 @@ def test_lint_flags_series_segments_outside_grouped(tmp_path):
     flagged = [int(n) for p in problems for n in re.findall(r":(\d+): SK1 ", p)]
     assert flagged == [1, 6, 7], problems
     assert not lint.lint_file(str(REPO / lint.SERIES_SPLITTER_HOME))
+
+
+def test_lint_flags_holt_and_half_away_copies_outside_numeric(tmp_path):
+    """The Holt trend step and the half-away rounding live only in
+    metevents_spark/numeric.py; a planted copy of either fails the gate,
+    while Spark's ``F.floor`` expression does not."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
+    lint = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(lint)
+    src = tmp_path / "copies.py"
+    src.write_text(
+        "import math\n"
+        "\n"
+        "import numpy as np\n"
+        "from pyspark.sql import functions as F\n"
+        "\n"
+        "\n"
+        "def step(x, l, b, prev, alpha, beta, v, col):\n"
+        "    b = beta * (l - prev) + (1.0 - beta) * b\n"
+        "    r = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)\n"
+        "    q = np.where(v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5))\n"
+        "    s = F.floor(col / 2.0 + 0.5)\n"
+        "    return b, r, q, s, 1 - beta\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): NU1 ", p)]
+    assert flagged == [8, 9, 10, 12], problems
+    assert not lint.lint_file(str(REPO / lint.NUMERIC_HOME))

@@ -5,6 +5,8 @@ resample/interpolation must satisfy its structural invariants.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 
@@ -163,9 +165,17 @@ def test_holt_beta_zero_equals_ewma(spark):
     assert (holt["trend"].fillna(0.0) == 0.0).all()
 
 
+def _sql_round6(v):
+    """SQL ROUND(v, 6) on a double: scale, round half away from zero,
+    divide."""
+    v *= 1e6
+    return (math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)) / 1e6
+
+
 def test_holt_matches_sequential_reference(spark):
     """The distributed fold (sid shuffle + sorted partitions + batch
-    carry) must equal a plain sequential loop over each series."""
+    carry) must equal a plain sequential loop over each series, rounded
+    like SQL ROUND(x, 6)."""
     from metevents_spark.io import series_frame
     from metevents_spark.operators.seriesstats import holt_smooth
 
@@ -183,8 +193,8 @@ def test_holt_matches_sequential_reference(spark):
         l = b = None
         for x in g["value"]:
             if pd.isna(x):
-                want_level.append(np.nan if l is None else round(l, 6))
-                want_trend.append(np.nan if b is None else round(b, 6))
+                want_level.append(np.nan if l is None else _sql_round6(l))
+                want_trend.append(np.nan if b is None else _sql_round6(b))
                 continue
             if l is None:
                 l, b = float(x), 0.0
@@ -192,8 +202,8 @@ def test_holt_matches_sequential_reference(spark):
                 prev = l
                 l = alpha * float(x) + (1 - alpha) * (l + b)
                 b = beta * (l - prev) + (1 - beta) * b
-            want_level.append(round(l, 6))
-            want_trend.append(round(b, 6))
+            want_level.append(_sql_round6(l))
+            want_trend.append(_sql_round6(b))
     assert len(got) == len(want_level)
     np.testing.assert_allclose(
         got["level"].to_numpy(dtype=float), np.array(want_level),

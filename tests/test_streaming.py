@@ -754,20 +754,27 @@ def test_stream_zscore_survives_null_and_nan_values(spark, stream_dir):
 
 @pytest.mark.parametrize("split", [7, 33, 60])
 def test_stream_holt_chunk_invariant_matches_batch(spark, stream_dir, split):
-    """Streaming Holt must equal the batch holt_smooth recursion row
-    for row, however the stream is chunked into micro-batches."""
+    """Streaming Holt must emit the batch holt_smooth rows exactly,
+    however the stream is chunked into micro-batches. Series 2 starts
+    at 49.6036855, a level Python's ``round`` takes to 49.603685 and
+    SQL ``ROUND`` to 49.603686."""
+    from metevents_spark.operators.seriesstats import holt_smooth
     from metevents_spark.streaming.detect import stream_holt
 
     rng = np.random.RandomState(7)
     values = list(rng.randn(60) * 3 + 50)
-    pdf = daily_rows(values)
+    pdf = pd.concat(
+        [daily_rows(values, sid="1"), daily_rows([49.6036855] + values[1:], sid="2")],
+        ignore_index=True,
+    )
+    day = pdf.groupby("sid").cumcount()
     Path(stream_dir, "holt_in").mkdir()
-    pdf.iloc[:split].to_parquet(
+    pdf[day < split].to_parquet(
         f"{stream_dir}/holt_in/c0.parquet", coerce_timestamps="us"
     )
     time.sleep(0.05)
-    if split < len(pdf):
-        pdf.iloc[split:].to_parquet(
+    if split < len(values):
+        pdf[day >= split].to_parquet(
             f"{stream_dir}/holt_in/c1.parquet", coerce_timestamps="us"
         )
 
@@ -790,25 +797,28 @@ def test_stream_holt_chunk_invariant_matches_batch(spark, stream_dir, split):
     got = (
         spark.sql(f"SELECT * FROM {name}")
         .toPandas()
-        .sort_values("ts")
+        .sort_values(["sid", "ts"])
         .reset_index(drop=True)
     )
 
-    # sequential batch reference (identical recursion)
-    l = b = None
-    want_l, want_b = [], []
-    for x in values:
-        if l is None:
-            l, b = float(x), 0.0
-        else:
-            prev = l
-            l = 0.3 * float(x) + 0.7 * (l + b)
-            b = 0.1 * (l - prev) + 0.9 * b
-        want_l.append(round(l, 6))
-        want_b.append(round(b, 6))
-    assert len(got) == len(values)
-    np.testing.assert_allclose(got["level"].to_numpy(), want_l, atol=1e-9)
-    np.testing.assert_allclose(got["trend"].to_numpy(), want_b, atol=1e-9)
+    events = pd.DataFrame({
+        "event_id": np.arange(len(pdf), dtype=np.int64),
+        "ts": pdf["ts"],
+        "user_id": pdf["sid"].astype(np.int64),
+        "value": pdf["value"],
+    })
+    Path(stream_dir, "batch").mkdir()
+    events.to_parquet(f"{stream_dir}/batch/events.parquet", coerce_timestamps="us")
+    want = (
+        holt_smooth(spark, f"{stream_dir}/batch", alpha=0.3, beta=0.1)
+        .toPandas()
+        .sort_values(["sid", "ts"])
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(want) == len(pdf)
+    assert got["level"][len(values)] == want["level"][len(values)] == 49.603686
+    for col in ["sid", "value", "level", "trend"]:
+        np.testing.assert_array_equal(got[col].to_numpy(), want[col].to_numpy())
 
 
 def test_stream_ohlc_matches_batch_bars(spark, stream_dir):

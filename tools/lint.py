@@ -22,7 +22,12 @@ Checks per file:
     state a bound those estimates cannot see;
   - ``series_segments`` is named only in ``operators/grouped.py``
     (SK1): per-series kernels go through ``map_series_kernel``, so a
-    second per-series mapInPandas path cannot return.
+    second per-series mapInPandas path cannot return;
+  - outside ``numeric.py``, no Holt trend step ``(1.0 - beta)`` and no
+    half-away rounding ``floor(<x> + 0.5)`` (math, numpy or bare;
+    Spark's ``F.floor`` builds an expression) (NU1): smoothers call
+    ``holt_fold`` and quantizers ``round_half_away``, so a drifting
+    copy cannot return.
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -183,6 +188,46 @@ def _series_splitter_uses(tree: ast.Module) -> list[int]:
     )
 
 
+NUMERIC_HOME = os.path.join("metevents_spark", "numeric.py")
+
+
+def _is_const(node: ast.AST, values: tuple) -> bool:
+    return isinstance(node, ast.Constant) and node.value in values
+
+
+def _numeric_copies(tree: ast.Module) -> list[int]:
+    """Lines of a ``1.0 - beta`` or of a ``floor(<x> + 0.5)`` call that
+    is not ``F.floor`` / ``functions.floor``."""
+    lines = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Sub)
+            and _is_const(node.left, (1, 1.0))
+            and isinstance(node.right, ast.Name)
+            and node.right.id == "beta"
+        ):
+            lines.add(node.lineno)
+        elif isinstance(node, ast.Call) and node.args:
+            fn, arg = node.func, node.args[0]
+            floor = (isinstance(fn, ast.Name) and fn.id == "floor") or (
+                isinstance(fn, ast.Attribute)
+                and fn.attr == "floor"
+                and not (
+                    isinstance(fn.value, ast.Name)
+                    and fn.value.id in ("F", "functions")
+                )
+            )
+            if (
+                floor
+                and isinstance(arg, ast.BinOp)
+                and isinstance(arg.op, ast.Add)
+                and (_is_const(arg.left, (0.5,)) or _is_const(arg.right, (0.5,)))
+            ):
+                lines.add(node.lineno)
+    return sorted(lines)
+
+
 def lint_file(path: str) -> list[str]:
     rel = os.path.relpath(path, ROOT)
     src = open(path, encoding="utf-8").read()
@@ -227,6 +272,12 @@ def lint_file(path: str) -> list[str]:
             problems.append(
                 f"{rel}:{ln}: SK1 {SERIES_SPLITTER} outside "
                 f"{SERIES_SPLITTER_HOME}; use map_series_kernel"
+            )
+    if rel != NUMERIC_HOME:
+        for ln in _numeric_copies(tree):
+            problems.append(
+                f"{rel}:{ln}: NU1 Holt step or half-away rounding outside "
+                f"{NUMERIC_HOME}; use holt_fold / round_half_away"
             )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
         for ln, name in _unused_imports(tree, src):
