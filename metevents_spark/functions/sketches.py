@@ -8,18 +8,38 @@ hash mapped to (0, 1]. With an md5-derived hash both engines compute
 the identical estimate, so the sketch itself is oracle-checkable —
 the published Bar-Yossef et al. / DataSketches theta-sketch family's
 simplest member.
+
+It is also the home of the engine's 60-bit md5 hash grid, :func:`h60`:
+samplers, sketches, bootstrap weights and MinHash/SimHash token hashes
+all parse their md5 hex through it (lint rule HG1 keeps other copies
+out of the package).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metevents_spark.io import load_table
 
-_2_60 = 1152921504606846976  # 2^60: md5 15-hex-digit prefix range
+TWO60 = 2.0**60  # the range of h60 (exactly representable)
+
+
+def h60(hex_digest: Column | str) -> Column:
+    """The 60-bit hash grid: the first 15 hex digits of an md5 digest
+    parsed as a BIGINT in [0, 2^60), the same number as DuckDB's
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT`` and Python's
+    ``int(md5(s).hexdigest()[:15], 16)``, so every engine replays a
+    hash-derived sample or sketch exactly."""
+    return F.conv(F.substring(hex_digest, 1, 15), 16, 10).cast("long")
+
+
+def h60_sql(hex_sql: str) -> str:
+    """:func:`h60` as Spark SQL text, for an expression built as one
+    SQL string."""
+    return f"CAST(conv(substring({hex_sql}, 1, 15), 16, 10) AS BIGINT)"
 
 
 def _kmv_candidates(hashed: DataFrame, k: int) -> DataFrame:
@@ -67,11 +87,7 @@ def user_reach_kmv(
     """
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"),
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long").alias("h"),
+        h60(F.md5(F.col("user_id").cast("string"))).alias("h"),
     )
     cand = (
         _kmv_candidates(ev, k)
@@ -97,7 +113,7 @@ def user_reach_kmv(
     est = F.when(
         F.col("n_cand") >= k,
         F.lit(float(k - 1))
-        * F.lit(float(_2_60))
+        * F.lit(TWO60)
         / (F.col("h") + F.lit(1)).cast("double"),
     ).otherwise(F.col("n_cand").cast("double"))
     return (

@@ -223,12 +223,13 @@ def ewma_smooth(
     import numpy as np
     import pandas as pd
 
+    from metevents_spark.numeric import round_half_away
     from metevents_spark.operators.grouped import map_series_kernel
 
     def kernel(sid, ts, vals):
         ew = pd.Series(vals).ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
         sids = np.full(len(ts), sid, dtype=object)
-        return sids, ts, vals, np.round(ew.to_numpy(), 6)
+        return sids, ts, vals, round_half_away(ew.to_numpy(), 6)
 
     return map_series_kernel(
         series_frame(spark, sf_dir),

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metevents_spark.functions.sketches import h60
 from metevents_spark.io import load_table, local_frame
 from metevents_spark.timeutil import epoch_us
 
@@ -928,24 +929,18 @@ def conversion_bootstrap_ci(
             F.sequence(F.lit(0), F.lit(n_replicates - 1))
         ).alias("rep"),
     )
-    h60 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"),
-                    F.lit(":"),
-                    F.col("rep").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = h60(
+        F.md5(
+            F.concat(
+                F.col("user_id").cast("string"),
+                F.lit(":"),
+                F.col("rep").cast("string"),
+            )
+        )
+    )
     wt = F.lit(9)
     for k in range(len(_POISSON1_CUM60) - 1, -1, -1):
-        wt = F.when(h60 < F.lit(_POISSON1_CUM60[k]), F.lit(k)).otherwise(wt)
+        wt = F.when(h < F.lit(_POISSON1_CUM60[k]), F.lit(k)).otherwise(wt)
     per_rep = (
         expl.select("rep", "conv", wt.cast("long").alias("wt"))
         .groupBy("rep")

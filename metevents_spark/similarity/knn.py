@@ -200,7 +200,7 @@ def cosine_pairs(
         cand = sims >= threshold - 1e-6
         cand &= np.arange(j1) < np.arange(j0, j1)[:, None]
         rj, ci = np.nonzero(cand)
-        cos = np.round(sims[rj, ci], 6)
+        cos = round_half_away(sims[rj, ci], 6)
         keep = cos >= threshold
         parts.append((ci[keep], rj[keep] + j0, cos[keep]))
     i, j, cos = (np.concatenate(p) for p in zip(*parts))

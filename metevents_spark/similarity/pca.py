@@ -285,7 +285,7 @@ def pca_embeddings(
             if not len(pdf):
                 continue
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            proj = np.round((x - mean) @ comps.T, 6)
+            proj = round_half_away((x - mean) @ comps.T, 6)
             out = {
                 "vec_id": pdf["vec_id"].astype("int64"),
                 "label": pdf["label"].astype("int32"),
@@ -330,7 +330,7 @@ def embedding_whitening(
             if not len(pdf):
                 continue
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            z = np.round(((x - mean) @ comps.T) * scale, 6)
+            z = round_half_away(((x - mean) @ comps.T) * scale, 6)
             out = {
                 "vec_id": pdf["vec_id"].astype("int64"),
                 "label": pdf["label"].astype("int32"),

@@ -11,7 +11,6 @@ from metevents_spark.streaming.detect import (  # noqa: F401
     stream_dedup,
     stream_sessions,
     stream_storm_find,
-    stream_storm_find_tws,
     stream_time_weighted,
     stream_zscore,
 )

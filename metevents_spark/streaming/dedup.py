@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metevents_spark.functions.sketches import h60
 from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.similarity.knn import cosine_pairs
 from metevents_spark.text.dedup import band_buckets
@@ -126,9 +127,7 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
             # per slice)
             F.transform(shingles, lambda s: F.md5(s)),
             lambda h: F.struct(
-                F.conv(F.substring(h, 1, 15), 16, 10)
-                .cast("long")
-                .alias("h1"),
+                h60(h).alias("h1"),
                 F.conv(F.substring(h, 17, 8), 16, 10)
                 .cast("long")
                 .alias("h2"),

@@ -270,10 +270,10 @@ def _advance_storm_buffer(
     max_storm_hours: float,
     tstep_us: int | None,
 ):
-    """Storm step shared by BOTH stateful APIs (applyInPandasWithState
-    and transformWithStateInPandas): merge the trigger's rows into the
-    buffered open suffix, run the batch kernel, emit the provably
-    closed storms, and trim the buffer past the last emitted stop.
+    """Storm step of :func:`stream_storm_find`: merge the trigger's rows
+    into the buffered open suffix, run the batch kernel, emit the
+    provably closed storms, and trim the buffer past the last emitted
+    stop.
     The state is the STORM_STATE_SCHEMA tuple (ts_us list, vals list,
     at_head flag)."""
     ts_buf, val_buf, at_head = state if state is not None else ([], [], 1)
@@ -345,90 +345,6 @@ def stream_storm_find(
     )
 
 
-def stream_storm_find_tws(
-    stream_df: DataFrame,
-    instant_mass_to_start: float = 0.1,
-    min_storm_total: float = 0.5,
-    hours_to_stop: float = 24,
-    max_storm_hours: float = 336,
-    tstep_us: int | None = None,
-) -> DataFrame:
-    """Storm detection on Spark 4's ``transformWithStateInPandas`` —
-    the forward-compatible stateful surface (SPARK-45939, the successor
-    to applyInPandasWithState). Same per-key step and emit-once
-    semantics as stream_storm_find; the buffer lives in a ValueState
-    backed by the RocksDB state store (the session must set
-    ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider — transformWithState requires it).
-
-    The transformWithState Python worker speaks a protobuf protocol to
-    the JVM; where ``google.protobuf`` is not installed the query
-    would die at runtime inside the worker, so this entry point falls
-    back to the applyInPandasWithState engine (identical per-key step,
-    state contents, and output schema — only the state-store surface
-    differs) with a warning rather than failing."""
-    import importlib.util
-    import warnings
-
-    params = dict(
-        instant_mass_to_start=instant_mass_to_start,
-        min_storm_total=min_storm_total,
-        hours_to_stop=hours_to_stop,
-        max_storm_hours=max_storm_hours,
-        tstep_us=tstep_us,
-    )
-    try:
-        have_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no parent 'google' package at all
-        have_protobuf = False
-    if not have_protobuf:
-        warnings.warn(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not installed; falling back to the applyInPandasWithState "
-            "storm engine (same semantics and output schema)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return stream_storm_find(stream_df, **params)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    step = partial(_advance_storm_buffer, **params)
-
-    class StormProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getValueState("storm_buf", STORM_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            frames, new_state = fold_chunks(
-                step,
-                key,
-                self._buf.get() if self._buf.exists() else None,
-                rows,
-                STORM_OUTPUT_SCHEMA.fields,
-            )
-            self._buf.update(new_state)
-            yield from frames
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.select(
-            F.col("sid"), F.col("ts"), F.col("value").cast("double")
-        )
-        .groupBy("sid")
-        .transformWithStateInPandas(
-            statefulProcessor=StormProcessor(),
-            outputStructType=STORM_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def stream_dedup(
     stream_df: DataFrame,
     key_cols: list[str] | None = None,
@@ -495,7 +411,9 @@ def _zscore_step(key, state, rows, z_thresh: float, min_n: int):
     ok = (n_prior >= min_n) & (sd > 0) & (np.abs(z) > z_thresh)
     if not ok.any():
         return None, new_state
-    return (rows["sid"][ok], rows["ts"][ok], v[ok], np.round(z[ok], 6)), new_state
+    return (
+        rows["sid"][ok], rows["ts"][ok], v[ok], round_half_away(z[ok], 6)
+    ), new_state
 
 
 def stream_zscore(
@@ -574,7 +492,7 @@ def _cusum_step(key, state, rows, h: float, min_n: int, slack: float = 0.5):
         return None, new_state
     return (
         rows["sid"][ok], rows["ts"][ok], v[ok],
-        np.round(s_pos[ok], 6), np.round(s_neg[ok], 6),
+        round_half_away(s_pos[ok], 6), round_half_away(s_neg[ok], 6),
     ), new_state
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metevents_spark.cache import fixpoint, sum_settled, track
+from metevents_spark.functions.sketches import h60, h60_sql
 from metevents_spark.io import load_table
 
 
@@ -216,7 +217,7 @@ def minhash_signatures(
         ).alias("s"),
     )
     hx = sh.select("doc_id", F.md5("s").alias("hx"))
-    h1 = F.conv(F.substring("hx", 1, 15), 16, 10).cast("long")
+    h1 = h60("hx")
     h2 = F.conv(F.substring("hx", 17, 8), 16, 10).cast("long")
     hashed = hx.select("doc_id", h1.alias("h1"), h2.alias("h2"))
     mins = ", ".join(f"min(h1 + {i} * h2)" for i in range(num_hashes))
@@ -236,11 +237,15 @@ def band_buckets(sig: str, num_hashes: int = 32, bands: int = 8) -> Column:
     """
     rows = num_hashes // bands
     structs = ", ".join(
-        f"struct({b} AS band, CAST(conv(substring(md5(concat_ws(',', "
-        + ", ".join(
-            f"CAST({sig}[{b * rows + r}] AS STRING)" for r in range(rows)
+        f"struct({b} AS band, "
+        + h60_sql(
+            "md5(concat_ws(',', "
+            + ", ".join(
+                f"CAST({sig}[{b * rows + r}] AS STRING)" for r in range(rows)
+            )
+            + "))"
         )
-        + ")), 1, 15), 16, 10) AS BIGINT) AS bucket)"
+        + " AS bucket)"
         for b in range(bands)
     )
     return F.expr(f"explode(array({structs}))")
@@ -570,10 +575,7 @@ def _simhash_frame(docs: DataFrame, nbits: int = 64) -> DataFrame:
     shift semantics match Java's arithmetic shift, and summing distinct
     powers of two — including the wrapping 1<<63 — equals the OR fold).
     """
-    htoks = F.transform(
-        F.split(F.col("text"), " "),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-    )
+    htoks = F.transform(F.split(F.col("text"), " "), lambda t: h60(F.md5(t)))
 
     # NOTE: a batch-flattened np.add.reduceat formulation was measured
     # 3x SLOWER at 500k docs (the (total_tokens, 64) int64 intermediate

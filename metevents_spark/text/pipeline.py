@@ -13,9 +13,10 @@ called for by the engine charter (SURVEY.md §8.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metevents_spark.functions.sketches import TWO60, h60
 from metevents_spark.io import load_table, local_frame
 
 
@@ -265,10 +266,7 @@ def importance_resample(
         (F.col("source") == target_source).alias("is_tgt"),
         F.explode(F.split(F.col("text"), " ")).alias("term"),
     )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5("term"), 1, 15), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    )
+    bucket = F.pmod(h60(F.md5("term")), F.lit(n_buckets))
     bt = toks.select("doc_id", "is_tgt", bucket.alias("b"))
     counts = bt.groupBy("b").agg(
         F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).alias("ct"),
@@ -312,9 +310,7 @@ def importance_resample(
     # g = -ln(-ln(u)); adding g to the weight and taking top-k IS
     # sampling w/o replacement with p ∝ exp(weight) (Gumbel-max
     # trick) — but reproducible everywhere
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.md5(F.col("doc_id").cast("string")))
     u = (h + 1) / F.lit(float((1 << 60) + 2))
     keyed = per_doc.select(
         "doc_id",
@@ -1246,6 +1242,17 @@ def shuffle_shards(
     ).orderBy("shard", "offset")
 
 
+def _es_key() -> Column:
+    """The Efraimidis-Spirakis key ``sample_key`` = -ln(u) / n_chars of
+    a document, u = (h60(md5(doc_id)) + 1) / 2^60 in (0, 1], rounded to
+    12 places to absorb libm ln() ulp differences between engines."""
+    u = (h60(F.md5(F.col("doc_id").cast("string"))) + F.lit(1)).cast(
+        "double"
+    ) / F.lit(TWO60)
+    key = F.round(-F.log(u) / F.col("n_chars").cast("double"), 12)
+    return key.alias("sample_key")
+
+
 def weighted_sample(
     spark: SparkSession, sf_dir: str, n: int = 100
 ) -> DataFrame:
@@ -1271,15 +1278,8 @@ def weighted_sample(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    h60 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    u = (h60 + F.lit(1)).cast("double") / F.lit(1152921504606846976.0)
-    key = F.round(-F.log(u) / F.col("n_chars").cast("double"), 12)
     return (
-        docs.select(
-            "doc_id", "source", "n_chars", key.alias("sample_key")
-        )
+        docs.select("doc_id", "source", "n_chars", _es_key())
         .orderBy("sample_key", "doc_id")
         .limit(n)
     )
@@ -1301,16 +1301,9 @@ def source_weighted_sample(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    h60 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    u = (h60 + F.lit(1)).cast("double") / F.lit(1152921504606846976.0)
-    key = F.round(-F.log(u) / F.col("n_chars").cast("double"), 12)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("source").orderBy("sample_key", "doc_id")
     return (
-        docs.select("doc_id", "source", "n_chars", key.alias("sample_key"))
+        docs.select("doc_id", "source", "n_chars", _es_key())
         .withColumn("rank_in_source", F.row_number().over(w).cast("long"))
         .filter(F.col("rank_in_source") <= per_source)
         .orderBy("source", "rank_in_source")

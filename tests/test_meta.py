@@ -7,12 +7,21 @@ must be clean.
 
 from __future__ import annotations
 
+import importlib.util
 import re
 import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+
+
+def _lint():
+    """tools/lint.py as a module."""
+    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
+    lint = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(lint)
+    return lint
 
 
 def test_lint_gate_clean():
@@ -29,11 +38,7 @@ def test_lint_gate_clean():
 def test_lint_flags_unannotated_broadcast_hints(tmp_path):
     """A join-strategy hint must state its reason in a ``# broadcast:``
     comment on its line or the line before; a bare one fails the gate."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
-    lint = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(lint)
+    lint = _lint()
     src = tmp_path / "hints.py"
     src.write_text(
         "from pyspark.sql import functions as F\n"
@@ -54,11 +59,7 @@ def test_lint_flags_unannotated_broadcast_hints(tmp_path):
 def test_lint_flags_series_segments_outside_grouped(tmp_path):
     """Per-series kernels go through ``map_series_kernel``: naming
     ``series_segments`` anywhere but operators/grouped.py fails the gate."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
-    lint = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(lint)
+    lint = _lint()
     src = tmp_path / "fork.py"
     src.write_text(
         "from metevents_spark.operators.grouped import series_segments\n"
@@ -79,11 +80,7 @@ def test_lint_flags_holt_and_half_away_copies_outside_numeric(tmp_path):
     """The Holt trend step and the half-away rounding live only in
     metevents_spark/numeric.py; a planted copy of either fails the gate,
     while Spark's ``F.floor`` expression does not."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("lint", REPO / "tools" / "lint.py")
-    lint = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(lint)
+    lint = _lint()
     src = tmp_path / "copies.py"
     src.write_text(
         "import math\n"
@@ -103,3 +100,51 @@ def test_lint_flags_holt_and_half_away_copies_outside_numeric(tmp_path):
     flagged = [int(n) for p in problems for n in re.findall(r":(\d+): NU1 ", p)]
     assert flagged == [8, 9, 10, 12], problems
     assert not lint.lint_file(str(REPO / lint.NUMERIC_HOME))
+
+
+def test_lint_flags_half_even_np_round_outside_numeric(tmp_path):
+    """6-place outputs round with ``round_half_away`` (SQL ``ROUND``);
+    a half-even ``np.round`` with places fails the gate, while a bare
+    ``np.round(x)``, Python's ``round`` and Spark's ``F.round`` do
+    not."""
+    lint = _lint()
+    src = tmp_path / "rounding.py"
+    src.write_text(
+        "import numpy\n"
+        "import numpy as np\n"
+        "from pyspark.sql import functions as F\n"
+        "\n"
+        "\n"
+        "def out(v, col):\n"
+        "    a = np.round(v, 6)\n"
+        "    b = numpy.round(v, decimals=6)\n"
+        "    c = np.around(v, 6)\n"
+        "    return a, b, c, np.round(v), round(v, 6), F.round(col, 6)\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): NU1 ", p)]
+    assert flagged == [7, 8, 9], problems
+
+
+def test_lint_flags_md5_hex_parse_outside_hash_grid_home(tmp_path):
+    """The 60-bit md5 hash grid is ``functions.sketches.h60``: a planted
+    ``conv(substring(<hex>, 1, 15), 16, 10)`` fails the gate, other hex
+    slices do not."""
+    lint = _lint()
+    src = tmp_path / "grid.py"
+    src.write_text(
+        "from pyspark.sql import functions as F\n"
+        "from pyspark.sql.functions import conv, substring\n"
+        "\n"
+        "\n"
+        "def keys(hx):\n"
+        "    a = F.conv(F.substring(F.md5(hx), 1, 15), 16, 10).cast('long')\n"
+        "    b = conv(substring(hx, 1, 15), 16, 10)\n"
+        "    c = F.conv(F.substring(hx, 17, 8), 16, 10)\n"
+        "    d = F.conv(F.substring(hx, 1, 2), 16, 10)\n"
+        "    return a, b, c, d\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): HG1 ", p)]
+    assert flagged == [6, 7], problems
+    assert not lint.lint_file(str(REPO / lint.HASH_GRID_HOME))

@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from tests.conftest import SF_SMALL
 
@@ -80,20 +81,22 @@ def test_kendall_sampled_long_monotonic_series(spark, tmp_path):
     assert row["kendall_tau"] > 0.95, row
 
 
-def test_sampled_is_identity_below_cap(spark, tmp_path):
+@pytest.mark.parametrize("estimator", ["theilsen", "kendall"])
+def test_sampled_is_identity_below_cap(spark, tmp_path, estimator):
     """The length gate: a series at or under the cap keeps EVERY point
-    (p >= 1 clears the 60-bit hash range), so sampled == exact."""
-    from metevents_spark.operators.rankstats import (
-        theilsen_trend,
-        theilsen_trend_sampled,
-    )
+    (p >= 1 clears the 60-bit hash range), so sampled == exact, and
+    at the cap itself too."""
+    from metevents_spark.operators import rankstats
 
+    exact_fn = getattr(rankstats, f"{estimator}_trend")
+    sampled_fn = getattr(rankstats, f"{estimator}_trend_sampled")
     _write_long_series(tmp_path, n=40)
-    exact = theilsen_trend(spark, str(tmp_path)).collect()
-    sampled = theilsen_trend_sampled(
-        spark, str(tmp_path), max_points_per_series=48
-    ).collect()
-    assert exact == sampled
+    exact = exact_fn(spark, str(tmp_path)).collect()
+    for cap in (40, 48):
+        sampled = sampled_fn(
+            spark, str(tmp_path), max_points_per_series=cap
+        ).collect()
+        assert exact == sampled, cap
     assert exact[0]["n_pairs"] == 40 * 39 // 2
 
 

@@ -23,6 +23,24 @@ def _h60(x) -> int:
     return int(hashlib.md5(str(x).encode()).hexdigest()[:15], 16)
 
 
+def test_h60_is_python_md5_prefix(spark):
+    """``functions.sketches.h60`` over Spark's md5 is the first 15 hex
+    digits of hashlib's md5 of the UTF-8 bytes, the grid the Python
+    replays here and ``similarity.knn._md5_planes`` compute."""
+    from pyspark.sql import functions as F
+
+    from metevents_spark.functions.sketches import TWO60 as GRID, h60
+
+    strs = ["", "0", "42", "7:13", "doc 1 2 3", "naïve café", "東京", "𝄞 ü"]
+    got = (
+        spark.createDataFrame([(s,) for s in strs], "s string")
+        .select("s", h60(F.md5("s")).alias("h"))
+        .collect()
+    )
+    assert {r["s"]: r["h"] for r in got} == {s: _h60(s) for s in strs}
+    assert GRID == TWO60 and all(0 <= r["h"] < TWO60 for r in got)
+
+
 def test_rolling_median_matches_pandas(spark):
     from metevents_spark.operators.seriesstats import rolling_median
 

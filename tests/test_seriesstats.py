@@ -66,6 +66,27 @@ def test_ewma_nan_carries_state(spark, tmp_path):
     assert got["ewma"].fillna(-1.0).tolist() == [10.0, 10.0, 15.0, 15.0, -1.0, 4.0]
 
 
+def test_ewma_rounds_half_away_like_sql_round(spark, tmp_path):
+    """The 6-place output rounds halves away from zero, as the DuckDB
+    oracle's ``round(x, 6)``: 10.0000025 is 10000002.5 micro-units, which
+    half-even ``np.round`` takes to 10.000002."""
+    from metevents_spark.operators.seriesstats import ewma_smooth
+
+    pd.DataFrame(
+        {
+            "user_id": [1, 1],
+            "event_id": [0, 1],
+            "ts": pd.to_datetime(["2024-01-01", "2024-01-02"]).astype(
+                "datetime64[us]"
+            ),
+            "value": [10.0000025, 10.0000025],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    got = ewma_smooth(spark, str(tmp_path), alpha=0.5).toPandas()
+    assert np.round(10.0000025, 6) == 10.000002
+    assert got["ewma"].tolist() == [10.000003, 10.000003]
+
+
 def test_gap_fill_invariants(spark):
     from metevents_spark.operators.resample import gap_fill_hourly
 

@@ -18,21 +18,13 @@ import pytest
 from pyspark.sql.types import StructType
 
 from metevents_spark.operators.storms import storm_find_numpy
-from metevents_spark.streaming import (
-    stream_sessions,
-    stream_storm_find,
-    stream_storm_find_tws,
-)
+from metevents_spark.streaming import stream_sessions, stream_storm_find
 from metevents_spark.streaming.detect import (
     CUSUM_OUTPUT_SCHEMA,
     ZSCORE_OUTPUT_SCHEMA,
     _cusum_step,
     _zscore_step,
     fold_chunks,
-)
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
 US = 1_000_000
@@ -73,13 +65,7 @@ def daily_rows(values, sid="s1", start=datetime(2023, 1, 1)):
     )
 
 
-# Without google.protobuf the TWS entry point falls back to the
-# applyInPandasWithState engine (same semantics), so the e2e assertion
-# runs either way; where protobuf exists it exercises the real
-# transformWithStateInPandas + RocksDB path.
-@pytest.mark.parametrize(
-    "api", ["apply_in_pandas_with_state", "transform_with_state"]
-)
+@pytest.mark.parametrize("api", ["apply_in_pandas_with_state"])
 def test_stream_storms_incremental(spark, stream_dir, api):
     # three storms separated by long dry gaps; chunk split mid-series
     values = (
@@ -98,34 +84,18 @@ def test_stream_storms_incremental(spark, stream_dir, api):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{stream_dir}/in")
     )
-    detector = (
-        stream_storm_find
-        if api == "apply_in_pandas_with_state"
-        else stream_storm_find_tws
-    )
-    out = detector(
+    out = stream_storm_find(
         stream, instant_mass_to_start=1.0, min_storm_total=2.0, hours_to_stop=24
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if api == "transform_with_state":
-        # transformWithState requires the RocksDB state store
-        spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-    try:
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(f"storms_out_{api}")
-            .option("checkpointLocation", f"{stream_dir}/ckpt_{api}")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(f"storms_out_{api}")
+        .option("checkpointLocation", f"{stream_dir}/ckpt_{api}")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
     got = [
         (r.start_us, r.stop_us, r.n_points, r.total)
         for r in spark.sql(
@@ -153,24 +123,6 @@ def test_stream_storms_incremental(spark, stream_dir, api):
     ]
     assert len(expected) >= 2  # sanity: the fixture closes >= 2 storms
     assert got == expected
-
-
-def test_tws_storm_plan_builds(spark, stream_dir):
-    """transformWithStateInPandas analysis is driver-side: the unresolved
-    plan must build and carry the output schema even where the protobuf
-    state protocol (needed only at execution) is unavailable."""
-    pdf = daily_rows([0, 2, 2, 0])
-    Path(stream_dir, "tws").mkdir()
-    pdf.to_parquet(f"{stream_dir}/tws/c0.parquet", coerce_timestamps="us")
-    stream = (
-        spark.readStream.schema("sid string, ts timestamp, value double")
-        .parquet(f"{stream_dir}/tws")
-    )
-    out = stream_storm_find_tws(stream, instant_mass_to_start=1.0)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "sid", "start_us", "stop_us", "n_points", "total",
-    ]
 
 
 def test_stream_sessions_counts(spark, stream_dir):

@@ -23,11 +23,15 @@ Checks per file:
   - ``series_segments`` is named only in ``operators/grouped.py``
     (SK1): per-series kernels go through ``map_series_kernel``, so a
     second per-series mapInPandas path cannot return;
-  - outside ``numeric.py``, no Holt trend step ``(1.0 - beta)`` and no
+  - outside ``numeric.py``, no Holt trend step ``(1.0 - beta)``, no
     half-away rounding ``floor(<x> + 0.5)`` (math, numpy or bare;
-    Spark's ``F.floor`` builds an expression) (NU1): smoothers call
-    ``holt_fold`` and quantizers ``round_half_away``, so a drifting
-    copy cannot return.
+    Spark's ``F.floor`` builds an expression) and no half-even
+    ``np.round(<x>, <places>)`` (NU1): smoothers call ``holt_fold`` and
+    quantizers and 6-place outputs ``round_half_away``, so a drifting
+    copy or a second rounding rule cannot return;
+  - outside ``functions/sketches.py``, no md5 hex parse
+    ``conv(substring(<hex>, 1, 15), 16, 10)`` (HG1): the 60-bit hash
+    grid is ``h60`` (``h60_sql`` as SQL text).
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -195,9 +199,22 @@ def _is_const(node: ast.AST, values: tuple) -> bool:
     return isinstance(node, ast.Constant) and node.value in values
 
 
+def _is_np_round(node: ast.Call) -> bool:
+    """``np.round`` / ``numpy.round`` with a places argument."""
+    fn = node.func
+    return (
+        isinstance(fn, ast.Attribute)
+        and fn.attr in ("round", "around")
+        and isinstance(fn.value, ast.Name)
+        and fn.value.id in ("np", "numpy")
+        and len(node.args) + len(node.keywords) >= 2
+    )
+
+
 def _numeric_copies(tree: ast.Module) -> list[int]:
-    """Lines of a ``1.0 - beta`` or of a ``floor(<x> + 0.5)`` call that
-    is not ``F.floor`` / ``functions.floor``."""
+    """Lines of a ``1.0 - beta``, of a ``floor(<x> + 0.5)`` call that
+    is not ``F.floor`` / ``functions.floor``, or of an ``np.round`` with
+    places."""
     lines = set()
     for node in ast.walk(tree):
         if (
@@ -207,6 +224,8 @@ def _numeric_copies(tree: ast.Module) -> list[int]:
             and isinstance(node.right, ast.Name)
             and node.right.id == "beta"
         ):
+            lines.add(node.lineno)
+        elif isinstance(node, ast.Call) and _is_np_round(node):
             lines.add(node.lineno)
         elif isinstance(node, ast.Call) and node.args:
             fn, arg = node.func, node.args[0]
@@ -226,6 +245,29 @@ def _numeric_copies(tree: ast.Module) -> list[int]:
             ):
                 lines.add(node.lineno)
     return sorted(lines)
+
+
+HASH_GRID_HOME = os.path.join("metevents_spark", "functions", "sketches.py")
+
+
+def _is_call_of(node: ast.AST, name: str, tail: tuple) -> bool:
+    """``name(<x>, *tail)`` or ``<obj>.name(<x>, *tail)`` with constant
+    ``tail``."""
+    fn = node.func if isinstance(node, ast.Call) else None
+    return (
+        (isinstance(fn, ast.Name) and fn.id == name)
+        or (isinstance(fn, ast.Attribute) and fn.attr == name)
+    ) and [getattr(a, "value", None) for a in node.args[1:]] == list(tail)
+
+
+def _hash_grid_copies(tree: ast.Module) -> list[int]:
+    """Lines of a ``conv(substring(<hex>, 1, 15), 16, 10)`` call."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if _is_call_of(node, "conv", (16, 10))
+        and _is_call_of(node.args[0], "substring", (1, 15))
+    )
 
 
 def lint_file(path: str) -> list[str]:
@@ -276,8 +318,14 @@ def lint_file(path: str) -> list[str]:
     if rel != NUMERIC_HOME:
         for ln in _numeric_copies(tree):
             problems.append(
-                f"{rel}:{ln}: NU1 Holt step or half-away rounding outside "
+                f"{rel}:{ln}: NU1 Holt step or rounding copy outside "
                 f"{NUMERIC_HOME}; use holt_fold / round_half_away"
+            )
+    if rel != HASH_GRID_HOME:
+        for ln in _hash_grid_copies(tree):
+            problems.append(
+                f"{rel}:{ln}: HG1 md5 hex parse outside {HASH_GRID_HOME}; "
+                "use h60 / h60_sql"
             )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
         for ln, name in _unused_imports(tree, src):

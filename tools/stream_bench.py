@@ -61,7 +61,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #  - windowed-aggregate kernels: state is per OPEN window and governed
 #    by watermark eviction — windows opening/closing swings bytes/key
 #    without any per-key leak (bounded by construction);
-#  - storm_find kernels: the per-sid point buffer holds the open
+#  - storm_find: the per-sid point buffer holds the open
 #    storm's points (detect.py), not a constant — a burst lighter than
 #    min_storm_total keeps its dry tail buffered until the next burst.
 O1_EXEMPT = {
@@ -73,7 +73,6 @@ O1_EXEMPT = {
     "value_quantiles",
     "drift",
     "storm_find",
-    "storm_find_tws",
 }
 
 
@@ -170,7 +169,6 @@ def main() -> None:
         stream_purchase_attribution,
         stream_sessions,
         stream_storm_find,
-        stream_storm_find_tws,
         stream_time_weighted,
         stream_value_quantiles,
         stream_zscore,
@@ -259,9 +257,6 @@ def main() -> None:
         "cusum": lambda: stream_cusum(ev_stream(*SERIES), h=5.0, min_n=30),
         "holt": lambda: stream_holt(ev_stream(*SERIES), alpha=0.3, beta=0.1),
         "storm_find": lambda: stream_storm_find(ev_stream(*SERIES)),
-        "storm_find_tws": lambda: stream_storm_find_tws(
-            ev_stream(*SERIES)
-        ),
         "counter_rate": lambda: stream_counter_rate(ev_stream(*SERIES)),
         "time_weighted": lambda: stream_time_weighted(ev_stream(*SERIES)),
         "burst_collapse": lambda: stream_burst_collapse(
