@@ -145,6 +145,7 @@ from metevents_spark.text.dedup import (
     ngram_jaccard_pairs,
     paragraph_dedup,
     remove_duplicate_spans,
+    SIG_EMPTY,
 )
 from metevents_spark.text.scrub import canonicalize_url, domain_stats, pii_redact
 from metevents_spark.text.stats import (
@@ -566,6 +567,12 @@ def _detector_sql(flag_cte: str, having: str = "") -> str:
         f'{_EVENT_AGG}{having_clause} ORDER BY sid, "start"'
     )
 
+
+# minhash_signatures' 32 slots: a slot over no shingle (a NULL text)
+# keeps the MIN identity SIG_EMPTY, as in the batch and stream paths
+_SIG_MINS = ", ".join(
+    f"COALESCE(MIN(h1 + {i} * h2), {SIG_EMPTY})" for i in range(32)
+)
 
 ORACLE_SQL: dict[str, str] = {
     "extreme_value": _detector_sql(
@@ -1745,7 +1752,8 @@ agg AS (
 )
 SELECT t.doc_id, CAST(len(t.t) AS BIGINT) AS n_tokens,
        CAST(len(t.t) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-       COALESCE(a.clean_text, '') AS clean_text
+       CASE WHEN t.t IS NOT NULL THEN COALESCE(a.clean_text, '') END
+         AS clean_text
 FROM toks t LEFT JOIN agg a USING (doc_id)
 ORDER BY t.doc_id
 """,
@@ -2596,7 +2604,7 @@ WITH grp AS (
 )
 SELECT doc_a, doc_b, hamming FROM expanded ORDER BY doc_a, doc_b
 """,
-    "minhash_near_dup": """
+    "minhash_near_dup": f"""
 WITH grp AS (
   SELECT doc_id, text,
          MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep_id
@@ -2619,38 +2627,7 @@ WITH grp AS (
   FROM sh
 ), sig AS (
   SELECT doc_id,
-         [MIN(h1 + 0 * h2),
-         MIN(h1 + 1 * h2),
-         MIN(h1 + 2 * h2),
-         MIN(h1 + 3 * h2),
-         MIN(h1 + 4 * h2),
-         MIN(h1 + 5 * h2),
-         MIN(h1 + 6 * h2),
-         MIN(h1 + 7 * h2),
-         MIN(h1 + 8 * h2),
-         MIN(h1 + 9 * h2),
-         MIN(h1 + 10 * h2),
-         MIN(h1 + 11 * h2),
-         MIN(h1 + 12 * h2),
-         MIN(h1 + 13 * h2),
-         MIN(h1 + 14 * h2),
-         MIN(h1 + 15 * h2),
-         MIN(h1 + 16 * h2),
-         MIN(h1 + 17 * h2),
-         MIN(h1 + 18 * h2),
-         MIN(h1 + 19 * h2),
-         MIN(h1 + 20 * h2),
-         MIN(h1 + 21 * h2),
-         MIN(h1 + 22 * h2),
-         MIN(h1 + 23 * h2),
-         MIN(h1 + 24 * h2),
-         MIN(h1 + 25 * h2),
-         MIN(h1 + 26 * h2),
-         MIN(h1 + 27 * h2),
-         MIN(h1 + 28 * h2),
-         MIN(h1 + 29 * h2),
-         MIN(h1 + 30 * h2),
-         MIN(h1 + 31 * h2)] AS sig
+         [{_SIG_MINS}] AS sig
   FROM h GROUP BY doc_id
 ), banded AS (
   SELECT doc_id, sig, band,
@@ -2683,7 +2660,7 @@ SELECT doc_a, doc_b, est_jaccard FROM expanded ORDER BY doc_a, doc_b
     # (UNION dedup bounds the recursion; near-dup components are tiny)
     # and the outer GROUP BY takes the min — the same fixpoint the
     # iterative Spark propagation converges to.
-    "dedup_clusters": """
+    "dedup_clusters": f"""
 WITH RECURSIVE grp AS (
   SELECT doc_id, text,
          MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep_id
@@ -2706,38 +2683,7 @@ WITH RECURSIVE grp AS (
   FROM sh
 ), sig AS (
   SELECT doc_id,
-         [MIN(h1 + 0 * h2),
-         MIN(h1 + 1 * h2),
-         MIN(h1 + 2 * h2),
-         MIN(h1 + 3 * h2),
-         MIN(h1 + 4 * h2),
-         MIN(h1 + 5 * h2),
-         MIN(h1 + 6 * h2),
-         MIN(h1 + 7 * h2),
-         MIN(h1 + 8 * h2),
-         MIN(h1 + 9 * h2),
-         MIN(h1 + 10 * h2),
-         MIN(h1 + 11 * h2),
-         MIN(h1 + 12 * h2),
-         MIN(h1 + 13 * h2),
-         MIN(h1 + 14 * h2),
-         MIN(h1 + 15 * h2),
-         MIN(h1 + 16 * h2),
-         MIN(h1 + 17 * h2),
-         MIN(h1 + 18 * h2),
-         MIN(h1 + 19 * h2),
-         MIN(h1 + 20 * h2),
-         MIN(h1 + 21 * h2),
-         MIN(h1 + 22 * h2),
-         MIN(h1 + 23 * h2),
-         MIN(h1 + 24 * h2),
-         MIN(h1 + 25 * h2),
-         MIN(h1 + 26 * h2),
-         MIN(h1 + 27 * h2),
-         MIN(h1 + 28 * h2),
-         MIN(h1 + 29 * h2),
-         MIN(h1 + 30 * h2),
-         MIN(h1 + 31 * h2)] AS sig
+         [{_SIG_MINS}] AS sig
   FROM h GROUP BY doc_id
 ), banded AS (
   SELECT doc_id, sig, band,
@@ -2923,7 +2869,7 @@ WITH g AS (
   FROM sh
 ), sig AS (
   SELECT doc_id, side,
-         [{", ".join(f"MIN(h1 + {i} * h2)" for i in range(32))}] AS sig
+         [{_SIG_MINS}] AS sig
   FROM h GROUP BY doc_id, side
 ), banded AS (
   SELECT doc_id, side, sig, band,
@@ -2995,9 +2941,10 @@ ratios AS (
   GROUP BY doc_id
 ), keyed AS (
   SELECT doc_id, n_tokens, log_ratio,
-         ROUND(log_ratio - ln(-ln(
+         ROUND(log_ratio - ln(-ln(LEAST(
            (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-            + 1) / 1152921504606846978.0)), 5) AS sel_key
+            + 1) / 1152921504606846978.0, 1 - pow(2, -53)))), 5)
+           AS sel_key
   FROM per_doc
 )
 SELECT CAST(row_number() OVER (ORDER BY sel_key DESC, doc_id) AS BIGINT)

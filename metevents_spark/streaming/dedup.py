@@ -57,10 +57,11 @@ from pyspark.sql.types import (
 from metevents_spark.functions.sketches import h60
 from metevents_spark.operators.grouped import columns_frame
 from metevents_spark.similarity.knn import cosine_pairs
-from metevents_spark.text.dedup import band_buckets
+from metevents_spark.text.dedup import SIG_EMPTY, band_buckets
+from metevents_spark.text.stats import token_ngrams
 
 PAIR_OUTPUT_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
-# SHARDED state (r13): the state key is hash(band, bucket) % n_shards,
+# SHARDED state: the state key is hash(band, bucket) % n_shards,
 # not (band, bucket) itself — see stream_minhash_dedup's docstring.
 # Parallel arrays as PACKED BINARY numpy buffers (int64/int32
 # little-endian): per accepted doc (doc_ids/doc_grp), per
@@ -92,7 +93,7 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
     groupBy-min for a single higher-order fold that needs no
     aggregation.
 
-    Shape matters here (the r12 stream-bench finding): the obvious
+    Shape matters here (a stream-bench finding): the obvious
     formulation — ``num_hashes`` separate ``array_min(zip_with(h1s,
     h2s, ...))`` columns — re-inlines the whole md5/conv expression
     tree into every one of the 32 mins, and Catalyst performs NO
@@ -106,16 +107,7 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
     shingle (~30x faster map side).
     """
     def _sig(toks):
-        # ``toks`` is a BOUND lambda variable, not the raw split
-        # expression: referencing the split inline from the shingle
-        # lambda body would re-split the full text per array element
-        # (O(len^2) per doc — the doc_containment lesson, same fix)
-        shingles = F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))
-            ),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        )
+        shingles = token_ngrams(toks, F.least(F.lit(k), F.size(toks)))
         # md5-derived K-M base hashes, IDENTICAL to the batch path
         # (text/dedup.py minhash_signatures): h1 = 60-bit / h2 = 32-bit
         # hex slices of one md5 per shingle — engine-portable, so
@@ -134,11 +126,11 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
             ),
         )
         # h1 < 2^60, h2 < 2^32, i < num_hashes: h1 + i*h2 stays far
-        # from the long boundary, and LONG_MAX as the identity is
-        # above any real g_i value
+        # from the long boundary, and the identity SIG_EMPTY is above
+        # any real g_i value (a NULL text, with no shingle, keeps it)
         return F.aggregate(
             pairs,
-            F.array_repeat(F.lit(2**63 - 1), num_hashes),
+            F.array_repeat(F.lit(SIG_EMPTY), num_hashes),
             lambda acc, x: F.transform(
                 acc,
                 lambda m, i: F.least(
@@ -148,9 +140,8 @@ def minhash_sig_col(text_col, k: int = 3, num_hashes: int = 32):
         )
 
     # transform-over-singleton-array binds the token array once per
-    # row (HOF *arguments* evaluate once; only lambda bodies run per
-    # element), keeping the whole signature a single map-side column
-    # expression
+    # row as a lambda variable, keeping the whole signature a single
+    # map-side column expression
     return F.transform(F.array(F.split(text_col, " ")), _sig)[0]
 
 
@@ -170,7 +161,7 @@ def stream_minhash_dedup(
     yields exactly the batch minhash_near_dup pair set (same sketch,
     same buckets, same estimate — pytest-pinned).
 
-    SHARDED STATE (r13, the stream-bench finding): the state key is
+    SHARDED STATE (a stream-bench finding): the state key is
     ``hash(band, bucket) % n_shards``, not (band, bucket). With
     per-bucket keys, every trigger paid the applyInPandasWithState
     per-group floor (~0.8 ms: one Arrow round trip + state

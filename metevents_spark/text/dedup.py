@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from metevents_spark.cache import fixpoint, sum_settled, track
 from metevents_spark.functions.sketches import h60, h60_sql
 from metevents_spark.io import load_table
+from metevents_spark.text.stats import token_ngrams
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,6 +175,10 @@ def _cap_hot_buckets(banded: DataFrame, cap: int, name: str) -> DataFrame:
     )
 
 
+# the MIN identity: a signature slot over no shingle at all
+SIG_EMPTY = 2**63 - 1
+
+
 def minhash_signatures(
     docs: DataFrame, k: int = 3, num_hashes: int = 32
 ) -> DataFrame:
@@ -202,25 +207,26 @@ def minhash_signatures(
     higher-order-function evaluation: measured 9.1s vs 4.8s for
     identical output on 50k docs. MIN is duplicate-insensitive, so no
     shingle dedup is needed.
+
+    A document shorter than ``k`` tokens is one whole-document shingle
+    (:func:`token_ngrams` at width ``least(k, size)``). A NULL text has
+    no shingle, so every slot holds the MIN identity ``SIG_EMPTY``, as
+    in the stream's fold (``streaming.dedup.minhash_sig_col``).
     """
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     sh = toks.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("toks") - (k - 1), F.lit(1)),
-                ),
-                lambda i: F.array_join(F.slice("toks", i, k), " "),
-            )
+        F.explode_outer(
+            token_ngrams("toks", F.least(F.lit(k), F.size("toks")))
         ).alias("s"),
     )
     hx = sh.select("doc_id", F.md5("s").alias("hx"))
     h1 = h60("hx")
     h2 = F.conv(F.substring("hx", 17, 8), 16, 10).cast("long")
     hashed = hx.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    mins = ", ".join(f"min(h1 + {i} * h2)" for i in range(num_hashes))
+    mins = ", ".join(
+        f"coalesce(min(h1 + {i} * h2), {SIG_EMPTY})" for i in range(num_hashes)
+    )
     sig = F.expr(f"array({mins})").alias("sig")
     return hashed.groupBy("doc_id").agg(sig)
 
@@ -295,7 +301,7 @@ def _minhash_rep_pairs(
     # of a dedup pipeline. PRE-PARTITIONED on the join key: the
     # InMemoryRelation retains this partitioning, so the self-join
     # consumes the cache in place — without it each side re-exchanged
-    # the full (sig-array-wide) frame (r13 x100 profile).
+    # the full (sig-array-wide) frame (seen in an x100 profile).
     banded = track(
         banded.repartition("band", "bucket")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -442,7 +448,7 @@ def incremental_dedup(
     )
 
     # near tier: signatures for batch-only reps vs reference reps.
-    # BOTH sides run through ONE signature pipeline (r13): the two
+    # BOTH sides run through ONE signature pipeline: separate
     # per-side pipelines each paid their own documents scan, shingle
     # explode and 32-min aggregate — identical total rows, twice the
     # stages and twice the text reads. The sides are disjoint doc_id
@@ -532,8 +538,8 @@ def ngram_jaccard_pairs(
     shuffle once per DISTINCT text, not per copy. The (id, bucket,
     token-set) frame is PERSISTED: it feeds both self-join sides, and
     unpersisted each side re-scanned the corpus and re-tokenized every
-    rep text (r13 2x-scan sweep; the signature-binding discipline the
-    minhash path already follows).
+    rep text (the signature-binding discipline the minhash path
+    already follows).
     """
     docs = load_table(spark, sf_dir, "documents")
     member_rep, reps = _exact_groups(docs)
@@ -898,16 +904,14 @@ def duplicate_spans(
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toked = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).filter(F.size("t") >= n)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("t") - (n - 1)),
-        lambda i: F.struct(
+    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
+    grams = token_ngrams(
+        "t",
+        n,
+        lambda w, i: F.struct(
             i.alias("pos"),
             F.struct(
-                F.xxhash64(F.slice("t", i, n)).alias("h1"),
-                F.xxhash64(F.slice("t", i, n), F.lit(1)).alias("h2"),
+                F.xxhash64(w).alias("h1"), F.xxhash64(w, F.lit(1)).alias("h2")
             ).alias("g"),
         ),
     )
@@ -1108,8 +1112,8 @@ def dedup_recall_report(
     sampled pairs — so the meter measures the deployed path (banding,
     hot-bucket caps, member expansion included), not a reimplementation.
 
-    Oracle-green since r12: the predicted side IS the
-    minhash_near_dup SQL replay (md5-derived signatures since r8)
+    Oracle-green: the predicted side IS the
+    minhash_near_dup SQL replay (md5-derived signatures)
     restricted to sampled pairs, and the ground truth is plain SQL —
     queries.ORACLE_SQL["dedup_recall_report"] value-hash-matches this
     frame. tests/test_round7_ops.py additionally recomputes the
@@ -1140,23 +1144,12 @@ def dedup_recall_report(
     # LAZY cache makes them RACE to fill it, each paying the full
     # TakeOrdered pass (measured 6.3 → 10.9 s warm before this count)
     picked.count()
-    # token array bound as a column (not inlined into the lambda):
-    # slice(split(text), i, k) in the lambda body would re-split the
-    # full text per array element — O(len^2) per doc (the
-    # doc_containment lesson; bounded here by the 200-doc sample but
-    # the same fix is free)
     shingled = picked.select(
         "doc_id", F.split("text", " ").alias("w")
     ).select(
         "doc_id",
         F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("w") - (k - 1), F.lit(1)),
-                ),
-                lambda i: F.array_join(F.slice("w", i, k), " "),
-            )
+            token_ngrams("w", F.least(F.lit(k), F.size("w")))
         ).alias("sh"),
     )
     a = shingled.select(
@@ -1264,7 +1257,7 @@ def doc_containment(
     and set sizes are exact integers; containment is emitted in integer
     ppm via floor division. No float op anywhere.
 
-    Scale shape (r13 rewrite, guide §2.3/§2.4): the per-doc distinct
+    Scale shape (guide §2.3/§2.4): the per-doc distinct
     shingle ARRAY is cached (not the exploded postings), so |S_A| is a
     map-side ``size(array)`` — the old groupBy(doc_id) re-aggregation
     of every posting is gone, one full exchange removed. Postings then
@@ -1287,29 +1280,14 @@ def doc_containment(
     docs = load_table(spark, sf_dir, "documents")
     # two consumers (set sizes, postings) — persist so the text
     # shingles ONCE; the frame is (doc_id, digest array) only, text
-    # itself never enters it.
-    # The token array is BOUND as a projected column: referencing it
-    # 3 times keeps CollapseProject from inlining the split back into
-    # the lambda body, where it would re-split the full text PER
-    # ARRAY ELEMENT — the O(len^2)-per-doc shape this replaced
-    # (measured 27.5 s of the 27 s x10 total in the shingle
-    # evaluation alone; 1.0 s after). Short docs (< n tokens) keep
-    # their empty shingle set via the explicit guard — sequence(0,
-    # negative) would DESCEND, not be empty.
+    # itself never enters it. Short docs (< n tokens) have an empty
+    # shingle set.
     words = docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     arrs = track(
         words.select(
             "doc_id",
             F.array_distinct(
-                F.when(
-                    F.size("w") >= n,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("w") - n),
-                        lambda i: F.md5(
-                            F.concat_ws(" ", F.slice("w", i + 1, n))
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
+                token_ngrams("w", n, lambda w, _: F.md5(F.array_join(w, " ")))
             ).alias("shs"),
         ).persist()
     )
@@ -1420,7 +1398,7 @@ def dedup_rate_by_source(
     digest partition (payloads never move — only 32-byte digests plus
     the source tag shuffle once), then one |sources|-sized aggregate.
     The earlier grouped-count/join-back shape scanned documents twice
-    and paid the digest exchange twice (r13 2x-scan sweep); the
+    and paid the digest exchange twice; the
     explicit ``dig IS NOT NULL`` filter reproduces that inner join's
     implicit null-key drop (NULL text => NULL digest), so the row set
     is identical. Scale-safe by the same argument as every digest-keyed

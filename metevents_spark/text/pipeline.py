@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from metevents_spark.functions.sketches import TWO60, h60
 from metevents_spark.io import load_table, local_frame
+from metevents_spark.text.stats import token_ngrams
 
 
 def decontaminate_ngram(
@@ -58,41 +59,19 @@ def decontaminate_ngram(
     )
 
 
-def _doc_ngrams(
-    docs: DataFrame, n: int, per_doc_distinct: bool = False
-) -> DataFrame:
-    """-> (doc_id, gram) exploded token n-grams, codegen-side.
-
-    The token array materializes ONCE per row: referencing split(text)
-    inside the transform lambda would re-split the document for every
-    n-gram position (no common-subexpression elimination across lambda
-    invocations), turning an O(len·n) expansion into O(len²·n). Docs
+def _doc_ngrams(docs: DataFrame, n: int) -> DataFrame:
+    """-> (doc_id, gram) exploded token n-grams, codegen-side; docs
     shorter than n contribute no rows.
 
-    ``per_doc_distinct`` dedupes grams per document MAP-SIDE
-    (array_distinct before the explode) — value-identical to a
-    corpus-wide ``.distinct()`` over (doc_id, gram) but without its
-    exchange. It is OPT-IN, not the default, because array_distinct
-    re-hashes every gram string per row, and for consumers whose
-    downstream already collapses duplicates cheaply (the decontaminate
-    pair's broadcast-join + tail-sized countDistinct) the measured net
-    at sf0.1 was a 1.5-2x REGRESSION (0.68 → 1.0 s decontaminate_ngram,
-    1.2 → 1.9 s decontaminate_bloom) — the dedup work exceeded the
-    explode-row savings. contamination_fraction, whose old plan paid a
-    full corpus (doc_id, gram) dedup exchange, is the consumer where
-    the trade wins (guide §1 measure-first, both directions recorded).
+    Grams are NOT deduped per document: for the decontaminate pair,
+    whose broadcast join and tail-sized countDistinct collapse
+    duplicates cheaply, a map-side array_distinct measured a 1.5-2x
+    regression at sf0.1 (0.68 → 1.0 s decontaminate_ngram, 1.2 →
+    1.9 s decontaminate_bloom). contamination_fraction, which needs
+    per-document distinct grams, applies array_distinct itself.
     """
     toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    garr = F.expr(
-        f"transform(sequence(0, size(t) - {n}),"
-        f" i -> array_join(slice(t, i + 1, {n}), ' '))"
-    )
-    if per_doc_distinct:
-        garr = F.array_distinct(garr)
-    grams = F.when(F.size("t") >= n, garr).otherwise(
-        F.array().cast("array<string>")
-    )
-    return toked.select("doc_id", F.explode(grams).alias("gram"))
+    return toked.select("doc_id", F.explode(token_ngrams("t", n)).alias("gram"))
 
 
 def build_bloom_words(
@@ -229,6 +208,25 @@ def decontaminate_bloom(
     )
 
 
+# the largest double below 1
+_U_BELOW_1 = 1.0 - 2.0**-53
+
+
+def _gumbel_key(weight: Column, h: Column) -> Column:
+    """importance_resample's Gumbel-top-k key, weight − ln(−ln u),
+    rounded to 5 places, with the uniform u = (h + 1) / 2^60 drawn from
+    a 60-bit hash ``h`` (well-mixed, engine-portable). Adding the
+    Gumbel noise to the weight and taking the top k IS sampling without
+    replacement with p ∝ exp(weight), reproducible everywhere.
+
+    In doubles (h + 1) / 2^60 is 1.0 for the top ~64 hashes, where
+    ln(−ln u) is NULL in Spark and an error in DuckDB, so u is clamped
+    to ``_U_BELOW_1`` (the oracle clamps the same way).
+    """
+    u = F.least((h + 1) / F.lit(TWO60), F.lit(_U_BELOW_1))
+    return F.round(weight - F.log(-F.log(u)), 5)
+
+
 def importance_resample(
     spark: SparkSession,
     sf_dir: str,
@@ -305,18 +303,12 @@ def importance_resample(
             F.round(F.sum("lr") / F.count(F.lit(1)), 5).alias("log_ratio"),
         )
     )
-    # Gumbel-top-k with hash-derandomized uniforms: u in (0,1) from a
-    # 60-bit md5 slice of the doc_id (well-mixed, engine-portable),
-    # g = -ln(-ln(u)); adding g to the weight and taking top-k IS
-    # sampling w/o replacement with p ∝ exp(weight) (Gumbel-max
-    # trick) — but reproducible everywhere
     h = h60(F.md5(F.col("doc_id").cast("string")))
-    u = (h + 1) / F.lit(float((1 << 60) + 2))
     keyed = per_doc.select(
         "doc_id",
         "n_tokens",
         "log_ratio",
-        F.round(F.col("log_ratio") - F.log(-F.log(u)), 5).alias("sel_key"),
+        _gumbel_key(F.col("log_ratio"), h).alias("sel_key"),
     )
     from pyspark.sql import Window
 
@@ -361,15 +353,7 @@ def boilerplate_phrases(
     toked = docs.select(
         "source", F.split(F.col("text"), " ").alias("t")
     )
-    grams = F.when(
-        F.size("t") >= n,
-        F.array_distinct(
-            F.expr(
-                f"transform(sequence(0, size(t) - {n}),"
-                f" i -> array_join(slice(t, i + 1, {n}), ' '))"
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(token_ngrams("t", n))
     df_tbl = (
         toked.select("source", F.explode(grams).alias("gram"))
         .groupBy("source", "gram")
@@ -426,18 +410,9 @@ def ngram_novelty(
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    garr = F.when(
-        F.size("t") >= n,
-        F.array_distinct(
-            F.expr(
-                f"transform(sequence(0, size(t) - {n}),"
-                f" i -> array_join(slice(t, i + 1, {n}), ' '))"
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     grams = toked.select(
         (F.col("doc_id") / shard_size).cast("long").alias("shard"),
-        F.explode(garr).alias("gram"),
+        F.explode(F.array_distinct(token_ngrams("t", n))).alias("gram"),
     )
     from pyspark.sql import Window
 
@@ -509,11 +484,13 @@ def contamination_fraction(
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # per-doc distinct happens MAP-SIDE (array_distinct before the
-    # explode), so the old corpus-wide .distinct() — a full
-    # (doc_id, gram) exchange — is gone; the only corpus-sized shuffle
-    # left is the |docs|-row rollup below, whose partial aggregation
-    # now collapses map-side (guide §2.4).
-    grams = _doc_ngrams(docs, n, per_doc_distinct=True)
+    # explode), so no corpus-wide (doc_id, gram) dedup exchange runs;
+    # the only corpus-sized shuffle is the |docs|-row rollup below,
+    # whose partial aggregation collapses map-side (guide §2.4).
+    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
+    grams = toked.select(
+        "doc_id", F.explode(F.array_distinct(token_ngrams("t", n))).alias("gram")
+    )
     eval_grams = (
         grams.filter(F.col("doc_id") % eval_mod == 0)
         .select("gram")
@@ -581,7 +558,7 @@ def sequence_pack(
     # the narrow (doc_id, source, n_tokens, bucket) frame is PERSISTED:
     # it feeds both the phase-1 local-prefix window and the phase-2
     # bucket-offset aggregate, and unpersisted each side re-scanned and
-    # re-TOKENIZED the full text column (r13 2x-scan sweep) — the cache
+    # re-TOKENIZED the full text column — the cache
     # holds ~32 bytes/row, never the text
     docs = track(
         load_table(spark, sf_dir, "documents")
@@ -785,19 +762,14 @@ def cross_doc_ngram_share(
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    grams = F.when(
-        F.size("t") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - n),
-                lambda i: F.struct(
-                    F.xxhash64(F.slice("t", i + 1, n)).alias("h1"),
-                    F.xxhash64(F.slice("t", i + 1, n), F.lit(1)).alias("h2"),
-                ),
-            )
+    grams = token_ngrams(
+        "t",
+        n,
+        lambda w, _: F.struct(
+            F.xxhash64(w).alias("h1"), F.xxhash64(w, F.lit(1)).alias("h2")
         ),
-    ).otherwise(F.array().cast("array<struct<h1:bigint,h2:bigint>>"))
-    exploded = toked.select("doc_id", F.explode(grams).alias("g"))
+    )
+    exploded = toked.select("doc_id", F.explode(F.array_distinct(grams)).alias("g"))
     per = exploded.withColumn(
         "nd", F.count(F.lit(1)).over(Window.partitionBy("g"))
     )

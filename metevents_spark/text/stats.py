@@ -9,7 +9,7 @@ engine-deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metevents_spark.io import load_table, local_frame
@@ -27,6 +27,27 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 def _tokens():
     return F.split(F.col("text"), " ")
+
+
+def token_ngrams(t, n, gram=lambda w, i: F.array_join(w, " ")) -> Column:
+    """The sliding n-token windows of the token array ``t``, as one
+    array column: ``gram(slice(t, i, n), i)`` for each window start
+    i = 1 … size(t) − n + 1, in order. The array is empty when
+    size(t) < n and when ``t`` is NULL. ``n`` is an int or a Column;
+    the MinHash shingles pass ``least(k, size(t))``, so a document
+    shorter than k tokens is one whole-document shingle.
+
+    ``t`` must be BOUND: a projected column name or a lambda variable,
+    never ``split(text)`` itself. Codegen does not CSE across lambda
+    invocations, so an inlined split re-splits the document once per
+    window, turning the O(len·n) expansion into O(len²) per document.
+    """
+    t = F.col(t) if isinstance(t, str) else t
+    windows = F.transform(
+        F.sequence(F.lit(1), F.size(t) - n + 1),
+        lambda i: gram(F.slice(t, i, n), i),
+    )
+    return F.when(F.size(t) >= n, windows).otherwise(F.array())
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,15 +369,9 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing and the final orderBy is the only exchange).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
+    toked = docs.select("doc_id", _tokens().alias("t"))
     with_grams = toked.filter(F.size("t") >= 2).select(
-        "doc_id",
-        F.array_sort(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat(t[i - 1], ' ', t[i]))"
-            )
-        ).alias("grams"),
+        "doc_id", F.array_sort(token_ngrams("t", 2)).alias("grams")
     )
     # fold over the sorted grams tracking (previous gram, current run
     # length, best run length); the best run IS the top 2-gram's count
@@ -524,8 +539,8 @@ def classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # Bind the token array, then the margin, each in its own
-    # projection: codegen does not CSE repeated references, so the
-    # pre-r13 inlined shape ran the whole hash-weight fold THREE times
+    # projection: codegen does not CSE repeated references, so an
+    # inlined shape runs the whole hash-weight fold THREE times
     # per row (margin output, keep predicate, and the n_tokens split
     # on top) — ~6 splits + 3 folds per document for a 4-column output.
     toked = docs.select("doc_id", _tokens().alias("_t"))
@@ -769,7 +784,7 @@ def gopher_quality(docs: DataFrame, min_words: int = GOPHER_MIN_WORDS) -> DataFr
     whole-stage codegen end-to-end, zero shuffles (callers aggregate
     or filter downstream). ``docs`` needs (doc_id, text); the word and
     line arrays are each split exactly ONCE per row, bound in their own
-    projection (r13: the inlined shape re-split per rule — 10 splits
+    projection (the inlined shape re-split per rule — 10 splits
     per row — because codegen does not CSE repeated split() references;
     binding measured 2.2x end-to-end on a split-dominated corpus).
 
@@ -778,7 +793,7 @@ def gopher_quality(docs: DataFrame, min_words: int = GOPHER_MIN_WORDS) -> DataFr
     round-6 rotation backlog clears.
     """
     # Bind both arrays ONCE in their own projection: codegen does not
-    # CSE repeated split() references, so the pre-r13 inlined shape
+    # CSE repeated split() references, so an inlined shape
     # re-split the document per rule family (7 word-array + 3
     # line-array references per row) — measured 2.2x end-to-end on a
     # split-dominated corpus. CollapseProject keeps the binding

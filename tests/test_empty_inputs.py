@@ -50,6 +50,11 @@ GRACEFUL = [
     "conversion_bootstrap_ci", "dedup_rate_by_source",
     # per-group top-k windows (WindowGroupLimit)
     "top_customers_per_segment", "stratified_sample",
+    # the token n-gram callers (text.stats.token_ngrams)
+    "incremental_dedup", "dedup_recall_report", "duplicate_spans",
+    "remove_duplicate_spans", "decontaminate_ngram",
+    "contamination_fraction", "boilerplate_phrases", "ngram_novelty",
+    "cross_doc_ngram_share", "repetition_stats",
 ]
 # undefined-on-empty by design: must raise ValueError with a message
 # that names the problem

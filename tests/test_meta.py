@@ -148,3 +148,35 @@ def test_lint_flags_md5_hex_parse_outside_hash_grid_home(tmp_path):
     flagged = [int(n) for p in problems for n in re.findall(r":(\d+): HG1 ", p)]
     assert flagged == [6, 7], problems
     assert not lint.lint_file(str(REPO / lint.HASH_GRID_HOME))
+
+
+def test_lint_flags_token_window_copies_outside_text_stats(tmp_path):
+    """Sliding token windows come from ``text.stats.token_ngrams``: a
+    planted ``transform`` over ``sequence`` whose body slices the token
+    array fails the gate, as Column calls and as SQL text, while a
+    window over single elements or a plain slice does not."""
+    lint = _lint()
+    src = tmp_path / "windows.py"
+    src.write_text(
+        "from pyspark.sql import functions as F\n"
+        "\n"
+        "\n"
+        "def grams(n):\n"
+        "    a = F.transform(\n"
+        "        F.sequence(F.lit(1), F.size('t') - (n - 1)),\n"
+        "        lambda i: F.array_join(F.slice('t', i, n), ' '),\n"
+        "    )\n"
+        "    b = F.expr(\n"
+        "        f'transform(sequence(0, size(t) - {n}),'\n"
+        "        f\" i -> array_join(slice(t, i + 1, {n}), ' '))\"\n"
+        "    )\n"
+        "    c = F.expr('transform(sequence(1, size(t)), i -> slice(t, i, 2))')\n"
+        "    d = F.expr('transform(sequence(1, size(t) - 1), i -> t[i])')\n"
+        "    e = F.transform(F.sequence(F.lit(1), F.size('t')), lambda i: i)\n"
+        "    f = F.slice('t', 1, n)\n"
+        "    return a, b, c, d, e, f\n"
+    )
+    problems = lint.lint_file(str(src))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): NG1 ", p)]
+    assert flagged == [5, 10, 13], problems
+    assert not lint.lint_file(str(REPO / lint.NGRAM_HOME))

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metevents_spark.text.dedup import (
+    SIG_EMPTY,
     _band_frame,
     band_buckets,
     minhash_signatures,
@@ -22,7 +23,8 @@ NUM_HASHES, BANDS = 32, 8
 
 
 def _reference_signatures(docs, k=3, num_hashes=NUM_HASHES):
-    """One MIN aggregate Column per hash function, then an array."""
+    """One MIN aggregate Column per hash function (SIG_EMPTY over no
+    shingle), then an array."""
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     sh = toks.select(
         "doc_id",
@@ -42,7 +44,9 @@ def _reference_signatures(docs, k=3, num_hashes=NUM_HASHES):
     hashed = hx.select("doc_id", h1.alias("h1"), h2.alias("h2"))
     agg = hashed.groupBy("doc_id").agg(
         *[
-            F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"m{i}")
+            F.coalesce(
+                F.min(F.col("h1") + F.lit(i) * F.col("h2")), F.lit(SIG_EMPTY)
+            ).alias(f"m{i}")
             for i in range(num_hashes)
         ]
     )

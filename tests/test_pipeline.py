@@ -135,3 +135,33 @@ def test_contamination_fraction_consistent_with_binary(spark):
     ).all()
     assert ((frac["contaminated_frac"] >= 0)
             & (frac["contaminated_frac"] <= 1)).all()
+
+
+def test_importance_resample_key_finite_at_top_hash(spark):
+    """u = (h + 1) / 2^60 is 1.0 in doubles for the top 60-bit hashes,
+    where ln(-ln u) is NULL in Spark and an error in DuckDB. Both
+    engines clamp u below 1, so h = 2^60 - 1 gets the same finite key;
+    the key expression is taken from the oracle SQL itself."""
+    import re
+
+    import duckdb
+
+    from metevents_spark.queries import ORACLE_SQL
+    from metevents_spark.text.pipeline import _gumbel_key
+
+    sql = ORACLE_SQL["importance_resample"]
+    key = re.search(r"(ROUND\(log_ratio.*?)\s+AS sel_key", sql, re.S).group(1)
+    hex_h = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
+    assert hex_h in key
+    for h in (0, 123456789012345678, 2**60 - 65, 2**60 - 1):
+        duck_sql = key.replace(hex_h, f"CAST({h} AS BIGINT)")
+        duck = duckdb.sql(
+            "SELECT " + duck_sql.replace("log_ratio", "0.25")
+        ).fetchone()[0]
+        got = (
+            spark.range(1)
+            .select(_gumbel_key(F.lit(0.25), F.lit(h)).alias("k"))
+            .first()
+            .k
+        )
+        assert got is not None and got == duck, (h, got, duck)

@@ -43,6 +43,31 @@ def test_map_side_signature_matches_batch(spark):
     assert batch == mapside
 
 
+def test_signatures_agree_on_short_and_null_texts(spark):
+    """A text shorter than k tokens is one whole-document shingle and a
+    NULL text has none: batch and stream give the same signature, and
+    for NULL it is the MIN identity in every slot."""
+    from pyspark.sql import functions as F
+
+    from metevents_spark.streaming.dedup import minhash_sig_col
+    from metevents_spark.text.dedup import SIG_EMPTY, minhash_signatures
+
+    texts = ["", "a", "a b", "a b c", "x y z w", None]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    batch = {r.doc_id: list(r.sig) for r in minhash_signatures(docs).collect()}
+    mapside = {
+        r.doc_id: list(r.sig)
+        for r in docs.select(
+            "doc_id", minhash_sig_col(F.col("text")).alias("sig")
+        ).collect()
+    }
+    assert batch == mapside
+    assert batch[5] == [SIG_EMPTY] * 32
+    assert all(SIG_EMPTY not in sig for d, sig in batch.items() if d != 5)
+
+
 def _run_stream(spark, stream_dir, n_chunks: int, name: str):
     from metevents_spark.streaming import stream_minhash_dedup
 

@@ -31,7 +31,11 @@ Checks per file:
     copy or a second rounding rule cannot return;
   - outside ``functions/sketches.py``, no md5 hex parse
     ``conv(substring(<hex>, 1, 15), 16, 10)`` (HG1): the 60-bit hash
-    grid is ``h60`` (``h60_sql`` as SQL text).
+    grid is ``h60`` (``h60_sql`` as SQL text);
+  - outside ``text/stats.py``, no sliding token-window expansion, a
+    ``transform`` over ``sequence`` whose body slices an array, as
+    Column calls or as SQL text (NG1): n-grams and shingles come from
+    ``token_ngrams``.
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -40,6 +44,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -250,14 +255,20 @@ def _numeric_copies(tree: ast.Module) -> list[int]:
 HASH_GRID_HOME = os.path.join("metevents_spark", "functions", "sketches.py")
 
 
+def _called(node: ast.AST, name: str) -> bool:
+    """``name(...)`` or ``<obj>.name(...)``."""
+    fn = node.func if isinstance(node, ast.Call) else None
+    return (isinstance(fn, ast.Name) and fn.id == name) or (
+        isinstance(fn, ast.Attribute) and fn.attr == name
+    )
+
+
 def _is_call_of(node: ast.AST, name: str, tail: tuple) -> bool:
     """``name(<x>, *tail)`` or ``<obj>.name(<x>, *tail)`` with constant
     ``tail``."""
-    fn = node.func if isinstance(node, ast.Call) else None
-    return (
-        (isinstance(fn, ast.Name) and fn.id == name)
-        or (isinstance(fn, ast.Attribute) and fn.attr == name)
-    ) and [getattr(a, "value", None) for a in node.args[1:]] == list(tail)
+    return _called(node, name) and [
+        getattr(a, "value", None) for a in node.args[1:]
+    ] == list(tail)
 
 
 def _hash_grid_copies(tree: ast.Module) -> list[int]:
@@ -268,6 +279,45 @@ def _hash_grid_copies(tree: ast.Module) -> list[int]:
         if _is_call_of(node, "conv", (16, 10))
         and _is_call_of(node.args[0], "substring", (1, 15))
     )
+
+
+NGRAM_HOME = os.path.join("metevents_spark", "text", "stats.py")
+WINDOW_SQL = re.compile(r"\btransform\s*\(\s*sequence\s*\(.*?\bslice\s*\(", re.S)
+
+
+def _token_window_copies(tree: ast.Module) -> list[int]:
+    """Lines of a ``transform(sequence(...), <body calling slice>)``
+    call, or of a string literal holding that shape as SQL text."""
+    parts = {
+        id(v)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.JoinedStr)
+        for v in node.values
+    }
+    lines = set()
+    for node in ast.walk(tree):
+        if (
+            _called(node, "transform")
+            and len(node.args) >= 2
+            and _called(node.args[0], "sequence")
+            and any(_called(n, "slice") for n in ast.walk(node.args[1]))
+        ):
+            lines.add(node.lineno)
+        elif isinstance(node, ast.JoinedStr):
+            text = "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+            if WINDOW_SQL.search(text):
+                lines.add(node.lineno)
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in parts
+            and WINDOW_SQL.search(node.value)
+        ):
+            lines.add(node.lineno)
+    return sorted(lines)
 
 
 def lint_file(path: str) -> list[str]:
@@ -326,6 +376,12 @@ def lint_file(path: str) -> list[str]:
             problems.append(
                 f"{rel}:{ln}: HG1 md5 hex parse outside {HASH_GRID_HOME}; "
                 "use h60 / h60_sql"
+            )
+    if rel != NGRAM_HOME:
+        for ln in _token_window_copies(tree):
+            problems.append(
+                f"{rel}:{ln}: NG1 sliding token-window expansion outside "
+                f"{NGRAM_HOME}; use token_ngrams"
             )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
         for ln, name in _unused_imports(tree, src):
