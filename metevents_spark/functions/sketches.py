@@ -18,11 +18,12 @@ out of the package).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metevents_spark.io import load_table
+from metevents_spark.operators.grouped import columns_frame
 
 TWO60 = 2.0**60  # the range of h60 (exactly representable)
 
@@ -43,34 +44,28 @@ def h60_sql(hex_sql: str) -> str:
 
 
 def _kmv_candidates(hashed: DataFrame, k: int) -> DataFrame:
-    """Map-side combine for the sketch: per Arrow batch, keep the k
-    smallest DISTINCT hashes per day. Output is (partitions x days x k)
-    rows — the global merge then works on a frame that no longer
-    scales with the corpus. This is exactly how a sketch aggregate's
-    partial/merge split works; the builtin approx_count_distinct does
-    the same dance with HLL registers.
+    """Map-side combine for the sketch: per partition, a fold over its
+    Arrow batches keeps the k smallest DISTINCT hashes per day. Output
+    is (partitions x days x k) rows — the global merge then works on a
+    frame that no longer scales with the corpus. This is exactly how a
+    sketch aggregate's partial/merge split works; the builtin
+    approx_count_distinct does the same dance with HLL registers.
     """
+    schema = "day timestamp_ntz, hs array<long>"
+    fields = StructType.fromDDL(schema).fields
 
     def partials(batches):
         best: dict = {}  # day -> np.ndarray of k smallest distinct
         for pdf in batches:
-            if not len(pdf):
-                continue
             for day, grp in pdf.groupby("day"):
                 h = grp["h"].to_numpy(dtype=np.int64)
                 prev = best.get(day)
                 allh = h if prev is None else np.concatenate([prev, h])
                 best[day] = np.unique(allh)[:k]  # sorted distinct, head k
         if best:
-            days = list(best)
-            yield pd.DataFrame(
-                {
-                    "day": pd.Series(days, dtype="datetime64[us]"),
-                    "hs": [best[d].tolist() for d in days],
-                }
-            )
+            yield columns_frame(fields, [(list(best), list(best.values()))])
 
-    return hashed.mapInPandas(partials, "day timestamp_ntz, hs array<long>")
+    return hashed.mapInPandas(partials, schema)
 
 
 def user_reach_kmv(

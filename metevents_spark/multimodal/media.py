@@ -1,8 +1,8 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with structured
-metadata, processed by Arrow-batched ``mapInPandas`` kernels — the
-Spark-side plumbing (schema, partitioning, batch shape) is real and
+metadata, processed by Arrow-batched ``grouped.map_batches`` kernels —
+the Spark-side plumbing (schema, partitioning, batch shape) is real and
 tested; the actual codec step is import-gated (PIL/av are not in this
 container) and falls back to a deterministic fake decoder so pipelines
 are exercisable end-to-end.
@@ -16,11 +16,12 @@ object-store references; either way the kernel signature is unchanged.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from metevents_spark.operators.grouped import columns_frame, map_batches
 
 
 def attach_fake_media(docs: DataFrame) -> DataFrame:
@@ -68,27 +69,23 @@ def _decode_fake(payload: bytes) -> tuple[int, int]:
 
 
 def media_features(media_df: DataFrame, use_real_codecs: bool = False) -> DataFrame:
-    """Per-payload features via mapInPandas: byte length, sha256, and
+    """Per-payload features via a batch kernel: byte length, sha256, and
     decoded dimensions (fake decoder unless real codecs requested)."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(pdf: pd.DataFrame):
         decode = _decode_real if use_real_codecs else _decode_fake
-        for pdf in batches:
-            payloads = pdf["media"].tolist()
-            dims = [decode(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pd.Series(
-                        [len(p) for p in payloads], dtype="int64"
-                    ),
-                    "sha256": [hashlib.sha256(p).hexdigest() for p in payloads],
-                    "width": pd.Series([d[0] for d in dims], dtype="int64"),
-                    "height": pd.Series([d[1] for d in dims], dtype="int64"),
-                }
-            )
+        payloads = pdf["media"].tolist()
+        dims = [decode(p) for p in payloads]
+        return (
+            pdf["doc_id"],
+            [len(p) for p in payloads],
+            [hashlib.sha256(p).hexdigest() for p in payloads],
+            [d[0] for d in dims],
+            [d[1] for d in dims],
+        )
 
-    return media_df.mapInPandas(
+    return map_batches(
+        media_df,
         extract,
         "doc_id long, n_bytes long, sha256 string, width long, height long",
     ).orderBy("doc_id")
@@ -102,31 +99,24 @@ def frame_sample(
     sampler would seek keyframes; the batch/explode plumbing is what
     scales)."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[int] = []
-            idxs: list[int] = []
-            frames: list[bytes] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                n = len(payload)
-                if n == 0:
-                    continue
-                step = max(n // n_frames, 1)
-                for k in range(min(n_frames, n)):
-                    off = k * step
-                    doc_ids.append(int(doc_id))
-                    idxs.append(k)
-                    frames.append(bytes(payload[off : off + frame_bytes]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame": frames,
-                }
-            )
+    def sample(pdf: pd.DataFrame):
+        doc_ids: list[int] = []
+        idxs: list[int] = []
+        frames: list[bytes] = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+            n = len(payload)
+            if n == 0:
+                continue
+            step = max(n // n_frames, 1)
+            for k in range(min(n_frames, n)):
+                off = k * step
+                doc_ids.append(int(doc_id))
+                idxs.append(k)
+                frames.append(bytes(payload[off : off + frame_bytes]))
+        return doc_ids, idxs, frames
 
-    return media_df.mapInPandas(
-        sample, "doc_id long, frame_idx long, frame binary"
+    return map_batches(
+        media_df, sample, "doc_id long, frame_idx long, frame binary"
     )
 
 
@@ -144,40 +134,30 @@ def media_resize(
     batch flow, and bounded output sizing either way, so the pipeline
     swaps to real codecs without a plan change."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize(pdf: pd.DataFrame):
         n_out = target_w * target_h
-        for pdf in batches:
-            out: list[bytes] = []
-            for payload in pdf["media"]:
-                if use_real_codecs:
-                    from metevents_spark.multimodal.codecs import (
-                        decode_image,
-                        encode_ppm,
-                        resize_nearest,
-                    )
+        out: list[bytes] = []
+        for payload in pdf["media"]:
+            if use_real_codecs:
+                from metevents_spark.multimodal.codecs import (
+                    decode_image,
+                    encode_ppm,
+                    resize_nearest,
+                )
 
-                    arr = decode_image(bytes(payload))
-                    out.append(
-                        encode_ppm(resize_nearest(arr, target_w, target_h))
-                    )
-                    continue
-                n = len(payload)
-                if n == 0:
-                    out.append(b"\x00" * n_out)
-                    continue
-                idx = [(k * n) // n_out for k in range(n_out)]
-                out.append(bytes(payload[i] for i in idx))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series([target_w] * len(pdf), dtype="int64"),
-                    "height": pd.Series([target_h] * len(pdf), dtype="int64"),
-                    "thumb": out,
-                }
-            )
+                arr = decode_image(bytes(payload))
+                out.append(encode_ppm(resize_nearest(arr, target_w, target_h)))
+                continue
+            n = len(payload)
+            if n == 0:
+                out.append(b"\x00" * n_out)
+                continue
+            idx = [(k * n) // n_out for k in range(n_out)]
+            out.append(bytes(payload[i] for i in idx))
+        return pdf["doc_id"], [target_w] * len(out), [target_h] * len(out), out
 
-    return media_df.mapInPandas(
-        resize, "doc_id long, width long, height long, thumb binary"
+    return map_batches(
+        media_df, resize, "doc_id long, width long, height long, thumb binary"
     )
 
 
@@ -228,27 +208,21 @@ def media_embed(media_df: DataFrame, dim: int = 64) -> DataFrame:
     so "near-dup" again means near-duplicate."""
     import numpy as np
 
-    def embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for payload in pdf["media"]:
-                h = _bigram_hist(bytes(payload), dim).astype(np.float64)
-                n = np.linalg.norm(h)
-                vecs.append((h / n if n else h).tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "vec": vecs,
-                }
-            )
+    def embed(pdf: pd.DataFrame):
+        vecs = []
+        for payload in pdf["media"]:
+            h = _bigram_hist(bytes(payload), dim).astype(np.float64)
+            n = np.linalg.norm(h)
+            vecs.append(h / n if n else h)
+        return pdf["doc_id"], vecs
 
-    return media_df.mapInPandas(embed, "doc_id long, vec array<double>")
+    return map_batches(media_df, embed, "doc_id long, vec array<double>")
 
 
 def _bigram_hist(payload: bytes, dim: int):
     """Integer bigram histogram of one payload — the shared kernel of
     :func:`media_embed` and the near-dup cell pipeline (int64 counts;
-    callers normalize). Kept as a per-payload numpy pass: an r14
+    callers normalize). Kept as a per-payload numpy pass: an
     attempt to vectorize it across the batch (one concatenated buffer
     + a single (row*dim + bin) bincount) was bit-identical but
     measured SLOWER in steady state (0.07-0.17 s vs 0.04-0.06 s per
@@ -269,7 +243,7 @@ def _embed_hist_cells(
 ) -> DataFrame:
     """(doc_id, h, c1..cp): per-payload integer bigram histogram as a
     PACKED int32 binary plus the grid-LSH cell coordinate per axis —
-    the near-dup pipeline's shuffle-lean embedding stage (r14).
+    the near-dup pipeline's shuffle-lean embedding stage.
 
     Why this exists (guide §2.3 / §8 "shuffle a proxy, not the
     payload"): the pair stage groups 2^p emitted copies of every
@@ -305,32 +279,23 @@ def _embed_hist_cells(
         f"{c} int" for c in ccols
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            hists = np.empty((n, dim), dtype=np.int64)
-            for i, payload in enumerate(pdf["media"]):
-                hists[i] = _bigram_hist(bytes(payload), dim)
-            hf = hists.astype(np.float64)
-            norms = np.sqrt((hf * hf).sum(axis=1))  # exact ints < 2^53
-            np.divide(hf, norms[:, None], out=hf, where=norms[:, None] > 0)
-            # sequential-order projections: cumsum == the JVM fold
-            cells = np.empty((p, n), dtype=np.int32)
-            for k in range(p):
-                proj = np.cumsum(hf * amat[k], axis=1)[:, -1]
-                cells[k] = np.floor(proj / w).astype(np.int32)
-            h32 = hists.astype("<i4")
-            out = {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "h": [h32[i].tobytes() for i in range(n)],
-            }
-            for k, c in enumerate(ccols):
-                out[c] = cells[k]
-            yield pd.DataFrame(out)
+    def kernel(pdf: pd.DataFrame):
+        n = len(pdf)
+        hists = np.empty((n, dim), dtype=np.int64)
+        for i, payload in enumerate(pdf["media"]):
+            hists[i] = _bigram_hist(bytes(payload), dim)
+        hf = hists.astype(np.float64)
+        norms = np.sqrt((hf * hf).sum(axis=1))  # exact ints < 2^53
+        np.divide(hf, norms[:, None], out=hf, where=norms[:, None] > 0)
+        # sequential-order projections: cumsum == the JVM fold
+        cells = np.empty((p, n), dtype=np.int32)
+        for k in range(p):
+            proj = np.cumsum(hf * amat[k], axis=1)[:, -1]
+            cells[k] = np.floor(proj / w).astype(np.int32)
+        h32 = hists.astype("<i4")
+        return (pdf["doc_id"], [row.tobytes() for row in h32], *cells)
 
-    return media_df.mapInPandas(kernel, schema)
+    return map_batches(media_df, kernel, schema)
 
 
 def _lcg_unit(seed: int, n: int) -> list[float]:
@@ -354,7 +319,7 @@ def _auto_projections(n_reps: int, base_density: int = 10_000) -> int:
     to p (recall is guaranteed by the cell width, not the axis count
     — pytest-pinned), so auto only shapes candidate work.
 
-    Measured honestly (r12, x10 replica): because the bigram
+    Measured honestly (x10 replica): because the bigram
     embeddings are CONCENTRATED, one extra axis divides hot-cell
     populations by only ~1/0.53 ≈ 1.9x (the dual-emission central
     band share — NOT the uniform-spread 1/w ≈ 3.3x an earlier
@@ -400,10 +365,10 @@ def media_embedding_near_dup(
     emission factor buys provable recall and exponentially-smaller
     quadratic blocks.
 
-    DENSITY KNOB (r11 knob, r12 auto default — closing the sf1 watch
-    item): the cell width is PINNED by the recall guarantee (w must
-    cover the threshold's L2 ball), so a denser corpus cannot shrink
-    cells — it raises ``n_projections`` instead: per-cell population
+    DENSITY KNOB (``"auto"`` by default): the cell width is PINNED by
+    the recall guarantee (w must cover the threshold's L2 ball), so a
+    denser corpus cannot shrink cells — it raises ``n_projections``
+    instead: per-cell population
     scales ~ density^(1) · w^p, so each extra axis divides expected
     block sizes by ~1/w (>3x at threshold 0.999) for a 2x emission
     cost. The 10x corpus sweep measured in-cell gram work creeping
@@ -425,7 +390,7 @@ def media_embedding_near_dup(
     A duplicate-heavy corpus — the norm for scraped media — therefore
     costs LSH work proportional to DISTINCT payloads, not total.
 
-    Oracle-green since r12: dropping the p-dependent block label
+    Oracle-green: dropping the p-dependent block label
     makes the output exactly the recall-guaranteed pair set, which a
     DuckDB replay reaches by blocking at p=1 over the SAME bigram
     embedding (queries.ORACLE_SQL["media_embedding_near_dup"] —
@@ -442,7 +407,6 @@ def media_embedding_near_dup(
 
     from metevents_spark.cache import track
     from metevents_spark.io import load_table
-    from metevents_spark.operators.grouped import columns_frame
     from metevents_spark.similarity.knn import cosine_pairs
     from metevents_spark.text.dedup import _expand_pairs
 
@@ -467,7 +431,7 @@ def media_embedding_near_dup(
     if n_projections == "auto":
         # one cheap count over the cached rep map — the blocking
         # density must be chosen from the DISTINCT-payload corpus
-        # size, not a fixed default (the r11 sf1 watch item: a fixed
+        # size, not a fixed default (the sf1 watch item: a fixed
         # p goes quadratic in the cells as the corpus grows)
         n_reps = member_rep.filter(
             F.col("doc_id") == F.col("rep_id")
@@ -480,7 +444,7 @@ def media_embedding_near_dup(
     axes = [_lcg_unit(i + 1, dim) for i in range(p)]
     bcols = [f"b{i + 1}" for i in range(p)]
 
-    # r14 (§2.3/§8): the embedding stage ships the packed INTEGER
+    # (§2.3/§8) the embedding stage ships the packed INTEGER
     # histogram plus the cell coordinates — not the float64 vector —
     # through the 2^p-amplified cell shuffle; the pair kernel
     # re-normalizes bit-identically (see _embed_hist_cells). The JVM
@@ -532,12 +496,11 @@ def media_embedding_near_dup(
         ids = pdf["doc_id"].to_numpy(dtype=np.int64)
         return columns_frame(fields, [(ids[i], ids[j], cos)])
 
-    # r12: the which-cell-found-it `block` label was DROPPED from the
-    # output. It was the one p-DEPENDENT column (the r12 auto density
-    # default picks p from corpus size, so labels would churn with
-    # scale), its fold aliased coordinates >= 100000, and the r11
-    # normalization had already silently relabeled historical output —
-    # the ADVICE finding. Without it the result is exactly the
+    # the which-cell-found-it `block` label is not in the output. It
+    # was the one p-DEPENDENT column (the auto density default picks p
+    # from corpus size, so labels would churn with scale), its fold
+    # aliased coordinates >= 100000, and a normalization change had
+    # already silently relabeled historical output. Without it the result is exactly the
     # recall-guaranteed pair set, invariant to p, which is what lets
     # this query carry a full DuckDB oracle (the replay blocks at p=1
     # and arrives at the same set).

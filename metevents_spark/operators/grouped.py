@@ -26,13 +26,16 @@ with the input's ``ts`` type, as the window detectors' events do. The
 seven callers: storm_find, spike_valley, lttb_downsample, ewma_smooth,
 holt_smooth, holt_backtest and model_select_backtest.
 
-``columns_frame`` is also the frame builder of the streaming kernels:
+Every Python-worker kernel returns columns under that contract, and
+none builds its own pandas frame. ``map_batches`` is the per-batch
+form: it runs a kernel once per non-empty Arrow batch of any frame
+(the text, media and similarity tiers' map-side passes).
 ``streaming.detect.keyed_fold`` parses its output schema on the driver
-and builds each step's columns with it, so batch and stream kernels
-share one output contract. The four embedding near-dup kernels
-(``embedding_near_dup``, ``semantic_dedup``,
-``media_embedding_near_dup``, ``stream_embedding_near_dup``) build
-their frames with it too.
+and builds each step's columns with ``columns_frame``, so batch and
+stream kernels share one output contract. The grouped-map kernels
+(the embedding near-dup sweeps) and the two per-partition folds
+(``pca._covariance_partials``, ``sketches._kmv_candidates``) call
+``columns_frame`` themselves.
 
 Output order: the kernel's rows leave in input partition order, and
 partitions follow sid order, so a caller that needs its output ordered
@@ -50,6 +53,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -63,12 +68,18 @@ from pyspark.sql.types import (
 
 from metevents_spark.operators.runs import range_by_sid
 
+#: kernel(batch) -> one array-like per output field, in schema order, or
+#: None / () for no output.
+BatchKernel = Callable[[pd.DataFrame], Sequence | None]
+
 #: kernel(sid, ts: datetime64[us] array, values: float64 array) -> one
 #: array-like per output field, in schema order.
 SeriesKernel = Callable[[str, np.ndarray, np.ndarray], Sequence]
 
 _PANDAS_DTYPES = {
     StringType: object,
+    BinaryType: object,
+    ArrayType: object,
     BooleanType: bool,
     LongType: "Int64",  # nullable: a streaming step may emit None
     IntegerType: "int32",
@@ -78,15 +89,26 @@ _PANDAS_DTYPES = {
 }
 
 
+def _part(values: Sequence, data_type, dtype) -> np.ndarray:
+    """One call's column as a 1-D array of ``dtype``. A ``binary`` or
+    ``array`` column holds one object per row: ``np.asarray`` would turn
+    equal-length rows into a 2-D matrix."""
+    if isinstance(data_type, (BinaryType, ArrayType)):
+        return np.fromiter(values, object)
+    return np.asarray(values, dtype)
+
+
 def columns_frame(
     fields: Sequence[StructField], outs: Sequence[Sequence]
 ) -> pd.DataFrame:
     """One frame of ``fields`` (a parsed schema) from ``outs``, which
     holds per kernel call one array-like per field, in field order.
     Each column is concatenated across the calls and built with its
-    field's pandas dtype: a ``long`` column may hold None, and a time
-    column takes datetime64 values or epoch micros. A call that returns
-    another number of columns raises ``ValueError``."""
+    field's pandas dtype: a ``long`` column may hold None, a time
+    column takes datetime64 values or epoch micros, and a ``binary`` or
+    ``array`` column holds one object per row (a 2-D matrix gives one
+    row array per row). A call that returns another number of columns
+    raises ``ValueError``."""
     for out in outs:
         if len(out) != len(fields):
             raise ValueError(
@@ -102,7 +124,7 @@ def columns_frame(
             parts = [np.asarray(o[i]) for o in outs]
             columns[f.name] = pd.array(np.concatenate(parts) if parts else (), dtype)
         else:
-            parts = [np.asarray(o[i], dtype) for o in outs]
+            parts = [_part(o[i], f.dataType, dtype) for o in outs]
             columns[f.name] = np.concatenate([np.asarray((), dtype), *parts])
     return pd.DataFrame(columns)
 
@@ -168,3 +190,21 @@ def map_series_kernel(
         for f in struct
         if isinstance(f.dataType, (TimestampType, TimestampNTZType))
     })
+
+
+def map_batches(
+    df: DataFrame, kernel: BatchKernel, schema: str | StructType
+) -> DataFrame:
+    """Apply ``kernel`` once per non-empty Arrow batch of ``df``. The
+    output has ``schema`` (a DDL string or StructType); each call's
+    columns become one frame through ``columns_frame``, and a call that
+    returns None or ``()`` emits nothing."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = kernel(pdf) if len(pdf) else None
+            if out is not None and len(out):
+                yield columns_frame(struct.fields, [out])
+
+    return df.mapInPandas(run, struct)

@@ -453,7 +453,7 @@ def q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: documents -> binary payloads -> mapInPandas
+    """Multimodal plumbing: documents -> binary payloads -> batch-kernel
     feature extraction (deterministic fake decoder)."""
     from metevents_spark.multimodal.media import media_pipeline
 
@@ -472,7 +472,7 @@ def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal resize shape: payload -> deterministic fixed-size
-    thumbnail via mapInPandas (stub resampler; real codecs slot in).
+    thumbnail via a batch kernel (stub resampler; real codecs slot in).
 
     The report projects the thumbnail as HEX so the byte values are
     driver-comparable (round-7 upgrade from rows-only: the operator
@@ -2834,6 +2834,7 @@ ORDER BY e.sid, "start"
     # instead of self-joined; best match = highest signature agreement,
     # ties to smallest reference doc_id. Sentinels (-1 / 0.0) instead
     # of NULLs keep the long/double dtypes identical across engines.
+    # The group joins are null-safe: NULL texts are one exact group.
     "incremental_dedup": f"""
 WITH g AS (
   SELECT doc_id, text, md5(text) AS gid, (doc_id % 5 = 0) AS is_batch
@@ -2845,7 +2846,7 @@ WITH g AS (
   FROM g GROUP BY gid
 ), exact AS (
   SELECT g.doc_id, 'exact' AS status, grp.ref_match AS match_id, 1.0 AS est
-  FROM g JOIN grp ON grp.gid = g.gid
+  FROM g JOIN grp ON grp.gid IS NOT DISTINCT FROM g.gid
   WHERE g.is_batch AND grp.ref_match IS NOT NULL
 ), reps AS (
   SELECT grp.batch_rep AS doc_id, dg.text, 'b' AS side
@@ -2892,12 +2893,12 @@ WITH g AS (
   FROM cand
 ), nearx AS (
   SELECT g.doc_id, 'near' AS status, best.m_id AS match_id, best.est
-  FROM g JOIN grp ON grp.gid = g.gid
+  FROM g JOIN grp ON grp.gid IS NOT DISTINCT FROM g.gid
   JOIN best ON best.b_rep = grp.batch_rep AND best.rn = 1
   WHERE g.is_batch AND grp.ref_match IS NULL
 ), newx AS (
   SELECT g.doc_id, 'new' AS status, -1 AS match_id, 0.0 AS est
-  FROM g JOIN grp ON grp.gid = g.gid
+  FROM g JOIN grp ON grp.gid IS NOT DISTINCT FROM g.gid
   WHERE g.is_batch AND grp.ref_match IS NULL
     AND NOT EXISTS (SELECT 1 FROM best WHERE best.b_rep = grp.batch_rep)
 )

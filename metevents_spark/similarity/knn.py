@@ -22,7 +22,7 @@ from pyspark.sql.types import StructType
 from metevents_spark.cache import track
 from metevents_spark.io import load_table, local_frame
 from metevents_spark.numeric import round_half_away
-from metevents_spark.operators.grouped import columns_frame
+from metevents_spark.operators.grouped import columns_frame, map_batches
 
 
 # Shared coarse-quantizer geometry for the IVF family. knn_ivf_pq and
@@ -295,7 +295,7 @@ def knn_ivf(
 
     The coarse quantizer is TRAINED: ``train_iters`` ENGINE-EXACT Lloyd
     rounds (semdedup.lloyd_state — integer micro-unit member sums, one
-    mapInPandas pass per round, k x dim driver state, seeded by the k
+    map_batches pass per round, k x dim driver state, seeded by the k
     lowest vec_ids). Untrained first-n vectors looked fine on this
     uniform synthetic corpus but skew cells badly on real (clustered)
     embedding distributions — most of the corpus lands in a few cells,
@@ -311,10 +311,15 @@ def knn_ivf(
     exact integer arithmetic plus fixed float expressions, the ENTIRE
     query replays in DuckDB SQL (ORACLE_SQL["knn_ivf"] regenerates the
     Lloyd rounds as chained CTEs) — hash-green driver rows for a
-    trained vector index (r11; was rows-only). Probe order ties break
+    trained vector index. Probe order ties break
     (score desc, cell asc) in both engines.
     """
-    from metevents_spark.similarity.semdedup import _int_scores, lloyd_state
+    from metevents_spark.similarity.semdedup import (
+        _int_assign_udf,
+        _int_scores,
+        _quantize_units,
+        lloyd_state,
+    )
 
     if emb is None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -323,14 +328,6 @@ def knn_ivf(
             emb.select("vec_id", "embedding"), n_cells, train_iters
         )
     svec, _cnt = state
-    from metevents_spark.similarity.semdedup import _quantize_units
-
-    @F.pandas_udf("int")
-    def nearest_cell(embs: pd.Series) -> pd.Series:
-        mi = _quantize_units(np.stack(embs.to_numpy()).astype(np.float64))
-        return pd.Series(
-            _int_scores(mi, svec).argmax(axis=1).astype(np.int32)
-        )
 
     @F.pandas_udf("array<int>")
     def probe_cells(embs: pd.Series) -> pd.Series:
@@ -349,7 +346,7 @@ def knn_ivf(
         _norm(_as_double(F.col("embedding"))).alias("v_norm"),
     )
     assigned = base.select(
-        "vec_id", "v", "v_norm", nearest_cell("embedding").alias("cell")
+        "vec_id", "v", "v_norm", _int_assign_udf(svec)("embedding").alias("cell")
     )
     queries = (
         base.filter(F.col("vec_id") < n_queries)
@@ -432,7 +429,7 @@ def knn_lsh(
     (queries x L x probes rows) broadcasts, and candidates dedupe
     on (q_id, vec_id) before ranking so multi-table hits count once.
 
-    ENGINE-PORTABLE hash family (r11, was seeded-RNG gaussians):
+    ENGINE-PORTABLE hash family (not seeded-RNG gaussians):
     hyperplane entries come from the 60-bit md5 grid
     (entry(r,d) = h60("{seed}:{r}:{d}") mod (2^21+1) − 2^20, a
     symmetric integer uniform — sign-LSH needs only symmetry around
@@ -558,7 +555,7 @@ def ann_recall_report(
     Lloyd on the driver — deterministic, but not SQL-replayable);
     restricted to ``("lsh", "ivf")`` every stage has a SQL form, so
     the registered ``ann_recall_lsh_ivf`` variant carries a full
-    DuckDB oracle (the r12 upgrade path: compose the knn_cosine /
+    DuckDB oracle (compose the knn_cosine /
     knn_lsh / knn_ivf replays with the confusion aggregate). pytest
     floors the recalls on the test corpus for all three.
     """
@@ -576,12 +573,6 @@ def ann_recall_report(
     state = lloyd_state(
         emb.select("vec_id", "embedding"), IVF_PQ_N_CELLS, IVF_TRAIN_ITERS
     )
-    cmat = None
-    if "pq" in methods:
-        cmat = state[0].astype(np.float64) / (
-            state[1].astype(np.float64)[:, None] * 1e6
-        )
-        cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
     # dropDuplicates guards the left-join accounting below: hits ==
     # overlap only if the exact side is unique per (q_id, vec_id).
     # knn_cosine's top-k already guarantees that today; this pins the
@@ -599,11 +590,7 @@ def ann_recall_report(
     for method, fn in (("lsh", knn_lsh), ("ivf", knn_ivf), ("pq", knn_ivf_pq)):
         if method not in methods:
             continue
-        extra = (
-            {}
-            if method == "lsh"
-            else ({"state": state} if method == "ivf" else {"cmat": cmat})
-        )
+        extra = {} if method == "lsh" else {"state": state}
         part = (
             fn(spark, sf_dir, k=k, emb=emb, **extra)
             .select("q_id", "vec_id")
@@ -723,7 +710,7 @@ def knn_ivf_pq(
     train_sample: int = 2048,
     rerank_factor: int = 8,
     emb: DataFrame | None = None,
-    cmat: np.ndarray | None = None,
+    state: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate top-k: the memory-bounded tier of the ANN
     family. The corpus index stores ``m`` one-byte codes + a cell id
@@ -738,8 +725,10 @@ def knn_ivf_pq(
     standard two-stage recall repair.
 
     Training follows FAISS practice: the coarse quantizer reuses the
-    distributed deterministic Lloyd (same as knn_ivf); the per-subspace
-    codebooks train driver-side on a FIXED-size deterministic sample
+    distributed deterministic Lloyd (same as knn_ivf, and ``state``
+    passes in a trained :func:`semdedup.lloyd_state` as there); the
+    per-subspace codebooks train driver-side on a FIXED-size
+    deterministic sample
     (``train_sample`` lowest vec_ids) of coarse RESIDUALS — bounded
     work by design at any corpus size (production PQ trains on ~100k
     samples for billion-vector indexes). Residual encoding (classic
@@ -750,13 +739,13 @@ def knn_ivf_pq(
     to exploit, neighbors near-tied); clustered real embeddings
     quantize far better at the same budget.
 
-    Scale shape: encode is map-side (one mapInPandas pass, closures
+    Scale shape: encode is map-side (one map_batches pass, closures
     carry (n_cells + m*ks) x dim floats); the ADC join carries
     (vec_id, cell, 4 ints) per candidate and broadcasts the probe
     tables; only the <= n_queries * k * rerank_factor shortlist joins
     back to raw vectors.
 
-    WHY ROWS-ONLY (the r11-verdict feasibility pass, r12): the
+    WHY ROWS-ONLY (a feasibility pass): the
     integer-state trick that made knn_ivf hash-exact does NOT extend
     to residual PQ, for two structural reasons, not effort ones.
     (1) knn_ivf never materializes a centroid: cosine ranking only
@@ -785,24 +774,21 @@ def knn_ivf_pq(
     (tests/test_neardup.py), with ann_recall_report as the live
     meter and ann_recall_lsh_ivf as the fully-oracled restriction.
     """
-    from collections.abc import Iterator
-
-    from metevents_spark.similarity.semdedup import lloyd_centroids
+    from metevents_spark.similarity.semdedup import lloyd_centroids, lloyd_state
 
     if emb is None:
         emb = load_table(spark, sf_dir, "embeddings")
-    if n_cells == "auto":
-        # density-proportional cell count (FAISS practice: cells ~
-        # sqrt(corpus)) — the r11 sf1 watch-item knob: fixed n_cells
-        # concentrates in-cell ADC work as the corpus grows. One
-        # metadata-cheap count; floor at the fixed default so tiny
-        # corpora keep their committed behavior.
-        n_cells = max(IVF_PQ_N_CELLS, int(round(emb.count() ** 0.5)))
-    if cmat is None:
-        cmat = lloyd_centroids(
-            emb.select("vec_id", "embedding"), n_cells, train_iters
-        ).astype(np.float64)
-        cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
+    if state is None:
+        if n_cells == "auto":
+            # density-proportional cell count (FAISS practice: cells ~
+            # sqrt(corpus)) — the sf1 watch-item knob: fixed n_cells
+            # concentrates in-cell ADC work as the corpus grows. One
+            # metadata-cheap count; floor at the fixed default so tiny
+            # corpora keep their committed behavior.
+            n_cells = max(IVF_PQ_N_CELLS, int(round(emb.count() ** 0.5)))
+        state = lloyd_state(emb.select("vec_id", "embedding"), n_cells, train_iters)
+    cmat = lloyd_centroids(state)
+    cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
 
     # --- PQ codebooks: deterministic L2 k-means on a bounded residual
     # sample (seeded by the first ks sample rows, 5 Lloyd rounds)
@@ -841,73 +827,59 @@ def knn_ivf_pq(
                     C[c] = pts.mean(axis=0)
         codebooks[j] = C
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            cells = (V @ cmat.T).argmax(axis=1)
-            Rv = V - cmat[cells]
-            codes = np.empty((len(V), m), dtype=np.int32)
-            # row-chunked assignment (r14, guide §1.2 per-task work):
-            # the one-shot (batch, ks, sub) broadcast temporary was
-            # ~270 MB per subspace at the 64k Arrow batch size — pure
-            # allocator/memory-bandwidth cost; 4k-row chunks measured
-            # 3.6x faster with BIT-IDENTICAL codes (each (row, code)
-            # lane's arithmetic is independent of the chunking). NOT
-            # rewritten as the ||s||^2 - 2sC + ||C||^2 matmul form:
-            # that changes ulps, and argmin ties would flip codes on a
-            # rows-only key whose output must stay fixed.
-            chunk = 4096
-            for i0 in range(0, len(V), chunk):
-                i1 = min(i0 + chunk, len(V))
-                for j in range(m):
-                    Sj = Rv[i0:i1, j * sub : (j + 1) * sub]
-                    d2 = (
-                        (Sj[:, None, :] - codebooks[j][None, :, :]) ** 2
-                    ).sum(axis=2)
-                    codes[i0:i1, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cell": cells.astype(np.int32),
-                    "codes": list(codes),
-                }
-            )
+    def encode(pdf: pd.DataFrame):
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        V /= np.linalg.norm(V, axis=1, keepdims=True)
+        cells = (V @ cmat.T).argmax(axis=1)
+        Rv = V - cmat[cells]
+        codes = np.empty((len(V), m), dtype=np.int32)
+        # row-chunked assignment (guide §1.2 per-task work): the
+        # one-shot (batch, ks, sub) broadcast temporary was ~270 MB per
+        # subspace at the 64k Arrow batch size — pure allocator/memory-
+        # bandwidth cost; 4k-row chunks measured 3.6x faster with
+        # BIT-IDENTICAL codes (each (row, code) lane's arithmetic is
+        # independent of the chunking). NOT rewritten as the
+        # ||s||^2 - 2sC + ||C||^2 matmul form: that changes ulps, and
+        # argmin ties would flip codes on a rows-only key whose output
+        # must stay fixed.
+        chunk = 4096
+        for i0 in range(0, len(V), chunk):
+            i1 = min(i0 + chunk, len(V))
+            for j in range(m):
+                Sj = Rv[i0:i1, j * sub : (j + 1) * sub]
+                d2 = ((Sj[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(
+                    axis=2
+                )
+                codes[i0:i1, j] = d2.argmin(axis=1)
+        return pdf["vec_id"], cells, codes
 
-    encoded = emb.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id long, cell int, codes array<int>"
+    encoded = map_batches(
+        emb.select("vec_id", "embedding"),
+        encode,
+        "vec_id long, cell int, codes array<int>",
     )
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows_q, rows_c, rows_t = [], [], []
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            order = np.argsort(-(Q @ cmat.T), axis=1)[:, :nprobe]
-            for qi, q_id in enumerate(pdf["vec_id"].astype("int64")):
-                for cell in order[qi]:
-                    q_res = Q[qi] - cmat[cell]
-                    table = np.empty((m, ks))
-                    for j in range(m):
-                        qs = q_res[j * sub : (j + 1) * sub]
-                        table[j] = ((codebooks[j] - qs[None, :]) ** 2).sum(
-                            axis=1
-                        )
-                    rows_q.append(int(q_id))
-                    rows_c.append(int(cell))
-                    rows_t.append(table.ravel().tolist())
-            yield pd.DataFrame(
-                {"q_id": rows_q, "cell": rows_c, "tables": rows_t}
-            )
+    def probe(pdf: pd.DataFrame):
+        rows_q, rows_c, rows_t = [], [], []
+        Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
+        order = np.argsort(-(Q @ cmat.T), axis=1)[:, :nprobe]
+        for qi, q_id in enumerate(pdf["vec_id"]):
+            for cell in order[qi]:
+                q_res = Q[qi] - cmat[cell]
+                table = np.empty((m, ks))
+                for j in range(m):
+                    qs = q_res[j * sub : (j + 1) * sub]
+                    table[j] = ((codebooks[j] - qs[None, :]) ** 2).sum(axis=1)
+                rows_q.append(q_id)
+                rows_c.append(cell)
+                rows_t.append(table.ravel())
+        return rows_q, rows_c, rows_t
 
-    probe_df = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .mapInPandas(probe, "q_id long, cell int, tables array<double>")
+    probe_df = map_batches(
+        emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding"),
+        probe,
+        "q_id long, cell int, tables array<double>",
     )
 
     # ADC: m JVM lookups per candidate — transform's (element, index)

@@ -7,7 +7,7 @@ reduction before clustering/ANN — SemDeDup and DSIR both run on
 PCA-reduced vectors at scale).
 
 Scale shape — the only one that survives 100 TB:
-  * ONE ``mapInPandas`` pass computes per-Arrow-batch partial
+  * ONE map-side pass computes per-Arrow-batch partial
     outer-product sums (X^T X, column sums, count) with a single BLAS
     matmul each; a batch of any size folds to dim*(dim+1)/2 + dim + 1
     numbers, so the shuffle moves O(partitions x dim^2) floats, never
@@ -28,16 +28,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metevents_spark.cache import track
 from metevents_spark.io import load_table, local_frame
 from metevents_spark.numeric import round_half_away
+from metevents_spark.operators.grouped import columns_frame, map_batches
 
 PARTIAL_SCHEMA = "n long, sums array<double>, prods array<double>"
 
 
 def _covariance_partials(emb: DataFrame, dim: int) -> DataFrame:
-    """Per-partition (count, column-sum, upper-triangle X^T X) rows."""
+    """Per-partition (count, column-sum, upper-triangle X^T X) rows: a
+    fold over all of a partition's batches, whose float summation order
+    fixes pca_embeddings' values."""
+    fields = StructType.fromDDL(PARTIAL_SCHEMA).fields
 
     def partials(batches):
         s = np.zeros(dim)
@@ -52,13 +57,7 @@ def _covariance_partials(emb: DataFrame, dim: int) -> DataFrame:
             n += len(x)
         if n:
             iu = np.triu_indices(dim)
-            yield pd.DataFrame(
-                {
-                    "n": [n],
-                    "sums": [s.tolist()],
-                    "prods": [prods[iu].tolist()],
-                }
-            )
+            yield columns_frame(fields, [([n], [s], [prods[iu]])])
 
     return emb.select("embedding").mapInPandas(partials, PARTIAL_SCHEMA)
 
@@ -82,32 +81,24 @@ def _covariance_partials_exact(emb: DataFrame, dim: int) -> DataFrame:
     DECIMAL(38,0), exact at any corpus size.
     """
 
-    def partials(batches):
-        iu = np.triu_indices(dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q = round_half_away(v * 1e6).astype(np.int64)
-            # overflow guard: a prod cell is bounded by B * qmax^2; keep
-            # it under 2^62 so the int64 matmul cannot silently wrap
-            # (|x| ~ 30 at a full 10k-row Arrow batch is the ceiling)
-            qmax = int(np.abs(q).max(initial=0))
-            if qmax and qmax * qmax > (2**62) // len(q):
-                raise OverflowError(
-                    f"embedding magnitude {qmax / 1e6:.3g} too large for "
-                    f"exact int64 accumulation over a {len(q)}-row batch"
-                )
-            prods = q.T @ q  # exact int64 matmul
-            yield pd.DataFrame(
-                {
-                    "n": [len(q)],
-                    "sums": [q.sum(axis=0).tolist()],
-                    "prods": [prods[iu].tolist()],
-                }
-            )
+    iu = np.triu_indices(dim)
 
-    return emb.select("embedding").mapInPandas(partials, INT_PARTIAL_SCHEMA)
+    def partials(pdf: pd.DataFrame):
+        v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        q = round_half_away(v * 1e6).astype(np.int64)
+        # overflow guard: a prod cell is bounded by B * qmax^2; keep
+        # it under 2^62 so the int64 matmul cannot silently wrap
+        # (|x| ~ 30 at a full 10k-row Arrow batch is the ceiling)
+        qmax = int(np.abs(q).max(initial=0))
+        if qmax and qmax * qmax > (2**62) // len(q):
+            raise OverflowError(
+                f"embedding magnitude {qmax / 1e6:.3g} too large for "
+                f"exact int64 accumulation over a {len(q)}-row batch"
+            )
+        prods = q.T @ q  # exact int64 matmul
+        return [len(q)], [q.sum(axis=0)], [prods[iu]]
+
+    return map_batches(emb.select("embedding"), partials, INT_PARTIAL_SCHEMA)
 
 
 def embedding_covariance(
@@ -129,7 +120,8 @@ def embedding_covariance(
     The earlier formulation ended in ROUND(double, 6), whose
     half-boundary behavior differs across engine versions (Spark
     rounds the exact decimal expansion HALF_UP; DuckDB multiplies/
-    rounds/divides in floats) — that was the r08/r09 driver-red.
+    rounds/divides in floats) — that split once turned the driver check
+    red.
 
     The partial rows reduce via posexplode + groupBy on the flat
     index (O(partitions x dim^2) rows — tiny), then a driver-built
@@ -205,8 +197,8 @@ def _principal_components(
     made positive — eigenvectors are sign-ambiguous, this pins them
     deterministically.
 
-    WHY pca_embeddings / embedding_whitening ARE ROWS-ONLY (the
-    r12-verdict feasibility pass, r13 — the knn_ivf_pq precedent):
+    WHY pca_embeddings / embedding_whitening ARE ROWS-ONLY (a
+    feasibility pass, the knn_ivf_pq precedent):
     the integer-state trick that made knn_ivf/part_pagerank
     hash-exact does NOT extend past the covariance step, for
     structural reasons, not effort ones. The covariance matrix itself
@@ -275,30 +267,7 @@ def pca_embeddings(
     """
     emb = load_table(spark, sf_dir, "embeddings")
     mean, comps, _, _, _ = _principal_components(emb, dim, k)
-
-    out_schema = "vec_id long, label int, " + ", ".join(
-        f"pc{i + 1} double" for i in range(k)
-    )
-
-    def project(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            proj = round_half_away((x - mean) @ comps.T, 6)
-            out = {
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "label": pdf["label"].astype("int32"),
-            }
-            for i in range(k):
-                out[f"pc{i + 1}"] = proj[:, i]
-            yield pd.DataFrame(out)
-
-    return (
-        emb.select("vec_id", "label", "embedding")
-        .mapInPandas(project, out_schema)
-        .orderBy("vec_id")
-    )
+    return _project(emb, mean, comps, 1.0, "pc")
 
 
 def embedding_whitening(
@@ -320,27 +289,25 @@ def embedding_whitening(
     emb = load_table(spark, sf_dir, "embeddings")
     mean, comps, lam, _, _ = _principal_components(emb, dim, k)
     scale = 1.0 / np.sqrt(np.maximum(lam, 1e-12))  # k
+    return _project(emb, mean, comps, scale, "w")
 
-    out_schema = "vec_id long, label int, " + ", ".join(
-        f"w{i + 1} double" for i in range(k)
+
+def _project(
+    emb: DataFrame, mean: np.ndarray, comps: np.ndarray, scale, prefix: str
+) -> DataFrame:
+    """(vec_id, label, <prefix>1..<prefix>k): each embedding centered on
+    ``mean``, projected onto the k rows of ``comps``, multiplied by
+    ``scale`` (a scalar or one factor per component) and rounded to 6
+    places, map-side, ordered by vec_id."""
+    schema = "vec_id long, label int, " + ", ".join(
+        f"{prefix}{i + 1} double" for i in range(len(comps))
     )
 
-    def whiten(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            z = round_half_away(((x - mean) @ comps.T) * scale, 6)
-            out = {
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "label": pdf["label"].astype("int32"),
-            }
-            for i in range(k):
-                out[f"w{i + 1}"] = z[:, i]
-            yield pd.DataFrame(out)
+    def project(pdf: pd.DataFrame):
+        x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        z = round_half_away(((x - mean) @ comps.T) * scale, 6)
+        return (pdf["vec_id"], pdf["label"], *z.T)
 
-    return (
-        emb.select("vec_id", "label", "embedding")
-        .mapInPandas(whiten, out_schema)
-        .orderBy("vec_id")
-    )
+    return map_batches(
+        emb.select("vec_id", "label", "embedding"), project, schema
+    ).orderBy("vec_id")

@@ -9,12 +9,11 @@ quadratic pair work exactly like the LSH band buckets bound MinHash:
 pairwise cost scales with cluster size, never corpus size.
 
 Spark shape:
-  - Lloyd iterations: assignment is ONE numpy matmul per Arrow batch
-    against the broadcast (k x dim) centroid matrix (pandas_udf, no
-    shuffle); the M-step is the posexplode partial-aggregate trick
-    (shuffle is O(partitions x k x dim), corpus-size independent) and
-    collects only k x dim doubles to the driver per iteration — the
-    same legitimate tiny-collect as knn_ivf's centroid fetch.
+  - Lloyd iterations: assignment is ONE integer matmul per Arrow batch
+    against the broadcast (k x dim) integer state (no shuffle), and the
+    same batch kernel emits its per-cell (count, sum) partials, so the
+    driver collects at most k rows per batch per iteration — the same
+    legitimate tiny-collect as knn_ivf's centroid fetch.
   - Dedup: one exchange on the final cluster id, then per cluster
     inside applyInPandas the pairs of ``similarity.knn.cosine_pairs``
     (the embedding_near_dup sweep) and a greedy earliest-representative
@@ -34,24 +33,8 @@ from pyspark.sql.types import StructType
 
 from metevents_spark.io import load_table
 from metevents_spark.numeric import round_half_away
-from metevents_spark.operators.grouped import columns_frame
+from metevents_spark.operators.grouped import columns_frame, map_batches
 from metevents_spark.similarity.knn import cosine_pairs
-
-
-def _normalize(m: np.ndarray) -> np.ndarray:
-    return m / np.linalg.norm(m, axis=1, keepdims=True)
-
-
-def _assign_udf(cmat: np.ndarray):
-    """Nearest-centroid (cosine) assignment, one matmul per batch."""
-    cn = _normalize(cmat)
-
-    @F.pandas_udf("int")
-    def nearest(embs: pd.Series) -> pd.Series:
-        m = _normalize(np.stack(embs.to_numpy()).astype(np.float64))
-        return pd.Series((m @ cn.T).argmax(axis=1).astype(np.int32))
-
-    return nearest
 
 
 def _int_assign_udf(svec: np.ndarray):
@@ -59,10 +42,10 @@ def _int_assign_udf(svec: np.ndarray):
     state (the knn_ivf path): quantize the batch, score with
     :func:`_int_scores` (exact integers cast to double), argmax with
     numpy's first-max tie rule — identical to the SQL replay's
-    ROW_NUMBER (score DESC, cell ASC). This is what lets
-    semantic_dedup / kmeans_embeddings carry full DuckDB oracles
-    (r12): the float-centroid ``_assign_udf`` can flip borderline
-    argmaxes by an ulp between engines; the integer path cannot."""
+    ROW_NUMBER (score DESC, cell ASC). This is what lets knn_ivf,
+    semantic_dedup and kmeans_embeddings carry full DuckDB oracles: a
+    float-centroid assignment can flip borderline argmaxes by an ulp
+    between engines; the integer path cannot."""
 
     @F.pandas_udf("int")
     def nearest(embs: pd.Series) -> pd.Series:
@@ -93,7 +76,7 @@ def _int_scores(mi: np.ndarray, svec: np.ndarray) -> np.ndarray:
       trivial), NEVER an int64 intermediate: a per-dim member sum of
       ~3e9 (a few thousand clustered members at 1e6 micro-units)
       already wraps an int64 square, silently yielding negative s2
-      and NaN scores (the r11 einsum bug).
+      and NaN scores (an einsum bug this once had).
     - the dot matrix takes the int64 BLAS path only when the proven
       worst-case bound dim·max|vi|·max|s_d| fits in int64; otherwise
       it falls back to exact object-dtype (Python-int) arithmetic —
@@ -119,7 +102,7 @@ def _int_scores(mi: np.ndarray, svec: np.ndarray) -> np.ndarray:
 def lloyd_state(
     emb: DataFrame, k: int, iters: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """ENGINE-EXACT deterministic k-means (r11 rewrite): seeded by the
+    """ENGINE-EXACT deterministic k-means: seeded by the
     k lowest-vec_id vectors, ``iters`` Lloyd rounds. State per cell is
     the INTEGER micro-unit member-sum vector plus the member count —
     assignment scores divide exact integer dots by exact integer
@@ -131,7 +114,7 @@ def lloyd_state(
     (ORACLE_SQL["knn_ivf"]), which upgrades the IVF driver check from
     rows-only to hash-green.
 
-    Each round is ONE ``mapInPandas`` pass: a batch assigns itself
+    Each round is ONE ``map_batches`` pass: a batch assigns itself
     with one integer matmul and emits per-cell (count, int-sum)
     partials — at most k rows per Arrow batch, folded on the driver
     (k x dim int64s, the same legitimate tiny-collect as before; the
@@ -158,31 +141,20 @@ def lloyd_state(
     svec = _quantize_units(np.array([v for _, v in seeds], dtype=np.float64))
     cnt = np.ones(k, dtype=np.int64)
     kk, dim = svec.shape
+    schema = "cell int, cnt long, vsum array<long>"
     for _ in range(iters):
-        state = svec  # closure snapshot for this round's assignment
+        # state=svec binds this round's state into the closure
+        def partials(pdf: pd.DataFrame, state=svec):
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            mi = _quantize_units(m)
+            a = _int_scores(mi, state).argmax(axis=1)
+            counts = np.bincount(a, minlength=kk)
+            sums = np.zeros((kk, dim), dtype=np.int64)
+            np.add.at(sums, a, mi)
+            nz = np.flatnonzero(counts)
+            return nz, counts[nz], sums[nz]
 
-        def partials(batches, state=state):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                mi = _quantize_units(m)
-                a = _int_scores(mi, state).argmax(axis=1)
-                counts = np.bincount(a, minlength=kk)
-                sums = np.zeros((kk, dim), dtype=np.int64)
-                np.add.at(sums, a, mi)
-                nz = np.flatnonzero(counts)
-                yield pd.DataFrame(
-                    {
-                        "cell": nz.astype(np.int32),
-                        "cnt": counts[nz].astype(np.int64),
-                        "vsum": [sums[c].tolist() for c in nz],
-                    }
-                )
-
-        rows = emb.select("embedding").mapInPandas(
-            partials, "cell int, cnt long, vsum array<long>"
-        ).collect()
+        rows = map_batches(emb.select("embedding"), partials, schema).collect()
         sums = np.zeros((kk, dim), dtype=np.int64)
         cnts = np.zeros(kk, dtype=np.int64)
         for r in rows:
@@ -194,23 +166,19 @@ def lloyd_state(
     return svec, cnt
 
 
-def lloyd_centroids(
-    emb: DataFrame, k: int, iters: int
-) -> np.ndarray:
-    """(k x dim) float centroid matrix from :func:`lloyd_state`: the
-    exact integer mean ``svec / (cnt * 1e6)`` — one float division of
-    exact integers per entry, so (unlike the pre-r11 float fold) the
-    returned matrix is bit-identical across runs and partitionings.
-    Consumers (semantic_dedup, kmeans_embeddings, knn_ivf_pq) keep the
-    float-centroid interface."""
-    svec, cnt = lloyd_state(emb, k, iters)
+def lloyd_centroids(state: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    """(k x dim) float centroid matrix of a :func:`lloyd_state` result:
+    the exact integer mean ``svec / (cnt * 1e6)``, one float division
+    of exact integers per entry, so the matrix is bit-identical across
+    runs and partitionings."""
+    svec, cnt = state
     return svec.astype(np.float64) / (cnt.astype(np.float64)[:, None] * 1e6)
 
 
 def _auto_clusters(n_vecs: int, target_pop: int = 4096) -> int:
     """Corpus-keyed Lloyd cell count: k = max(8, ceil(n / target_pop)).
 
-    The r13 x100 sweep caught semantic_dedup at a 101x decade ratio —
+    The x100 sweep caught semantic_dedup at a 101x decade ratio —
     with FIXED k the within-cell all-pairs sweep costs ~k*(n/k)^2 =
     n^2/k, quadratic in corpus size. k proportional to n makes total
     pair work ~n*target_pop — linear; the sweep's memory is bounded by
@@ -239,7 +207,7 @@ def semantic_dedup(
     cosine with it rounds to >= threshold — deterministic, and exactly
     reproducible by the numpy reference in tests/test_semdedup.py.
 
-    Oracle-green since r12 (queries.ORACLE_SQL["semantic_dedup"]):
+    Oracle-green (queries.ORACLE_SQL["semantic_dedup"]):
     cluster assignment uses the ENGINE-EXACT integer score path
     (:func:`_int_assign_udf`, the knn_ivf precedent), and the sweep
     cosine is dot/(|a||b|) rounded to 6 — structurally identical to
@@ -247,7 +215,7 @@ def semantic_dedup(
     hash-green precedent. Keeps emit NULL (not NaN) cos_to_dup so
     both engines agree on the missing value.
 
-    ``k="auto"`` (default since r13) keys the cluster count on the
+    ``k="auto"`` (the default) keys the cluster count on the
     corpus size (:func:`_auto_clusters`) so the within-cell sweep
     stays linear in n; auto resolves to the oracle's fixed 8 at every
     oracle-checked scale, so the static SQL replay remains exact
@@ -298,7 +266,7 @@ def kmeans_embeddings(
     cluster, member count and mean cosine to the centroid (cohesion).
     The assignment pass is map-side; the report is one tiny groupBy.
 
-    Oracle-green since r12 (queries.ORACLE_SQL["kmeans_embeddings"]):
+    Oracle-green (queries.ORACLE_SQL["kmeans_embeddings"]):
     assignment is the ENGINE-EXACT integer score path, cohesion is
     the cosine to the ASSIGNED cell's float centroid (the exact
     integer mean svec/(cnt*1e6) — the same doubles the SQL replay
@@ -311,8 +279,9 @@ def kmeans_embeddings(
     mean_cohesion is defined as mean-of-rounded (delta <= 5e-7), not
     rounded-mean."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    svec, cnt = lloyd_state(emb, k, iters)
-    cvec = svec.astype(np.float64) / (cnt.astype(np.float64)[:, None] * 1e6)
+    state = lloyd_state(emb, k, iters)
+    svec = state[0]
+    cvec = lloyd_centroids(state)
     cnorm = np.sqrt((cvec * cvec).sum(axis=1))
 
     @F.pandas_udf("double")

@@ -397,7 +397,7 @@ def incremental_dedup(
 
     Docs with ``doc_id % batch_mod == 0`` are the incoming batch; all
     others are the reference corpus. Each batch doc gets one verdict
-    row (doc_id, status, match_id, est):
+    row (doc_id, status, match_id, est); NULL texts are one exact group:
 
     - ``exact``: a reference doc has byte-identical text; match_id =
       smallest such reference doc_id, est = 1.0.
@@ -438,7 +438,12 @@ def incremental_dedup(
         F.min(F.when(F.col("is_batch"), F.col("doc_id"))).alias("batch_rep"),
     )
     grp = track(grp.persist(StorageLevel.MEMORY_AND_DISK))
-    batch_members = slim.filter("is_batch").join(grp, "gid")
+    # null-safe: a NULL text is one exact group (md5(NULL) is NULL), as
+    # in minhash_near_dup's PARTITION BY md5(text)
+    batch = slim.filter("is_batch")
+    batch_members = batch.join(
+        grp, batch["gid"].eqNullSafe(grp["gid"])
+    ).drop(grp["gid"])
 
     exact = batch_members.filter("ref_match IS NOT NULL").select(
         "doc_id",

@@ -935,8 +935,8 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus vocabulary size. Docs with < 2 tokens drop out (no
     transitions to score).
 
-    Scale shape: bigram rows are generated map-side (higher-order
-    transform, one explode); corpus bigram counts and history counts
+    Scale shape: bigram rows are generated map-side (``token_ngrams``
+    windows of 2, one explode); corpus bigram counts and history counts
     are keyed aggregates of the same exploded frame; the scoring joins
     shuffle on the bigram/term key where AQE broadcast-downgrades when
     the vocab side is small. The one-row V frame broadcasts. Rounded
@@ -946,19 +946,11 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("t")
     )
-    br = (
-        toked.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), i -> "
-                    "struct(element_at(t, i) AS w1, "
-                    "element_at(t, i + 1) AS w2))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.w1", "b.w2")
+    pairs = token_ngrams(
+        "t", 2, lambda w, _: F.struct(w[0].alias("w1"), w[1].alias("w2"))
+    )
+    br = toked.select("doc_id", F.explode(pairs).alias("b")).select(
+        "doc_id", "b.w1", "b.w2"
     )
     from pyspark.sql import Window
 

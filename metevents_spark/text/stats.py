@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metevents_spark.io import load_table, local_frame
+from metevents_spark.operators.grouped import map_batches
 
 # marker-token sets for the n-gram/stopword language heuristic
 LANG_MARKERS = {
@@ -251,22 +252,14 @@ def vocab_top_terms_approx(
     vocab_top_terms in tests) but adversarial splits can differ —
     rows-only check, like the other sketches.
     """
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").select("text")
 
-    def local_top(batches):
-        for pdf in batches:
-            counts = (
-                pdf["text"].str.split(" ").explode().value_counts()
-            )
-            top = counts.iloc[:counters]
-            yield pd.DataFrame(
-                {"token": top.index.astype(str), "n": top.to_numpy()}
-            )
+    def local_top(pdf):
+        top = pdf["text"].str.split(" ").explode().value_counts().iloc[:counters]
+        return top.index.astype(str), top.to_numpy()
 
     cand = (
-        docs.mapInPandas(local_top, "token string, n long")
+        map_batches(docs, local_top, "token string, n long")
         .groupBy("token")
         .agg(F.sum("n").alias("n_lower"))
         .orderBy(F.col("n_lower").desc(), F.col("token"))

@@ -1,8 +1,9 @@
 """``grouped.columns_frame``: the one output builder of the batch
-per-series kernels (``map_series_kernel``) and the streaming steps
-(``streaming.detect.keyed_fold``). Each field gets its pandas dtype
-from the output schema, and a kernel or step that returns the wrong
-number of columns fails loudly instead of being truncated.
+kernels (``map_series_kernel``, ``map_batches``) and the streaming
+steps (``streaming.detect.keyed_fold``). Each field gets its pandas
+dtype from the output schema, a ``binary`` or ``array`` field holds one
+object per row, and a kernel or step that returns the wrong number of
+columns fails loudly instead of being truncated.
 
 Data-independent: the Spark cases run on in-memory frames.
 """
@@ -15,6 +16,8 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -26,7 +29,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from metevents_spark.operators.grouped import columns_frame, map_series_kernel
+from metevents_spark.operators.grouped import (
+    columns_frame,
+    map_batches,
+    map_series_kernel,
+)
 from metevents_spark.streaming.detect import fold_chunks
 
 FIELDS = StructType(
@@ -146,3 +153,84 @@ def test_batch_kernel_with_wrong_column_count_raises(spark):
     out = map_series_kernel(_series(spark), kernel, "sid string, n long, x double")
     with pytest.raises(Exception, match="returned 2 columns for the 3 fields"):
         out.collect()
+
+
+OBJECT_FIELDS = StructType(
+    [
+        StructField("ids", ArrayType(IntegerType())),
+        StructField("vec", ArrayType(DoubleType())),
+        StructField("blob", BinaryType()),
+    ]
+).fields
+
+
+def test_array_and_binary_fields_hold_one_object_per_row():
+    """Equal-length rows stay one element per row, whether the kernel
+    returns a list of lists, a list of arrays or a 2-D matrix."""
+    lists = ([[1, 2], [3, 4]], [[0.5, 1.5], [2.5, 3.5]], [b"ab", b"cd"])
+    matrix = (np.array([[5, 6]]), np.array([[4.5, 5.5]]), [b""])
+    ragged = ([[7], []], [np.array([1.0]), np.array([2.0, 3.0, 4.0])], [b"x", b"yz"])
+    out = columns_frame(OBJECT_FIELDS, [lists, matrix, ragged])
+    assert out.dtypes.astype(str).tolist() == ["object"] * 3
+    assert len(out) == 5
+    assert [list(v) for v in out["ids"]] == [[1, 2], [3, 4], [5, 6], [7], []]
+    assert [list(v) for v in out["vec"]] == [
+        [0.5, 1.5], [2.5, 3.5], [4.5, 5.5], [1.0], [2.0, 3.0, 4.0],
+    ]
+    assert out["blob"].tolist() == [b"ab", b"cd", b"", b"x", b"yz"]
+    empty = columns_frame(OBJECT_FIELDS, [((), (), ())])
+    assert len(empty) == 0 and empty.dtypes.astype(str).tolist() == ["object"] * 3
+
+
+class _Capture:
+    """Stands in for a Spark frame: keeps the function map_batches
+    hands to ``mapInPandas``, so the test can feed it batches."""
+
+    def mapInPandas(self, fn, schema):
+        self.fn, self.schema = fn, schema
+        return self
+
+
+def _batches(kernel, schema, batches):
+    cap = map_batches(_Capture(), kernel, schema)
+    return list(cap.fn(iter(batches)))
+
+
+def test_map_batches_skips_empty_batches_and_empty_output():
+    calls = []
+
+    def kernel(pdf):
+        calls.append(len(pdf))
+        n = int(pdf["n"].iloc[0])
+        return None if n == 1 else () if n == 2 else (pdf["n"], pdf["n"] * 0.5)
+
+    frames = [pd.DataFrame({"n": v}, dtype="int64") for v in ([], [1], [2], [3, 4])]
+    out = _batches(kernel, "n long, half double", frames)
+    assert calls == [1, 1, 2]
+    assert len(out) == 1
+    assert out[0]["n"].tolist() == [3, 4] and out[0]["half"].tolist() == [1.5, 2.0]
+    assert out[0].dtypes.astype(str).tolist() == ["Int64", "float64"]
+
+
+def test_map_batches_wrong_column_count_raises():
+    frames = [pd.DataFrame({"n": [1]})]
+    with pytest.raises(ValueError, match="returned 1 columns for the 2 fields"):
+        _batches(lambda pdf: (pdf["n"],), "n long, x double", frames)
+
+
+def test_map_batches_round_trips_arrays_and_binary_through_spark(spark):
+    df = spark.createDataFrame([(i,) for i in range(5)], "n long").repartition(3)
+
+    def kernel(pdf):
+        n = pdf["n"].to_numpy()
+        return n, np.stack([n, n + 1], axis=1), [bytes([int(v)]) for v in n]
+
+    got = map_batches(
+        df, kernel, "n long, pair array<int>, b binary"
+    ).orderBy("n").collect()
+    assert [(r.n, r.pair, bytes(r.b)) for r in got] == [
+        (i, [i, i + 1], bytes([i])) for i in range(5)
+    ]
+    bad = map_batches(df, lambda pdf: (pdf["n"],), "n long, x double")
+    with pytest.raises(Exception, match="returned 1 columns for the 2 fields"):
+        bad.collect()

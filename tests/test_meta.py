@@ -180,3 +180,34 @@ def test_lint_flags_token_window_copies_outside_text_stats(tmp_path):
     flagged = [int(n) for p in problems for n in re.findall(r":(\d+): NG1 ", p)]
     assert flagged == [5, 10, 13], problems
     assert not lint.lint_file(str(REPO / lint.NGRAM_HOME))
+
+
+def test_lint_flags_frame_builds_in_worker_kernels(tmp_path):
+    """Worker kernels return columns (``grouped.map_batches``,
+    ``columns_frame``): a planted ``pd.DataFrame(...)`` inside a nested
+    function in the package fails the gate, while a driver-side frame
+    built at function top level, or a kernel outside the package, does
+    not."""
+    lint = _lint()
+    lint.ROOT = str(tmp_path)
+    src = (
+        "import pandas as pd\n"
+        "\n"
+        "\n"
+        "def driver(rows):\n"
+        "    frame = pd.DataFrame(rows)\n"
+        "\n"
+        "    def kernel(batches):\n"
+        "        for pdf in batches:\n"
+        "            yield pd.DataFrame({'n': [len(pdf)]})\n"
+        "\n"
+        "    return frame, kernel\n"
+    )
+    for d in ("metevents_spark", "tools"):
+        (tmp_path / d).mkdir()
+        (tmp_path / d / "kernels.py").write_text(src)
+    problems = lint.lint_file(str(tmp_path / "metevents_spark" / "kernels.py"))
+    flagged = [int(n) for p in problems for n in re.findall(r":(\d+): PF1 ", p)]
+    assert flagged == [9], problems
+    assert not lint.lint_file(str(tmp_path / "tools" / "kernels.py"))
+    assert not _lint().lint_file(str(REPO / lint.FRAME_HOME))

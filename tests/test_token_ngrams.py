@@ -97,6 +97,7 @@ NGRAM_QUERIES = [
     "ngram_novelty",
     "cross_doc_ngram_share",
     "repetition_stats",
+    "bigram_logprob",
 ]
 
 
@@ -152,3 +153,14 @@ def test_short_documents_match_oracle(spark, short_sf, short_duck, name):
     ddf = normalize(short_duck.sql(entrymod.oracle_sql()[name]).df())
     assert len(sdf) == len(ddf), f"{name}: rows spark={len(sdf)} duck={len(ddf)}"
     assert frame_hash(sdf) == frame_hash(ddf), f"{name}: value-hash mismatch"
+
+
+def test_null_text_batch_doc_reads_exact(spark, short_sf):
+    """NULL texts are one exact group in incremental_dedup: the NULL
+    batch doc 1020 matches the NULL reference doc 1016 (the oracle
+    agreement is checked above)."""
+    import __spark_entry__ as entrymod
+
+    got = entrymod.queries()["incremental_dedup"](spark, short_sf)
+    (r,) = got.filter("doc_id = 1020").collect()
+    assert (r.status, r.match_id, r.est) == ("exact", 1016, 1.0)

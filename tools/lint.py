@@ -35,7 +35,11 @@ Checks per file:
   - outside ``text/stats.py``, no sliding token-window expansion, a
     ``transform`` over ``sequence`` whose body slices an array, as
     Column calls or as SQL text (NG1): n-grams and shingles come from
-    ``token_ngrams``.
+    ``token_ngrams``;
+  - in the package, outside ``operators/grouped.py``, no
+    ``pd.DataFrame(...)`` call inside a function defined in another
+    function, i.e. a worker kernel (PF1): kernels return columns and
+    ``grouped.map_batches`` / ``columns_frame`` build the frame.
 
 Exit 0 clean, 1 with findings on stdout.
 """
@@ -320,6 +324,32 @@ def _token_window_copies(tree: ast.Module) -> list[int]:
     return sorted(lines)
 
 
+FRAME_HOME = os.path.join("metevents_spark", "operators", "grouped.py")
+FUNCTIONS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _kernel_frame_builds(tree: ast.Module) -> list[int]:
+    """Lines of a ``pd.DataFrame(...)`` / ``pandas.DataFrame(...)`` call
+    inside a function that is defined inside another function."""
+    lines = set()
+    for outer in ast.walk(tree):
+        if not isinstance(outer, FUNCTIONS):
+            continue
+        for inner in ast.walk(outer):
+            if inner is outer or not isinstance(inner, FUNCTIONS):
+                continue
+            lines.update(
+                n.lineno
+                for n in ast.walk(inner)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "DataFrame"
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id in ("pd", "pandas")
+            )
+    return sorted(lines)
+
+
 def lint_file(path: str) -> list[str]:
     rel = os.path.relpath(path, ROOT)
     src = open(path, encoding="utf-8").read()
@@ -382,6 +412,12 @@ def lint_file(path: str) -> list[str]:
             problems.append(
                 f"{rel}:{ln}: NG1 sliding token-window expansion outside "
                 f"{NGRAM_HOME}; use token_ngrams"
+            )
+    if rel.startswith("metevents_spark") and rel != FRAME_HOME:
+        for ln in _kernel_frame_builds(tree):
+            problems.append(
+                f"{rel}:{ln}: PF1 pandas frame built in a worker kernel; "
+                "return columns through grouped.map_batches / columns_frame"
             )
     if not rel.endswith(F401_WAIVER_SUFFIXES):
         for ln, name in _unused_imports(tree, src):
