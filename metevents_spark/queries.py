@@ -4446,11 +4446,14 @@ FROM coh GROUP BY cell ORDER BY cluster
 def _bpe_train_ctes(n_merges: int = 12) -> list[str]:
     """SQL replay of text/bpe.py's ``learn_merges`` as chained CTEs
     (r12, rows-only -> oracle; the knn_ivf chained-training
-    precedent). Faithfulness rests on two exact correspondences:
+    precedent). Spark counts the words and ``merge_table`` trains in
+    driver memory; this replay recounts every pair each round instead,
+    so it is an independent check of the incremental counts.
+    Faithfulness rests on three exact correspondences:
 
-    - Merge application: Spark's ``_merge_fold`` is a greedy
+    - Merge application: ``bpe.merge_pair`` is a greedy
       left-to-right NON-OVERLAPPING replacement over the symbol
-      array. The string encoding joins symbols with TWO spaces and
+      list. The string encoding joins symbols with TWO spaces and
       pads one sentinel space at each end, so a pair occurrence is
       the 1-space-padded pattern ``' l  r '`` and two ADJACENT
       occurrences (``... l r l r ...`` in the array) never share a
@@ -4458,7 +4461,7 @@ def _bpe_train_ctes(n_merges: int = 12) -> list[str]:
       r12 single-space encoding was wrong exactly here: back-to-back
       occurrences shared the boundary space, so global ``replace``
       merged only the first (advisor-verified on 'banana'/'aaaa');
-      the fold merges both. The replacement ``' lr '`` restores the
+      ``merge_pair`` merges both. The replacement ``' lr '`` restores the
       invariant (its edge spaces concatenate with the neighbours'
       into the 2-space separator), symbols cannot contain spaces so
       the pattern cannot match inside a symbol, and the merged
@@ -4467,7 +4470,11 @@ def _bpe_train_ctes(n_merges: int = 12) -> list[str]:
       Pinned by tests/test_bpe_oracle_parity.py on 'banana'/'aaaa'
       corpora where the two encodings genuinely diverge.
     - The argmax tie-break (count DESC, l ASC, r ASC) compares
-      strings bytewise in both engines.
+      strings by code point in both: DuckDB compares UTF-8 bytes, which
+      order as code points, and so does Python's ``str``.
+    - Exhaustion: once every word is one symbol, ``b{i}`` is empty and
+      every later round stays empty, so the table ends where
+      ``merge_table`` stops.
 
     Every quantity is an integer or a string — no float enters the
     pipeline, so the replay is hash-exact by construction.
@@ -4482,7 +4489,8 @@ def _bpe_train_ctes(n_merges: int = 12) -> list[str]:
         " FROM documents) WHERE length(word) > 0 GROUP BY word)",
         # char symbols + the '</w>' end sentinel, TWO spaces between
         # symbols, one sentinel space on each side (bpe.py
-        # _char_symbols; see the docstring for why two)
+        # merge_table's ``list(word) + [END]``; see the docstring for
+        # why two)
         "w0 AS MATERIALIZED (SELECT ' ' ||"
         " array_to_string(str_split(word, ''), '  ') || '  </w> '"
         " AS s, freq FROM bwords)",

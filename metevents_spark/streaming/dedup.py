@@ -47,7 +47,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -331,7 +330,8 @@ EMB_PAIR_OUTPUT_SCHEMA = "vec_a long, vec_b long, label int, cosine double"
 EMB_BLOCK_STATE_SCHEMA = StructType(
     [
         StructField("vec_ids", ArrayType(LongType())),
-        StructField("flat", ArrayType(DoubleType())),  # flattened n x dim
+        # n x dim float64 residents, row-major (``ndarray.tobytes``)
+        StructField("flat", BinaryType()),
         StructField("closed", IntegerType()),
     ]
 )
@@ -368,7 +368,7 @@ def stream_embedding_near_dup(
 
     def fn(key, pdf_iter, state: GroupState):
         label = int(key[0])
-        vec_ids, flat, closed = state.get if state.exists else ([], [], 0)
+        vec_ids, flat, closed = state.get if state.exists else ([], b"", 0)
         # an empty iterator is impossible under NoTimeout but becomes
         # reachable the moment a state timeout is added — guard it
         # instead of letting pd.concat raise "No objects to concatenate"
@@ -395,7 +395,7 @@ def stream_embedding_near_dup(
         if not len(new_ids):
             state.update((vec_ids, flat, closed))
             return
-        stored = np.asarray(flat, dtype=np.float64).reshape(-1, new_m.shape[1])
+        stored = np.frombuffer(flat, dtype="<f8").reshape(-1, new_m.shape[1])
         allm = np.vstack([stored, new_m])
         norms = np.sqrt((allm * allm).sum(axis=1))
         # only pairs touching a NEW vector; resident-resident pairs
@@ -404,7 +404,7 @@ def stream_embedding_near_dup(
         ids = np.concatenate([np.asarray(vec_ids, dtype=np.int64), new_ids])
         ia, ib = ids[i], ids[j]
         out = (np.minimum(ia, ib), np.maximum(ia, ib), np.full(len(ia), label), cos)
-        state.update((ids.tolist(), allm.ravel().tolist(), closed))
+        state.update((ids.tolist(), np.asarray(allm, dtype="<f8").tobytes(), closed))
         if len(ia):
             yield columns_frame(fields, [out])
 

@@ -1,25 +1,26 @@
-"""Distributed BPE tokenizer training and application.
+"""BPE tokenizer training and application over a Spark corpus.
 
 The reference library (metevents, /root/reference/metevents) has no
 text surface at all; this is part of the §8.3 LLM-pipeline extension.
-`bpe_pair_counts` (stats.py) demonstrates the count step; this module
-runs the full loop — learn a merge table from the corpus, then encode
-documents with it — with the distributed/driver split a 100 TB corpus
-forces:
+`bpe_pair_counts` (stats.py) is the one-shot pair count; this module
+learns a merge table from the corpus, then encodes documents with it.
+The work splits between Spark and the driver by size:
 
 - The WORD-FREQUENCY table is the unit of distribution. Corpus text
-  collapses to (word, freq) once — a single corpus-sized shuffle — and
-  every training round then works on |vocab| rows, not documents.
-- Each merge round is one pair-count aggregation (map-side partial sum
-  keyed by the symbol pair) plus a ONE-ROW argmax collect. Driver
-  state is the merge table itself — the tokenizer artifact, bounded by
-  n_merges, never data-sized.
-- Merge application is a JVM-side ``aggregate`` fold over the symbol
-  arrays (greedy left-to-right, non-overlapping — the classic BPE
-  convention), so no round moves word payloads through Python.
-- The rounds run under ``cache.fixpoint`` (its docstring states the
-  round contract), which cuts lineage per round; without that Catalyst
-  re-analyzes n_merges nested fold lambdas each round.
+  collapses to (word, freq) once (``word_freqs``, a single
+  corpus-sized shuffle), and that table, |vocab| rows, reaches the
+  driver through Arrow.
+- Training is the textbook incremental trainer (Sennrich et al., ACL
+  2016) in driver memory: ``merge_table`` counts adjacent symbol pairs
+  once, then each merge rewrites only the words that hold the pair and
+  moves only their counts. Training runs the same Spark jobs whatever
+  ``n_merges`` is.
+- Driver state is the word table. Its collect is bounded by
+  ``spark.driver.maxResultSize``: a vocabulary past that bound fails
+  the job with an error, it is never cut short silently.
+- One greedy left-to-right, non-overlapping pair replacement
+  (``merge_pair``, the classic BPE convention) serves both training
+  and ``encode_word``.
 - ENCODING is vocab-sized, not corpus-sized: each DISTINCT word is
   encoded once in an Arrow-batched pandas UDF, and documents get their
   token counts back through a join on the word.
@@ -27,14 +28,21 @@ forces:
 
 from __future__ import annotations
 
+import heapq
+import math
+from collections import Counter, defaultdict
+from typing import Sequence
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metevents_spark.cache import fixpoint, release
 from metevents_spark.io import load_table, local_frame
 
 END = "</w>"
+
+Pair = tuple[str, str]
+Merge = tuple[int, str, str, str, int]  # rank, left, right, merged, count
 
 
 def word_freqs(docs: DataFrame) -> DataFrame:
@@ -47,88 +55,112 @@ def word_freqs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _char_symbols(word_col) -> F.Column:
-    """word -> [c1, c2, ..., cn, '</w>'] without relying on split('')
-    edge semantics."""
-    return F.concat(
-        F.expr(
-            "transform(sequence(1, length(word)),"
-            " i -> substr(word, i, 1))"
-        ),
-        F.array(F.lit(END)),
-    )
+def merge_pair(syms: list[str], left: str, right: str) -> list[str]:
+    """``syms`` with every adjacent (left, right) replaced by
+    ``left + right``, greedy left to right and non-overlapping: in
+    ``a a a`` the pair (a, a) merges once, to ``aa a``."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
-def _merge_fold(left: str, right: str, merged: str) -> F.Column:
-    """Greedy left-to-right, non-overlapping replacement of the
-    adjacent pair (left, right) by ``merged`` inside the ``syms``
-    array — pure Column-side aggregate fold, no SQL-string escaping."""
-    return F.aggregate(
-        "syms",
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
+def _pairs(syms: list[str]) -> zip:
+    return zip(syms, syms[1:])
+
+
+def _index(
+    syms: list[list[str]], freqs: Sequence[int]
+) -> tuple[Counter[Pair], defaultdict[Pair, set[int]]]:
+    """Freq-weighted count of each adjacent pair, and the words that
+    hold it."""
+    counts: Counter[Pair] = Counter()
+    holders: defaultdict[Pair, set[int]] = defaultdict(set)
+    for k, (s, f) in enumerate(zip(syms, freqs)):
+        for p in _pairs(s):
+            counts[p] += f
+            holders[p].add(k)
+    return counts, holders
+
+
+def _rewrite(
+    syms: list[list[str]],
+    freqs: Sequence[int],
+    holders: defaultdict[Pair, set[int]],
+    left: str,
+    right: str,
+) -> Counter[Pair]:
+    """Merge (left, right) in every word that holds it; returns how
+    each pair's freq-weighted count moved, and keeps ``holders``
+    current."""
+    moved: Counter[Pair] = Counter()
+    for k in holders.pop((left, right)):
+        old, syms[k] = syms[k], merge_pair(syms[k], left, right)
+        for p in set(_pairs(old)):
+            holders[p].discard(k)
+        for p in _pairs(old):
+            moved[p] -= freqs[k]
+        for p in _pairs(syms[k]):
+            moved[p] += freqs[k]
+            holders[p].add(k)
+    return moved
+
+
+def merge_table(
+    words: Sequence[str], freqs: Sequence[int], n_merges: int
+) -> list[Merge]:
+    """Learn up to ``n_merges`` merges from a word-frequency table;
+    returns [(rank, left, right, merged, pair_count), ...].
+
+    A word starts as its characters plus ``END``. Each round merges
+    the pair with the largest freq-weighted count; ties break by
+    (left, right) ascending, and Python orders ``str`` by code point,
+    which is Spark's UTF8_BINARY and DuckDB's order. The table stops
+    early once no pair has a positive count.
+
+    Pair counts and the words holding each pair are indexed once. A
+    merge rewrites only the words that hold its pair and pushes the
+    counts that moved onto a heap; a heap entry whose count is no
+    longer current is skipped when popped.
+    """
+    syms = [list(w) + [END] for w in words]
+    counts, holders = _index(syms, freqs)
+    heap = [(-n, *p) for p, n in counts.items() if n > 0]
+    heapq.heapify(heap)
+    merges: list[Merge] = []
+    while heap and len(merges) < n_merges:
+        neg, left, right = heapq.heappop(heap)
+        if counts[(left, right)] != -neg:
+            continue
+        merges.append((len(merges) + 1, left, right, left + right, -neg))
+        for p, d in _rewrite(syms, freqs, holders, left, right).items():
+            counts[p] += d
+            if d and counts[p] > 0:
+                heapq.heappush(heap, (-counts[p], *p))
+    return merges
 
 
 def learn_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = 12
-) -> list[tuple[int, str, str, str, int]]:
-    """Train ``n_merges`` BPE merges; returns
-    [(rank, left, right, merged, pair_count), ...].
+) -> list[Merge]:
+    """Train ``n_merges`` BPE merges over the ``documents`` corpus;
+    returns [(rank, left, right, merged, pair_count), ...].
 
-    Ties break (count desc, left asc, right asc) so the merge table is
-    deterministic across engines and partitionings.
+    Spark computes the word-frequency table; it is collected to the
+    driver through Arrow, so driver memory holds the whole vocabulary,
+    within ``spark.driver.maxResultSize`` (past it the collect fails).
+    ``merge_table`` then trains in memory, with no Spark job per merge.
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
-    merges: list[tuple[int, str, str, str, int]] = []
-
-    def apply_last(wf: DataFrame, r: int) -> DataFrame:
-        # round 0 only checkpoints the word table for the first argmax
-        if not r:
-            return wf
-        _, left, right, merged, _ = merges[-1]
-        return wf.withColumn("syms", _merge_fold(left, right, merged))
-
-    def no_pair_left(_: DataFrame, wf: DataFrame) -> bool:
-        # guard size<2: sequence(0, -1) DESCENDS in Spark ([0, -1]),
-        # so a fully-merged single-symbol word would index out of
-        # bounds (hit by overlap-heavy corpora where short words merge
-        # to one symbol within n_merges; tests/test_bpe_oracle_parity)
-        pairs = wf.select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(syms) < 2 THEN"
-                    " array()"
-                    " ELSE transform(sequence(0, size(syms) - 2),"
-                    " i -> struct(syms[i] AS l, syms[i + 1] AS r)) END"
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if best:
-            left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
-            merges.append((len(merges) + 1, left, right, left + right, n))
-        return not best
-
-    wf = word_freqs(docs).select("word", "freq", _char_symbols("word").alias("syms"))
-    wf, _ = fixpoint(spark, wf, apply_last, no_pair_left, n_merges)
-    # the merge table is plain Python: nothing downstream reads wf
-    release(wf)
-    return merges
+    wf = word_freqs(docs).toArrow()
+    return merge_table(
+        wf.column("word").to_pylist(), wf.column("freq").to_pylist(), n_merges
+    )
 
 
 def bpe_learn(
@@ -144,36 +176,17 @@ def bpe_learn(
     ).orderBy("rank")
 
 
-def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> int:
+def encode_word(word: str, ranks: dict[Pair, int]) -> int:
     """Token count of one word under the merge table: repeatedly apply
-    the LOWEST-RANK applicable merge, greedy left-to-right within a
-    pass — the standard BPE encode loop. Shared by the Spark UDF and
-    the test reference."""
+    the LOWEST-RANK applicable merge with ``merge_pair`` — the
+    standard BPE encode loop. Shared by the Spark UDF and the test
+    reference."""
     syms = list(word) + [END]
     while len(syms) > 1:
-        cand = [
-            (ranks[(a, b)], i)
-            for i, (a, b) in enumerate(zip(syms, syms[1:]))
-            if (a, b) in ranks
-        ]
-        if not cand:
+        pair = min(_pairs(syms), key=lambda p: ranks.get(p, math.inf))
+        if pair not in ranks:
             break
-        r = min(c[0] for c in cand)
-        pair = next(
-            (syms[i], syms[i + 1]) for rr, i in cand if rr == r
-        )
-        out, i = [], 0
-        while i < len(syms):
-            if (
-                i + 1 < len(syms)
-                and (syms[i], syms[i + 1]) == pair
-            ):
-                out.append(syms[i] + syms[i + 1])
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
+        syms = merge_pair(syms, *pair)
     return len(syms)
 
 
@@ -181,7 +194,7 @@ def bpe_token_count(
     spark: SparkSession,
     sf_dir: str,
     n_merges: int = 12,
-    merges: list[tuple[int, str, str, str, int]] | None = None,
+    merges: list[Merge] | None = None,
 ) -> DataFrame:
     """Per-document token count under a corpus-trained BPE merge table
     — the real-tokenizer upgrade of token_count_bpe's regex

@@ -572,9 +572,9 @@ def classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_pair_counts(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     """The merge-selection step of BPE tokenizer training: corpus-wide
     counts of adjacent character pairs inside tokens, top-k by count.
-    A full BPE trainer iterates this (count -> merge best pair ->
-    recount); the count step is the distributed-scale part — the merge
-    table itself is tiny driver state.
+    This is the first round's count only; the trainer
+    (text/bpe.py ``learn_merges``) counts words once in Spark and runs
+    every merge round in driver memory over that word table.
 
     Pair generation is a map-side higher-order expression (sequence +
     substr over the token array — no Python, no per-char explode); the

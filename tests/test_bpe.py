@@ -1,4 +1,4 @@
-"""Differential tests for the distributed BPE trainer/encoder against
+"""Differential tests for the BPE trainer/encoder against
 an INDEPENDENT pure-Python reference (Counter-based, written here, not
 shared with the module) on the real sf0.001 corpus.
 """
@@ -11,8 +11,8 @@ from metevents_spark.text.bpe import END, bpe_learn, bpe_token_count
 
 SF = "/root/testdata/sf0.001"
 
-# the distributed learn is the expensive step (12 one-job rounds);
-# train once per suite and share across both differential tests
+# training runs its word-count job while the frame is built; train
+# once per suite and share across both differential tests
 _CACHE: dict = {}
 
 

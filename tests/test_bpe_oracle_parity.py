@@ -1,12 +1,12 @@
 """Adversarial Spark-vs-DuckDB parity for the BPE oracles on corpora
 where ADJACENT occurrences of a learned pair appear inside one word
-('banana', 'aaaa', 'anan') — exactly the shape where the r12
-single-space oracle encoding diverged from Spark's greedy
-non-overlapping ``_merge_fold`` (advisor finding, ADVICE r12: the
-shared boundary space made global ``replace`` merge only the first of
-two back-to-back occurrences). The r13 two-space encoding must make
-the full learn + encode chain hash-identical on these corpora, not
-just on the (lucky) real testdata.
+('banana', 'aaaa', 'anan') — exactly the shape where a single-space
+oracle encoding diverges from the greedy non-overlapping
+``bpe.merge_pair``: the shared boundary space makes global
+``replace`` merge only the first of two back-to-back occurrences. The
+two-space encoding must make the full learn + encode chain
+hash-identical on these corpora, not just on the (lucky) real
+testdata, also when more merges are asked for than the corpus holds.
 """
 
 from __future__ import annotations
@@ -43,6 +43,8 @@ DOCS = pd.DataFrame(
     }
 )
 N_MERGES = 8
+# 25 merges leave every word of DOCS a single symbol
+PAST_EXHAUSTION = 32
 
 
 @pytest.fixture(scope="module")
@@ -59,9 +61,9 @@ def _oracle(sql: str) -> pd.DataFrame:
     return con.sql(sql).df()
 
 
-def test_bpe_learn_oracle_matches_spark_on_overlaps(spark, corpus_dir):
-    got = bpe_learn(spark, corpus_dir, n_merges=N_MERGES).toPandas()
-    exp = _oracle(_bpe_learn_oracle_sql(N_MERGES))
+def _learn_both(spark, corpus_dir, n_merges: int) -> pd.DataFrame:
+    got = bpe_learn(spark, corpus_dir, n_merges=n_merges).toPandas()
+    exp = _oracle(_bpe_learn_oracle_sql(n_merges))
     # identical column order by construction (rank/left/right/merged/
     # pair_count); compare the full ordered table value-by-value
     assert list(got.columns) == list(exp.columns)
@@ -69,6 +71,28 @@ def test_bpe_learn_oracle_matches_spark_on_overlaps(spark, corpus_dir):
         got.astype({"rank": "int64", "pair_count": "int64"}),
         exp.astype({"rank": "int64", "pair_count": "int64"}),
     )
+    return exp
+
+
+def _token_counts_both(spark, corpus_dir, n_merges: int) -> None:
+    got = (
+        bpe_token_count(spark, corpus_dir, n_merges=n_merges)
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    exp = (
+        _oracle(_bpe_token_count_oracle_sql(n_merges))
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        got.astype("int64"), exp.astype("int64")
+    )
+
+
+def test_bpe_learn_oracle_matches_spark_on_overlaps(spark, corpus_dir):
+    exp = _learn_both(spark, corpus_dir, N_MERGES)
     # the corpus genuinely exercises the overlap shape: at least one
     # learned merge's (left, right) pair occurs back-to-back in a word
     # ('banana' -> ...(a,n)(a,n)...), otherwise this test pins nothing
@@ -79,20 +103,15 @@ def test_bpe_learn_oracle_matches_spark_on_overlaps(spark, corpus_dir):
 def test_bpe_token_count_oracle_matches_spark_on_overlaps(
     spark, corpus_dir
 ):
-    got = (
-        bpe_token_count(spark, corpus_dir, n_merges=N_MERGES)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    exp = (
-        _oracle(_bpe_token_count_oracle_sql(N_MERGES))
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got.astype("int64"), exp.astype("int64")
-    )
+    _token_counts_both(spark, corpus_dir, N_MERGES)
+
+
+def test_bpe_oracle_matches_spark_past_exhaustion(spark, corpus_dir):
+    """Asked for more merges than the corpus holds, both engines stop
+    at the same shorter table, and encode with it alike."""
+    exp = _learn_both(spark, corpus_dir, PAST_EXHAUSTION)
+    assert len(exp) == 25
+    _token_counts_both(spark, corpus_dir, PAST_EXHAUSTION)
 
 
 def test_old_single_space_encoding_was_wrong():

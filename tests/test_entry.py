@@ -42,7 +42,7 @@ def test_queries_all_run(spark):
 
     covered = set(oracle_backed_queries())
     # the BPE pair runs END TO END with value-level reference parity in
-    # tests/test_bpe.py; re-running the 12-round training loop here is
+    # tests/test_bpe.py; re-running the training job here is
     # the same doubled-wall-time-for-zero-signal case as the parity
     # keys below
     covered |= {"bpe_learn", "bpe_token_count"}

@@ -2,17 +2,14 @@
 (``metevents_spark.cache.fixpoint``): when ``settled`` runs, when the
 loop stops, which round frames it releases, and that the caller's AQE
 setting survives it, also when a callback raises. Frames are small and
-built in memory (or in ``tmp_path``), so no generated testdata is
-needed."""
+built in memory, so no generated testdata is needed."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from metevents_spark.cache import fixpoint, release_all, sum_settled
-from metevents_spark.text.bpe import learn_merges
 
 AQE = "spark.sql.adaptive.enabled"
 
@@ -129,25 +126,3 @@ def test_rounds_plan_without_aqe(spark):
     assert modes == ["false"] * 4
     assert spark.conf.get(AQE) == "true"
 
-
-def test_bpe_runs_one_job_per_merge(spark, tmp_path):
-    """Four more merges cost four more jobs: each merge is one lazily
-    checkpointed fold read by one argmax job. Under AQE the argmax's
-    exchange ran as a job of its own."""
-    words = ["lower", "lowest", "newer", "wider", "tallest", "slowest"]
-    pd.DataFrame({
-        "doc_id": range(12),
-        "text": [" ".join(words[i % 6:] + words[:i % 6]) for i in range(12)],
-    }).to_parquet(tmp_path / "documents.parquet")
-    sc = spark.sparkContext
-
-    def jobs(n_merges: int) -> int:
-        group = f"bpe-{n_merges}"
-        sc.setJobGroup(group, "merge loop")
-        try:
-            assert len(learn_merges(spark, str(tmp_path), n_merges)) == n_merges
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    assert jobs(6) - jobs(2) == 4

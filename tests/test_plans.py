@@ -365,10 +365,11 @@ def test_no_query_plans_a_cartesian_product(spark):
         "conversion_bootstrap_ci",
     }
     for name, fn in entrymod.queries().items():
-        # the BPE entries EXECUTE their 12-round training loop during
-        # DataFrame construction, so building their plan here costs a
-        # full train for no signal (bpe_learn's final plan is a local
-        # merge table); tests/test_bpe.py asserts the encode plan's
+        # the BPE entries EXECUTE their training (a word-count job, then
+        # the in-memory merge loop) during DataFrame construction, so
+        # building their plan here costs a full train for no signal
+        # (bpe_learn's final plan is a local merge table);
+        # tests/test_bpe.py asserts the encode plan's
         # shape (broadcast vocab, no cartesian) where the merges are
         # already cached
         # part_pagerank likewise EXECUTES its fixed-point iteration while

@@ -105,7 +105,7 @@ PINNED = {
         "EMB_PAIR_OUTPUT_SCHEMA":
             "vec_a long, vec_b long, label int, cosine double",
         "EMB_BLOCK_STATE_SCHEMA": [
-            ("vec_ids", "array<bigint>"), ("flat", "array<double>"),
+            ("vec_ids", "array<bigint>"), ("flat", "binary"),
             ("closed", "int"),
         ],
     },

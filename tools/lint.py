@@ -71,7 +71,6 @@ COMPLEXITY_WAIVERS = {
     ("metevents_spark/similarity/knn.py", "knn_ivf_pq"),
     ("metevents_spark/similarity/knn.py", "ann_recall_report"),
     ("metevents_spark/multimodal/media.py", "media_embedding_near_dup"),
-    ("metevents_spark/text/bpe.py", "encode_word"),
     ("metevents_spark/io.py", "load_table"),
     ("metevents_spark/sources/station.py", "fetch_station_frame"),
 }
